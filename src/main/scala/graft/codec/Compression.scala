@@ -83,23 +83,39 @@ object Compression {
         (out, 0, 4 + n)
     }
 
-  def decompress(data: Array[Byte], codec: CompressionCodec): Array[Byte] = codec match {
-    case CompressionCodec.None => data
-    case CompressionCodec.Zstd =>
-      val size = Zstd.getFrameContentSize(data)
-      if (size >= 0 && size < Int.MaxValue) Zstd.decompress(data, size.toInt)
-      else { // streaming frame without content size — decompress via stream
-        val in = new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(data))
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        in.close(); out.toByteArray
-      }
-    case CompressionCodec.Lz4 =>
-      val size = ByteBuffer.wrap(data, 0, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
-      val out = new Array[Byte](size)
-      lz4.fastDecompressor().decompress(data, 4, out, 0, size)
-      out
-  }
+  def decompress(data: Array[Byte], codec: CompressionCodec): Array[Byte] =
+    decompress(data, 0, data.length, codec)
+
+  /** Decompress `data[off, off + len)` — the segment decoder hands over the
+    * (header, footer)-bounded body range, so no body-sized copy is made
+    * before decompressing. Codec None returns the input itself when the
+    * range covers it, a copy of the range otherwise.
+    */
+  def decompress(data: Array[Byte], off: Int, len: Int, codec: CompressionCodec): Array[Byte] =
+    codec match {
+      case CompressionCodec.None =>
+        if (off == 0 && len == data.length) data
+        else java.util.Arrays.copyOfRange(data, off, off + len)
+      case CompressionCodec.Zstd =>
+        val size = Zstd.getFrameContentSize(data, off, len)
+        if (size >= 0 && size < Int.MaxValue) {
+          val out = new Array[Byte](size.toInt)
+          val n = Zstd.decompressByteArray(out, 0, out.length, data, off, len)
+          if (Zstd.isError(n)) throw new com.github.luben.zstd.ZstdException(n)
+          if (n == out.length) out else java.util.Arrays.copyOf(out, n.toInt)
+        } else { // streaming frame without content size — decompress via stream
+          val in = new com.github.luben.zstd.ZstdInputStream(
+            new java.io.ByteArrayInputStream(data, off, len))
+          val out = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](1 << 16)
+          var n = in.read(buf)
+          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+          in.close(); out.toByteArray
+        }
+      case CompressionCodec.Lz4 =>
+        val size = ByteBuffer.wrap(data, off, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
+        val out = new Array[Byte](size)
+        lz4.fastDecompressor().decompress(data, off + 4, out, 0, size)
+        out
+    }
 }

@@ -20,14 +20,19 @@ object LegacySegment {
       data(0) == 'K' && data(1) == 'B' && data(2) == 'A' && data(3) == 'K'
 
   /** Decode either format; the key's extension selects the decompressor for
-    * the legacy path (the binary header carries its own codec byte).
+    * the legacy path (the binary header carries its own codec byte). Only
+    * records inside the inclusive `[windowStartMs, windowEndMs]` window are
+    * returned.
     */
   def decodeAny(data: Array[Byte], key: String, topic: String = null,
-                partition: Int = -1): Iterator[KRecord] =
-    if (isBinarySegment(data)) SegmentCodec.decode(data, topic, partition)
+                partition: Int = -1, windowStartMs: Long = Long.MinValue,
+                windowEndMs: Long = Long.MaxValue): Iterator[KRecord] =
+    if (isBinarySegment(data))
+      SegmentCodec.decode(data, topic, partition, windowStartMs, windowEndMs)
     else decodeLegacy(
       Compression.decompress(data, CompressionCodec.fromExtension(key)),
       topic, partition)
+      .filter(r => r.timestamp >= windowStartMs && r.timestamp <= windowEndMs)
 
   def decodeLegacy(json: Array[Byte], topic: String, partition: Int): Iterator[KRecord] = {
     val parsed = JsonMethods.parse(new String(json, java.nio.charset.StandardCharsets.UTF_8))

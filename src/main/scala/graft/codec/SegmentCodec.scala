@@ -201,9 +201,13 @@ object SegmentCodec {
 
   /** Decode a full segment: verify footer magic + CRC, decompress, iterate
     * (segment/reader.rs:20-147). `topic`/`partition` are stamped onto the
-    * returned records (they come from the storage key, not the bytes).
+    * returned records (they come from the storage key, not the bytes). Only
+    * records with `windowStartMs <= timestamp <= windowEndMs` are returned
+    * (the PITR window, both ends inclusive; see [[decodeBody]]).
     */
-  def decode(data: Array[Byte], topic: String = null, partition: Int = -1): Iterator[KRecord] = {
+  def decode(data: Array[Byte], topic: String = null, partition: Int = -1,
+             windowStartMs: Long = Long.MinValue,
+             windowEndMs: Long = Long.MaxValue): Iterator[KRecord] = {
     require(data.length >= HeaderSize + FooterSize, "Segment too short")
     val header = parseHeader(data)
     // footer check
@@ -216,37 +220,57 @@ object SegmentCodec {
     crc.update(data, 0, data.length - FooterSize)
     require(crc.getValue.toInt == storedCrc, "Segment CRC mismatch")
     val body = Compression.decompress(
-      java.util.Arrays.copyOfRange(data, HeaderSize, data.length - FooterSize), header.codec)
-    decodeBody(body, topic, partition, header.recordCount)
+      data, HeaderSize, data.length - HeaderSize - FooterSize, header.codec)
+    decodeBody(body, topic, partition, header.recordCount, windowStartMs, windowEndMs)
   }
 
-  /** Iterate length-prefixed records from a decompressed body. */
+  /** Iterate length-prefixed records from a decompressed body, keeping only
+    * those with `windowStartMs <= timestamp <= windowEndMs`. A record outside
+    * the window is skipped after its length/timestamp/offset prefix, before
+    * its key, value and headers are allocated.
+    */
   def decodeBody(body: Array[Byte], segTopic: String, segPartition: Int,
-                 expected: Long): Iterator[KRecord] = new Iterator[KRecord] {
+                 expected: Long, windowStartMs: Long = Long.MinValue,
+                 windowEndMs: Long = Long.MaxValue): Iterator[KRecord] = new Iterator[KRecord] {
     private val buf = ByteBuffer.wrap(body).order(ByteOrder.LITTLE_ENDIAN)
-    private var produced = 0L
-    override def hasNext: Boolean = produced < expected && buf.remaining() >= 4
-    override def next(): KRecord = {
-      val totalLen = buf.getInt
-      require(buf.remaining() >= totalLen, "Record data truncated")
-      val limit = buf.position() + totalLen
-      val timestamp = buf.getLong
-      val offset = buf.getLong
-      val key = readBytes(buf.getInt)
-      val value = readBytes(buf.getInt)
-      val headerCount = buf.getShort & 0xffff
-      val headers = new scala.collection.mutable.ArrayBuffer[KHeader](headerCount)
-      var i = 0
-      while (i < headerCount) {
-        val klen = buf.getShort & 0xffff
-        val kb = new Array[Byte](klen); buf.get(kb)
-        val hv = readBytes(buf.getInt)
-        headers += KHeader(new String(kb, StandardCharsets.UTF_8), hv)
-        i += 1
+    private var consumed = 0L
+    private var pending: KRecord = null
+
+    // advance to the next in-window record, if any
+    private def fill(): Unit =
+      while (pending == null && consumed < expected && buf.remaining() >= 4) {
+        val totalLen = buf.getInt
+        require(buf.remaining() >= totalLen, "Record data truncated")
+        val limit = buf.position() + totalLen
+        val timestamp = buf.getLong
+        val offset = buf.getLong
+        if (timestamp >= windowStartMs && timestamp <= windowEndMs) {
+          val key = readBytes(buf.getInt)
+          val value = readBytes(buf.getInt)
+          val headerCount = buf.getShort & 0xffff
+          val headers = new scala.collection.mutable.ArrayBuffer[KHeader](headerCount)
+          var i = 0
+          while (i < headerCount) {
+            val klen = buf.getShort & 0xffff
+            val kb = new Array[Byte](klen); buf.get(kb)
+            val hv = readBytes(buf.getInt)
+            headers += KHeader(new String(kb, StandardCharsets.UTF_8), hv)
+            i += 1
+          }
+          pending = KRecord(segTopic, segPartition, offset, timestamp, key, value,
+            headers.toSeq)
+        }
+        buf.position(limit)
+        consumed += 1
       }
-      buf.position(limit)
-      produced += 1
-      KRecord(segTopic, segPartition, offset, timestamp, key, value, headers.toSeq)
+
+    override def hasNext: Boolean = { fill(); pending != null }
+    override def next(): KRecord = {
+      fill()
+      if (pending == null) throw new NoSuchElementException("segment exhausted")
+      val r = pending
+      pending = null
+      r
     }
     private def readBytes(len: Int): Array[Byte] =
       if (len < 0) null else { val a = new Array[Byte](len); buf.get(a); a }

@@ -1,11 +1,13 @@
 package graft.pipelines
 
-import graft.catalog.{BackupManifest, Manifest}
-import graft.codec.{CompressionCodec, SegmentCodec}
-import graft.functions.KFunctions
+import graft.catalog.{BackupManifest, Manifest, SegmentMetadata}
+import graft.codec.{LegacySegment, SegmentCodec}
 import graft.model.KRecord
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Restore/PITR options (reference RestoreConfig, restore/engine.rs):
   * time window bounds are epoch millis, both ends INCLUSIVE
@@ -24,14 +26,19 @@ case class RestoreConfig(
     completedSegmentKeys: Set[String] = Set.empty)
 
 /** The restore "query" (reference lifecycle §3.2): manifest catalog → segment
-  * pruning (F6) → checkpoint anti-join (F9) → binary scan + KBAK decode
-  * (S8/S10) → record time filter (F7) → topic/partition remap (F13/F14).
+  * pruning (F6) → checkpoint anti-join (F9) → manifest-keyed scan + KBAK
+  * decode with the record time filter inside (S8/S10, F7) → topic/partition
+  * remap (F13/F14).
   *
   * Scale shape: pruning happens on the CATALOG (one row per segment), so at
-  * 100 TB a narrow PITR window touches only the overlapping ~128 MB objects;
-  * the binaryFile scan parallelizes one file per task; decode is a streaming
-  * flatMap (no per-task materialization); the ts filter is re-applied
-  * per-record because segment stats are ranges, not predicates.
+  * 100 TB a narrow PITR window touches only the overlapping ~128 MB objects.
+  * The manifest already names every selected object and its size, so the scan
+  * lists no path and runs no job before the action: the selected segments are
+  * split into size-balanced tasks on the driver and each task opens its keys
+  * directly. Decode is a streaming iterator (no per-task materialization), and
+  * the ts window is re-applied per record inside it, because segment stats
+  * are ranges, not predicates; a record outside the window is skipped before
+  * its key, value and headers are allocated.
   */
 object Restore {
 
@@ -40,30 +47,106 @@ object Restore {
     */
   def records(spark: SparkSession, cfg: RestoreConfig): Dataset[KRecord] = {
     import spark.implicits._
-    val manifest = Manifest.load(cfg.backupRoot, cfg.backupId)
-    val keys = prunedSegmentKeys(manifest, cfg)
-    val root = cfg.backupRoot
-
-    val decoded: Dataset[KRecord] =
-      if (keys.isEmpty) spark.emptyDataset[KRecord]
-      else spark.read.format("binaryFile")
-        .load(keys.map(k => s"$root/$k"): _*)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val (topic, partition) = parseSegmentPath(path)
-          // magic-sniffed: KBAK binary or legacy JSON (S10/S11)
-          graft.codec.LegacySegment.decodeAny(bytes, path, topic, partition)
-        }
-
-    val timeFiltered = (cfg.windowStartMs, cfg.windowEndMs) match {
-      case (None, None) => decoded
-      case (s, e) =>
-        val lo = s.getOrElse(Long.MinValue)
-        val hi = e.getOrElse(Long.MaxValue)
-        decoded.filter(r => r.timestamp >= lo && r.timestamp <= hi)
+    val segments = selectedSegments(Manifest.load(cfg.backupRoot, cfg.backupId), cfg)
+    if (segments.isEmpty) spark.emptyDataset[KRecord]
+    else {
+      val tasks = scanTasks(spark, segments)
+      val root = cfg.backupRoot
+      val lo = cfg.windowStartMs.getOrElse(Long.MinValue)
+      val hi = cfg.windowEndMs.getOrElse(Long.MaxValue)
+      // the driver's Hadoop conf (spark.hadoop.* credentials, endpoints,
+      // registered schemes) travels with the tasks, as in Backup
+      val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      spark.createDataset(spark.sparkContext.parallelize(tasks, tasks.size)
+        .flatMap { task =>
+          val fs = FileSystem.get(new java.net.URI(root), hadoopConf.value)
+          task.iterator.flatMap { case (topic, partition, s) =>
+            readSegment(fs, root, topic, partition, s, lo, hi)
+          }
+        })
     }
-    timeFiltered
+  }
+
+  /** Read one segment object whole and decode it (magic-sniffed: KBAK binary
+    * or legacy JSON, S10/S11). A missing or corrupt segment fails the restore
+    * with its key in the message; no setting skips it, because a restore
+    * must never drop data silently.
+    */
+  private def readSegment(fs: FileSystem, root: String, topic: String, partition: Int,
+                          s: SegmentMetadata, lo: Long, hi: Long): Iterator[KRecord] =
+    try {
+      val expected = math.min(
+        s.compressed_size + SegmentCodec.HeaderSize + SegmentCodec.FooterSize,
+        Int.MaxValue - 8L).toInt
+      val bytes = readObject(fs, new Path(s"$root/${s.key}"), expected)
+      LegacySegment.decodeAny(bytes, s.key, topic, partition, lo, hi)
+    } catch { case NonFatal(e) =>
+      throw new java.io.IOException(s"restore of segment ${s.key} failed: ${e.getMessage}", e)
+    }
+
+  /** Read a whole object into an array presized from the manifest. When the
+    * object has exactly `expected` bytes (every KBAK segment) no copy is made;
+    * any other size is still read in full.
+    */
+  private def readObject(fs: FileSystem, path: Path, expected: Int): Array[Byte] = {
+    val in = fs.open(path)
+    try {
+      val buf = new Array[Byte](expected)
+      var n = 0
+      var r = 0
+      while (n < expected && r >= 0) { r = in.read(buf, n, expected - n); if (r > 0) n += r }
+      val rest = if (r < 0) Array.emptyByteArray else in.readAllBytes()
+      if (n == expected && rest.isEmpty) buf else java.util.Arrays.copyOf(buf, n) ++ rest
+    } finally in.close()
+  }
+
+  /** The scan tasks for `segments`: contiguous runs in manifest order, so a
+    * task reads each (topic, partition)'s segments in offset order and the
+    * tasks concatenate to the manifest order. The runs are balanced by
+    * `compressed_size + spark.sql.files.openCostInBytes`, and there are
+    * `min(#segments, max(defaultParallelism, ⌈total / spark.sql.files.maxPartitionBytes⌉))`
+    * of them, sized by the confs Spark's file sources split by.
+    */
+  private def scanTasks(spark: SparkSession, segments: Seq[(String, Int, SegmentMetadata)])
+      : Seq[Seq[(String, Int, SegmentMetadata)]] = {
+    def bytesConf(name: String) = JavaUtils.byteStringAsBytes(spark.conf.get(name))
+    val openCost = bytesConf("spark.sql.files.openCostInBytes")
+    val maxBytes = math.max(1L, bytesConf("spark.sql.files.maxPartitionBytes"))
+    val weights = segments.map(_._3.compressed_size + openCost).toIndexedSeq
+    val wanted = math.max(spark.sparkContext.defaultParallelism.toLong,
+      (weights.sum + maxBytes - 1) / maxBytes)
+    val k = math.min(segments.size.toLong, wanted).toInt
+    splitContiguous(weights, k).map(r => segments.slice(r.start, r.end))
+  }
+
+  /** Split `weights` into exactly `k` (1 ≤ k ≤ weights.size) non-empty
+    * contiguous runs whose largest sum is minimal: binary-search the smallest
+    * capacity that greedy filling fits into k runs, then fill greedily at
+    * that capacity, cutting early once each remaining item must open a run
+    * of its own.
+    */
+  private[graft] def splitContiguous(weights: IndexedSeq[Long], k: Int): Seq[Range] = {
+    val n = weights.size
+    require(k >= 1 && k <= n, s"cannot split $n items into $k runs")
+    def runsAt(cap: Long): Int = {
+      var runs = 1
+      var cur = 0L
+      weights.foreach { w => if (cur + w > cap) { runs += 1; cur = w } else cur += w }
+      runs
+    }
+    var lo = weights.max
+    var hi = weights.sum
+    while (lo < hi) {
+      val mid = lo + (hi - lo) / 2
+      if (runsAt(mid) <= k) hi = mid else lo = mid + 1
+    }
+    val starts = scala.collection.mutable.ArrayBuffer(0)
+    var cur = weights(0)
+    for (i <- 1 until n) {
+      if (cur + weights(i) > lo || n - i == k - starts.size) { starts += i; cur = weights(i) }
+      else cur += weights(i)
+    }
+    (starts :+ n).sliding(2).map(b => b(0) until b(1)).toSeq
   }
 
   /** Restore with topic rename / explicit partition remap applied (F13/F14). */
@@ -86,7 +169,12 @@ object Restore {
     * → time-window segment pruning (F6) → completed-segment anti set (F9).
     * Driver-side list ops — the manifest is small (1 row per 128 MB object).
     */
-  def prunedSegmentKeys(manifest: BackupManifest, cfg: RestoreConfig): Seq[String] = {
+  def prunedSegmentKeys(manifest: BackupManifest, cfg: RestoreConfig): Seq[String] =
+    selectedSegments(manifest, cfg).map(_._3.key)
+
+  /** [[prunedSegmentKeys]]' segments with their (topic, partition). */
+  private def selectedSegments(manifest: BackupManifest,
+                               cfg: RestoreConfig): Seq[(String, Int, SegmentMetadata)] =
     for {
       t <- manifest.topics
       if graft.functions.KHash.topicMatches(t.name, cfg.includeTopics, cfg.excludeTopics)
@@ -95,8 +183,7 @@ object Restore {
       s <- p.segments
       if s.overlapsTimeWindow(cfg.windowStartMs, cfg.windowEndMs)
       if !cfg.completedSegmentKeys.contains(s.key)
-    } yield s.key
-  }
+    } yield (t.name, p.partition_id, s)
 
   /** A5 restore-report metrics via `Dataset.observe` (restore/engine.rs
     * 346-357): record/byte counters accumulate during the ACTION that
@@ -110,14 +197,6 @@ object Restore {
       coalesce(sum(coalesce(length(col("value")), lit(0)) +
         coalesce(length(col("key")), lit(0))), lit(0L)).as("bytes_restored"))
     (observed, obs)
-  }
-
-  /** `.../topics/{topic}/partition={p}/segment-....bin[.ext]` → (topic, p). */
-  def parseSegmentPath(path: String): (String, Int) = {
-    val parts = path.split('/')
-    val pIdx = parts.lastIndexWhere(_.startsWith("partition="))
-    require(pIdx > 0, s"Not a segment path: $path")
-    (parts(pIdx - 1), parts(pIdx).substring("partition=".length).toInt)
   }
 
   /** validate-restore's report shape (reference manifest.rs:827-856
@@ -167,12 +246,7 @@ object Restore {
         DryRunValidation(cfg.backupId, valid = false, errors.result(),
           warnings.result(), 0, 0, 0, None, Nil)
       case Some(m) =>
-        val keys = prunedSegmentKeys(m, cfg).toSet
-        val selected = for {
-          t <- m.topics
-          p <- t.partitions
-          s <- p.segments if keys.contains(s.key)
-        } yield (t.name, p.partition_id, s)
+        val selected = selectedSegments(m, cfg)
         if (m.totalSegments == 0) warnings += "backup contains no segments"
         else if (selected.isEmpty)
           errors += "no segments match the configured filters/window"

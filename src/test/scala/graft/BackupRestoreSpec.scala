@@ -1,10 +1,13 @@
 package graft
 
-import graft.catalog.Manifest
-import graft.codec.CompressionCodec
+import graft.catalog.{Manifest, PartitionBackup, SegmentMetadata, TopicBackup}
+import graft.codec.{CompressionCodec, LegacySegment, SegmentCodec}
 import graft.functions.{KFunctions, KHash}
-import graft.model.KRecord
+import graft.model.{KHeader, KRecord}
 import graft.pipelines.{Backup, BackupConfig, Restore, RestoreConfig}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -71,6 +74,209 @@ class BackupRestoreSpec extends SparkSpec {
     // empty window
     assert(Restore.records(spark, RestoreConfig(tmp, "b1", Some(t2 + 100000), Some(t2 + 200000)))
       .count() == 0)
+
+    // the window is applied inside decode: records at exactly either bound
+    // are kept, 1 ms outside is dropped, and null key/value and 0-header
+    // records inside the window survive unchanged
+    val t0 = 1700000000000L
+    val hs = Seq(KHeader("h", "hv".getBytes), KHeader("n", null))
+    val edge = Seq(
+      KRecord("edge", 0, 0L, t0 - 1, "k0".getBytes, "v0".getBytes, hs),
+      KRecord("edge", 0, 1L, t0, null, null, Nil),
+      KRecord("edge", 0, 2L, t0 + 5, "k2".getBytes, null, hs),
+      KRecord("edge", 0, 3L, t0 + 10, null, "v3".getBytes, Nil),
+      KRecord("edge", 0, 4L, t0 + 11, "k4".getBytes, "v4".getBytes, hs))
+    val edgeRoot = Files.createTempDirectory("graft-edge").toString
+    Backup.run(spark, edge.toDS().toDF(),
+      BackupConfig("e1", edgeRoot, CompressionCodec.Zstd, enrichHeaders = false))
+    val kept = Restore.records(spark, RestoreConfig(edgeRoot, "e1", Some(t0), Some(t0 + 10)))
+      .collect().sortBy(_.offset).toSeq
+    assert(kept.map(_.offset) == Seq(1L, 2L, 3L))
+    kept.zip(edge.slice(1, 4)).foreach { case (got, want) => assertSameRecord(got, want) }
+  }
+
+  private def assertSameRecord(got: KRecord, want: KRecord): Unit = {
+    assert(got.topic == want.topic && got.partition == want.partition)
+    assert(got.offset == want.offset && got.timestamp == want.timestamp)
+    assert(java.util.Arrays.equals(got.key, want.key), s"key of ${want.offset}")
+    assert(java.util.Arrays.equals(got.value, want.value), s"value of ${want.offset}")
+    assert(got.headers.map(_.key) == want.headers.map(_.key))
+    got.headers.zip(want.headers).foreach { case (g, w) =>
+      assert(java.util.Arrays.equals(g.value, w.value), s"header ${w.key} of ${want.offset}")
+    }
+  }
+
+  private def fsOf(root: String) =
+    FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+
+  /** 4 partitions × 100 records rolled at 2 KB: more than 32 segments. */
+  private lazy val many = {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val recs = for (p <- 0 until 4; i <- 0 until 100)
+      yield KRecord("many", p, i.toLong, t0 + i * 1000L, s"k$i".getBytes,
+        Array.fill(200)((i + p).toByte), Nil)
+    val root = Files.createTempDirectory("graft-many").toString
+    val m = Backup.run(spark, recs.toDS().toDF(),
+      BackupConfig("s1", root, CompressionCodec.Zstd, maxSegmentBytes = 2048,
+        enrichHeaders = false))
+    (root, m)
+  }
+
+  test("restore planning lists no path and runs no Spark job") {
+    val (root, m) = many
+    assert(m.totalSegments > 32, "enough segments for a parallel listing")
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    val sc = spark.sparkContext
+    // a marker job flushes the (in-order) listener queue up to that point
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!descriptions.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(descriptions.contains(name), s"listener never saw $name")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("before")
+      descriptions.clear()
+      val ds = Restore.records(spark, RestoreConfig(root, "s1"))
+      marker("after")
+      assert(descriptions.toArray.toSeq == Seq("after"), "jobs ran while planning")
+      assert(ds.count() == 400)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("scan tasks follow the size-balanced bin formula, capped at the segment count") {
+    val (root, m) = many
+    val segs = m.topics.flatMap(_.partitions).flatMap(_.segments)
+    def expectedTasks: Int = {
+      def bytes(k: String) = JavaUtils.byteStringAsBytes(spark.conf.get(k))
+      val total = segs.map(_.compressed_size + bytes("spark.sql.files.openCostInBytes")).sum
+      val byBytes = math.ceil(total.toDouble / bytes("spark.sql.files.maxPartitionBytes")).toLong
+      math.min(segs.size.toLong,
+        math.max(spark.sparkContext.defaultParallelism.toLong, byBytes)).toInt
+    }
+    def check(): Int = {
+      val ds = Restore.records(spark, RestoreConfig(root, "s1"))
+      val n = ds.rdd.getNumPartitions
+      assert(n == expectedTasks && n <= segs.size)
+      // the tasks are contiguous runs in manifest order: per-partition
+      // offset order survives a collect
+      val got = ds.collect().toSeq
+      assert(got.size == 400)
+      got.groupBy(_.partition).values.foreach { rs =>
+        assert(rs.map(_.offset) == (0L until 100L))
+      }
+      n
+    }
+    assert(check() == spark.sparkContext.defaultParallelism)
+    val confs = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    try {
+      spark.conf.set("spark.sql.files.openCostInBytes", "0")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+      assert(check() == segs.size, "never more tasks than segments")
+      // a split size that asks for about halfway between the two caps
+      val halfway = (segs.size + spark.sparkContext.defaultParallelism) / 2
+      spark.conf.set("spark.sql.files.maxPartitionBytes",
+        (segs.map(_.compressed_size).sum / halfway).toString)
+      val n = check()
+      assert(n > spark.sparkContext.defaultParallelism && n < segs.size)
+    } finally confs.foreach(spark.conf.unset)
+  }
+
+  test("contiguous split: exactly k non-empty runs with the minimal largest sum") {
+    val rnd = new scala.util.Random(7)
+    // brute force: the best largest-run sum over every way to cut into k runs
+    def best(w: IndexedSeq[Long], k: Int): Long =
+      if (k == 1) w.sum
+      else (1 to w.size - k + 1).map(c => math.max(w.take(c).sum, best(w.drop(c), k - 1))).min
+    for (_ <- 0 until 200) {
+      val w = IndexedSeq.fill(1 + rnd.nextInt(8))(1L + rnd.nextInt(20).toLong)
+      val k = 1 + rnd.nextInt(w.size)
+      val runs = Restore.splitContiguous(w, k)
+      assert(runs.size == k && runs.forall(_.nonEmpty))
+      assert(runs.flatten == w.indices, "runs cover every item once, in order")
+      assert(runs.map(r => r.map(w).sum).max == best(w, k), s"$w into $k")
+    }
+  }
+
+  test("an empty selection restores an empty Dataset") {
+    val (root, _) = many
+    val none = Restore.records(spark, RestoreConfig(root, "s1", includeTopics = Seq("absent")))
+    assert(none.count() == 0)
+    assert(none.schema == Restore.records(spark, RestoreConfig(root, "s1")).schema)
+    assert(Restore.records(spark,
+      RestoreConfig(root, "s1", Some(0L), Some(1000L))).count() == 0)
+  }
+
+  test("a manifest mixing legacy JSON and KBAK segments restores every record") {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val kbak = (0 until 20).map(i => KRecord("bin", 0, i.toLong, t0 + i, s"k$i".getBytes,
+      s"v$i".getBytes, Nil))
+    val root = Files.createTempDirectory("graft-mixed").toString
+    val m = Backup.run(spark, kbak.toDS().toDF(),
+      BackupConfig("mx", root, CompressionCodec.Zstd, maxSegmentBytes = 256,
+        enrichHeaders = false))
+    val legacy = Seq(
+      KRecord("legacy", 0, 0L, t0, "a".getBytes, "x".getBytes, Seq(KHeader("h", "hv".getBytes))),
+      KRecord("legacy", 0, 1L, t0 + 1, null, "y".getBytes, Nil),
+      KRecord("legacy", 0, 2L, t0 + 2, "c".getBytes, null, Nil))
+    val bytes = LegacySegment.encodeLegacy(legacy, CompressionCodec.Zstd)
+    val key = "mx/topics/legacy/partition=0/segment-00000000000000000000.json.zst"
+    val os = fsOf(root).create(new Path(s"$root/$key"), true)
+    try os.write(bytes) finally os.close()
+    Manifest.save(root, m.copy(topics = List(TopicBackup("legacy", Some(1), List(
+      PartitionBackup(0, List(SegmentMetadata(key, 0, 2, t0, t0 + 2, 3, 0, bytes.length))))))))
+    assert(Manifest.load(root, "mx").totalSegments == m.totalSegments + 1)
+
+    val all = Restore.records(spark, RestoreConfig(root, "mx")).collect().toSeq
+    assert(all.size == kbak.size + legacy.size)
+    val byTopic = all.groupBy(_.topic).map { case (t, rs) => t -> rs.sortBy(_.offset) }
+    byTopic("bin").zip(kbak).foreach { case (g, w) => assertSameRecord(g, w) }
+    byTopic("legacy").zip(legacy).foreach { case (g, w) => assertSameRecord(g, w) }
+    // the window applies to legacy segments too
+    val mid = Restore.records(spark, RestoreConfig(root, "mx", Some(t0 + 1), Some(t0 + 1)))
+      .collect().map(r => (r.topic, r.offset)).toSet
+    assert(mid == Set(("bin", 1L), ("legacy", 1L)))
+  }
+
+  test("restore fails loudly on a deleted or corrupt segment, naming it") {
+    val root = Files.createTempDirectory("graft-loud").toString
+    val m = Backup.run(spark, KRecord.fromEvents(spark, sf0001),
+      BackupConfig("l1", root, CompressionCodec.Zstd, maxSegmentBytes = 16 * 1024))
+    val segs = m.topics.flatMap(_.partitions).flatMap(_.segments)
+    val fs = fsOf(root)
+    def failure(cfg: RestoreConfig): String =
+      intercept[Exception](Restore.records(spark, cfg).count()).getMessage
+
+    val gone = segs.head.key
+    assert(fs.delete(new Path(s"$root/$gone"), false))
+    assert(failure(RestoreConfig(root, "l1")).contains(gone))
+    // a restore never drops data silently, whatever the file-source settings
+    spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
+    try assert(failure(RestoreConfig(root, "l1")).contains(gone))
+    finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
+
+    // flip one compressed-body byte; rewrite through the Hadoop FS so its
+    // checksum sidecar follows and only the KBAK CRC can object
+    val victim = segs.last.key
+    val vp = new Path(s"$root/$victim")
+    val data = {
+      val in = fs.open(vp)
+      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
+    }
+    data(SegmentCodec.HeaderSize + 5) = (data(SegmentCodec.HeaderSize + 5) ^ 0x01).toByte
+    val os = fs.create(vp, true)
+    try os.write(data) finally os.close()
+    val msg = failure(RestoreConfig(root, "l1", completedSegmentKeys = Set(gone)))
+    assert(msg.contains("Segment CRC mismatch") && msg.contains(victim))
   }
 
   test("segment pruning reads only overlapping segments") {
