@@ -447,12 +447,12 @@ object Cli {
     // remove-ingest-batch <indexDir> <bm25|pq|flat> <batchId> [streamId]
     //   [--missing-ok]
     // Roll back one streaming-ingested batch (poisoned-data recovery):
-    // the removal intent is CAS-recorded in the sidecar FIRST (the commit
+    // the removal intent is committed to the ingest log FIRST (the commit
     // point), then the marker is deleted and the batch's tagged files are
     // scrubbed (both layouts, codes-first, for pq). Crashed removals
-    // re-run to convergence; batches already folded into the base stats
-    // (bm25) or watermark-compacted (pq/flat) without a removal record
-    // are refused loudly.
+    // re-run to convergence; batches already compacted below the
+    // watermark (for bm25, their deltas folded into the base stats)
+    // without a removal record are refused loudly.
     case "remove-ingest-batch" =>
       val Array(_, indexDir, kind, batchIdS, rest @ _*) = args: @unchecked
       requireKnownFlags("remove-ingest-batch", rest, Set("--missing-ok"))
@@ -481,16 +481,23 @@ object Cli {
         s""""stream_id":${graft.util.Json.escape(sid)},""" +
         s""""marker_removed":$had}""")
 
-    // compact-ingest-markers <indexDir>
-    // Fold the PQ/flat chunk-index ingest markers into the per-stream
-    // contiguous-watermark sidecar and delete them — bounds the
-    // committed-only serve's marker scan for long-lived streams. Refuses
-    // BM25-style layouts (bodied markers) — use compact-bm25-stats there.
-    case "compact-ingest-markers" =>
+    // compact-ingest-markers <indexDir>   (IVF-PQ / IVF-flat chunk index)
+    // compact-bm25-stats <indexDir>       (BM25 index)
+    // The one marker compaction every ingest layout shares: fold the
+    // ingest markers into the per-stream contiguous watermarks of the
+    // layout's ingest log (a BM25 marker's stats delta into the base
+    // stats), delete them, and scrub crashed removals' leftovers from the
+    // layout's tables — run periodically to bound a long-lived stream's
+    // per-serve marker scan. A concurrent admin op fails loudly (CAS
+    // conflict) instead of losing an update.
+    case verb @ ("compact-ingest-markers" | "compact-bm25-stats") =>
       val root = args(1)
+      val tagGlobs: String => Seq[String] =
+        if (verb == "compact-bm25-stats") graft.ann.Bm25.batchGlobs(root)
+        else graft.ann.Retrieval.chunkBatchGlobs(root)
       val wfs = graft.util.StreamCommit.fs(spark, root)
       val before = graft.util.StreamCommit.listMarkers(wfs, root).size
-      val wm = graft.util.StreamCommit.compactMarkers(spark, root)
+      val wm = graft.util.StreamCommit.compactMarkers(spark, root, tagGlobs)
       val after = graft.util.StreamCommit.listMarkers(wfs, root).size
       println(s"""{"index":${graft.util.Json.escape(root)},""" +
         s""""folded_markers":${before - after},""" +
@@ -527,22 +534,6 @@ object Cli {
         s""""codes_without_vec":$noVec,"vecs_without_code":$noCode,""" +
         s""""ok":$ok}""")
       if (!ok) sys.exit(1)
-
-    // compact-bm25-stats <indexDir>
-    // Fold accumulated streaming-ingest marker deltas into the BM25 stats
-    // sidecar and delete the folded markers — run periodically to bound a
-    // long-lived ingest stream's per-serve marker scan. Single
-    // administrative writer per index (CAS-guarded: a concurrent admin op
-    // fails loudly instead of losing an update).
-    case "compact-bm25-stats" =>
-      val root = args(1)
-      val sfs = graft.util.StreamCommit.fs(spark, root)
-      val before = graft.util.StreamCommit.listMarkers(sfs, root).size
-      graft.ann.Bm25.compactStreamStats(spark, root)
-      val after = graft.util.StreamCommit.listMarkers(sfs, root).size
-      println(s"""{"index":${graft.util.Json.escape(root)},""" +
-        s""""folded_markers":${before - after},""" +
-        s""""pending_markers":$after}""")
 
     // bm25-search <indexDir> <queries.parquet> <outPath> [k] [--committed]
     // Serve: per-query BM25 top-k docs (integer-exact micro scores);

@@ -4470,7 +4470,8 @@ object QueriesData {
     }
 
   /** Build-or-reuse the persisted BM25 inverted index (term-bucketed
-    * postings parquet + stats sidecar) — the lexical serve-many layout.
+    * postings parquet + ingest log with the corpus stats) — the lexical
+    * serve-many layout.
     */
   def ensureBm25Index(s: SparkSession, dir: String): String =
     ensureCached("bm25_index", contentKey(s"$dir/documents.parquet")) { build =>

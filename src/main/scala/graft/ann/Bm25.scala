@@ -173,10 +173,12 @@ object Bm25 {
   }
 
   /** Persist the inverted index as term-bucketed parquet: postings
-    * partitioned by `bucket = pmod(xxhash64(term), nBuckets)` plus a stats
-    * sidecar. All postings of a term live in exactly one bucket, so a
-    * query probes only its terms' buckets (static partition pruning) and
-    * still sees every posting — and the true df — for those terms.
+    * partitioned by `bucket = pmod(xxhash64(term), nBuckets)` plus the
+    * corpus stats as the payload of ingest-log version 0
+    * ([[graft.util.StreamCommit.LogState]]). All postings of a term live
+    * in exactly one bucket, so a query probes only its terms' buckets
+    * (static partition pruning) and still sees every posting — and the
+    * true df — for those terms.
     */
   def writeIndex(docs: DataFrame, path: String, nBuckets: Int = 16,
                  textCol: String = "text"): Unit = {
@@ -186,214 +188,71 @@ object Bm25 {
       .withColumn("bucket",
         pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    graft.util.Sidecar.write(docs.sparkSession, path, "_bm25_stats.json",
-      renderStats(nDocs, totalTokens, nBuckets, Map.empty, Map.empty,
-        version = 0L, writer = ""))
+    graft.util.StreamCommit.commit(docs.sparkSession, path,
+      graft.util.StreamCommit.LogState(0L, Map.empty, Map.empty,
+        Map("n_docs" -> nDocs, "total_tokens" -> totalTokens,
+          "n_buckets" -> nBuckets.toLong)),
+      "rebuild the index")
   }
 
   /** Incremental ingest into a persisted index: new documents' postings
     * are bucketed with the STORED nBuckets (so every term's postings stay
-    * in one bucket) and appended into the partitioned layout; the stats
-    * sidecar advances by the appended corpus's exact (nDocs, totalTokens)
-    * deltas. Because df is derived from the postings at query time and
-    * the stats are plain sums, the appended index serves ROW-IDENTICAL
-    * results to a full rebuild over the union corpus (spec-pinned) — no
-    * staleness window, unlike the dense index's fit-frozen centroids.
-    * Same contract as the chunk-index append: the caller appends NEW
-    * docs (re-appending a doc double-counts it), and the sidecar is
-    * written after the data lands, so a crash between the two leaves the
-    * stats one append behind — re-run the append's sidecar half or
-    * rebuild. A CAS conflict ([[writeStatsCas]]) lands in the same
-    * recoverable state: postings appended, stats not yet advanced.
+    * in one bucket) and appended into the partitioned layout; the ingest
+    * log's stats advance by the appended corpus's exact (nDocs,
+    * totalTokens) deltas. Because df is derived from the postings at query
+    * time and the stats are plain sums, the appended index serves
+    * ROW-IDENTICAL results to a full rebuild over the union corpus
+    * (spec-pinned) — no staleness window, unlike the dense index's
+    * fit-frozen centroids. Same contract as the chunk-index append: the
+    * caller appends NEW docs (re-appending a doc double-counts it), and
+    * the stats commit after the data lands, so a crash between the two —
+    * or a CAS conflict in [[graft.util.StreamCommit.commit]] — leaves the
+    * stats one append behind: postings appended, stats not yet advanced.
     */
   def appendToIndex(docs: DataFrame, path: String,
                     textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val st = readStats(spark, path)
+    val st = graft.util.StreamCommit.readState(spark, path)
+    val (n0, t0, nBuckets) = liveStatsFrom(Seq.empty, st)
     val (dn, dt) = corpusStats(docs, textCol)
     buildPostings(docs, textCol)
       .withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(st.nBuckets.toLong)).cast("int"))
+        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
       .write.mode("append").partitionBy("bucket").parquet(path)
-    // the folded and removed maps ride through: dropping folded would
-    // re-serve every folded-but-undeleted marker's delta; dropping removed
-    // would resurrect rolled-back batches' leftover postings
-    writeStatsCas(spark, path, st, st.nDocs + dn, st.totalTokens + dt,
-      st.folded, st.removed,
+    // the watermarks and removed sets ride through: dropping a watermark
+    // would re-serve every folded-but-undeleted marker's delta; dropping
+    // removed would resurrect rolled-back batches' leftover postings
+    graft.util.StreamCommit.commit(spark, path, st.next(payload = st.payload ++
+      Map("n_docs" -> (n0 + dn), "total_tokens" -> (t0 + dt))),
       "the batch's postings are ALREADY appended — do NOT re-run " +
         "appendToIndex (it would append them a second time, doubling tf/df " +
-        "contributions); advance the stats sidecar only — re-read the " +
-        s"sidecar and CAS-write (+$dn docs, +$dt tokens) — or rebuild the " +
-        "index")
+        "contributions); advance the stats only — re-read the ingest log " +
+        s"and commit (+$dn docs, +$dt tokens) — or rebuild the index")
   }
 
-  /** Parsed `_bm25_stats.json`. `folded` maps streamId → highest ingest
-    * batchId whose delta is already folded INTO the base counts (see
-    * [[compactStreamStats]]) — missing = -1, nothing folded. `removed`
-    * records batchIds deliberately rolled back by [[removeIngestBatch]]
-    * (the intent record is the rollback's commit point): serving skips
-    * their marker deltas and their posting files ([[liveStatsFrom]],
-    * committed-file pruning), compaction folds the watermark across them
-    * without their deltas, and the apply path refuses to resurrect them.
-    * Entries are KEPT, never pruned — the record is what makes a crashed
-    * removal's re-run converge and keeps its leftover postings
-    * uncommitted; the growth bound is one long per deliberate rollback
-    * per stream (rare admin operations; a rebuild resets it) — the same
-    * contract as the dense sidecar's
-    * ([[graft.util.StreamCommit.WmState]]). `version` and `writer` are
-    * the CAS fields guarding the sidecar's administrative
-    * read-modify-writers ([[writeStatsCas]]); sidecars written before the
-    * fields existed parse as version 0 with an empty writer.
-    */
-  private[graft] case class BmStats(nDocs: Long, totalTokens: Long,
-                                    nBuckets: Int,
-                                    folded: Map[String, Long],
-                                    removed: Map[String, Set[Long]],
-                                    version: Long, writer: String)
-
-  private[graft] def readStats(spark: SparkSession, path: String): BmStats =
-    parseStats(graft.util.Sidecar.read(spark, path, "_bm25_stats.json"))
-
-  private[graft] def parseStats(body: String): BmStats = {
-    import org.json4s._
-    implicit val formats: Formats = DefaultFormats
-    val j = org.json4s.jackson.JsonMethods.parse(body)
-    val folded = (j \ "folded") match {
-      case JObject(fields) =>
-        fields.map { case (k, v) => k -> v.extract[Long] }.toMap
-      case _ => Map.empty[String, Long]
-    }
-    val removed = (j \ "removed") match {
-      case JObject(fields) =>
-        fields.map { case (k, v) => k -> v.extract[Seq[Long]].toSet }.toMap
-      case _ => Map.empty[String, Set[Long]]
-    }
-    BmStats((j \ "n_docs").extract[Long], (j \ "total_tokens").extract[Long],
-      (j \ "n_buckets").extract[Int], folded, removed,
-      (j \ "version").extractOpt[Long].getOrElse(0L),
-      (j \ "writer").extractOpt[String].getOrElse(""))
-  }
-
-  private def renderStats(nDocs: Long, totalTokens: Long, nBuckets: Int,
-                          folded: Map[String, Long],
-                          removed: Map[String, Set[Long]], version: Long,
-                          writer: String): String = {
-    val f =
-      if (folded.isEmpty) ""
-      else folded.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${graft.util.Json.escape(k)}:$v" }
-        .mkString(""","folded":{""", ",", "}")
-    val r = {
-      val nonEmpty = removed.toSeq.sortBy(_._1).filter(_._2.nonEmpty)
-      if (nonEmpty.isEmpty) ""
-      else nonEmpty
-        .map { case (k, v) =>
-          s"${graft.util.Json.escape(k)}:${v.toSeq.sorted.mkString("[", ",", "]")}" }
-        .mkString(""","removed":{""", ",", "}")
-    }
-    s"""{"n_docs":$nDocs,"total_tokens":$totalTokens,""" +
-      s""""n_buckets":$nBuckets,"version":$version,""" +
-      s""""writer":${graft.util.Json.escape(writer)}$f$r}"""
-  }
-
-  /** Commit a read-modify-write of the stats sidecar with a cheap CAS
-    * check. The sidecar's two administrative RMW writers —
-    * [[appendToIndex]] and [[compactStreamStats]] — are single-writer by
-    * deployment contract; this turns a violated contract (two admins
-    * racing, one side's update silently overwritten) into a LOUD failure
-    * on at least one side: the version is re-read just before the rename
-    * (stale → fail) and the (version, writer-nonce) pair is re-read just
-    * after it (someone overwrote my write → fail). Not a lock — two
-    * writers whose write+recheck windows fully interleave inside one
-    * driver-side read can still both pass — but the realistic mistake
-    * (two seconds-long admin operations overlapping) now fails loudly and
-    * bumps `bm25_stats_cas_conflict_total` instead of silently losing a
-    * read-modify-write. On failure the sidecar holds the OTHER writer's
-    * consistent update; the correct recovery is CALLER-specific (a
-    * compact retries whole; a batch append must NOT be re-run — its
-    * postings already landed), so every caller passes its own
-    * `recoveryHint` into the exception text.
-    */
-  private[graft] def writeStatsCas(spark: SparkSession, path: String,
-                                   expect: BmStats, nDocs: Long,
-                                   totalTokens: Long,
-                                   folded: Map[String, Long],
-                                   removed: Map[String, Set[Long]],
-                                   recoveryHint: String): Unit = {
-    def conflict(what: String): Nothing = {
-      graft.metrics.GraftCounters.inc("bm25_stats_cas_conflict_total")
-      throw new IllegalStateException(
-        s"bm25 stats sidecar CAS conflict at $path: $what — a concurrent " +
-          "administrative writer (appendToIndex / compactStreamStats / " +
-          "removeIngestBatch) violated the " +
-          s"single-administrative-writer contract. Recovery: $recoveryHint")
-    }
-    val pre = readStats(spark, path)
-    if (pre.version != expect.version)
-      conflict(s"read version ${expect.version}, found ${pre.version} " +
-        "before write")
-    val nonce = java.util.UUID.randomUUID().toString
-    graft.util.Sidecar.write(spark, path, "_bm25_stats.json",
-      renderStats(nDocs, totalTokens, expect.nBuckets, folded, removed,
-        expect.version + 1, nonce))
-    val post = readStats(spark, path)
-    if (post.version != expect.version + 1 || post.writer != nonce)
-      conflict(s"post-write readback saw version ${post.version} / writer " +
-        s"'${post.writer}' where this writer committed " +
-        s"${expect.version + 1} / '$nonce' — this update was overwritten")
-  }
-
-  private def markerDelta(body: String): (Long, Long) =
-    (graft.util.Sidecar.requiredLong(body, "n_docs", "bm25 ingest marker"),
-      graft.util.Sidecar.requiredLong(body, "total_tokens",
-        "bm25 ingest marker"))
-
-  /** Serving-time corpus stats: the base sidecar plus every UNFOLDED
-    * streaming-ingest marker's delta (metadata-sized driver reads — one
-    * small file per un-compacted micro-batch; [[compactStreamStats]]
-    * bounds the count).
-    *
-    * READ ORDER MATTERS: markers are listed BEFORE the sidecar is read.
-    * [[compactStreamStats]] writes the new sidecar (which carries the
-    * folded watermark) strictly before deleting the markers it folded, so
-    * with this order every interleaving of a concurrent compact converges:
-    * a read that sees the PRE-compact base also sees every unfolded marker
-    * (none deleted yet when the list ran), and a read that sees the
-    * POST-compact base filters the already-listed folded markers out via
-    * the watermark. The reverse order (sidecar first) silently DROPPED the
-    * folded deltas whenever a compact committed between the two reads —
-    * old base counts combined with a post-delete marker list — skewing
-    * idf/avgdl for that serve (Bm25Spec pins both interleavings).
-    */
-  private def liveStats(spark: SparkSession, path: String)
-      : (Long, Long, Int) = {
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    liveStatsFrom(graft.util.StreamCommit.listMarkers(fs, path),
-      graft.util.Sidecar.read(spark, path, "_bm25_stats.json"))
-  }
-
-  /** The pure combine step of [[liveStats]] — (markers listed first,
-    * sidecar body read second) → serving stats. Seam-exposed so the spec
-    * can pin the compact-interleaved read orders deterministically.
+  /** Serving-time corpus stats `(nDocs, totalTokens, nBuckets)`: the
+    * ingest log's base stats plus every live unfolded streaming-ingest
+    * marker's delta ([[graft.util.StreamCommit.livePayload]]; one small
+    * marker file per un-compacted micro-batch, which
+    * [[compactStreamStats]] bounds). Callers take `markers` and `st` from
+    * one [[graft.util.StreamCommit.committedView]], whose
+    * markers-before-state read order keeps a concurrent compaction from
+    * dropping or double-counting deltas (Bm25Spec pins the
+    * interleavings).
     */
   private[graft] def liveStatsFrom(markers: Seq[(String, Long, String)],
-                                   statsBody: String): (Long, Long, Int) = {
-    val st = parseStats(statsBody)
-    val (dn, dt) = markers
-      .filter { case (sid, id, _) =>
-        id > st.folded.getOrElse(sid, -1L) &&
-          // a rollback's intent record commits the removal BEFORE the
-          // marker delete — a lingering marker's delta must not serve
-          !st.removed.getOrElse(sid, Set.empty).contains(id) }
-      .map(m => markerDelta(m._3))
-      .foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-    (st.nDocs + dn, st.totalTokens + dt, st.nBuckets)
+                                   st: graft.util.StreamCommit.LogState)
+      : (Long, Long, Int) = {
+    val p = graft.util.StreamCommit.livePayload(markers, st)
+    def stat(k: String) = p.getOrElse(k, throw new IllegalArgumentException(
+      s"the ingest log carries no BM25 $k — not a BM25 index"))
+    (stat("n_docs"), stat("total_tokens"), stat("n_buckets").toInt)
   }
 
   /** EXACTLY-ONCE application of one ingest batch — the BM25 sibling of
     * [[graft.ann.Retrieval.applyPqIngestBatch]], same
     * [[graft.util.StreamCommit]] protocol (marker gate → scrub → stage →
-    * prefixed promote → marker). The extra wrinkle is the stats sidecar:
+    * prefixed promote → marker). The extra wrinkle is the corpus stats:
     * a replayed `appendToIndex` would double-count (n_docs, total_tokens)
     * with no way to tell, so the batch's delta is NOT added to the base —
     * it travels IN the marker file (the same write that commits the
@@ -410,236 +269,61 @@ object Bm25 {
     val tag = graft.util.StreamCommit.tag(streamId, batchId)
     if (graft.util.StreamCommit.markerExists(fs, path, tag)) return false
     // marker gone ≠ never applied: compaction deletes folded markers, and
-    // a rollback deliberately excised the batch — gate on the sidecar too
-    // (the same replay gate as the dense applies)
-    val st = readStats(spark, path)
-    if (graft.util.StreamCommit.refuseReplayOfRemoved(st.folded, st.removed,
-      streamId, batchId, path)) return false
-    val prefix = s"$tag-"
-    graft.util.StreamCommit.scrub(fs, Seq(
-      s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/$prefix*"))
+    // a rollback deliberately excised the batch — gate on the ingest log
+    // too (the same replay gate as the dense applies)
+    val st = graft.util.StreamCommit.readState(spark, path)
+    if (graft.util.StreamCommit.refuseReplayOfRemoved(st, streamId, batchId,
+      path)) return false
+    graft.util.StreamCommit.scrub(fs, batchGlobs(path)(tag))
     val staging = s"$path/_staging/$tag"
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val nBuckets = st.nBuckets
+    val (_, _, nBuckets) = liveStatsFrom(Seq.empty, st)
     val (dn, dt) = corpusStats(batch, textCol)
     buildPostings(batch, textCol)
       .withColumn("bucket",
         pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    graft.util.StreamCommit.promote(fs, staging, path, prefix)
+    graft.util.StreamCommit.promote(fs, staging, path, s"$tag-")
     graft.util.StreamCommit.writeMarker(fs, path, tag,
       s"""{"n_docs":$dn,"total_tokens":$dt}""")
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     true
   }
 
+  /** One ingest batch's posting files, by batch tag. */
+  private[graft] def batchGlobs(path: String)(tagName: String): Seq[String] =
+    Seq(s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/$tagName-*")
+
   /** Roll back one streaming-ingested batch (the "remove a poisoned
-    * batch" administrative operation) — INTENT-RECORD-FIRST, the same
-    * guarded protocol as the dense layouts'
-    * [[graft.util.StreamCommit.removeBatchGuarded]]. MAINTENANCE WARNING:
-    * the step SEQUENCING here deliberately mirrors removeBatchGuarded
-    * line for line against this layout's own sidecar type (the delta-
-    * carrying stats sidecar vs the bare watermark sidecar — different
-    * enough that a shared template was judged worse than two pinned
-    * copies); any protocol change MUST land in both, and IngestRaceSpec
-    * pins both families' race orders and crash seams in the same round
-    * precisely so a one-sided edit fails tests, not production. The fold
-    * walk itself IS shared ([[graft.util.StreamCommit.contiguousFold]]).
-    * Protocol:
-    *   1. pre-check: a batch already recorded removed is an idempotent
-    *      no-op that finishes a crashed attempt's cleanup (lingering
-    *      marker deleted — its delta dies with it — and leftover postings
-    *      scrubbed); a batch at or below the folded watermark and NOT
-    *      recorded removed is refused loudly — its delta lives in the
-    *      base counts and cannot be subtracted (rebuild, or trim and
-    *      re-append, instead);
-    *   2. CAS-record the batchId in the sidecar's `removed` set — THE
-    *      COMMIT POINT: from here the batch's marker delta never serves
-    *      and never folds ([[liveStatsFrom]], [[compactStreamStats]]),
-    *      its posting files are uncommitted in committed-only serves,
-    *      and the version bump fails any concurrent compact holding a
-    *      stale marker listing BEFORE this removal has mutated anything
-    *      (a compact that committed first fails THIS CAS instead — the
-    *      loud "concurrently folded" failure, postings intact, batch
-    *      still served correctly, rebuild to remove);
-    *   3. delete the marker (the delta dies with it — it was never in
-    *      the base: a pre-intent fold fails step 2, a post-intent fold
-    *      skips recorded batches);
-    *   4. scrub the batch's tagged posting files. A crash anywhere after
-    *      step 2 re-runs to convergence via step 1's no-op arm, and a
-    *      [[compactStreamStats]] in between finishes the cleanup itself
-    *      (folds ACROSS the recorded batch without its delta and scrubs
-    *      its leftovers) — the pre-r14 resurrection window (crashed
-    *      removal + max-fold compact permanently committing orphaned
-    *      postings with no delta) is closed by exactly this record.
-    * Re-ingesting a removed batchId is refused by [[applyIngestBatch]].
-    * Administrative single-writer, like every other admin op on one
-    * index. Returns false when the batch was already removed or its
-    * marker was already absent (leftovers are still scrubbed).
-    * Reader contract (serve-vs-rollback): removal does NOT quiesce
-    * serves — a serve planned before it fails loudly
-    * (FileNotFoundException) when executed after the scrub, never
-    * silently serving a partial index (spec-pinned).
+    * batch" administrative operation): the shared intent-record-first
+    * protocol of [[graft.util.StreamCommit.removeBatchGuarded]] over this
+    * layout's posting files. Once the removal is recorded, the batch's
+    * marker delta never serves and never folds, its posting files are
+    * uncommitted in committed-only serves, and [[applyIngestBatch]]
+    * refuses to re-apply it. A batch already folded into the base stats
+    * is refused loudly — its delta cannot be subtracted (rebuild, or trim
+    * and re-append, instead).
     */
   def removeIngestBatch(spark: SparkSession, path: String, batchId: Long,
                         streamId: String = "",
                         afterPreCheck: () => Unit = () => (),
                         afterMarkerDelete: () => Unit = () => (),
-                        allowMissing: Boolean = false): Boolean = {
-    graft.util.StreamCommit.requireValidStreamId(streamId)
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    def foldedWm(st: BmStats) = st.folded.getOrElse(streamId, -1L)
-    def removedSet(st: BmStats) = st.removed.getOrElse(streamId, Set.empty[Long])
-    val st0 = readStats(spark, path)
-    val tag = graft.util.StreamCommit.tag(streamId, batchId)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_stream_appends/$tag")
-    val postingGlobs = Seq(
-      s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/$tag-*")
-    if (removedSet(st0).contains(batchId)) {
-      // finish a crashed earlier attempt: the intent record IS the
-      // removal's commit point, so complete the physical cleanup
-      if (graft.util.StreamCommit.markerExists(fs, path, tag))
-        fs.delete(marker, false)
-      graft.util.StreamCommit.scrub(fs, postingGlobs)
-      return false
-    }
-    if (batchId <= foldedWm(st0))
-      throw new IllegalStateException(
-        s"bm25 ingest batch $batchId of stream '$streamId' at $path is " +
-          s"already folded into the base stats (watermark ${foldedWm(st0)})" +
-          " — its delta cannot be subtracted; rebuild the index or trim " +
-          "the corpus and re-append")
-    // same no-trace guard as the dense removeBatchGuarded: recording a
-    // never-ingested batchId would permanently refuse its future apply
-    // (applyIngestBatch's replay gate) — a typoed remove must fail loudly,
-    // not brick the stream when that micro-batch arrives
-    if (!allowMissing &&
-      !graft.util.StreamCommit.markerExists(fs, path, tag) &&
-      postingGlobs.forall(g =>
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(g)))
-          .getOrElse(Array.empty).isEmpty))
-      throw new IllegalArgumentException(
-        s"bm25 ingest batch $batchId of stream '$streamId' at $path has " +
-          "no marker and no posting files — nothing to remove. If this " +
-          "batchId was never ingested, recording its removal would " +
-          "permanently refuse its future apply (batchIds are " +
-          "engine-assigned); if it is the residue of a pre-r14 removal " +
-          "that crashed after its scrub but before recording, re-run " +
-          "with allowMissing/--missing-ok to record it")
-    afterPreCheck()
-    try {
-      writeStatsCas(spark, path, st0, st0.nDocs, st0.totalTokens, st0.folded,
-        st0.removed + (streamId -> (removedSet(st0) + batchId)),
-        "nothing is mutated yet (the intent record is the removal's FIRST " +
-          s"write) — re-run removeIngestBatch $batchId (idempotent)")
-    } catch {
-      case e: IllegalStateException =>
-        val now = readStats(spark, path)
-        if (batchId <= foldedWm(now) && !removedSet(now).contains(batchId))
-          throw new IllegalStateException(
-            s"bm25 ingest batch $batchId of stream '$streamId' at $path " +
-              "was concurrently folded into the base stats (a " +
-              "compactStreamStats committed between this removal's state " +
-              "read and its intent record — single-administrative-writer " +
-              "contract violated). Its posting files were NOT scrubbed: " +
-              "the index still serves the batch correctly; rebuild the " +
-              "index to remove it", e)
-        throw e
-    }
-    val had = graft.util.StreamCommit.markerExists(fs, path, tag)
-    if (had) fs.delete(marker, false)
-    afterMarkerDelete()
-    graft.util.StreamCommit.scrub(fs, postingGlobs)
-    had
-  }
+                        allowMissing: Boolean = false): Boolean =
+    graft.util.StreamCommit.removeBatchGuarded(spark, path, streamId,
+      batchId, batchGlobs(path)(graft.util.StreamCommit.tag(streamId, batchId)),
+      afterPreCheck, afterMarkerDelete, allowMissing)
 
   /** Fold accumulated streaming-ingest marker deltas into the base stats
-    * sidecar and delete the folded markers — bounds the per-serve marker
-    * scan for long-running ingest streams. Per stream, the folded
-    * watermark extends over the CONTIGUOUS run above the previous
-    * watermark in which every batchId has a marker OR is recorded in the
-    * sidecar's `removed` set (a deliberate [[removeIngestBatch]]
-    * rollback, whose delta must NOT fold — it died, or is about to die,
-    * with its marker): batchIds within one checkpoint lineage are
-    * contiguous from 0, so an UNRECORDED gap means an in-flight crash,
-    * and folding past it would permanently divorce that batch's eventual
-    * postings from its stats delta (the pre-r14 per-stream-MAX fold had
-    * exactly this hole — the dense layouts'
-    * [[graft.util.StreamCommit.compactMarkersFrom]] discipline now holds
-    * on both sidecar families). The compact also finishes crashed
-    * removals' physical cleanup (scrubs recorded-removed batches'
-    * leftover posting files), so the crash-then-compact sequence
-    * converges without waiting for a removal re-run. Crash-safe: the
-    * CAS-guarded single-file stats overwrite is the commit point (it both
-    * adds the deltas and records the folded watermark per streamId), and
-    * marker deletion after it is idempotent — a marker that is folded but
-    * survives a crash is simply ignored by [[liveStats]] until the next
-    * compact deletes it.
-    *
-    * The stats sidecar's administrative read-modify-writers — this
-    * compact, the batch [[appendToIndex]], and [[removeIngestBatch]]'s
-    * intent record — are single-writer by deployment contract, and
-    * [[writeStatsCas]] turns a violated contract into a loud failure
-    * instead of a silent lost update: the state is read FIRST, so a
-    * removal's intent record landing after this read moves the version
-    * and fails this compact's CAS — a stale marker listing can never fold
-    * a rolled-back batch's delta. Streaming ingest batches never touch
-    * the base sidecar, so they are safe concurrently with any of them.
+    * and delete the folded markers — the shared
+    * [[graft.util.StreamCommit.compactMarkers]] over this layout's posting
+    * files (it also scrubs crashed removals' leftover postings). Run it
+    * periodically to bound a long-lived stream's per-serve marker scan.
+    * Streaming ingest batches never touch the ingest log, so they are
+    * safe concurrently with it; concurrent administrative writers fail
+    * loudly on at least one side.
     */
-  def compactStreamStats(spark: SparkSession, path: String): Unit = {
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    // sweep stale marker temps (crashed writeMarker attempts of abandoned
-    // streams — a LIVE stream's replay cleans its own). Benign race: a
-    // compact can delete a concurrently in-flight marker temp, failing
-    // that marker's rename loudly — the batch replays and converges, the
-    // exactly-once end state is untouched.
-    graft.util.StreamCommit.scrub(fs, Seq(
-      s"${graft.util.StreamCommit.escapeGlob(path)}/_stream_appends/.*.tmp.*"))
-    val st = readStats(spark, path)
-    val markers = graft.util.StreamCommit.listMarkers(fs, path)
-    def removedOf(sid: String) = st.removed.getOrElse(sid, Set.empty[Long])
-    val byStream = markers.groupBy(_._1)
-    val newFolded = st.folded ++
-      (byStream.keySet ++ st.removed.keySet).map { sid =>
-        // the one shared fold walk (StreamCommit.contiguousFold) — the two
-        // sidecar families must never drift on the contiguity rule, and
-        // its no-progress warning fires here too
-        sid -> graft.util.StreamCommit.contiguousFold(path, sid,
-          st.folded.getOrElse(sid, -1L),
-          byStream.getOrElse(sid, Seq.empty).map(_._2).toSet,
-          removedOf(sid))
-      }.toMap
-    val (dn, dt) = markers
-      .filter { case (sid, id, _) =>
-        id > st.folded.getOrElse(sid, -1L) && id <= newFolded(sid) &&
-          !removedOf(sid).contains(id) }
-      .map(m => markerDelta(m._3))
-      .foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-    if (newFolded != st.folded || dn != 0L || dt != 0L)
-      writeStatsCas(spark, path, st, st.nDocs + dn, st.totalTokens + dt,
-        newFolded, st.removed,
-        "re-run compactStreamStats — it is idempotent (unfolded markers " +
-          "are re-read and the conflicting writer's update is the one on " +
-          "disk)")
-    markers
-      .filter { case (sid, id, _) => id <= newFolded.getOrElse(sid, -1L) }
-      .foreach { case (sid, id, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$path/_stream_appends/${graft.util.StreamCommit.tag(sid, id)}"),
-          false)
-      }
-    // finish crashed removals: a rollback that died between its intent
-    // record and its scrub left orphaned posting files (and possibly a
-    // marker, deleted above once folded) — scrubbing here is idempotent
-    // and safe at any time, the removal is committed by its record
-    graft.util.StreamCommit.scrub(fs,
-      st.removed.toSeq.flatMap { case (sid, ids) =>
-        ids.toSeq.sorted.map { id =>
-          val t = graft.util.StreamCommit.tag(sid, id)
-          s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/$t-*"
-        }
-      })
-  }
+  def compactStreamStats(spark: SparkSession, path: String): Unit =
+    graft.util.StreamCommit.compactMarkers(spark, path, batchGlobs(path))
 
   private val postingsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
@@ -681,11 +365,10 @@ object Bm25 {
                         maxQueries: Long = 1000000L,
                         committedOnly: Boolean = false): DataFrame = {
     val fs = graft.util.StreamCommit.fs(spark, path)
-    // ONE marker snapshot + ONE sidecar read feed both the stats and (in
-    // committed-only mode) the file pruning — stats and scan can't diverge
-    val markers = graft.util.StreamCommit.listMarkers(fs, path)
-    val statsBody = graft.util.Sidecar.read(spark, path, "_bm25_stats.json")
-    val (nDocs, totalTokens, nBuckets) = liveStatsFrom(markers, statsBody)
+    // ONE committed view feeds both the stats and (in committed-only mode)
+    // the file pruning — stats and scan can't diverge
+    val (markers, st) = graft.util.StreamCommit.committedView(spark, path)
+    val (nDocs, totalTokens, nBuckets) = liveStatsFrom(markers, st)
     val buckets = queries.where(col(textCol).isNotNull)
       .select(explode(terms(col(textCol))).as("term"))
       .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
@@ -697,15 +380,12 @@ object Bm25 {
           .where(col("bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
           .select("doc_id", "dl", "term", "tf")
       else {
-        val tags = markers
-          .map(m => graft.util.StreamCommit.tag(m._1, m._2)).toSet
         val globs =
           if (buckets.isEmpty) Seq.empty[String]
           else Seq(s"${graft.util.StreamCommit.escapeGlob(path)}" +
             s"/bucket={${buckets.mkString(",")}}/*")
-        val st = parseStats(statsBody)
         val files = graft.util.StreamCommit.committedDataFiles(fs, globs,
-          tags, st.folded, st.removed)
+          markers, st)
         if (files.isEmpty)
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -741,15 +421,11 @@ object Bm25 {
   def validateIndex(spark: SparkSession, path: String)
       : (Long, Long, Long, Long, Boolean) = {
     val fs = graft.util.StreamCommit.fs(spark, path)
-    val markers = graft.util.StreamCommit.listMarkers(fs, path)
-    val statsBody = graft.util.Sidecar.read(spark, path, "_bm25_stats.json")
-    val (nDocs, totalTokens, _) = liveStatsFrom(markers, statsBody)
-    val st = parseStats(statsBody)
-    val tags = markers
-      .map(m => graft.util.StreamCommit.tag(m._1, m._2)).toSet
+    val (markers, st) = graft.util.StreamCommit.committedView(spark, path)
+    val (nDocs, totalTokens, _) = liveStatsFrom(markers, st)
     val files = graft.util.StreamCommit.committedDataFiles(fs,
       Seq(s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/*"),
-      tags, st.folded, st.removed)
+      markers, st)
     val (distinctDocs, sumTf) =
       if (files.isEmpty) (0L, 0L)
       else {

@@ -647,28 +647,28 @@ object Retrieval {
                                committedOnly: Boolean = false): DataFrame =
     retrievePqWithSnapshot(spark, path, queries, k, nProbe, shortlist, dim,
       salt, textCol, exactRerank, maxQueries, collectGate,
-      if (committedOnly) Some(committedSnapshotOf(spark, path)) else None)
+      if (committedOnly)
+        Some(graft.util.StreamCommit.committedView(spark, path))
+      else None)
 
-  /** One (marker tags, folded watermarks, removed set) snapshot of a
-    * streaming-ingested layout — the committed-only serve's index view.
-    * The removed set rides along so a rollback that crashed before its
-    * scrub (intent recorded, files orphaned) stays invisible to committed
-    * serves ([[graft.util.StreamCommit.isCommittedFile]]).
+  /** One layout table's committed parquet files (partition globs relative
+    * to `root`) in one [[graft.util.StreamCommit.committedView]], read
+    * with the pinned schema — an empty frame when nothing is committed.
     */
-  private[graft] def committedSnapshotOf(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Set[String], Map[String, Long], Map[String, Set[Long]]) = {
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    // markers BEFORE the sidecar (the same read-order contract as BM25's
-    // liveStats): a compact committing in between deletes folded markers
-    // AFTER writing the watermark, so markers-first sees every committed
-    // batch in at least one of the two sources in every interleaving —
-    // the reverse order would read an old watermark and then a
-    // post-delete marker list, dropping a just-folded batch from the view
-    val tags = graft.util.StreamCommit.listMarkers(fs, path)
-      .map(m => graft.util.StreamCommit.tag(m._1, m._2)).toSet
-    val st = graft.util.StreamCommit.readWatermarkState(spark, path)
-    (tags, st.watermarks, st.removed)
+  private def readCommitted(spark: org.apache.spark.sql.SparkSession,
+                            root: String, partGlobs: Seq[String],
+                            view: (Seq[(String, Long, String)],
+                              graft.util.StreamCommit.LogState),
+                            schema: org.apache.spark.sql.types.StructType)
+      : DataFrame = {
+    val files = graft.util.StreamCommit.committedDataFiles(
+      graft.util.StreamCommit.fs(spark, root),
+      partGlobs.map(g => s"${graft.util.StreamCommit.escapeGlob(root)}/$g"),
+      view._1, view._2)
+    if (files.isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else spark.read.option("basePath", root).schema(schema).parquet(files: _*)
   }
 
   /** Deep self-check of a persisted IVF-PQ chunk index — the dense
@@ -685,26 +685,12 @@ object Retrieval {
     */
   def validatePqIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): (Long, Long, Long, Long, Boolean) = {
-    val snap = committedSnapshotOf(spark, path)
-    def committedKeys(root: String, glob: String,
-                      schema: org.apache.spark.sql.types.StructType)
-        : DataFrame = {
-      val fs = graft.util.StreamCommit.fs(spark, root)
-      val files = graft.util.StreamCommit.committedDataFiles(fs,
-        Seq(s"${graft.util.StreamCommit.escapeGlob(root)}/$glob"),
-        snap._1, snap._2, snap._3)
-      if (files.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          schema).select("doc_id", "chunk_idx")
-      else
-        spark.read.option("basePath", root).schema(schema)
-          .parquet(files: _*).select("doc_id", "chunk_idx")
-    }
-    val codes = committedKeys(path, "list=*/*", pqCodesSchema)
-      .withColumn("c", lit(1L))
-    val vecs = committedKeys(s"$path/_vecs", "list=*/vb=*/*", pqVecsSchema)
-      .withColumn("v", lit(1L))
+    val view = graft.util.StreamCommit.committedView(spark, path)
+    val codes = readCommitted(spark, path, Seq("list=*/*"), view,
+      pqCodesSchema).select(col("doc_id"), col("chunk_idx"), lit(1L).as("c"))
+    val vecs = readCommitted(spark, s"$path/_vecs", Seq("list=*/vb=*/*"),
+      view, pqVecsSchema)
+      .select(col("doc_id"), col("chunk_idx"), lit(1L).as("v"))
     // one full-outer join + one agg = the documented one-scan-per-layout
     // cost (separate count() actions would re-read each layout per count)
     val r = codes.join(vecs, Seq("doc_id", "chunk_idx"), "full_outer")
@@ -727,8 +713,8 @@ object Retrieval {
       path: String, queries: DataFrame, k: Int, nProbe: Int,
       shortlist: Int, dim: Int, salt: String, textCol: String,
       exactRerank: Boolean, maxQueries: Long, collectGate: Long,
-      snapshot: Option[(Set[String], Map[String, Long],
-        Map[String, Set[Long]])]): DataFrame = {
+      snapshot: Option[(Seq[(String, Long, String)],
+        graft.util.StreamCommit.LogState)]): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val sl = if (shortlist > 0) shortlist else 10 * k
     require(sl >= k, s"shortlist=$sl must be >= k=$k")
@@ -746,23 +732,6 @@ object Retrieval {
       // the one per-serve-call snapshot serves both layout scans — the
       // codes and vecs views of any batch commit or vanish together, and
       // every query shard of one logical call sees one index view
-      def committedSnapshot = snapshot.get
-      def committedScan(layoutRoot: String, partDirGlobs: Seq[String],
-                        schema: org.apache.spark.sql.types.StructType)
-          : DataFrame = {
-        val fs = graft.util.StreamCommit.fs(spark, layoutRoot)
-        val files = graft.util.StreamCommit.committedDataFiles(fs,
-          partDirGlobs.map(g =>
-            s"${graft.util.StreamCommit.escapeGlob(layoutRoot)}/$g/*"),
-          committedSnapshot._1, committedSnapshot._2, committedSnapshot._3)
-        if (files.isEmpty)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            schema)
-        else
-          spark.read.option("basePath", layoutRoot).schema(schema)
-            .parquet(files: _*)
-      }
       val ivfModel = Ann.IvfModel.fromJson(
         graft.util.Sidecar.read(spark, path, "_ivf_centroids.json"))
       val pqModel = Ann.PqModel.fromJson(
@@ -789,8 +758,8 @@ object Retrieval {
           spark.read.schema(pqCodesSchema).parquet(path)
             .where(listFilter(col("list")))
         else
-          committedScan(path, lists.toSeq.map(l => s"list=$l"),
-            pqCodesSchema))
+          readCommitted(spark, path, lists.toSeq.map(l => s"list=$l/*"),
+            snapshot.get, pqCodesSchema))
           .select("doc_id", "chunk_idx", "chunk_start", "list", "pq_code")
       // ADC decode via the broadcast-codebook kernel; summation order is
       // identical to the per-subspace literal reconstruction it replaced.
@@ -869,10 +838,10 @@ object Retrieval {
               .where(listFilter(col("list")) &&
                 col("vb").isin(vbs.map(Integer.valueOf).toSeq: _*))
           else
-            committedScan(s"$path/_vecs",
+            readCommitted(spark, s"$path/_vecs",
               for { l <- lists.toSeq; v <- vbs.toSeq }
-                yield s"list=$l/vb=$v",
-              pqVecsSchema))
+                yield s"list=$l/vb=$v/*",
+              snapshot.get, pqVecsSchema))
             .select("doc_id", "chunk_idx", "vec")
         val w = Window.partitionBy("query_id")
           .orderBy(col("score").desc, col("doc_id"), col("chunk_idx"))
@@ -974,14 +943,12 @@ object Retrieval {
     val tag = graft.util.StreamCommit.tag(streamId, batchId)
     if (graft.util.StreamCommit.markerExists(fs, path, tag)) return false
     // marker gone ≠ never applied: compaction deletes folded markers, and
-    // a rollback deliberately excised the batch — gate on the sidecar too
-    val wmSt = graft.util.StreamCommit.readWatermarkState(spark, path)
-    if (graft.util.StreamCommit.refuseReplayOfRemoved(wmSt.watermarks,
-      wmSt.removed, streamId, batchId, path)) return false
+    // a rollback deliberately excised the batch — gate on the ingest log
+    if (graft.util.StreamCommit.refuseReplayOfRemoved(
+      graft.util.StreamCommit.readState(spark, path), streamId, batchId,
+      path)) return false
     val prefix = s"$tag-"
-    val pg = graft.util.StreamCommit.escapeGlob(path)
-    graft.util.StreamCommit.scrub(fs,
-      Seq(s"$pg/list=*/$prefix*", s"$pg/_vecs/list=*/vb=*/$prefix*"))
+    graft.util.StreamCommit.scrub(fs, chunkBatchGlobs(path)(tag))
     val staging = s"$path/_staging/$tag"
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     val (codes, vecs) = pqAppendFrames(batch, path, chunkTokens,
@@ -997,53 +964,46 @@ object Retrieval {
     true
   }
 
-  /** Roll back one streaming-ingested batch from a persisted IVF-PQ chunk
-    * index — the administrative "remove a poisoned batch" operation
-    * ([[graft.util.StreamCommit.removeBatch]]): the marker delete is the
-    * commit point, then the batch's tagged files are scrubbed from BOTH
-    * layouts, CODES FIRST — the mirror of the vecs-first promote
-    * ordering, so at every crash point a chunk either has both rows or
-    * is invisible to serving (a code row without its vector row is the
-    * silent-drop hazard; an orphan vector row never reaches a
-    * shortlist). Idempotent; must not race an in-flight ingest of the
-    * same tag (administrative single-writer). The full guarded protocol —
-    * watermark pre-check, then the removal intent CAS-recorded in the
-    * sidecar BEFORE any mutation (a concurrent compact fails one side's
-    * CAS loudly with the files intact, and compaction extends the
-    * watermark across the recorded gap) — is
-    * [[graft.util.StreamCommit.removeBatchGuarded]], including the
+  /** One ingest batch's data files in a chunk index, by batch tag, CODES
+    * FIRST — the mirror of the vecs-first promote ordering, so a rollback
+    * or replay scrub in glob order leaves every chunk either with both
+    * rows or invisible to serving at each crash point (a code row without
+    * its vector row is the silent-drop hazard; an orphan vector row never
+    * reaches a shortlist). The IVF-flat layout has no `_vecs/` table, so
+    * its second glob matches nothing.
+    */
+  private[graft] def chunkBatchGlobs(path: String)(tagName: String)
+      : Seq[String] = {
+    val pg = graft.util.StreamCommit.escapeGlob(path)
+    Seq(s"$pg/list=*/$tagName-*", s"$pg/_vecs/list=*/vb=*/$tagName-*")
+  }
+
+  /** Roll back one streaming-ingested batch from a persisted IVF-PQ or
+    * IVF-flat chunk index — the administrative "remove a poisoned batch"
+    * operation: the shared intent-record-first protocol of
+    * [[graft.util.StreamCommit.removeBatchGuarded]] (removal recorded in
+    * the ingest log before any mutation, then marker delete, then the
+    * codes-first scrub of [[chunkBatchGlobs]]), including its
     * serve-vs-rollback reader contract (in-flight serves fail loudly,
-    * never silently partially).
+    * never silently partially). Idempotent; must not race an in-flight
+    * ingest of the same tag (administrative single-writer).
     */
   def removePqIngestBatch(spark: org.apache.spark.sql.SparkSession,
                           path: String, batchId: Long,
                           streamId: String = "",
                           allowMissing: Boolean = false): Boolean =
     graft.util.StreamCommit.removeBatchGuarded(spark, path, streamId,
-      batchId, pqBatchGlobs(path, streamId, batchId),
-      allowMissing = allowMissing)
+      batchId, chunkBatchGlobs(path)(graft.util.StreamCommit.tag(streamId,
+        batchId)), allowMissing = allowMissing)
 
-  private[graft] def pqBatchGlobs(path: String, streamId: String,
-                                  batchId: Long): Seq[String] = {
-    val tag = graft.util.StreamCommit.tag(streamId, batchId)
-    val pg = graft.util.StreamCommit.escapeGlob(path)
-    // codes-first scrub order is preserved by glob order ([[removePqIngestBatch]])
-    Seq(s"$pg/list=*/$tag-*", s"$pg/_vecs/list=*/vb=*/$tag-*")
-  }
-
-  /** [[removePqIngestBatch]] for the IVF-flat chunk index — one layout,
-    * no ordering subtlety; same guarded protocol.
+  /** [[removePqIngestBatch]] for the IVF-flat chunk index (same layout
+    * minus the `_vecs/` table; same guarded protocol).
     */
   def removeChunkIngestBatch(spark: org.apache.spark.sql.SparkSession,
                              path: String, batchId: Long,
                              streamId: String = "",
-                             allowMissing: Boolean = false): Boolean = {
-    val tag = graft.util.StreamCommit.tag(streamId, batchId)
-    graft.util.StreamCommit.removeBatchGuarded(spark, path, streamId,
-      batchId, Seq(
-        s"${graft.util.StreamCommit.escapeGlob(path)}/list=*/$tag-*"),
-      allowMissing = allowMissing)
-  }
+                             allowMissing: Boolean = false): Boolean =
+    removePqIngestBatch(spark, path, batchId, streamId, allowMissing)
 
   /** The two append frames (codes, vecs) for [[appendToChunkIndexPq]],
     * exposed so the ordering contract above is testable: writing `vecs`
@@ -1193,7 +1153,7 @@ object Retrieval {
     * IVF-flat chunk index — the [[appendToChunkIndex]] counterpart of
     * [[applyPqIngestBatch]], same [[graft.util.StreamCommit]] protocol.
     * The flat layout is the easy case: one partitioned table, no side
-    * table, no stats sidecar — marker gate, scrub, stage, prefixed
+    * table, no stats payload — marker gate, scrub, stage, prefixed
     * promote, marker.
     */
   def applyChunkIngestBatch(batch: DataFrame, path: String, batchId: Long,
@@ -1206,20 +1166,19 @@ object Retrieval {
     val fs = graft.util.StreamCommit.fs(spark, path)
     val tag = graft.util.StreamCommit.tag(streamId, batchId)
     if (graft.util.StreamCommit.markerExists(fs, path, tag)) return false
-    // same sidecar gate as [[applyPqIngestBatch]]: folded → no-op replay,
-    // deliberately removed → loud refusal (never resurrect a rollback)
-    val wmSt = graft.util.StreamCommit.readWatermarkState(spark, path)
-    if (graft.util.StreamCommit.refuseReplayOfRemoved(wmSt.watermarks,
-      wmSt.removed, streamId, batchId, path)) return false
-    val prefix = s"$tag-"
-    graft.util.StreamCommit.scrub(fs, Seq(
-      s"${graft.util.StreamCommit.escapeGlob(path)}/list=*/$prefix*"))
+    // same ingest-log gate as [[applyPqIngestBatch]]: folded → no-op
+    // replay, deliberately removed → loud refusal (never resurrect a
+    // rollback)
+    if (graft.util.StreamCommit.refuseReplayOfRemoved(
+      graft.util.StreamCommit.readState(spark, path), streamId, batchId,
+      path)) return false
+    graft.util.StreamCommit.scrub(fs, chunkBatchGlobs(path)(tag))
     val staging = s"$path/_staging/$tag"
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     chunkAppendFrame(batch, path, chunkTokens, overlapTokens, dim, salt,
       textCol)
       .write.mode("overwrite").partitionBy("list").parquet(staging)
-    graft.util.StreamCommit.promote(fs, staging, path, prefix)
+    graft.util.StreamCommit.promote(fs, staging, path, s"$tag-")
     graft.util.StreamCommit.writeMarker(fs, path, tag)
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     true
@@ -1263,23 +1222,9 @@ object Retrieval {
       if (!committedOnly)
         spark.read.parquet(path)
           .where(col("list").isin(lists.map(Integer.valueOf).toSeq: _*))
-      else {
-        val fs = graft.util.StreamCommit.fs(spark, path)
-        val tags = graft.util.StreamCommit.listMarkers(fs, path)
-          .map(m => graft.util.StreamCommit.tag(m._1, m._2)).toSet
-        val wmSt = graft.util.StreamCommit.readWatermarkState(spark, path)
-        val files = graft.util.StreamCommit.committedDataFiles(fs,
-          lists.toSeq.map(l =>
-            s"${graft.util.StreamCommit.escapeGlob(path)}/list=$l/*"),
-          tags, wmSt.watermarks, wmSt.removed)
-        if (files.isEmpty)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            flatChunkSchema)
-        else
-          spark.read.option("basePath", path).schema(flatChunkSchema)
-            .parquet(files: _*)
-      }
+      else
+        readCommitted(spark, path, lists.toSeq.map(l => s"list=$l/*"),
+          graft.util.StreamCommit.committedView(spark, path), flatChunkSchema)
     topKChunksIvf(scan, model, q, k, np, probeCol = "vaug",
       maxQueries = maxQueries)
   }

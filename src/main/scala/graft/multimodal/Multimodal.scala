@@ -384,10 +384,12 @@ object Multimodal {
         val content = if (m.content == null) Array.emptyByteArray else m.content
         val nFrames = (content.length + frameBytes - 1) / frameBytes
         // fid packing in videoPairs is media_id * 2^20 + frame_idx — a
-        // payload past 2^20 frames would silently collide, so fail the row
-        // loudly here instead
+        // payload past 2^20 frames would silently collide, and a media id
+        // outside [-2^43, 2^43) would silently wrap the 64-bit fid, so
+        // fail the row loudly here instead
         require(nFrames < (1 << 20),
           s"media ${m.media_id}: $nFrames frames exceeds the 2^20 fid budget")
+        requireFidMediaId(m.media_id)
         (0 until nFrames).iterator.map { f =>
           val frame = java.util.Arrays.copyOfRange(content, f * frameBytes,
             math.min((f + 1) * frameBytes, content.length))
@@ -410,8 +412,8 @@ object Multimodal {
     * 8-byte signatures; the vote is a partial-agg rollup on the pair key.
     * Nothing touches payloads after the scan. Frame ids pack as
     * `media_id * 2^20 + frame_idx` (bijective while a payload stays under
-    * 2^20 frames = 4 GiB at the default frame size; larger payloads
-    * violate the require below).
+    * 2^20 frames = 4 GiB at the default frame size and the media id stays
+    * in [-2^43, 2^43); anything else fails [[frameHashes]]' requires).
     */
   def videoPairs(media: Dataset[MediaRecord],
                  frameBytes: Int = FakeCodec.VideoBytesPerFrame,
@@ -419,6 +421,14 @@ object Multimodal {
                  minMatchedFrames: Int = 2): DataFrame =
     hashVotePairs(frameHashes(media, frameBytes), "frame_idx", "fhash",
       maxHamming, minMatchedFrames, pairsCol = "n_frame_pairs")
+
+  /** `media_id * 2^20 + idx` fits a signed 64-bit fid only for media ids
+    * in [-2^43, 2^43); past that the packing wraps and two media collide.
+    */
+  private def requireFidMediaId(mediaId: Long): Unit =
+    require(mediaId >= -(1L << 43) && mediaId < (1L << 43),
+      s"media $mediaId: media id outside [-2^43, 2^43) overflows the " +
+        "64-bit fid packing (media_id * 2^20 + idx)")
 
   /** The media-pair vote shared by [[videoPairs]] and [[audioPairs]]:
     * Hamming-banded pairs over per-segment hashes, mapped back to media
@@ -589,6 +599,7 @@ object Multimodal {
           else 1 + (len - windowBytes) / hopBytes
         require(nWins < (1 << 20),
           s"media ${m.media_id}: $nWins windows exceeds the 2^20 fid budget")
+        requireFidMediaId(m.media_id)
         (0 until nWins).iterator.map { w =>
           val frame = java.util.Arrays.copyOfRange(content, w * hopBytes,
             math.min(w * hopBytes + windowBytes, len))

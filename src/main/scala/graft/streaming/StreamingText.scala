@@ -169,8 +169,9 @@ object StreamingText {
     * Returns the configured writer; the caller picks trigger/checkpoint
     * and calls `start()` — the checkpoint is what makes batchIds stable
     * across restarts, which the exactly-once contract rests on. Run
-    * [[graft.util.StreamCommit.compactMarkers]] periodically to bound a
-    * long-lived stream's marker count (what committed-only serves scan).
+    * [[graft.util.StreamCommit.compactMarkers]] (CLI
+    * `compact-ingest-markers`) periodically to bound a long-lived
+    * stream's marker count (what committed-only serves scan).
     */
   def ingestChunkIndexPqStream(docStream: DataFrame, indexPath: String,
                                chunkTokens: Int = 32, overlapTokens: Int = 8,
@@ -188,7 +189,7 @@ object StreamingText {
   /** [[ingestChunkIndexPqStream]] for the IVF-FLAT chunk index — the
     * layout [[retrieveStream]] serves. Same exactly-once per-batch apply
     * ([[graft.ann.Retrieval.applyChunkIngestBatch]]); the flat layout is
-    * the easy case (one table, no sidecar deltas).
+    * the easy case (one table, empty markers).
     */
   def ingestChunkIndexStream(docStream: DataFrame, indexPath: String,
                              chunkTokens: Int = 32, overlapTokens: Int = 8,
@@ -207,9 +208,10 @@ object StreamingText {
     * stream feeds a persisted BM25 index with exactly-once micro-batch
     * appends ([[graft.ann.Bm25.applyIngestBatch]] — postings land under
     * batch-tagged filenames, the stats delta commits atomically inside
-    * the batch marker, and serving folds unfolded marker deltas onto the
-    * base stats). Run [[graft.ann.Bm25.compactStreamStats]] periodically
-    * to bound the marker count of a long-lived stream.
+    * the batch marker, and serving adds unfolded marker deltas to the
+    * ingest log's base stats). Run [[graft.ann.Bm25.compactStreamStats]]
+    * — the shared marker compaction — periodically to bound the marker
+    * count of a long-lived stream.
     */
   def ingestBm25IndexStream(docStream: DataFrame, indexPath: String,
                             textCol: String = "text",
@@ -228,7 +230,7 @@ object StreamingText {
     * natively, and the batch function IS [[graft.ann.Bm25
     * .retrieveFromIndex]], so batch ≡ stream by construction. Index
     * appends between triggers are visible to the next micro-batch (each
-    * batch re-reads the layout and its stats sidecar).
+    * batch re-reads the layout and its ingest log).
     */
   def searchStream(queryStream: DataFrame, indexPath: String, k: Int,
                    k1: Double = 1.5, b: Double = 0.75,

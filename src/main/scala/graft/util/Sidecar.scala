@@ -13,8 +13,10 @@ object Sidecar {
             body: String): Unit = {
     // write-temp-then-overwrite-rename, NOT create(overwrite=true): a
     // plain overwrite truncates the only copy before the new bytes land,
-    // so a crash mid-write destroys the sidecar (for a stats sidecar that
-    // is the index's base counts — dead until rebuild). FileContext.rename
+    // so a crash mid-write destroys the sidecar (for a model sidecar that
+    // is the index's centroids or codebooks — dead until rebuild).
+    // Versioned admin state does not go through here: ingest layouts keep
+    // it in StreamCommit's create-if-absent log. FileContext.rename
     // with OVERWRITE is the atomic primitive on rename-capable stores;
     // readers see the old body or the new one, never a torn file.
     val conf = spark.sparkContext.hadoopConfiguration

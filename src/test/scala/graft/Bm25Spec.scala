@@ -371,8 +371,8 @@ class Bm25Spec extends SparkSpec {
       assert(serve() == before, "folded-but-surviving marker must be inert")
       Bm25.compactStreamStats(spark, path)
       assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
-      // a batch append after compaction rides the folded map through its
-      // sidecar rewrite; the final index serves like a full rebuild
+      // a batch append after compaction rides the watermarks through its
+      // log commit; the final index serves like a full rebuild
       graft.util.StreamCommit.writeMarker(fs, path, "b1", b1body) // survive again
       Bm25.appendToIndex(late, path)
       assert(serve() == Bm25.topK(docs, qs, k = 5)
@@ -452,30 +452,30 @@ class Bm25Spec extends SparkSpec {
       assert(Bm25.applyIngestBatch(b0docs, path, batchId = 0L))
       assert(Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
       val fs = graft.util.StreamCommit.fs(spark, path)
-      def body() = graft.util.Sidecar.read(spark, path, "_bm25_stats.json")
+      def state() = graft.util.StreamCommit.readState(spark, path)
       // ground truth: the union corpus's exact stats
       val (truthN, truthT) = Bm25.corpusStats(docs)
-      // interleaving A (no compact): old markers + old sidecar
+      // interleaving A (no compact): old markers + old log state
       val preMarkers = graft.util.StreamCommit.listMarkers(fs, path)
-      val preBody = body()
-      assert(Bm25.liveStatsFrom(preMarkers, preBody)._1 == truthN)
-      assert(Bm25.liveStatsFrom(preMarkers, preBody)._2 == truthT)
+      val preState = state()
+      assert(Bm25.liveStatsFrom(preMarkers, preState)._1 == truthN)
+      assert(Bm25.liveStatsFrom(preMarkers, preState)._2 == truthT)
       // interleaving B — THE race the read order exists for: markers were
-      // listed, then a compact commits fully (new sidecar written, folded
-      // markers deleted), then the sidecar is read. The new sidecar's
-      // folded watermark must filter the already-listed markers, so the
-      // deltas are counted exactly once. (The old sidecar-first order
-      // combined the old base with the post-delete empty marker list and
-      // dropped both batches' deltas here.)
+      // listed, then a compact commits fully (new log entry written,
+      // folded markers deleted), then the log state is read. The new
+      // state's watermark must filter the already-listed markers, so the
+      // deltas are counted exactly once. (A state-first order would
+      // combine the old base with the post-delete empty marker list and
+      // drop both batches' deltas here.)
       Bm25.compactStreamStats(spark, path)
-      val postBody = body()
-      assert(Bm25.liveStatsFrom(preMarkers, postBody) ==
+      val postState = state()
+      assert(Bm25.liveStatsFrom(preMarkers, postState) ==
         (truthN, truthT, 8),
-        "compact between marker list and sidecar read must not drop deltas")
+        "compact between marker list and state read must not drop deltas")
       // interleaving C (read starts after the compact): empty marker list +
-      // new sidecar
+      // new log state
       assert(Bm25.liveStatsFrom(
-        graft.util.StreamCommit.listMarkers(fs, path), postBody) ==
+        graft.util.StreamCommit.listMarkers(fs, path), postState) ==
         (truthN, truthT, 8))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
@@ -488,29 +488,31 @@ class Bm25Spec extends SparkSpec {
     val path = dir.getAbsolutePath
     try {
       Bm25.writeIndex(seed, path, nBuckets = 8)
-      // writer A reads the sidecar...
-      val stale = Bm25.readStats(spark, path)
+      import graft.util.StreamCommit
+      // writer A reads the log state...
+      val stale = StreamCommit.readState(spark, path)
       // ...writer B's full append commits in between (version bumps)...
       Bm25.appendToIndex(other, path)
-      val after = Bm25.readStats(spark, path)
+      val after = StreamCommit.readState(spark, path)
       assert(after.version == stale.version + 1)
       // ...writer A's commit must now fail LOUDLY, not silently overwrite
-      val c0 = graft.metrics.GraftCounters.get("bm25_stats_cas_conflict_total")
+      val c0 = graft.metrics.GraftCounters.get("ingest_log_cas_conflict_total")
       val ex = intercept[IllegalStateException] {
-        Bm25.writeStatsCas(spark, path, stale, stale.nDocs + 99,
-          stale.totalTokens + 99, stale.folded, stale.removed, "test hint")
+        StreamCommit.commit(spark, path, stale.next(payload = stale.payload ++
+          Map("n_docs" -> (stale.payload("n_docs") + 99),
+            "total_tokens" -> (stale.payload("total_tokens") + 99))),
+          "test hint")
       }
       assert(ex.getMessage.contains("CAS conflict"))
       assert(
-        graft.metrics.GraftCounters.get("bm25_stats_cas_conflict_total") ==
+        graft.metrics.GraftCounters.get("ingest_log_cas_conflict_total") ==
           c0 + 1)
-      // the sidecar still holds writer B's consistent update
-      assert(Bm25.readStats(spark, path) == after)
+      // the log still holds writer B's consistent update
+      assert(StreamCommit.readState(spark, path) == after)
       // a fresh read-modify-write (the documented recovery) succeeds
-      val retry = Bm25.readStats(spark, path)
-      Bm25.writeStatsCas(spark, path, retry, retry.nDocs, retry.totalTokens,
-        retry.folded, retry.removed, "test hint")
-      assert(Bm25.readStats(spark, path).version == retry.version + 1)
+      val retry = StreamCommit.readState(spark, path)
+      StreamCommit.commit(spark, path, retry.next(), "test hint")
+      assert(StreamCommit.readState(spark, path).version == retry.version + 1)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 

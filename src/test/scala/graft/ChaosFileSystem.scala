@@ -72,7 +72,7 @@ object ChaosFileSystem {
 
   /** Fail deletes whose path contains `substr` — the crash point BETWEEN a
     * protocol's commit write and its post-commit cleanup deletes (e.g.
-    * compactStreamStats dying after the stats sidecar landed but before
+    * compactStreamStats dying after its ingest-log entry landed but before
     * the folded markers are removed).
     */
   def armPathDeleteFailure(substr: String, startAt: Int = 1,

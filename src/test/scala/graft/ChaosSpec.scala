@@ -330,7 +330,7 @@ class ChaosSpec extends SparkSpec {
       assert(after.filter(col("doc_id") < 30L).count() == before,
         "pre-append rows must be untouched")
       // the survived index serves exactly like the direct scorer on the
-      // union — df AND the stats sidecar must both have landed
+      // union — df AND the ingest log's stats must both have landed
       val qs = Seq((7L, "bch w7 tau"), (44L, "bch w44 tau"))
         .toDF("query_id", "text")
       def rows(df: org.apache.spark.sql.DataFrame) =
@@ -379,8 +379,8 @@ class ChaosSpec extends SparkSpec {
         graft.ann.Bm25.retrieveFromIndex(spark, chaosIdx, qs, k = 4,
           committedOnly = committed))
       assert(serve() == expected)
-      // kill the compact on its FIRST marker delete: the stats sidecar —
-      // deltas folded, watermark recorded — has already committed, and
+      // kill the compact on its FIRST marker delete: the ingest-log entry
+      // — deltas folded, watermark recorded — has already committed, and
       // every folded marker survives the crash
       ChaosFileSystem.armPathDeleteFailure("/_stream_appends/b", times = 1)
       try intercept[java.io.IOException] {

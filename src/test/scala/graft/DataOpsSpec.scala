@@ -1149,6 +1149,33 @@ class DataOpsSpec extends SparkSpec {
     assert(fh(4L) == 2)
   }
 
+  test("video fid packing: media ids at the ends of [-2^43, 2^43) round-trip through videoPairs; 2^43 fails loudly naming the media id") {
+    import spark.implicits._
+    import graft.multimodal.{MediaRecord, Multimodal}
+    val r = new scala.util.Random(43)
+    val clip = Array.fill(3 * 4096)(r.nextInt(256).toByte)
+    val (lo, hi) = (-(1L << 43), (1L << 43) - 1)
+    val pairs = Multimodal.videoPairs(Seq(
+        MediaRecord(lo, "video", clip, Map.empty),
+        MediaRecord(hi, "video", clip, Map.empty)).toDS(),
+        frameBytes = 4096, minMatchedFrames = 2)
+      .collect().map(p => (p.getLong(0), p.getLong(1), p.getLong(3),
+        p.getLong(4))).toSeq
+    assert(pairs == Seq((lo, hi, 3L, 3L)),
+      s"extreme media ids must unpack to themselves, got $pairs")
+    val ex = intercept[Exception] {
+      Multimodal.videoPairs(Seq(
+        MediaRecord(1L << 43, "video", clip, Map.empty),
+        MediaRecord(1L, "video", clip, Map.empty)).toDS(),
+        frameBytes = 4096).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).take(10).map(e => String.valueOf(e.getMessage))
+      .toSeq
+    assert(msgs.exists(_.contains(s"media ${1L << 43}")),
+      s"the overflow must name the media id: $msgs")
+  }
+
   test("audio window-vote dedup: hop-aligned shifts survive, non-aligned and disjoint framing don't") {
     import spark.implicits._
     import graft.multimodal.{MediaRecord, Multimodal}

@@ -5,18 +5,27 @@ import graft.ann.{Bm25, Retrieval}
 import graft.util.StreamCommit
 
 /** The ingest-protocol admin races: marker compaction vs batch rollback on
-  * both sidecar families (the dense layouts' `_ingest_watermarks.json`, the
-  * BM25 stats sidecar), in BOTH interleaving orders — each must fail LOUDLY
-  * on at least one side instead of silently stamping a scrubbed batch
-  * permanently committed (or folding its stats delta). Plus the
-  * serve-vs-rollback reader contract and the one-snapshot-per-serve-call
-  * coherence of the committed-only dense serve.
+  * the one versioned ingest log (`_graft_log/`) every layout keeps — dense
+  * chunk indexes and BM25 — in BOTH interleaving orders; each must fail
+  * LOUDLY on at least one side instead of silently stamping a scrubbed
+  * batch permanently committed (or folding its stats delta). Plus the
+  * log's create-if-absent CAS between two admins holding one version, its
+  * retention window, the migration of layouts written with the pre-log
+  * sidecars, the serve-vs-rollback reader contract and the
+  * one-snapshot-per-serve-call coherence of the committed-only dense
+  * serve.
   */
 class IngestRaceSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDocs(lo: Long, hi: Long, word: String) =
     (lo until hi).map(i => (i, s"$word w$i rho " * 18)).toDF("doc_id", "text")
+
+  private def compactDense(path: String) =
+    StreamCommit.compactMarkers(spark, path, Retrieval.chunkBatchGlobs(path))
+
+  private def conflicts = graft.metrics.GraftCounters
+    .get("ingest_log_cas_conflict_total")
 
   test("dense race, removal-then-stale-compact: a compact whose marker listing predates a rollback fails its CAS loudly; a fresh compact extends the watermark ACROSS the recorded removal") {
     val dir = java.nio.file.Files.createTempDirectory("graft_race1").toFile
@@ -30,38 +39,37 @@ class IngestRaceSpec extends SparkSpec {
         batchId = 1L, streamId = "r1"))
       val fs = StreamCommit.fs(spark, path)
       // the doomed compact reads its state and lists markers FIRST...
-      val staleState = StreamCommit.readWatermarkState(spark, path)
+      val staleState = StreamCommit.readState(spark, path)
       val staleMarkers = StreamCommit.listMarkers(fs, path)
       assert(staleMarkers.map(_._2).sorted == Seq(0L, 1L))
       // ...then the rollback completes (marker delete, scrub, recorded)
       assert(Retrieval.removeChunkIngestBatch(spark, path, batchId = 1L,
         streamId = "r1"))
-      val afterRemove = StreamCommit.readWatermarkState(spark, path)
+      val afterRemove = StreamCommit.readState(spark, path)
       assert(afterRemove.removed == Map("r1" -> Set(1L)))
       assert(afterRemove.version == staleState.version + 1,
-        "a rollback must bump the sidecar version (that IS the guard)")
+        "a rollback must bump the log version (that IS the guard)")
       // the stale compact would stamp the scrubbed batch 1 committed — its
-      // CAS must fail loudly and leave the sidecar untouched
-      val c0 = graft.metrics.GraftCounters
-        .get("ingest_watermark_cas_conflict_total")
+      // CAS must fail loudly and leave the log untouched
+      val c0 = conflicts
       val ex = intercept[IllegalStateException] {
-        StreamCommit.compactMarkersFrom(spark, path, staleState, staleMarkers)
+        StreamCommit.compactMarkersFrom(spark, path, staleState, staleMarkers,
+          Retrieval.chunkBatchGlobs(path))
       }
       assert(ex.getMessage.contains("CAS conflict"))
-      assert(graft.metrics.GraftCounters
-        .get("ingest_watermark_cas_conflict_total") == c0 + 1)
-      assert(StreamCommit.readWatermarkState(spark, path) == afterRemove)
+      assert(conflicts == c0 + 1)
+      assert(StreamCommit.readState(spark, path) == afterRemove)
       // batch 0's marker must survive (the failed compact deletes nothing)
       assert(StreamCommit.listMarkers(fs, path).map(_._2) == Seq(0L))
       // a FRESH compact folds batch 0 and extends the watermark across the
       // deliberately removed batch 1 — a rollback no longer pins the
       // watermark (and with it the committed serve's marker scan) forever
-      assert(StreamCommit.compactMarkers(spark, path) == Map("r1" -> 1L))
+      assert(compactDense(path) == Map("r1" -> 1L))
       assert(StreamCommit.listMarkers(fs, path).isEmpty)
       // later batches keep folding past the gap
       assert(Retrieval.applyChunkIngestBatch(mkDocs(60, 70, "rca"), path,
         batchId = 2L, streamId = "r1"))
-      assert(StreamCommit.compactMarkers(spark, path) == Map("r1" -> 2L))
+      assert(compactDense(path) == Map("r1" -> 2L))
       // committed serve sees folded batches 0 and 2, never the removed 1
       val qs = Seq((7L, "rca w7 rho"), (47L, "rca w47 rho"),
         (57L, "rca w57 rho"), (67L, "rca w67 rho")).toDF("query_id", "text")
@@ -92,21 +100,19 @@ class IngestRaceSpec extends SparkSpec {
       assert(before.exists(_._3 >= 40L), "fixture: batch 0 must be served")
       val tag = StreamCommit.tag("r2", 0L)
       val glob = s"${StreamCommit.escapeGlob(path)}/list=*/$tag-*"
-      val c0 = graft.metrics.GraftCounters
-        .get("ingest_watermark_cas_conflict_total")
+      val c0 = conflicts
       // the compact lands between the removal's state read and its intent
       // record — the removal's CAS must fail against the moved version and
       // abort with NOTHING mutated (intent-first: the record is write #1)
       val ex = intercept[IllegalStateException] {
         StreamCommit.removeBatchGuarded(spark, path, "r2", 0L, Seq(glob),
           afterPreCheck =
-            () => StreamCommit.compactMarkers(spark, path))
+            () => compactDense(path))
       }
       assert(ex.getMessage.contains("concurrently compacted"))
-      assert(StreamCommit.readWatermarkState(spark, path).removed.isEmpty,
+      assert(StreamCommit.readState(spark, path).removed.isEmpty,
         "the failed removal must not have recorded its intent")
-      assert(graft.metrics.GraftCounters
-        .get("ingest_watermark_cas_conflict_total") == c0 + 1)
+      assert(conflicts == c0 + 1)
       // nothing scrubbed: the batch's files are intact and the committed
       // serve (now via the watermark) is unchanged
       val fs = StreamCommit.fs(spark, path)
@@ -137,7 +143,7 @@ class IngestRaceSpec extends SparkSpec {
         streamId = "r3"))
       assert(!Retrieval.removeChunkIngestBatch(spark, path, batchId = 1L,
         streamId = "r3"), "second removal is a recorded no-op")
-      assert(StreamCommit.compactMarkers(spark, path) == Map("r3" -> 1L))
+      assert(compactDense(path) == Map("r3" -> 1L))
       // even below the watermark, a RECORDED removal re-runs as a no-op
       // instead of the permanently-committed refusal
       assert(!Retrieval.removeChunkIngestBatch(spark, path, batchId = 1L,
@@ -163,16 +169,15 @@ class IngestRaceSpec extends SparkSpec {
         .orderBy("query_id", "rank")
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
       assert(serve(committed = true) == truth)
-      val c0 = graft.metrics.GraftCounters.get("bm25_stats_cas_conflict_total")
+      val c0 = conflicts
       val ex = intercept[IllegalStateException] {
         Bm25.removeIngestBatch(spark, path, batchId = 0L, streamId = "r4",
           afterPreCheck = () => Bm25.compactStreamStats(spark, path))
       }
       assert(ex.getMessage.contains("concurrently folded"))
-      assert(Bm25.readStats(spark, path).removed.isEmpty,
+      assert(StreamCommit.readState(spark, path).removed.isEmpty,
         "the failed removal must not have recorded its intent")
-      assert(graft.metrics.GraftCounters
-        .get("bm25_stats_cas_conflict_total") == c0 + 1)
+      assert(conflicts == c0 + 1)
       // postings intact, delta folded into base: both serve modes still
       // rank exactly the union corpus
       assert(serve(committed = true) == truth)
@@ -192,8 +197,8 @@ class IngestRaceSpec extends SparkSpec {
       Bm25.writeIndex(mkDocs(0, 40, "rce"), path, nBuckets = 8)
       assert(Bm25.applyIngestBatch(mkDocs(40, 50, "rce"), path,
         batchId = 0L, streamId = "r5"))
-      // the doomed compact's RMW reads the stats (version v)...
-      val stale = Bm25.readStats(spark, path)
+      // the doomed compact's RMW reads the log state (version v)...
+      val stale = StreamCommit.readState(spark, path)
       val staleMarkers = StreamCommit.listMarkers(
         StreamCommit.fs(spark, path), path)
       assert(staleMarkers.nonEmpty)
@@ -201,25 +206,27 @@ class IngestRaceSpec extends SparkSpec {
       // version bumped — the bump IS the guard)
       assert(Bm25.removeIngestBatch(spark, path, batchId = 0L,
         streamId = "r5"))
-      val afterRemove = Bm25.readStats(spark, path)
+      val afterRemove = StreamCommit.readState(spark, path)
       assert(afterRemove.version == stale.version + 1)
-      assert(afterRemove.nDocs == stale.nDocs,
+      assert(afterRemove.payload == stale.payload,
         "rollback must not change the base counts")
       // the stale compact's write (base + the scrubbed batch's delta, as
       // compactStreamStats would compute from its stale listing) must fail
       val delta = graft.util.Sidecar.requiredLong(staleMarkers.head._3,
         "n_docs", "test marker")
       val ex = intercept[IllegalStateException] {
-        Bm25.writeStatsCas(spark, path, stale, stale.nDocs + delta,
-          stale.totalTokens, stale.folded + ("r5" -> 0L), stale.removed,
-          "test hint")
+        StreamCommit.commit(spark, path, stale.next(
+          watermarks = stale.watermarks + ("r5" -> 0L),
+          payload = stale.payload +
+            ("n_docs" -> (stale.payload("n_docs") + delta))), "test hint")
       }
       assert(ex.getMessage.contains("CAS conflict"))
-      assert(Bm25.readStats(spark, path) == afterRemove,
+      assert(StreamCommit.readState(spark, path) == afterRemove,
         "the stale fold must not land")
       // the REAL compact path, run fresh, is a safe no-op (marker gone)
       Bm25.compactStreamStats(spark, path)
-      assert(Bm25.readStats(spark, path).nDocs == stale.nDocs)
+      assert(StreamCommit.readState(spark, path).payload("n_docs") ==
+        stale.payload("n_docs"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
@@ -268,7 +275,7 @@ class IngestRaceSpec extends SparkSpec {
         df.orderBy("query_id", "rank")
           .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
       // snapshot the index view WITH batch 0 committed...
-      val snap0 = Retrieval.committedSnapshotOf(spark, path)
+      val snap0 = StreamCommit.committedView(spark, path)
       val view0 = collect(Retrieval.retrieveFromChunkIndexPq(spark, path,
         qs, k = 4, nProbe = 4, shortlist = 100000, committedOnly = true))
       // ...then a second batch commits (marker lands, files promoted).
@@ -331,7 +338,8 @@ class IngestRaceSpec extends SparkSpec {
         s"$path/bucket=*/r9~b1-*")
       assert(Option(fs.globStatus(orphanGlob)).getOrElse(Array.empty)
         .nonEmpty, "fixture: the crash must leave orphaned posting files")
-      assert(Bm25.readStats(spark, path).removed == Map("r9" -> Set(1L)))
+      assert(StreamCommit.readState(spark, path).removed ==
+        Map("r9" -> Set(1L)))
       // the orphans are uncommitted NOW: the committed serve ranks exactly
       // the corpus minus batch 1, stats matching the scanned postings
       assert(serve(committed = true) == truth)
@@ -340,11 +348,11 @@ class IngestRaceSpec extends SparkSpec {
       // fold here permanently committed the orphans with no delta — and
       // finishes the crashed removal's scrub
       Bm25.compactStreamStats(spark, path)
-      val st = Bm25.readStats(spark, path)
-      assert(st.folded == Map("r9" -> 2L))
+      val st = StreamCommit.readState(spark, path)
+      assert(st.watermarks == Map("r9" -> 2L))
       assert(st.removed == Map("r9" -> Set(1L)),
         "the removal record must survive compaction (it IS the convergence)")
-      assert(st.nDocs == Bm25.corpusStats(
+      assert(st.payload("n_docs") == Bm25.corpusStats(
         seed.unionByName(b0).unionByName(b2))._1,
         "the folded base stats must not carry the removed batch's delta")
       assert(Option(fs.globStatus(orphanGlob)).getOrElse(Array.empty).isEmpty,
@@ -395,8 +403,8 @@ class IngestRaceSpec extends SparkSpec {
         .select("doc_id").as[Long].collect().toSeq
       assert(!servedIds().exists(id => id >= 50L && id < 60L))
       // compact folds ACROSS the recorded removal; the record survives
-      assert(StreamCommit.compactMarkers(spark, path) == Map("ra" -> 1L))
-      val st = StreamCommit.readWatermarkState(spark, path)
+      assert(compactDense(path) == Map("ra" -> 1L))
+      val st = StreamCommit.readState(spark, path)
       assert(st.removed == Map("ra" -> Set(1L)))
       assert(!servedIds().exists(id => id >= 50L && id < 60L),
         "folding across the gap must not commit the orphans")
@@ -433,8 +441,8 @@ class IngestRaceSpec extends SparkSpec {
           streamId = "rb")
       }
       assert(ex.getMessage.contains("nothing to remove"))
-      assert(StreamCommit.readWatermarkState(spark, path).removed.isEmpty)
-      // same guard on the BM25 sidecar
+      assert(StreamCommit.readState(spark, path).removed.isEmpty)
+      // same guard on a BM25 layout
       val bdir = java.nio.file.Files.createTempDirectory("graft_race11b")
         .toFile
       try {
@@ -445,18 +453,19 @@ class IngestRaceSpec extends SparkSpec {
             streamId = "rb")
         }
         assert(exB.getMessage.contains("nothing to remove"))
-        assert(Bm25.readStats(spark, bdir.getAbsolutePath).removed.isEmpty)
+        assert(StreamCommit.readState(spark, bdir.getAbsolutePath)
+          .removed.isEmpty)
       } finally org.apache.commons.io.FileUtils.deleteDirectory(bdir)
       // the legitimate traceless case — pre-intent-record crash residue
       // (marker and files long gone, watermark pinned at the gap):
       // --missing-ok records the removal and compaction folds across it
       assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rcj"), path,
         batchId = 2L, streamId = "rb"))   // batch 1 "vanished" pre-record
-      assert(StreamCommit.compactMarkers(spark, path) == Map("rb" -> 0L),
+      assert(compactDense(path) == Map("rb" -> 0L),
         "the unrecorded gap at batch 1 must pin the watermark")
       assert(!Retrieval.removeChunkIngestBatch(spark, path, batchId = 1L,
         streamId = "rb", allowMissing = true))
-      assert(StreamCommit.compactMarkers(spark, path) == Map("rb" -> 2L),
+      assert(compactDense(path) == Map("rb" -> 2L),
         "the recorded removal must unpin the fold")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
@@ -471,7 +480,7 @@ class IngestRaceSpec extends SparkSpec {
       assert(Retrieval.applyChunkIngestBatch(mkDocs(40, 50, "rck"), path,
         batchId = 1L, streamId = "rc"))
       val c0 = graft.metrics.GraftCounters.get("ingest_compact_pinned_total")
-      assert(StreamCommit.compactMarkers(spark, path)
+      assert(compactDense(path)
         .getOrElse("rc", -1L) == -1L,
         "an unrecorded batch-0 gap must pin the fold (safety first)")
       assert(graft.metrics.GraftCounters
@@ -481,7 +490,7 @@ class IngestRaceSpec extends SparkSpec {
       assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rck"), path,
         batchId = 0L, streamId = "rc"))
       val c1 = graft.metrics.GraftCounters.get("ingest_compact_pinned_total")
-      assert(StreamCommit.compactMarkers(spark, path) == Map("rc" -> 1L))
+      assert(compactDense(path) == Map("rc" -> 1L))
       assert(graft.metrics.GraftCounters
         .get("ingest_compact_pinned_total") == c1)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
@@ -502,24 +511,21 @@ class IngestRaceSpec extends SparkSpec {
       // sA rolls back ITS batch 1; sB is untouched
       assert(Retrieval.removeChunkIngestBatch(spark, path, batchId = 1L,
         streamId = "sA"))
-      assert(StreamCommit.compactMarkers(spark, path) ==
+      assert(compactDense(path) ==
         Map("sA" -> 1L, "sB" -> 0L),
         "folds must advance per stream, across sA's recorded removal")
       // sB's batch 1 must still apply — sA's removal record is namespaced
       assert(Retrieval.applyChunkIngestBatch(mkDocs(70, 80, "rcl"), path,
         batchId = 1L, streamId = "sB"))
-      assert(StreamCommit.compactMarkers(spark, path) ==
+      assert(compactDense(path) ==
         Map("sA" -> 1L, "sB" -> 1L))
       // and sA's excised ids stay excised while sB's batch-1 ids are
       // committed — asserted on the committed FILE view (hash embeddings
       // carry no semantics, so a rank-based assertion would be luck)
       val fs = StreamCommit.fs(spark, path)
-      val tags = StreamCommit.listMarkers(fs, path)
-        .map(m => StreamCommit.tag(m._1, m._2)).toSet
-      val st = StreamCommit.readWatermarkState(spark, path)
+      val (markers, st) = StreamCommit.committedView(spark, path)
       val committed = StreamCommit.committedDataFiles(fs,
-        Seq(s"${StreamCommit.escapeGlob(path)}/list=*/*"),
-        tags, st.watermarks, st.removed)
+        Seq(s"${StreamCommit.escapeGlob(path)}/list=*/*"), markers, st)
       val ids = spark.read.option("basePath", path).parquet(committed: _*)
         .select("doc_id").distinct().as[Long].collect().toSet
       assert(!ids.exists(id => id >= 50L && id < 60L),
@@ -529,29 +535,246 @@ class IngestRaceSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
-  test("watermark sidecar envelope: legacy bare-map bodies parse as version 0; the CAS rejects a stale writer and the rendered envelope round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_race8").toFile
+  /** Every file under a layout (relative path → size), `.crc` excluded —
+    * the "mutated nothing" witness for a losing admin writer.
+    */
+  private def layoutFiles(path: String): Map[String, Long] = {
+    val root = new java.io.File(path).toPath
+    val it = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      it.iterator().asScala.map(_.toFile)
+        .filter(f => f.isFile && !f.getName.endsWith(".crc"))
+        .map(f => root.relativize(f.toPath).toString -> f.length).toMap
+    } finally it.close()
+  }
+
+  private def logVersions(path: String): Seq[Long] =
+    Option(new java.io.File(path, "_graft_log").listFiles())
+      .getOrElse(Array.empty).map(_.getName)
+      .filter(_.matches("[0-9]+")).map(_.toLong).sorted.toSeq
+
+  test("interleaved admins: two writers holding the same log version — the second commit fails its create-if-absent CAS with nothing mutated (two compactions; a compaction against an append)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_race14").toFile
     val path = dir.getAbsolutePath
     try {
-      // legacy format (pre-envelope): bare {sid: wm}
-      graft.util.Sidecar.write(spark, path, "_ingest_watermarks.json",
-        """{"s1":4}""")
-      val legacy = StreamCommit.readWatermarkState(spark, path)
-      assert(legacy == StreamCommit.WmState(Map("s1" -> 4L), Map.empty, 0L, ""))
-      assert(StreamCommit.readWatermarks(spark, path) == Map("s1" -> 4L))
-      // CAS write advances to the envelope format and round-trips
-      StreamCommit.writeWatermarksCas(spark, path, legacy,
-        Map("s1" -> 6L), Map("s1" -> Set(5L)), "test hint")
-      val st = StreamCommit.readWatermarkState(spark, path)
-      assert(st.watermarks == Map("s1" -> 6L) &&
-        st.removed == Map("s1" -> Set(5L)) && st.version == 1L)
-      // a writer holding the legacy (version-0) state now conflicts
+      Retrieval.writeChunkIndex(mkDocs(0, 40, "rcm"), path, nLists = 4,
+        fitBudget = 48)
+      assert(Retrieval.applyChunkIngestBatch(mkDocs(40, 50, "rcm"), path,
+        batchId = 0L, streamId = "rm"))
+      assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rcm"), path,
+        batchId = 1L, streamId = "rm"))
+      val fs = StreamCommit.fs(spark, path)
+      // both compactions read version v and list the same markers...
+      val held = StreamCommit.readState(spark, path)
+      val markers = StreamCommit.listMarkers(fs, path)
+      // ...A commits v+1 (and deletes the folded markers)...
+      assert(StreamCommit.compactMarkersFrom(spark, path, held, markers,
+        Retrieval.chunkBatchGlobs(path)) == Map("rm" -> 1L))
+      val afterA = StreamCommit.readState(spark, path)
+      assert(afterA.version == held.version + 1 &&
+        afterA.watermarks == Map("rm" -> 1L))
+      val filesA = layoutFiles(path)
+      // ...and B, still holding v, loses the race for entry v+1
+      val c0 = conflicts
       val ex = intercept[IllegalStateException] {
-        StreamCommit.writeWatermarksCas(spark, path, legacy,
-          Map("s1" -> 9L), Map.empty, "test hint")
+        StreamCommit.compactMarkersFrom(spark, path, held, markers,
+          Retrieval.chunkBatchGlobs(path))
       }
       assert(ex.getMessage.contains("CAS conflict"))
-      assert(StreamCommit.readWatermarkState(spark, path) == st)
+      assert(conflicts == c0 + 1)
+      assert(StreamCommit.readState(spark, path) == afterA,
+        "the log must hold A's state only")
+      assert(layoutFiles(path) == filesA, "B must have mutated nothing")
+
+      // a BM25 compaction holding version v against a batch append that
+      // commits v+1 first: the compaction loses, its markers and the
+      // appended stats stay exactly as the append left them
+      val bdir = java.nio.file.Files.createTempDirectory("graft_race14b")
+        .toFile
+      val bpath = bdir.getAbsolutePath
+      try {
+        Bm25.writeIndex(mkDocs(0, 40, "rcm"), bpath, nBuckets = 8)
+        assert(Bm25.applyIngestBatch(mkDocs(40, 50, "rcm"), bpath,
+          batchId = 0L, streamId = "rm"))
+        val bfs = StreamCommit.fs(spark, bpath)
+        val heldB = StreamCommit.readState(spark, bpath)
+        val markersB = StreamCommit.listMarkers(bfs, bpath)
+        Bm25.appendToIndex(mkDocs(60, 70, "rcm"), bpath)
+        val afterAppend = StreamCommit.readState(spark, bpath)
+        assert(afterAppend.version == heldB.version + 1)
+        assert(afterAppend.payload("n_docs") == heldB.payload("n_docs") + 10)
+        val filesAppend = layoutFiles(bpath)
+        val c1 = conflicts
+        val exB = intercept[IllegalStateException] {
+          StreamCommit.compactMarkersFrom(spark, bpath, heldB, markersB,
+            Bm25.batchGlobs(bpath))
+        }
+        assert(exB.getMessage.contains("CAS conflict"))
+        assert(conflicts == c1 + 1)
+        assert(StreamCommit.readState(spark, bpath) == afterAppend,
+          "the log must hold the append's state only")
+        assert(layoutFiles(bpath) == filesAppend,
+          "the losing compaction must have mutated nothing")
+        // the documented recovery — re-run the compaction — folds the
+        // marker on top of the append, and the index serves the union
+        Bm25.compactStreamStats(spark, bpath)
+        assert(StreamCommit.listMarkers(bfs, bpath).isEmpty)
+        val qs = Seq((7L, "rcm w7 rho"), (47L, "rcm w47 rho"),
+          (67L, "rcm w67 rho")).toDF("query_id", "text")
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.orderBy("query_id", "rank").collect().toSeq
+        assert(rows(Bm25.retrieveFromIndex(spark, bpath, qs, k = 5)) ==
+          rows(Bm25.topK(mkDocs(0, 50, "rcm").unionByName(
+            mkDocs(60, 70, "rcm")), qs, k = 5)))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(bdir)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("ingest log retention: after 12 commits exactly the newest 10 entries remain and reads return the newest; a writer holding a version below the kept window fails its CAS") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_race15").toFile
+    val path = dir.getAbsolutePath
+    try {
+      val v0 = StreamCommit.readState(spark, path)
+      assert(v0 == StreamCommit.LogState(0L, Map.empty, Map.empty, Map.empty))
+      val states = (1 to 12).scanLeft(v0) { (st, i) =>
+        val next = st.next(watermarks = Map("s" -> i.toLong),
+          payload = Map("n" -> i.toLong * 10))
+        StreamCommit.commit(spark, path, next, "test hint")
+        next
+      }
+      assert(logVersions(path) == (3L to 12L),
+        "the newest KeptVersions entries must remain")
+      assert(StreamCommit.KeptVersions == 10)
+      assert(StreamCommit.readState(spark, path) == states.last)
+      // a writer that held version 1 all along: its target (2) was
+      // deleted by retention, so create-if-absent would succeed — the
+      // kept-window check must still fail it and remove its entry
+      val c0 = conflicts
+      val ex = intercept[IllegalStateException] {
+        StreamCommit.commit(spark, path,
+          states(1).next(watermarks = Map("s" -> 99L)), "test hint")
+      }
+      assert(ex.getMessage.contains("CAS conflict"))
+      assert(conflicts == c0 + 1)
+      assert(logVersions(path) == (3L to 12L))
+      assert(StreamCommit.readState(spark, path) == states.last)
+      assert(!new java.io.File(path, "_graft_log").list()
+        .exists(_.endsWith(".tmp")), "no writer temp may linger")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("migration: layouts written with the pre-log sidecars (BM25 stats with folded/removed, dense envelope, bare map) serve the same rows, refuse the same replays, and their first admin commit writes the next log version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_race16").toFile
+    def toLegacy(path: String, name: String, body: String): Unit = {
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(path, "_graft_log"))
+      graft.util.Sidecar.write(spark, path, name, body)
+    }
+    try {
+      // ---- BM25 stats sidecar: folded watermark, removed set, live marker
+      val bpath = s"$dir/bm25"
+      Bm25.writeIndex(mkDocs(0, 40, "rcn"), bpath, nBuckets = 8)
+      Seq(0L, 1L, 2L).foreach(b => assert(Bm25.applyIngestBatch(
+        mkDocs(40 + 10 * b, 50 + 10 * b, "rcn"), bpath, b, "mg")))
+      assert(Bm25.removeIngestBatch(spark, bpath, 1L, "mg"))
+      Bm25.compactStreamStats(spark, bpath)
+      assert(Bm25.applyIngestBatch(mkDocs(70, 80, "rcn"), bpath, 3L, "mg"))
+      val qs = Seq((7L, "rcn w7 rho"), (47L, "rcn w47 rho"),
+        (57L, "rcn w57 rho"), (77L, "rcn w77 rho")).toDF("query_id", "text")
+      def bm25Rows(committed: Boolean) = Bm25.retrieveFromIndex(spark, bpath,
+          qs, k = 5, committedOnly = committed)
+        .orderBy("query_id", "rank").collect().toSeq
+      val bExpect = (bm25Rows(committed = false), bm25Rows(committed = true))
+      val bSt = StreamCommit.readState(spark, bpath)
+      assert(bSt.watermarks == Map("mg" -> 2L) &&
+        bSt.removed == Map("mg" -> Set(1L)))
+      toLegacy(bpath, "_bm25_stats.json",
+        s"""{"n_docs":${bSt.payload("n_docs")},""" +
+          s""""total_tokens":${bSt.payload("total_tokens")},""" +
+          """"n_buckets":8,"version":7,"writer":"w-old",""" +
+          """"folded":{"mg":2},"removed":{"mg":[1]}}""")
+      assert(logVersions(bpath).isEmpty)
+      assert(StreamCommit.readState(spark, bpath) == bSt.copy(version = 7L))
+      assert((bm25Rows(committed = false), bm25Rows(committed = true)) ==
+        bExpect)
+      assert(intercept[IllegalStateException] {
+        Bm25.applyIngestBatch(mkDocs(50, 60, "rcn"), bpath, 1L, "mg")
+      }.getMessage.contains("rolled back"))
+      assert(!Bm25.applyIngestBatch(mkDocs(40, 50, "rcn"), bpath, 0L, "mg"))
+      Bm25.compactStreamStats(spark, bpath)
+      assert(logVersions(bpath) == Seq(8L))
+      assert(StreamCommit.readState(spark, bpath).watermarks == Map("mg" -> 3L))
+      assert((bm25Rows(committed = false), bm25Rows(committed = true)) ==
+        bExpect)
+
+      // ---- dense watermark envelope, and the bare pre-envelope map
+      def denseCase(name: String, legacyBody: String,
+                    legacyState: StreamCommit.LogState,
+                    removeOne: Boolean): Unit = {
+        val path = s"$dir/$name"
+        Retrieval.writeChunkIndex(mkDocs(0, 40, "rcn"), path, nLists = 4,
+          fitBudget = 48)
+        Seq(0L, 1L, 2L).foreach(b => assert(Retrieval.applyChunkIngestBatch(
+          mkDocs(40 + 10 * b, 50 + 10 * b, "rcn"), path, b, streamId = "s1")))
+        if (removeOne)
+          assert(Retrieval.removeChunkIngestBatch(spark, path, 2L, "s1"))
+        compactDense(path)
+        assert(Retrieval.applyChunkIngestBatch(mkDocs(70, 80, "rcn"), path,
+          3L, streamId = "s1"))
+        def rows(committed: Boolean) = Retrieval.retrieveFromChunkIndex(
+            spark, path, qs, k = 4, nProbe = 4, committedOnly = committed)
+          .orderBy("query_id", "rank").collect().toSeq
+        val expect = (rows(committed = false), rows(committed = true))
+        assert(StreamCommit.readState(spark, path).copy(version =
+          legacyState.version) == legacyState)
+        toLegacy(path, "_ingest_watermarks.json", legacyBody)
+        assert(logVersions(path).isEmpty)
+        assert(StreamCommit.readState(spark, path) == legacyState)
+        assert((rows(committed = false), rows(committed = true)) == expect)
+        if (removeOne)
+          assert(intercept[IllegalStateException] {
+            Retrieval.applyChunkIngestBatch(mkDocs(60, 70, "rcn"), path, 2L,
+              streamId = "s1")
+          }.getMessage.contains("rolled back"))
+        assert(!Retrieval.applyChunkIngestBatch(mkDocs(40, 50, "rcn"), path,
+          0L, streamId = "s1"))
+        assert(compactDense(path) == Map("s1" -> 3L))
+        assert(logVersions(path) == Seq(legacyState.version + 1))
+        assert((rows(committed = false), rows(committed = true)) == expect)
+      }
+      denseCase("envelope",
+        """{"version":4,"writer":"w-old","watermarks":{"s1":2},""" +
+          """"removed":{"s1":[2]}}""",
+        StreamCommit.LogState(4L, Map("s1" -> 2L), Map("s1" -> Set(2L)),
+          Map.empty), removeOne = true)
+      denseCase("bare", """{"s1":2}""",
+        StreamCommit.LogState(0L, Map("s1" -> 2L), Map.empty, Map.empty),
+        removeOne = false)
+
+      // the bare map's CAS: a commit advances it to log version 1 and
+      // round-trips; a writer still holding the legacy version-0 state
+      // now conflicts and changes nothing
+      val cpath = s"$dir/cas"
+      new java.io.File(cpath).mkdirs()
+      graft.util.Sidecar.write(spark, cpath, "_ingest_watermarks.json",
+        """{"s1":4}""")
+      val legacy = StreamCommit.readState(spark, cpath)
+      assert(legacy == StreamCommit.LogState(0L, Map("s1" -> 4L), Map.empty,
+        Map.empty))
+      StreamCommit.commit(spark, cpath, legacy.next(
+        watermarks = Map("s1" -> 6L), removed = Map("s1" -> Set(5L))),
+        "test hint")
+      val st = StreamCommit.readState(spark, cpath)
+      assert(st.watermarks == Map("s1" -> 6L) &&
+        st.removed == Map("s1" -> Set(5L)) && st.version == 1L)
+      val ex = intercept[IllegalStateException] {
+        StreamCommit.commit(spark, cpath,
+          legacy.next(watermarks = Map("s1" -> 9L), removed = Map.empty),
+          "test hint")
+      }
+      assert(ex.getMessage.contains("CAS conflict"))
+      assert(StreamCommit.readState(spark, cpath) == st)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }

@@ -903,7 +903,8 @@ class RetrievalSpec extends SparkSpec {
       // files keep cm~b<id>- prefixes forever — the watermark, not marker
       // presence, is their commit record)
       val fs = graft.util.StreamCommit.fs(spark, path)
-      assert(graft.util.StreamCommit.compactMarkers(spark, path) ==
+      assert(graft.util.StreamCommit.compactMarkers(spark, path,
+        Retrieval.chunkBatchGlobs(path)) ==
         Map("cm" -> 1L))
       assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
       assert(serve(committed = true) == full2,
@@ -913,7 +914,8 @@ class RetrievalSpec extends SparkSpec {
       assert(Retrieval.applyPqIngestBatch(batch(60, 70), path,
         batchId = 3L, streamId = "cm"))
       val full3 = serve(committed = false)
-      assert(graft.util.StreamCommit.compactMarkers(spark, path) ==
+      assert(graft.util.StreamCommit.compactMarkers(spark, path,
+        Retrieval.chunkBatchGlobs(path)) ==
         Map("cm" -> 1L),
         "a batchId gap must stop the watermark extension")
       assert(graft.util.StreamCommit.listMarkers(fs, path)
@@ -930,22 +932,48 @@ class RetrievalSpec extends SparkSpec {
         streamId = "cm"))
       assert(serve(committed = true) == full2 &&
         serve(committed = false) == full2)
-      // crash between the sidecar write and marker deletes: a surviving
+      // crash between the log commit and marker deletes: a surviving
       // folded marker is redundant with the watermark — both read paths
       // agree, the next compact deletes it
       graft.util.StreamCommit.writeMarker(fs, path,
         graft.util.StreamCommit.tag("cm", 1L))
       assert(serve(committed = true) == full2)
-      graft.util.StreamCommit.compactMarkers(spark, path)
+      graft.util.StreamCommit.compactMarkers(spark, path,
+        Retrieval.chunkBatchGlobs(path))
       assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
-      // bodied markers (BM25-style) refuse this compaction path: folding
-      // them here would silently LOSE their stats deltas
-      graft.util.StreamCommit.writeMarker(fs, path, "x~b0",
-        """{"n_docs":1}""")
-      val ex2 = intercept[IllegalArgumentException] {
-        graft.util.StreamCommit.compactMarkers(spark, path)
+      // bodied markers (BM25) fold through this same compaction: their
+      // stats deltas land in the log's payload, and the layout serves
+      // rows identical to compactStreamStats on a twin index
+      def bm25Twin(p: String) = {
+        graft.ann.Bm25.writeIndex(oldDocs, p, nBuckets = 8)
+        assert(graft.ann.Bm25.applyIngestBatch(batch(40, 50), p,
+          batchId = 0L, streamId = "cm"))
+        assert(graft.ann.Bm25.applyIngestBatch(batch(50, 60), p,
+          batchId = 1L, streamId = "cm"))
       }
-      assert(ex2.getMessage.contains("metadata bodies"))
+      val (viaMarkers, viaStats) = (s"$dir/bm25_cm", s"$dir/bm25_cs")
+      bm25Twin(viaMarkers)
+      bm25Twin(viaStats)
+      assert(graft.util.StreamCommit.compactMarkers(spark, viaMarkers,
+        graft.ann.Bm25.batchGlobs(viaMarkers)) == Map("cm" -> 1L))
+      graft.ann.Bm25.compactStreamStats(spark, viaStats)
+      val bfs = graft.util.StreamCommit.fs(spark, viaMarkers)
+      assert(graft.util.StreamCommit.listMarkers(bfs, viaMarkers).isEmpty)
+      val folded = graft.util.StreamCommit.readState(spark, viaMarkers)
+      assert(folded.payload == graft.util.StreamCommit
+        .readState(spark, viaStats).payload)
+      assert(folded.payload("n_docs") == 60L,
+        "the folded markers' deltas must land in the base stats")
+      def bm25Rows(p: String, committed: Boolean) =
+        graft.ann.Bm25.retrieveFromIndex(spark, p, qs, k = 4,
+            committedOnly = committed)
+          .orderBy("query_id", "rank").collect().toSeq
+      for (committed <- Seq(false, true))
+        assert(bm25Rows(viaMarkers, committed) ==
+          bm25Rows(viaStats, committed))
+      assert(bm25Rows(viaMarkers, committed = false) ==
+        graft.ann.Bm25.topK(oldDocs.unionByName(batch(40, 60)), qs, k = 4)
+          .orderBy("query_id", "rank").collect().toSeq)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
