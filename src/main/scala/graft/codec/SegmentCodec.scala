@@ -4,6 +4,7 @@ import graft.model.{KHeader, KRecord}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
+import org.apache.spark.unsafe.Platform
 
 /** KBAK v1 segment codec — the on-disk interchange contract, bit-layout
   * compatible with the reference (crates/kafka-backup-core/src/segment/format.rs:1-46):
@@ -35,20 +36,6 @@ object SegmentCodec {
       recordCount: Long,
       startOffset: Long,
       endOffset: Long)
-
-  /** Serialized size of one record, excluding the u32 length prefix
-    * (format.rs serialized_size).
-    */
-  def recordSize(r: KRecord): Int = {
-    var size = 8 + 8 + 4 + 4 + 2
-    if (r.key != null) size += r.key.length
-    if (r.value != null) size += r.value.length
-    r.headers.foreach { h =>
-      size += 2 + h.key.getBytes(StandardCharsets.UTF_8).length + 4
-      if (h.value != null) size += h.value.length
-    }
-    size
-  }
 
   /** Growable LE byte sink — one per task, reused across records, so the
     * encode hot path allocates nothing per record (the per-record
@@ -86,6 +73,21 @@ object SegmentCodec {
     def putBytes(b: Array[Byte], off: Int, len: Int): Unit = {
       ensure(len); System.arraycopy(b, off, arr, pos, len); pos += len
     }
+    /** Append `len` bytes read at `address` of `base` (Spark's `Platform`
+      * addressing: an on-heap object plus offset, or null plus an off-heap
+      * address) — copies a field out of an `UnsafeRow` with no
+      * intermediate array.
+      */
+    def putMemory(base: AnyRef, address: Long, len: Int): Unit = {
+      ensure(len)
+      Platform.copyMemory(base, address, arr, Platform.BYTE_ARRAY_OFFSET + pos, len)
+      pos += len
+    }
+    /** Overwrite the 4 bytes at `at` (already written) with `v`, LE. */
+    def patchIntLE(at: Int, v: Int): Unit = {
+      arr(at) = v.toByte; arr(at + 1) = (v >> 8).toByte
+      arr(at + 2) = (v >> 16).toByte; arr(at + 3) = (v >> 24).toByte
+    }
     /** OutputStream view appending to this sink (close/flush are no-ops) —
       * lets a compressing stream target the sink directly.
       */
@@ -96,30 +98,75 @@ object SegmentCodec {
     }
   }
 
-  /** Append one length-prefixed record to `out`. Header counts and header-key
-    * lengths ride u16 fields on the wire — reject overflow loudly instead of
-    * truncating into a silently-undecodable (but CRC-valid) segment.
+  // The KBAK record layout, field by field — the one place that defines it.
+  // A record is `beginRecord`, key and value (`putBytesField` /
+  // `putNullField`), `putHeaderCount`, then per header `putHeaderKey`
+  // and its value, then `endRecord`, which fills in the u32 length that
+  // `beginRecord` reserved. `writeRecord` (from a `KRecord`) and the backup
+  // writer (straight from Spark's rows) both go through these, so the u16
+  // guards live here: header counts and header-key lengths ride u16 fields on
+  // the wire, and overflow fails loudly instead of truncating into a
+  // silently-undecodable (but CRC-valid) segment.
+
+  /** Start a record: reserve its u32 length, then timestamp and offset.
+    * Returns the position [[endRecord]] patches.
+    */
+  def beginRecord(out: ByteSink, timestamp: Long, offset: Long): Int = {
+    val start = out.pos
+    out.putIntLE(0)
+    out.putLongLE(timestamp)
+    out.putLongLE(offset)
+    start
+  }
+
+  /** Finish the record begun at `start`: its length excludes the prefix. */
+  def endRecord(out: ByteSink, start: Int): Unit = out.patchIntLE(start, out.pos - start - 4)
+
+  /** A key, value or header value: i32 length (-1 = null), then the bytes. */
+  def putBytesField(out: ByteSink, b: Array[Byte]): Unit =
+    if (b == null) putNullField(out) else { out.putIntLE(b.length); out.putBytes(b) }
+
+  /** A non-null bytes field copied from memory (see [[ByteSink.putMemory]]). */
+  def putBytesField(out: ByteSink, base: AnyRef, address: Long, len: Int): Unit = {
+    out.putIntLE(len)
+    out.putMemory(base, address, len)
+  }
+
+  def putNullField(out: ByteSink): Unit = out.putIntLE(-1)
+
+  /** A bytes field holding an 8-byte little-endian i64. */
+  def putLongField(out: ByteSink, v: Long): Unit = { out.putIntLE(8); out.putLongLE(v) }
+
+  def putHeaderCount(out: ByteSink, n: Int, offset: Long): Unit = {
+    require(n <= 0xffff, s"record $offset: $n headers exceed the u16 wire limit")
+    out.putShortLE(n)
+  }
+
+  /** A header key: u16 length, then its UTF-8 bytes read from memory. */
+  def putHeaderKey(out: ByteSink, base: AnyRef, address: Long, len: Int, offset: Long): Unit = {
+    require(len <= 0xffff,
+      s"record $offset: header key of $len bytes exceeds the u16 wire limit")
+    out.putShortLE(len)
+    out.putMemory(base, address, len)
+  }
+
+  def putHeaderKey(out: ByteSink, utf8: Array[Byte], offset: Long): Unit =
+    putHeaderKey(out, utf8, Platform.BYTE_ARRAY_OFFSET.toLong, utf8.length, offset)
+
+  /** Append one length-prefixed record to `out`. NULL headers encode as zero
+    * headers.
     */
   def writeRecord(out: ByteSink, r: KRecord): Unit = {
-    require(r.headers.size <= 0xffff,
-      s"record ${r.offset}: ${r.headers.size} headers exceed the u16 wire limit")
-    out.putIntLE(recordSize(r))
-    out.putLongLE(r.timestamp)
-    out.putLongLE(r.offset)
-    if (r.key != null) { out.putIntLE(r.key.length); out.putBytes(r.key) }
-    else out.putIntLE(-1)
-    if (r.value != null) { out.putIntLE(r.value.length); out.putBytes(r.value) }
-    else out.putIntLE(-1)
-    out.putShortLE(r.headers.size)
-    r.headers.foreach { h =>
-      val kb = h.key.getBytes(StandardCharsets.UTF_8)
-      require(kb.length <= 0xffff,
-        s"record ${r.offset}: header key of ${kb.length} bytes exceeds the u16 wire limit")
-      out.putShortLE(kb.length)
-      out.putBytes(kb)
-      if (h.value != null) { out.putIntLE(h.value.length); out.putBytes(h.value) }
-      else out.putIntLE(-1)
+    val start = beginRecord(out, r.timestamp, r.offset)
+    putBytesField(out, r.key)
+    putBytesField(out, r.value)
+    val headers = if (r.headers == null) Nil else r.headers
+    putHeaderCount(out, headers.size, r.offset)
+    headers.foreach { h =>
+      putHeaderKey(out, h.key.getBytes(StandardCharsets.UTF_8), r.offset)
+      putBytesField(out, h.value)
     }
+    endRecord(out, start)
   }
 
   /** Encode a full segment. Records must already be in offset order; topic and

@@ -274,19 +274,67 @@ object KFunctions {
     try_element_at(filter(headers, h => h.getField("key") === lit(key)), lit(1))
       .getField("value")
 
-  /** Append enrichment headers (F11): x-original-offset (LE i64),
-    * x-original-timestamp (LE i64 millis), x-source-cluster, x-source-partition
-    * (backup/engine.rs:1009-1028, restore/helpers.rs:79-108).
+  /** Append the enrichment headers (F11, see [[Enrichment]]) to a headers
+    * array column; NULL headers count as none.
     */
   def enriched_headers(headers: Column, offset: Column, tsMillis: Column,
                        cluster: String, partition: Column): Column =
     concat(
       coalesce(headers, array().cast(ArrayType(StructType(Seq(
         StructField("key", StringType), StructField("value", BinaryType)))))),
-      array(
-        struct(lit("x-original-offset").as("key"), long_to_bytes_le(offset).as("value")),
-        struct(lit("x-original-timestamp").as("key"), long_to_bytes_le(tsMillis).as("value")),
-        struct(lit("x-source-cluster").as("key"), encode(lit(cluster), "UTF-8").as("value")),
-        struct(lit("x-source-partition").as("key"),
-          encode(partition.cast(StringType), "UTF-8").as("value"))))
+      Enrichment.column(offset, tsMillis, cluster, partition))
+}
+
+/** Header enrichment (F11): the four headers a backup appends to every
+  * record, in this order (backup/engine.rs:1009-1028, restore/helpers.rs:79-108):
+  *   - `x-original-offset`: the offset, 8-byte little-endian i64;
+  *   - `x-original-timestamp`: the timestamp in epoch millis, 8-byte LE i64;
+  *   - `x-source-cluster`: the source cluster name, UTF-8;
+  *   - `x-source-partition`: the partition id in decimal, UTF-8.
+  * Its two forms sit side by side here: [[column]], the Catalyst array that
+  * [[KFunctions.enriched_headers]] appends, and [[writeWire]], which the
+  * backup writer calls to append the headers straight to a KBAK record
+  * (`PropertySpec` pins the two to the same segment bytes).
+  */
+object Enrichment {
+  val OffsetKey = "x-original-offset"
+  val TimestampKey = "x-original-timestamp"
+  val ClusterKey = "x-source-cluster"
+  val PartitionKey = "x-source-partition"
+  val Count = 4
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val offsetKey = utf8(OffsetKey)
+  private val timestampKey = utf8(TimestampKey)
+  private val clusterKey = utf8(ClusterKey)
+  private val partitionKey = utf8(PartitionKey)
+
+  def clusterValue(cluster: String): Array[Byte] = utf8(cluster)
+  def partitionValue(partition: Int): Array[Byte] = utf8(Integer.toString(partition))
+
+  /** The four headers as an `array<struct<key,value>>` column. */
+  def column(offset: Column, timestampMs: Column, cluster: String, partition: Column): Column =
+    array(
+      struct(lit(OffsetKey).as("key"), KFunctions.long_to_bytes_le(offset).as("value")),
+      struct(lit(TimestampKey).as("key"), KFunctions.long_to_bytes_le(timestampMs).as("value")),
+      struct(lit(ClusterKey).as("key"), lit(clusterValue(cluster)).as("value")),
+      struct(lit(PartitionKey).as("key"),
+        encode(partition.cast(StringType), "UTF-8").as("value")))
+
+  /** Append the four headers in wire form to the record being written for
+    * `offset` (after its own headers). `cluster` and `partition` are
+    * [[clusterValue]] and [[partitionValue]], encoded once by the caller.
+    */
+  def writeWire(out: graft.codec.SegmentCodec.ByteSink, offset: Long, timestampMs: Long,
+                cluster: Array[Byte], partition: Array[Byte]): Unit = {
+    import graft.codec.SegmentCodec._
+    putHeaderKey(out, offsetKey, offset)
+    putLongField(out, offset)
+    putHeaderKey(out, timestampKey, offset)
+    putLongField(out, timestampMs)
+    putHeaderKey(out, clusterKey, offset)
+    putBytesField(out, cluster)
+    putHeaderKey(out, partitionKey, offset)
+    putBytesField(out, partition)
+  }
 }

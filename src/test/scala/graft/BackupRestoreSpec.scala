@@ -327,6 +327,86 @@ class BackupRestoreSpec extends SparkSpec {
     assert(extracted.filter(col("timestamp") =!= col("header_ts")).count() == 0)
   }
 
+  /** Every segment file of a backup, by key. */
+  private def segmentBytes(root: String, m: graft.catalog.BackupManifest): Map[String, Seq[Byte]] =
+    (for (t <- m.topics; p <- t.partitions; s <- p.segments)
+      yield s.key -> Files.readAllBytes(java.nio.file.Paths.get(s"$root/${s.key}")).toSeq).toMap
+
+  /** Every message down an exception's cause chain. */
+  private def failure(f: => Any): String = {
+    val e = intercept[Exception](f)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+  }
+
+  test("NULL headers back up as zero headers, with enrichment on and off") {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val recs = Seq(
+      KRecord("nh", 0, 0L, t0, null, null, null),
+      KRecord("nh", 0, 1L, t0 + 1, "k1".getBytes, null, Seq(KHeader("h", null))),
+      KRecord("nh", 0, 2L, t0 + 2, null, "v2".getBytes, null),
+      KRecord("nh", 3, 7L, t0 + 3, "k7".getBytes, "v7".getBytes, Nil))
+    for (enrich <- Seq(false, true)) {
+      val root = Files.createTempDirectory("graft-nullhdr").toString
+      val m = Backup.run(spark, recs.toDS().toDF(), BackupConfig("nh", root,
+        CompressionCodec.Zstd, enrichHeaders = enrich, sourceCluster = "c1"))
+      assert(m.totalRecords == 4)
+      val got = Restore.records(spark, RestoreConfig(root, "nh")).collect()
+        .sortBy(r => (r.partition, r.offset)).toSeq
+      val want = recs.map { r =>
+        val own = Option(r.headers).getOrElse(Nil)
+        r.copy(headers = if (!enrich) own else own ++ Seq(
+          KHeader("x-original-offset", KHash.longToBytesLE(r.offset)),
+          KHeader("x-original-timestamp", KHash.longToBytesLE(r.timestamp)),
+          KHeader("x-source-cluster", "c1".getBytes),
+          KHeader("x-source-partition", r.partition.toString.getBytes)))
+      }
+      assert(got.size == want.size)
+      got.zip(want).foreach { case (g, w) => assertSameRecord(g, w) }
+    }
+  }
+
+  test("backup input rows that break the record contract fail loudly") {
+    import spark.implicits._
+    val df = Seq(KRecord("bad", 0, 5L, 1L, null, null, Nil)).toDS().toDF()
+    def backup(in: org.apache.spark.sql.DataFrame) = Backup.run(spark, in,
+      BackupConfig("bad", Files.createTempDirectory("graft-bad").toString))
+    assert(failure(backup(df.withColumn("offset", lit(null).cast("long"))))
+      .contains("backup input column offset is null"))
+    val nullKey = array(struct(lit(null).cast("string").as("key"), lit(Array[Byte](1)).as("value")))
+    assert(failure(backup(df.withColumn("headers", nullKey)))
+      .contains("record 5: header 0 has a null key"))
+  }
+
+  test("backup input contract: columns by name, legal upcasts, checked at analysis") {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val canonical = (0 until 60).map(i => KRecord(s"ic${i % 2}", i % 3, i.toLong * 7, t0 + i,
+      if (i % 5 == 0) null else s"k$i".getBytes, Array.fill(i)(i.toByte),
+      if (i % 4 == 0) Nil else Seq(KHeader(s"h$i", s"v$i".getBytes)))).toDS().toDF()
+    def backup(in: org.apache.spark.sql.DataFrame, enrich: Boolean): Map[String, Seq[Byte]] = {
+      val root = Files.createTempDirectory("graft-contract").toString
+      segmentBytes(root, Backup.run(spark, in, BackupConfig("ic", root, CompressionCodec.Zstd,
+        maxSegmentBytes = 512, enrichHeaders = enrich)))
+    }
+    val reordered = canonical.select(
+      (lit("extra").as("extra") +: canonical.columns.reverse.toSeq.map(col)): _*)
+    val intOffsets = canonical.withColumn("offset", col("offset").cast("int"))
+    // header struct fields resolve by name too
+    val headerFields = canonical.withColumn("headers", transform(col("headers"), h =>
+      struct(h("value").as("value"), lit(1).as("extra"), h("key").as("key"))))
+    for (enrich <- Seq(true, false)) {
+      val want = backup(canonical, enrich)
+      assert(want.size > 6)
+      assert(backup(reordered, enrich) == want, s"reordered + extra column, enrich=$enrich")
+      assert(backup(intOffsets, enrich) == want, s"int offsets, enrich=$enrich")
+      assert(backup(headerFields, enrich) == want, s"reordered header fields, enrich=$enrich")
+    }
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      backup(canonical.withColumn("partition", col("partition").cast("string")), enrich = true))
+    assert(e.getMessage.contains("partition"), e.getMessage)
+  }
+
   test("topic rename and partition remap (F13/F14)") {
     manifest
     val df = Restore.remapped(spark, RestoreConfig(tmp, "b1",

@@ -76,6 +76,17 @@ class PlanSpec extends SparkSpec {
       "the 100 TB data side must not shuffle for a metadata-sized state table")
   }
 
+  test("backup writes from the sorted rows: no typed deserialize, no enrichment projection") {
+    val records = graft.model.KRecord.fromEvents(spark, sf0001)
+    val plan = graft.pipelines.Backup.writerInput(spark, records,
+      graft.pipelines.BackupConfig("plan", "/nonexistent")).queryExecution
+    val p = plan.explainString(org.apache.spark.sql.execution.ExtendedMode)
+    assert(p.contains("Exchange hashpartitioning(topic"), s"exchange missing:\n$p")
+    assert(p.contains("Sort [topic"), s"sort missing:\n$p")
+    Seq("DeserializeToObject", "MapPartitions", "UDF", "x-original-offset").foreach(n =>
+      assert(!p.contains(n), s"$n in the backup plan:\n$p"))
+  }
+
   test("reset plan never replicates the mapping per group (J3)") {
     val p = planOf("q_group_reset_plan")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
