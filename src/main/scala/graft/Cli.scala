@@ -131,7 +131,7 @@ object Cli {
         res.groupBy("outcome").count().show()
         if (nf > 0) { failed.show(50, truncate = false); sys.exit(1) }
       } else {
-        // shallow: existence + size per segment
+        // shallow: each manifest segment's object exists (sizes are not checked)
         val m = Manifest.load(args(1), args(2))
         val fs = org.apache.hadoop.fs.FileSystem.get(
           new java.net.URI(args(1)), spark.sparkContext.hadoopConfiguration)

@@ -185,33 +185,16 @@ object SegmentCodec {
       count += 1
     }
     val compressed = Compression.compress(body.toArray, codec, zstdLevel)
-    assemble(SegmentHeader(Version, codec, count, startOffset, endOffset), compressed)
+    val out = new java.io.ByteArrayOutputStream(HeaderSize + compressed.length + FooterSize)
+    writeSegment(out, SegmentHeader(Version, codec, count, startOffset, endOffset),
+      compressed, 0, compressed.length)
+    out.toByteArray
   }
 
-  /** Header bytes + compressed body + CRC footer. */
-  def assemble(h: SegmentHeader, compressedBody: Array[Byte]): Array[Byte] = {
-    val out = ByteBuffer.allocate(HeaderSize + compressedBody.length + FooterSize)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    out.put(Magic)
-    out.put(h.version)
-    out.put(h.codec.id)
-    out.putShort(0) // reserved
-    out.putLong(h.recordCount)
-    out.putLong(h.startOffset)
-    out.putLong(h.endOffset)
-    out.put(compressedBody)
-    val crc = new CRC32()
-    crc.update(out.array(), 0, HeaderSize + compressedBody.length)
-    out.putInt(crc.getValue.toInt)
-    out.put(MagicEnd)
-    out.array()
-  }
-
-  /** Stream a segment to `os` without assembling it in memory: header,
-    * compressed body range, then the CRC32-of-everything footer (CRC built
-    * incrementally). Byte-identical output to [[assemble]] — the hot-path
-    * form for the backup writer, where the assemble copy doubled per-task
-    * memory at full segment size.
+  /** Write a segment to `os`: header, compressed body range, then the
+    * CRC32-of-everything footer (CRC built incrementally) — the one place
+    * the header and footer are written. The backup writer streams straight
+    * to storage through it, with no segment-sized copy.
     */
   def writeSegment(os: java.io.OutputStream, h: SegmentHeader,
                    body: Array[Byte], off: Int, len: Int): Unit = {

@@ -5,8 +5,10 @@ import graft.codec.{LegacySegment, SegmentCodec}
 import graft.model.KRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
 /** Restore/PITR options (reference RestoreConfig, restore/engine.rs):
@@ -35,53 +37,63 @@ case class RestoreConfig(
   * The manifest already names every selected object and its size, so the scan
   * lists no path and runs no job before the action: the selected segments are
   * split into size-balanced tasks on the driver and each task opens its keys
-  * directly. Decode is a streaming iterator (no per-task materialization), and
-  * the ts window is re-applied per record inside it, because segment stats
-  * are ranges, not predicates; a record outside the window is skipped before
-  * its key, value and headers are allocated.
+  * directly. That scan ([[scan]]) has two callers: [[records]] and deep
+  * validation ([[graft.validation.Validation.deep]]), which re-reads every
+  * segment the way a restore does. Decode is a streaming iterator (no
+  * per-task materialization), and the ts window is re-applied per record
+  * inside it, because segment stats are ranges, not predicates; a record
+  * outside the window is skipped before its key, value and headers are
+  * allocated.
   */
 object Restore {
 
   /** The restored record set as a canonical-record Dataset (the produce step
-    * K3 is a separate sink; tests and validation consume this directly).
+    * K3 is a separate sink; tests consume this directly). Segments are
+    * decoded magic-sniffed: KBAK binary or legacy JSON (S10/S11). A missing
+    * or corrupt segment fails the restore with its key in the message; no
+    * setting skips it, because a restore must never drop data silently.
     */
   def records(spark: SparkSession, cfg: RestoreConfig): Dataset[KRecord] = {
     import spark.implicits._
     val segments = selectedSegments(Manifest.load(cfg.backupRoot, cfg.backupId), cfg)
     if (segments.isEmpty) spark.emptyDataset[KRecord]
     else {
-      val tasks = scanTasks(spark, segments)
-      val root = cfg.backupRoot
       val lo = cfg.windowStartMs.getOrElse(Long.MinValue)
       val hi = cfg.windowEndMs.getOrElse(Long.MaxValue)
-      // the driver's Hadoop conf (spark.hadoop.* credentials, endpoints,
-      // registered schemes) travels with the tasks, as in Backup
-      val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      spark.createDataset(spark.sparkContext.parallelize(tasks, tasks.size)
-        .flatMap { task =>
-          val fs = FileSystem.get(new java.net.URI(root), hadoopConf.value)
-          task.iterator.flatMap { case (topic, partition, s) =>
-            readSegment(fs, root, topic, partition, s, lo, hi)
-          }
-        })
+      spark.createDataset(scan(spark, cfg.backupRoot, segments) { (topic, partition, s, read) =>
+        try LegacySegment.decodeAny(read(), s.key, topic, partition, lo, hi)
+        catch { case NonFatal(e) =>
+          throw new java.io.IOException(
+            s"restore of segment ${s.key} failed: ${e.getMessage}", e)
+        }
+      })
     }
   }
 
-  /** Read one segment object whole and decode it (magic-sniffed: KBAK binary
-    * or legacy JSON, S10/S11). A missing or corrupt segment fails the restore
-    * with its key in the message; no setting skips it, because a restore
-    * must never drop data silently.
+  /** The one reader of segment objects, shared by [[records]] and
+    * [[graft.validation.Validation.deep]]. `segments` run as [[scanTasks]]'
+    * size-balanced contiguous tasks; each task opens its own `FileSystem`
+    * from the driver's Hadoop conf (spark.hadoop.* credentials, endpoints and
+    * registered schemes travel with the tasks, as in Backup). Per segment, in
+    * manifest order, `f` gets the segment and a thunk that reads its object
+    * whole into an array presized from the manifest.
     */
-  private def readSegment(fs: FileSystem, root: String, topic: String, partition: Int,
-                          s: SegmentMetadata, lo: Long, hi: Long): Iterator[KRecord] =
-    try {
-      val expected = math.min(
-        s.compressed_size + SegmentCodec.HeaderSize + SegmentCodec.FooterSize,
-        Int.MaxValue - 8L).toInt
-      val bytes = readObject(fs, new Path(s"$root/${s.key}"), expected)
-      LegacySegment.decodeAny(bytes, s.key, topic, partition, lo, hi)
-    } catch { case NonFatal(e) =>
-      throw new java.io.IOException(s"restore of segment ${s.key} failed: ${e.getMessage}", e)
+  private[graft] def scan[T: ClassTag](spark: SparkSession, root: String,
+                                       segments: Seq[(String, Int, SegmentMetadata)])(
+      f: (String, Int, SegmentMetadata, () => Array[Byte]) => Iterator[T]): RDD[T] =
+    if (segments.isEmpty) spark.sparkContext.emptyRDD[T]
+    else {
+      val tasks = scanTasks(spark, segments)
+      val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext.parallelize(tasks, tasks.size).flatMap { task =>
+        val fs = FileSystem.get(new java.net.URI(root), hadoopConf.value)
+        task.iterator.flatMap { case (topic, partition, s) =>
+          val expected = math.min(
+            s.compressed_size + SegmentCodec.HeaderSize + SegmentCodec.FooterSize,
+            Int.MaxValue - 8L).toInt
+          f(topic, partition, s, () => readObject(fs, new Path(s"$root/${s.key}"), expected))
+        }
+      }
     }
 
   /** Read a whole object into an array presized from the manifest. When the
@@ -173,8 +185,8 @@ object Restore {
     selectedSegments(manifest, cfg).map(_._3.key)
 
   /** [[prunedSegmentKeys]]' segments with their (topic, partition). */
-  private def selectedSegments(manifest: BackupManifest,
-                               cfg: RestoreConfig): Seq[(String, Int, SegmentMetadata)] =
+  private[graft] def selectedSegments(manifest: BackupManifest,
+                                      cfg: RestoreConfig): Seq[(String, Int, SegmentMetadata)] =
     for {
       t <- manifest.topics
       if graft.functions.KHash.topicMatches(t.name, cfg.includeTopics, cfg.excludeTopics)

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.model.KRecord
-import graft.remap.{OffsetMapping, OffsetPair}
+import graft.remap.OffsetPair
 import org.apache.spark.sql.Dataset
 
 /** Per-sub-batch produce result (kafka/produce.rs ProduceResponse):
@@ -32,10 +32,11 @@ trait RecordSink extends Serializable {
   * configurable start — mirrors a broker's offset assignment for tests
   * (the reference's MemoryBackend pattern).
   *
-  * NOTE: when used through [[Produce.run]], Spark serializes a COPY of this
-  * sink into each task — driver-side `sent`/offset state stays empty. Read
-  * results from Produce.run's return value; per-(topic,partition) offset
-  * continuity holds because the repartition keeps each key in one task.
+  * NOTE: when used through [[Produce.runDistributed]], Spark serializes a
+  * COPY of this sink into each task — driver-side `sent`/offset state stays
+  * empty. Read results from runDistributed's return value; per-(topic,
+  * partition) offset continuity holds because the repartition keeps each key
+  * in one task.
   */
 final class CollectingSink(startOffsets: Map[(String, Int), Long] = Map.empty)
     extends RecordSink {
@@ -148,40 +149,17 @@ object Produce {
     * topics — from O(records/pairEvery + gaps) anchors; the reference keeps
     * sub-batch bases the same way (restore/engine.rs:1410-1439) but without
     * the gap guard. Per-record capture (`pairEvery=1`) remains an opt-in
-    * debugging mode: at 100 TB it is O(records) driver state.
+    * debugging mode: at 100 TB it is O(records) pairs.
     */
   val DefaultPairEvery: Int = 1000
 
   /** Distributed produce of a canonical-record Dataset: one task per
-    * (topic, partition) — order within partitions preserved by the upstream
-    * `sortWithinPartitions` — collecting only the SAMPLED offset pairs to the
-    * driver, folded into an [[OffsetMapping]]. Driver state is
-    * O(partitions + records/pairEvery); for estates where even that is large,
-    * use [[runDistributed]] and keep the pairs in a DataFrame.
-    */
-  def run(records: Dataset[KRecord], sink: RecordSink,
-          maxBatchRecords: Int = 1000,
-          pairEvery: Int = DefaultPairEvery): (Seq[ProduceResult], OffsetMapping) = {
-    import records.sparkSession.implicits._
-    val collected = producedRuns(records, sink, maxBatchRecords, pairEvery).collect()
-
-    val results = collected.map(_._1).toSeq
-    var mapping = OffsetMapping()
-    collected.foreach { case (res, pairs) =>
-      pairs.foreach { pr =>
-        mapping = mapping.addDetailed(res.topic, res.partition, pr)
-        mapping = mapping.updateRange(res.topic, res.partition, pr.source_offset,
-          Some(pr.target_offset), pr.timestamp)
-      }
-    }
-    (results, mapping)
-  }
-
-  /** The scale path: same single produce pass, but the sampled pairs NEVER
-    * reach the driver — they stay a DataFrame (topic, partition,
-    * source_offset, target_offset, timestamp) for
-    * [[graft.remap.OffsetMappingDF.lookupTargets]]; only the per-(topic,
-    * partition) summaries are collected (O(partitions) driver state).
+    * (topic, partition), order within partitions preserved by the upstream
+    * `sortWithinPartitions`. The sampled pairs NEVER reach the driver — they
+    * stay a DataFrame (topic, partition, source_offset, target_offset,
+    * timestamp) for [[graft.remap.OffsetMappingDF.lookupTargets]]; only the
+    * per-(topic, partition) summaries are collected (O(partitions) driver
+    * state).
     *
     * The produce job runs ONCE, eagerly, via `localCheckpoint`: lineage is
     * truncated after the pass, so a lost cached partition can never silently
@@ -216,7 +194,7 @@ object Produce {
     (results, pairs, () => { events.unpersist(); () })
   }
 
-  /** The shared produce pass: one (ProduceResult, sampled pairs) element per
+  /** The produce pass: one (ProduceResult, sampled pairs) element per
     * consecutive (topic, partition) run.
     */
   private def producedRuns(records: Dataset[KRecord], sink: RecordSink,

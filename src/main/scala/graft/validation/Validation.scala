@@ -1,9 +1,11 @@
 package graft.validation
 
-import graft.catalog.{BackupManifest, Manifest}
-import graft.codec.SegmentCodec
+import graft.catalog.Manifest
+import graft.codec.LegacySegment
+import graft.pipelines.{Restore, RestoreConfig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Validation checks (reference validation module) as DataFrame joins over the
   * manifest catalog and a cluster-offsets table
@@ -94,89 +96,45 @@ object Validation {
   }
 
   /** `validate --deep` (cli/commands/validate.rs:48-233): re-read and decode
-    * every segment, verify CRC (decode throws on mismatch), and check record
-    * count + offset range equality against the manifest entry. Runs as the
-    * same distributed binary scan as restore, minus the produce.
+    * every segment the manifest names, verify its CRC (decode throws on a
+    * mismatch), and check its record count and offset range against the
+    * manifest entry. The reads go through restore's segment scan
+    * ([[Restore.scan]]: manifest keys, size-balanced tasks, one presized read
+    * per object) and its magic-sniffing decoder, so KBAK and legacy JSON
+    * segments validate exactly as they restore, in one job. A missing object
+    * gives NULL `actual_*` and "object missing"; a read or decode failure
+    * gives -1 and the exception's message. Files the manifest does not name
+    * are never opened.
     */
-  /** The only per-backup state `deep` materializes on the driver: one scan
-    * root per (topic, partition) directory — never per segment. Exposed for
-    * the spec that pins the no-driver-materialization property.
-    */
-  private[graft] def deepScanRoots(manifest: BackupManifest): Seq[String] =
-    (for {
-      t <- manifest.topics
-      p <- t.partitions
-      s <- p.segments.headOption
-    } yield s.key.substring(0, s.key.lastIndexOf('/'))).distinct
-
   def deep(spark: SparkSession, backupRoot: String, backupId: String): DataFrame = {
     import spark.implicits._
-    val manifest = Manifest.load(backupRoot, backupId)
-    val expected = Manifest.toDF(spark, manifest)
-    // The driver never holds per-SEGMENT state: it enumerates only the
-    // partition DIRECTORIES (O(topic×partition), thousands at 100 TB — vs
-    // 800k segment keys ≈ 100 MB of driver strings and a giant load varargs).
-    // binaryFile then scans whole directories; a deleted object simply never
-    // appears on the actual side and the left join turns it into a Failed row.
-    val dirs = deepScanRoots(manifest)
-    val conf = new graft.pipelines.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val rootLocal = backupRoot
-    // Dirs can vanish wholesale (a whole partition deleted): probe existence
-    // distributed, keep only listable dirs as scan roots. O(dirs) driver-side.
-    val scanDirs = spark.sparkContext
-      .parallelize(dirs, math.max(1, math.min(dirs.size, 64)))
-      .filter { d =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(rootLocal), conf.value)
-        try fs.listStatus(new org.apache.hadoop.fs.Path(s"$rootLocal/$d")).nonEmpty
-        catch { case _: java.io.FileNotFoundException => false }
-      }.collect()
-    val backupIdLocal = backupId
-    val actual =
-      if (scanDirs.isEmpty)
-        Seq.empty[(String, Long, Long, Long, String)]
-          .toDF("segment_key", "actual_count", "actual_start", "actual_end", "decode_error")
-      else spark.read.format("binaryFile")
-        .load(scanDirs.map(d => s"$backupRoot/$d").toSeq: _*)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .map { case (path, bytes) =>
-          // rebuild the manifest key from the tail path components
-          // (topics/<topic>/partition=<p>/<file>) — immune to the backupId
-          // string appearing inside backupRoot
-          val key = backupIdLocal + "/" + path.split('/').takeRight(4).mkString("/")
-          try {
-            var n = 0L
-            var lo = Long.MaxValue
-            var hi = Long.MinValue
-            SegmentCodec.decode(bytes).foreach { r =>
-              n += 1; lo = math.min(lo, r.offset); hi = math.max(hi, r.offset)
-            }
-            (key, n, if (n == 0) -1L else lo, if (n == 0) -1L else hi, null: String)
-          } catch {
-            // Throwable: decoder JNI paths can surface Errors; anything
-            // non-fatal must become a Failed row, not a task failure
-            case e: Throwable if scala.util.control.NonFatal(e) =>
-              (key, -1L, -1L, -1L, e.getMessage)
+    val segments = Restore.selectedSegments(Manifest.load(backupRoot, backupId),
+      RestoreConfig(backupRoot, backupId))
+    Restore.scan(spark, backupRoot, segments) { (topic, partition, s, read) =>
+      val (actualCount, actualStart, actualEnd, error) =
+        try {
+          var n = 0L
+          var lo = Long.MaxValue
+          var hi = Long.MinValue
+          LegacySegment.decodeAny(read(), s.key, topic, partition).foreach { r =>
+            n += 1; lo = math.min(lo, r.offset); hi = math.max(hi, r.offset)
           }
+          (Some(n), Some(if (n == 0) -1L else lo), Some(if (n == 0) -1L else hi), null: String)
+        } catch {
+          case _: java.io.FileNotFoundException => (None, None, None, "object missing")
+          // Throwable: decoder JNI paths can surface Errors; anything
+          // non-fatal must become a Failed row, not a task failure
+          case e: Throwable if NonFatal(e) => (Some(-1L), Some(-1L), Some(-1L), e.getMessage)
         }
-        .toDF("segment_key", "actual_count", "actual_start", "actual_end", "decode_error")
-    // left join: manifest keys with no object on storage surface as
-    // "object missing"; foreign files in the scanned dirs (not in the
-    // manifest) drop out of the join, matching the old keyed-load behavior
-    expected.join(actual, Seq("segment_key"), "left")
-      .withColumn("decode_error",
-        when(col("actual_count").isNull, lit("object missing"))
-          .otherwise(col("decode_error")))
+      Iterator.single((s.key, topic, partition, s.record_count, actualCount, s.start_offset,
+        actualStart, s.end_offset, actualEnd, error))
+    }.toDF("segment_key", "topic", "partition", "record_count", "actual_count",
+        "start_offset", "actual_start", "end_offset", "actual_end", "decode_error")
       .withColumn("outcome",
         when(col("decode_error").isNotNull, "Failed")
           .when(col("actual_count") === col("record_count") &&
             col("actual_start") === col("start_offset") &&
             col("actual_end") === col("end_offset"), "Passed")
           .otherwise("Failed"))
-      .select("segment_key", "topic", "partition", "record_count", "actual_count",
-        "start_offset", "actual_start", "end_offset", "actual_end", "decode_error",
-        "outcome")
   }
 }

@@ -5,9 +5,9 @@ import graft.codec.{CompressionCodec, LegacySegment, SegmentCodec}
 import graft.functions.{KFunctions, KHash}
 import graft.model.{KHeader, KRecord}
 import graft.pipelines.{Backup, BackupConfig, Restore, RestoreConfig}
+import graft.validation.Validation
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -126,30 +126,9 @@ class BackupRestoreSpec extends SparkSpec {
   test("restore planning lists no path and runs no Spark job") {
     val (root, m) = many
     assert(m.totalSegments > 32, "enough segments for a parallel listing")
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descriptions.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
-    }
-    val sc = spark.sparkContext
-    // a marker job flushes the (in-order) listener queue up to that point
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!descriptions.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(descriptions.contains(name), s"listener never saw $name")
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("before")
-      descriptions.clear()
-      val ds = Restore.records(spark, RestoreConfig(root, "s1"))
-      marker("after")
-      assert(descriptions.toArray.toSeq == Seq("after"), "jobs ran while planning")
-      assert(ds.count() == 400)
-    } finally sc.removeSparkListener(listener)
+    val (ds, jobs) = jobsRunBy(Restore.records(spark, RestoreConfig(root, "s1")))
+    assert(jobs.isEmpty, "jobs ran while planning")
+    assert(ds.count() == 400)
   }
 
   test("scan tasks follow the size-balanced bin formula, capped at the segment count") {
@@ -215,7 +194,10 @@ class BackupRestoreSpec extends SparkSpec {
       RestoreConfig(root, "s1", Some(0L), Some(1000L))).count() == 0)
   }
 
-  test("a manifest mixing legacy JSON and KBAK segments restores every record") {
+  /** A Zstd KBAK backup of topic `bin` (20 records) whose manifest also names
+    * a legacy JSON segment of topic `legacy` (3 records, offsets 0..2).
+    */
+  private lazy val mixed = {
     import spark.implicits._
     val t0 = 1700000000000L
     val kbak = (0 until 20).map(i => KRecord("bin", 0, i.toLong, t0 + i, s"k$i".getBytes,
@@ -235,7 +217,11 @@ class BackupRestoreSpec extends SparkSpec {
     Manifest.save(root, m.copy(topics = List(TopicBackup("legacy", Some(1), List(
       PartitionBackup(0, List(SegmentMetadata(key, 0, 2, t0, t0 + 2, 3, 0, bytes.length))))))))
     assert(Manifest.load(root, "mx").totalSegments == m.totalSegments + 1)
+    (root, t0, kbak, legacy)
+  }
 
+  test("a manifest mixing legacy JSON and KBAK segments restores every record") {
+    val (root, t0, kbak, legacy) = mixed
     val all = Restore.records(spark, RestoreConfig(root, "mx")).collect().toSeq
     assert(all.size == kbak.size + legacy.size)
     val byTopic = all.groupBy(_.topic).map { case (t, rs) => t -> rs.sortBy(_.offset) }
@@ -245,6 +231,16 @@ class BackupRestoreSpec extends SparkSpec {
     val mid = Restore.records(spark, RestoreConfig(root, "mx", Some(t0 + 1), Some(t0 + 1)))
       .collect().map(r => (r.topic, r.offset)).toSet
     assert(mid == Set(("bin", 1L), ("legacy", 1L)))
+  }
+
+  test("deep validation passes the legacy JSON segment of a mixed manifest") {
+    val (root, _, _, _) = mixed
+    val rows = Validation.deep(spark, root, "mx").collect()
+    assert(rows.length == Manifest.load(root, "mx").totalSegments)
+    assert(rows.forall(_.getAs[String]("outcome") == "Passed"), rows.mkString("\n"))
+    val legacyRows = rows.filter(_.getAs[String]("topic") == "legacy")
+    assert(legacyRows.map(r => (r.getAs[Long]("actual_count"), r.getAs[Long]("actual_start"),
+      r.getAs[Long]("actual_end"))).toSeq == Seq((3L, 0L, 2L)))
   }
 
   test("restore fails loudly on a deleted or corrupt segment, naming it") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.model.KRecord
 import graft.pipelines.{RestoreCheckpoint, RestoreConfig}
+import graft.remap.OffsetMappingDF
 import graft.sinks.{CollectingSink, Produce}
 import graft.sources.KafkaSourceOptions
 import graft.validation.{CircuitBreaker, Evidence, EvidenceReport}
@@ -36,22 +37,41 @@ class ProduceEvidenceSpec extends SparkSpec {
       (0L until 10L).map(i => (i * 3) -> (5000L + i)))
   }
 
+  /** The J1 target `lookupTargets` resolves for one source offset. */
+  private def target(pairs: org.apache.spark.sql.DataFrame, topic: String, partition: Int,
+                     sourceOffset: Long): Option[Long] = {
+    import spark.implicits._
+    val probes = Seq((topic, partition, sourceOffset)).toDF("topic", "partition", "source_offset")
+    OffsetMappingDF.lookupTargets(pairs, probes).collect().toSeq
+      .flatMap(r => Option(r.getAs[java.lang.Long]("target_offset")).map(_.longValue))
+      .headOption
+  }
+
+  /** The lowest-offset sampled pair of one (topic, partition): (source, target). */
+  private def firstPair(pairs: org.apache.spark.sql.DataFrame, topic: String,
+                        partition: Int): (Long, Long) = {
+    val r = pairs.filter(s"topic = '$topic' AND partition = $partition")
+      .orderBy("source_offset").head()
+    (r.getAs[Long]("source_offset"), r.getAs[Long]("target_offset"))
+  }
+
   test("distributed produce returns a mapping usable for J1 lookups") {
     import spark.implicits._
     val records = KRecord.fromEvents(spark, sf0001).as[KRecord]
-    val (results, mapping) = Produce.run(records, new CollectingSink(), pairEvery = 10)
-    assert(results.map(_.recordCount).sum == 1000)
-    // each (topic, partition) got contiguous target offsets from 0
-    results.foreach { r =>
-      assert(r.subBatchOffsets.head._1 == 0L)
-      assert(r.subBatchOffsets.map(_._2).sum.toLong == r.recordCount)
-    }
-    // as-of lookup resolves for any source offset at or beyond the first pair
-    val sample = results.head
-    val firstPair = mapping.detailed(s"${sample.topic}/${sample.partition}").head
-    val target = mapping.lookupTargetOffset(sample.topic, sample.partition,
-      firstPair.source_offset)
-    assert(target.contains(firstPair.target_offset))
+    val (results, pairs, unpersist) =
+      Produce.runDistributed(records, new CollectingSink(), pairEvery = 10)
+    try {
+      assert(results.map(_.recordCount).sum == 1000)
+      // each (topic, partition) got contiguous target offsets from 0
+      results.foreach { r =>
+        assert(r.subBatchOffsets.head._1 == 0L)
+        assert(r.subBatchOffsets.map(_._2).sum.toLong == r.recordCount)
+      }
+      // as-of lookup resolves for any source offset at or beyond the first pair
+      val sample = results.head
+      val (source, anchorTarget) = firstPair(pairs, sample.topic, sample.partition)
+      assert(target(pairs, sample.topic, sample.partition, source).contains(anchorTarget))
+    } finally unpersist()
   }
 
   test("default produce keeps driver pairs O(partitions) for contiguous sources") {
@@ -60,18 +80,19 @@ class ProduceEvidenceSpec extends SparkSpec {
     // default is designed for
     val records = (0 until 4).flatMap(p => (0L until 250L).map(o =>
       KRecord("t", p, o, 1700000000000L + o, null, s"v$o".getBytes, Nil))).toDS()
-    val (results, mapping) = Produce.run(records, new CollectingSink())
-    assert(results.map(_.recordCount).sum == 1000)
-    // sampled default: anchors only at sub-batch bases + every DefaultPairEvery
-    val heldPairs = mapping.detailed.values.map(_.size).sum
-    val subBatches = results.map(_.subBatchOffsets.size).sum
-    assert(heldPairs <= subBatches + 1000 / Produce.DefaultPairEvery + results.size,
-      s"driver held $heldPairs pairs for 1000 records — not sampled")
-    // J1 delta rule over the sampled anchors: nearest-≤ anchor target + delta
-    val r = results.head
-    val anchor = mapping.detailed(s"${r.topic}/${r.partition}").head
-    assert(mapping.lookupTargetOffset(r.topic, r.partition, anchor.source_offset + 7)
-      .contains(anchor.target_offset + 7))
+    val (results, pairs, unpersist) = Produce.runDistributed(records, new CollectingSink())
+    try {
+      assert(results.map(_.recordCount).sum == 1000)
+      // sampled default: anchors only at sub-batch bases + every DefaultPairEvery
+      val heldPairs = pairs.count()
+      val subBatches = results.map(_.subBatchOffsets.size).sum
+      assert(heldPairs <= subBatches + 1000 / Produce.DefaultPairEvery + results.size,
+        s"produce sampled $heldPairs pairs for 1000 records — not sampled")
+      // J1 delta rule over the sampled anchors: nearest-≤ anchor target + delta
+      val r = results.head
+      val (source, anchorTarget) = firstPair(pairs, r.topic, r.partition)
+      assert(target(pairs, r.topic, r.partition, source + 7).contains(anchorTarget + 7))
+    } finally unpersist()
   }
 
   test("sampled default stays EXACT across source-offset gaps (contiguity guard)") {

@@ -87,23 +87,30 @@ class ValidationStreamingSpec extends SparkSpec {
     assert(res.filter(col("outcome") =!= "Passed").count() == 0)
   }
 
-  test("validate --deep materializes only partition dirs on the driver, not segments") {
-    // the driver-side footprint is one scan root per (topic, partition) —
-    // at 800k segments this stays in the thousands; per-segment keys never
-    // land on the driver (the left join finds missing objects instead)
-    val root = Files.createTempDirectory("graft-deep-roots").toString
+  test("validate --deep is one job over manifest keys, no listing or join") {
+    val root = Files.createTempDirectory("graft-deep-scan").toString
     val m = Backup.run(spark, KRecord.fromEvents(spark, sf0001),
       BackupConfig("dr1", root, CompressionCodec.None, maxSegmentBytes = 2048))
-    val roots = Validation.deepScanRoots(m)
-    val partitionCount = m.topics.map(_.partitions.size).sum
-    assert(roots.size == partitionCount)
-    assert(m.totalSegments > partitionCount,
-      "fixture must have multiple segments per partition for this pin to mean anything")
-    assert(roots.forall(d => d.startsWith("dr1/topics/") && d.contains("partition=")))
-    // and the scan over those roots still validates every segment
-    val res = Validation.deep(spark, root, "dr1")
-    assert(res.count() == m.totalSegments)
-    assert(res.filter(col("outcome") =!= "Passed").count() == 0)
+    // a valid segment under a name the manifest does not hold, dropped into a
+    // partition directory: deep validation must never open or report it
+    val key = m.topics.head.partitions.head.segments.head.key
+    Files.copy(java.nio.file.Paths.get(s"$root/$key"), java.nio.file.Paths.get(
+      s"$root/${key.substring(0, key.lastIndexOf('/'))}/segment-stray.bin"))
+
+    val ((res, rows), jobs) = jobsRunBy {
+      val df = Validation.deep(spark, root, "dr1")
+      (df, df.collect())
+    }
+    assert(jobs.size == 1, s"jobs: $jobs")
+    val plan = res.queryExecution.optimizedPlan
+    assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+      .isEmpty, plan.toString)
+    // no file-source relation: no binaryFile (or any other) listing scan
+    assert(plan.collect { case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+      r }.isEmpty, plan.toString)
+    assert(rows.map(_.getAs[String]("segment_key")).toSet ==
+      m.topics.flatMap(_.partitions).flatMap(_.segments).map(_.key).toSet)
+    assert(rows.forall(_.getAs[String]("outcome") == "Passed"))
   }
 
   test("validate --deep flags a corrupted segment") {
