@@ -1082,8 +1082,7 @@ object QueriesData {
     "a_ann_ivf_probe" -> ((s, d) => {
       import s.implicits._
       val path = ensureIvf(s, d)
-      val model = Ann.IvfModel.fromJson(
-        graft.util.Sidecar.read(s, path, "_ivf_centroids.json"))
+      val model = Ann.loadIvfModel(s, path)
       val e = emb(s, d)
       val key = contentKey(s"$d/embeddings.parquet")
       val fxC = fixture(s, "ivf_centroids_milli",
@@ -1137,8 +1136,7 @@ object QueriesData {
     "a_ann_ivfpq_probe" -> ((s, d) => {
       import s.implicits._
       val path = ensureIvfPq(s, d)
-      val ivfModel = Ann.IvfModel.fromJson(
-        graft.util.Sidecar.read(s, path, "_ivf_centroids.json"))
+      val ivfModel = Ann.loadIvfModel(s, path)
       val pqModel = Ann.loadPqModel(s, path)
       val e = emb(s, d)
       val q = e.filter(col("vec_id") === 0)

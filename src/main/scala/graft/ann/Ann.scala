@@ -1,45 +1,67 @@
 package graft.ann
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import graft.util.Sidecar
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
-  * Scale design: the baseline is a single narrow scan — score every vector
-  * against the (broadcast) query and keep a running top-k per partition, then
-  * merge k×partitions rows on the driver side of the final sort. The LSH /
-  * IVF-style variant prunes the scan to matching buckets: at 100 TB the
-  * bucket column is a partition/bucketing key, so Catalyst turns the bucket
-  * predicate into partition pruning and only ~1/2^probes of the data is read.
+  * Every single-query top-k here is one filter-and-refine skeleton: a
+  * candidate generator builds a candidate `DataFrame` — the full scan, an
+  * LSH bucket filter (in memory, or a persisted layout where the bucket
+  * predicate is partition pruning), a signature-table join, an IVF list
+  * filter, or a PQ/ADC shortlist — and [[exactTopK]] scores the candidates
+  * with dimension-checked cosine and cuts `(cosine desc, id)` to k. The two
+  * scorers over encoded vectors ([[pqTopK]]'s ADC score,
+  * [[bruteForceTopKQuantized]]'s int8 cosine) share the same cut over their
+  * own score column ([[rankTopK]]).
+  *
+  * Scale design: each rank is a single narrow scan of the candidates against
+  * the literal query plus a k-row final sort (a running top-k per partition,
+  * merged on the driver side). The pruned generators read only the probed
+  * buckets or lists: at 100 TB the bucket column is a partition key, so
+  * Catalyst turns the probe into partition pruning and only ~1/2^probes of
+  * the data is read.
   */
 object Ann {
 
-  /** Brute-force cosine top-k for one query vector (exact baseline).
-    * One scan + one k-row final sort; ties broken by id for determinism.
+  /** Brute-force cosine top-k for one query vector (exact baseline): the
+    * whole corpus is the candidate set.
     */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Double], k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    corpus.select(col(idCol).as("id"),
-        round(Dedup.cosine(dimChecked(col(vecCol).cast("array<double>"),
-          query.length), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-  }
+                     query: Seq[Double], k: Int): DataFrame =
+    exactTopK(corpus, idCol, vecCol, query, k)
+
+  /** The refine half of every float-vector single-query path: exact cosine
+    * (6 dp) of each candidate against the query, top k by
+    * `(cosine desc, id)`. Output `(id, cosine)`.
+    */
+  private def exactTopK(cands: DataFrame, idCol: String, vecCol: String,
+                        query: Seq[Double], k: Int): DataFrame =
+    rankTopK(cands.select(col(idCol).as("id"),
+      round(Dedup.cosine(dimChecked(col(vecCol).cast("array<double>"),
+        query.length), array(query.map(lit): _*)), 6).as("cosine")),
+      "cosine", k)
+
+  /** The deterministic rank cut over an `(id, score)` frame: one k-row
+    * final sort, ties broken by id.
+    */
+  private def rankTopK(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.orderBy(col(score).desc, col("id")).limit(k)
 
   /** Fail LOUDLY on a query/corpus dimension mismatch instead of the silent
-    * all-NULL cosines zip_with padding would produce (a plausible-looking
+    * all-NULL cosines a length mismatch would produce (a plausible-looking
     * but meaningless id-ordered top-k). Zero extra jobs: the check rides the
     * scan as a codegen'd raise_error branch.
     */
-  private def dimChecked(v: Column, queryDim: Int): Column =
+  private def dimChecked(v: Column, queryDim: Int, tpe: String = "array<double>",
+                         what: String = "corpus vector"): Column =
     when(v.isNull || size(v) === queryDim, v)
       .otherwise(raise_error(concat(
-        lit(s"ANN dim mismatch: query has $queryDim dims, corpus vector has "),
-        size(v).cast("string"))).cast("array<double>"))
+        lit(s"ANN dim mismatch: query has $queryDim dims, $what has "),
+        size(v).cast("string"))).cast(tpe))
 
   /** Symmetric per-vector int8 quantization: `scale = 127 / max|x_i|`,
     * `q_i = round(x_i * scale)` — 4× less storage/scan IO than float32 for
@@ -88,35 +110,12 @@ object Ann {
     // Spark sorts NaN ABOVE every number under desc — zero vectors would
     // dominate the top-k instead of sorting last (null) like the float path
     val denom = nCorpus * lit(nQuery)
-    quantized
+    rankTopK(quantized
       .withColumn("q_vec",
-        when(col("q_vec").isNull || size(col("q_vec")) === query.length, col("q_vec"))
-          .otherwise(raise_error(concat(
-            lit(s"ANN dim mismatch: query has ${query.length} dims, q_vec has "),
-            size(col("q_vec")).cast("string"))).cast("array<int>")))
+        dimChecked(col("q_vec"), query.length, "array<int>", "q_vec"))
       .select(col(idCol).as("id"),
-        when(denom =!= 0d, round(dot.cast("double") / denom, 6)).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-  }
-
-  /** Batch top-k: every query row against every corpus row via a broadcast
-    * nest — exact, for query sets small enough to broadcast. Returns
-    * (query_id, rank, id, cosine).
-    */
-  def bruteForceTopKBatch(corpus: DataFrame, idCol: String, vecCol: String,
-                          queries: DataFrame, qIdCol: String, qVecCol: String,
-                          k: Int): DataFrame = {
-    val scored = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-      .crossJoin(broadcast(queries.select(col(qIdCol).as("query_id"),
-        col(qVecCol).as("qvec"))))
-      .select(col("query_id"), col("id"),
-        round(Dedup.cosine(col("cvec").cast("array<double>"),
-          col("qvec").cast("array<double>")), 6).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "id", "cosine")
+        when(denom =!= 0d, round(dot.cast("double") / denom, 6)).as("cosine")),
+      "cosine", k)
   }
 
   /** Attach an LSH bucket column (random-hyperplane signature). Persist the
@@ -137,26 +136,28 @@ object Ann {
     withBucket(corpus, vecCol, dim, bits)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
 
-  /** Top-k over a bucket-partitioned corpus: the bucket predicate prunes
-    * partitions before any file read (verify with PushedFilters /
-    * PartitionFilters in the plan).
+  /** The query's LSH bucket, computed with the same plan-time hyperplane
+    * weights as [[withBucket]] on a 1-row frame.
     */
-  def lshTopKBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
+  private def queryBucket(spark: SparkSession, query: Seq[Double], dim: Int,
+                          bits: Int): Long =
+    spark.range(1).select(Dedup.hyperplaneSignature(
+      array(query.map(lit): _*), dim, bits).as("b")).head().getLong(0)
+
+  /** Top-k over a bucket-partitioned corpus: the candidates are the buckets
+    * within `probeHamming` of the query's, as a static bucket list that
+    * prunes partitions before any file read (verify with PartitionFilters
+    * in the plan).
+    */
+  def lshTopKBucketed(spark: SparkSession, path: String,
                       idCol: String, vecCol: String, dim: Int,
                       query: Seq[Double], k: Int, bits: Int,
                       probeHamming: Int): DataFrame = {
-    val qBucket = spark.range(1)
-      .select(Dedup.hyperplaneSignature(array(query.map(lit): _*), dim, bits).as("b"))
-      .head().getLong(0)
+    val qBucket = queryBucket(spark, query, dim, bits)
     val buckets = (0L until (1L << bits))
       .filter(b => java.lang.Long.bitCount(b ^ qBucket) <= probeHamming)
-    val q = array(query.map(lit): _*)
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(buckets: _*))
-      .select(col(idCol).as("id"),
-        round(Dedup.cosine(col(vecCol).cast("array<double>"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+    exactTopK(spark.read.parquet(path).filter(col("bucket").isin(buckets: _*)),
+      idCol, vecCol, query, k)
   }
 
   /** IVF coarse quantizer: k-means centroids (fixed seed — the index must be
@@ -245,26 +246,9 @@ object Ann {
     * within. nProbe = nLists degrades to brute force (exact).
     */
   def ivfTopK(assigned: DataFrame, model: IvfModel, idCol: String,
-              vecCol: String, query: Seq[Double], k: Int, nProbe: Int): DataFrame = {
-    val lists = model.probeLists(query, nProbe)
-    val q = array(query.map(lit): _*)
-    assigned.filter(col("list").isin(lists: _*))
-      .select(col(idCol).as("id"),
-        round(Dedup.cosine(col(vecCol).cast("array<double>"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-  }
-
-
-  // sidecar IO shared repo-wide (LM counts and classifier coefficients use
-  // the same layout) — see graft.util.Sidecar
-  private def writeSidecar(df: DataFrame, path: String, name: String,
-                           body: String): Unit =
-    graft.util.Sidecar.write(df.sparkSession, path, name, body)
-
-  private def readSidecar(spark: org.apache.spark.sql.SparkSession,
-                          path: String, name: String): String =
-    graft.util.Sidecar.read(spark, path, name)
+              vecCol: String, query: Seq[Double], k: Int, nProbe: Int): DataFrame =
+    exactTopK(assigned.filter(col("list").isin(model.probeLists(query, nProbe): _*)),
+      idCol, vecCol, query, k)
 
   /** Persist an IVF-assigned corpus partitioned by list, with the centroid
     * model beside it — the same pruned-scan layout as [[writeBucketed]], but
@@ -273,18 +257,21 @@ object Ann {
     */
   def writeIvf(assigned: DataFrame, model: IvfModel, path: String): Unit = {
     assigned.write.mode("overwrite").partitionBy("list").parquet(path)
-    writeSidecar(assigned, path, "_ivf_centroids.json", model.toJson)
+    Sidecar.write(assigned.sparkSession, path, "_ivf_centroids.json", model.toJson)
   }
+
+  /** Load the centroid sidecar of a persisted IVF, IVF-PQ or chunk index. */
+  def loadIvfModel(spark: SparkSession, path: String): IvfModel =
+    IvfModel.fromJson(Sidecar.read(spark, path, "_ivf_centroids.json"))
 
   /** Probe a persisted IVF layout: the `list` predicate is a partition filter
     * — only the probed lists' files are read.
     */
-  def ivfTopKBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfTopKBucketed(spark: SparkSession, path: String,
                       idCol: String, vecCol: String, query: Seq[Double], k: Int,
-                      nProbe: Int): DataFrame = {
-    val model = IvfModel.fromJson(readSidecar(spark, path, "_ivf_centroids.json"))
-    ivfTopK(spark.read.parquet(path), model, idCol, vecCol, query, k, nProbe)
-  }
+                      nProbe: Int): DataFrame =
+    ivfTopK(spark.read.parquet(path), loadIvfModel(spark, path), idCol, vecCol,
+      query, k, nProbe)
 
   /** LSH-pruned top-k: score only vectors whose bucket is within `probeHamming`
     * of the query's bucket (multi-probe). Recall rises with probeHamming;
@@ -293,19 +280,10 @@ object Ann {
   def lshTopK(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
               query: Seq[Double], k: Int, bits: Int = 8,
               probeHamming: Int = 2): DataFrame = {
-    val bucketed = withBucket(corpus, vecCol, dim, bits)
-    // query bucket: computed with the same plan-time weights on a 1-row frame
-    val qBucket = bucketed.sparkSession.range(1)
-      .select(Dedup.hyperplaneSignature(
-        array(query.map(lit): _*), dim, bits).as("b"))
-      .head().getLong(0)
-    val q = array(query.map(lit): _*)
-    bucketed
-      .filter(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
-      .select(col(idCol).as("id"),
-        round(Dedup.cosine(col(vecCol).cast("array<double>"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+    val qBucket = queryBucket(corpus.sparkSession, query, dim, bits)
+    exactTopK(withBucket(corpus, vecCol, dim, bits)
+      .filter(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming),
+      idCol, vecCol, query, k)
   }
 
   /** [[lshTopK]] served from a PERSISTED `(id, bucket)` signature table
@@ -321,15 +299,10 @@ object Ann {
                       k: Int, probeHamming: Int = 2): DataFrame = {
     val sigs = sigs0.toDF("id", "bucket")
     val qBucket = sigs.filter(col("id") === queryId).head().getLong(1)
-    val q = array(query.map(lit): _*)
     val cand = sigs.filter(col("id") =!= queryId &&
       bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
-    corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .join(cand.select("id"), "id")
-      .select(col("id"),
-        round(Dedup.cosine(col("v").cast("array<double>"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+    exactTopK(corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .join(cand.select("id"), "id"), "id", "v", query, k)
   }
 
   // ───────────────────────────── product quantization ──────────────────────
@@ -389,10 +362,7 @@ object Ann {
           .fit(sub).clusterCenters.map(_.toArray)
       }.toArray
       PqModel(m, codebooks)
-    } finally norm.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
+    } finally graft.util.Checkpoints.free(norm)
   }
 
   /** Encode the corpus: input columns + `pq_code: array<int>` (m entries).
@@ -423,13 +393,11 @@ object Ann {
   def pqTopK(encoded: DataFrame, idCol: String, query: Seq[Double],
              model: PqModel, k: Int): DataFrame = {
     val bc = encoded.sparkSession.sparkContext.broadcast(model.adcTable(query))
-    encoded.select(col(idCol).as("id"),
-        round(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          graft.functions.PqAdcScore(
-            org.apache.spark.sql.graftbridge.ColumnBridge.resolvedExpression(
-              col("pq_code")), bc)), 6).as("adc_score"))
-      .orderBy(col("adc_score").desc, col("id"))
-      .limit(k)
+    rankTopK(encoded.select(col(idCol).as("id"),
+      round(org.apache.spark.sql.graftbridge.ColumnBridge.column(
+        graft.functions.PqAdcScore(
+          org.apache.spark.sql.graftbridge.ColumnBridge.resolvedExpression(
+            col("pq_code")), bc)), 6).as("adc_score")), "adc_score", k)
   }
 
   /** The production PQ shape: ADC over the compressed scan selects a
@@ -444,12 +412,8 @@ object Ann {
                    k: Int, shortlist: Int = 0): DataFrame = {
     val sl = if (shortlist > 0) shortlist else 10 * k
     val shortIds = pqTopK(encoded, idCol, query, model, sl).select("id")
-    val q = array(query.map(lit): _*)
-    corpus.join(broadcast(shortIds), corpus(idCol) === shortIds("id"), "left_semi")
-      .select(col(idCol).as("id"),
-        round(Dedup.cosine(col(vecCol).cast("array<double>"), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+    exactTopK(corpus.join(broadcast(shortIds), corpus(idCol) === shortIds("id"),
+      "left_semi"), idCol, vecCol, query, k)
   }
 
   object PqModel {
@@ -481,29 +445,30 @@ object Ann {
     pqEncode(assigned, vecCol, pqModel)
       .select(col(idCol), col("list"), col("pq_code"))
       .write.mode("overwrite").partitionBy("list").parquet(path)
-    writeSidecar(corpus, path, "_ivf_centroids.json", ivfModel.toJson)
-    writeSidecar(corpus, path, "_pq_codebooks.json", PqModel.toJson(pqModel))
+    Sidecar.write(corpus.sparkSession, path, "_ivf_centroids.json", ivfModel.toJson)
+    Sidecar.write(corpus.sparkSession, path, "_pq_codebooks.json",
+      PqModel.toJson(pqModel))
   }
 
-  /** Load the PQ codebooks sidecar of a persisted IVF-PQ layout — for
-    * reusing one content-keyed trained model across probe styles.
+  /** Load the PQ codebooks sidecar of a persisted IVF-PQ layout (or IVF-PQ
+    * chunk index) — for reusing one content-keyed trained model across probe
+    * styles.
     */
-  def loadPqModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel =
-    PqModel.fromJson(readSidecar(spark, path, "_pq_codebooks.json"))
+  def loadPqModel(spark: SparkSession, path: String): PqModel =
+    PqModel.fromJson(Sidecar.read(spark, path, "_pq_codebooks.json"))
 
   /** Probe a persisted IVF-PQ layout: partition-pruned ADC over the nProbe
     * nearest lists → shortlist → exact re-rank against `corpus`.
     */
-  def ivfPqTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfPqTopK(spark: SparkSession, path: String,
                 corpus: DataFrame, idCol: String, vecCol: String,
                 query: Seq[Double], k: Int, nProbe: Int,
                 shortlist: Int = 0): DataFrame = {
-    val ivfModel = IvfModel.fromJson(readSidecar(spark, path, "_ivf_centroids.json"))
-    val pqModel = PqModel.fromJson(readSidecar(spark, path, "_pq_codebooks.json"))
     // list probing runs in the RAW vector space ivfAssign trained in; only
     // the PQ stage normalizes (its own training geometry)
-    val lists = ivfModel.probeLists(query, nProbe)
+    val lists = loadIvfModel(spark, path).probeLists(query, nProbe)
     val pruned = spark.read.parquet(path).filter(col("list").isin(lists: _*))
-    pqTopKRerank(pruned, corpus, idCol, vecCol, query, pqModel, k, shortlist)
+    pqTopKRerank(pruned, corpus, idCol, vecCol, query, loadPqModel(spark, path),
+      k, shortlist)
   }
 }

@@ -172,6 +172,15 @@ object Bm25 {
       queries, k, k1, b, textCol, maxQueries)
   }
 
+  /** A term's index bucket, `pmod(xxhash64(term), nBuckets)`. */
+  private def termBucket(nBuckets: Int): Column =
+    pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
+
+  /** [[buildPostings]] plus each posting's [[termBucket]]. */
+  private def bucketedPostings(docs: DataFrame, textCol: String,
+                               nBuckets: Int): DataFrame =
+    buildPostings(docs, textCol).withColumn("bucket", termBucket(nBuckets))
+
   /** Persist the inverted index as term-bucketed parquet: postings
     * partitioned by `bucket = pmod(xxhash64(term), nBuckets)` plus the
     * corpus stats as the payload of ingest-log version 0
@@ -184,9 +193,7 @@ object Bm25 {
                  textCol: String = "text"): Unit = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
     val (nDocs, totalTokens) = corpusStats(docs, textCol)
-    buildPostings(docs, textCol)
-      .withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
+    bucketedPostings(docs, textCol, nBuckets)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     graft.util.StreamCommit.commit(docs.sparkSession, path,
       graft.util.StreamCommit.LogState(0L, Map.empty, Map.empty,
@@ -215,9 +222,7 @@ object Bm25 {
     val st = graft.util.StreamCommit.readState(spark, path)
     val (n0, t0, nBuckets) = liveStatsFrom(Seq.empty, st)
     val (dn, dt) = corpusStats(docs, textCol)
-    buildPostings(docs, textCol)
-      .withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
+    bucketedPostings(docs, textCol, nBuckets)
       .write.mode("append").partitionBy("bucket").parquet(path)
     // the watermarks and removed sets ride through: dropping a watermark
     // would re-serve every folded-but-undeleted marker's delta; dropping
@@ -250,45 +255,27 @@ object Bm25 {
   }
 
   /** EXACTLY-ONCE application of one ingest batch — the BM25 sibling of
-    * [[graft.ann.Retrieval.applyPqIngestBatch]], same
-    * [[graft.util.StreamCommit]] protocol (marker gate → scrub → stage →
-    * prefixed promote → marker). The extra wrinkle is the corpus stats:
-    * a replayed `appendToIndex` would double-count (n_docs, total_tokens)
-    * with no way to tell, so the batch's delta is NOT added to the base —
-    * it travels IN the marker file (the same write that commits the
-    * batch), and [[retrieveFromIndex]] serves base + unfolded marker
-    * deltas. Stats and postings therefore commit in ONE atomic step, and
-    * every crash point replays clean.
+    * [[graft.ann.Retrieval.applyPqIngestBatch]], the same
+    * [[graft.util.StreamCommit.applyBatch]] protocol over the staged
+    * postings. The extra wrinkle is the corpus stats: a replayed
+    * `appendToIndex` would double-count (n_docs, total_tokens) with no way
+    * to tell, so the batch's delta is NOT added to the base — it travels
+    * IN the marker file (the same write that commits the batch), and
+    * [[retrieveFromIndex]] serves base + unfolded marker deltas. Stats and
+    * postings therefore commit in ONE atomic step, and every crash point
+    * replays clean.
     */
   def applyIngestBatch(batch: DataFrame, path: String, batchId: Long,
                        streamId: String = "",
-                       textCol: String = "text"): Boolean = {
-    graft.util.StreamCommit.requireValidStreamId(streamId)
-    val spark = batch.sparkSession
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    val tag = graft.util.StreamCommit.tag(streamId, batchId)
-    if (graft.util.StreamCommit.markerExists(fs, path, tag)) return false
-    // marker gone ≠ never applied: compaction deletes folded markers, and
-    // a rollback deliberately excised the batch — gate on the ingest log
-    // too (the same replay gate as the dense applies)
-    val st = graft.util.StreamCommit.readState(spark, path)
-    if (graft.util.StreamCommit.refuseReplayOfRemoved(st, streamId, batchId,
-      path)) return false
-    graft.util.StreamCommit.scrub(fs, batchGlobs(path)(tag))
-    val staging = s"$path/_staging/$tag"
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val (_, _, nBuckets) = liveStatsFrom(Seq.empty, st)
-    val (dn, dt) = corpusStats(batch, textCol)
-    buildPostings(batch, textCol)
-      .withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    graft.util.StreamCommit.promote(fs, staging, path, s"$tag-")
-    graft.util.StreamCommit.writeMarker(fs, path, tag,
-      s"""{"n_docs":$dn,"total_tokens":$dt}""")
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    true
-  }
+                       textCol: String = "text"): Boolean =
+    graft.util.StreamCommit.applyBatch(batch.sparkSession, path, streamId,
+      batchId, batchGlobs(path), Seq("" -> path)) { (staging, st) =>
+      val (_, _, nBuckets) = liveStatsFrom(Seq.empty, st)
+      val (dn, dt) = corpusStats(batch, textCol)
+      bucketedPostings(batch, textCol, nBuckets)
+        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+      s"""{"n_docs":$dn,"total_tokens":$dt}"""
+    }
 
   /** One ingest batch's posting files, by batch tag. */
   private[graft] def batchGlobs(path: String)(tagName: String): Seq[String] =
@@ -371,8 +358,7 @@ object Bm25 {
     val (nDocs, totalTokens, nBuckets) = liveStatsFrom(markers, st)
     val buckets = queries.where(col(textCol).isNotNull)
       .select(explode(terms(col(textCol))).as("term"))
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
-        .as("bucket"))
+      .select(termBucket(nBuckets).as("bucket"))
       .distinct().collect().map(_.getInt(0)).sorted
     val postings =
       if (!committedOnly)

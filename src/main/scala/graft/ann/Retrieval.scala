@@ -1,8 +1,10 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.util.{Sidecar, StreamCommit}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Chunk-level retrieval — the RAG indexing capstone: a document corpus is
   * chunked ([[graft.text.CorpusClean.chunkByTokens]]), every chunk gets an
@@ -10,6 +12,14 @@ import org.apache.spark.sql.functions._
   * PROVENANCE (`doc_id`, `chunk_idx`, token offset) — the shape a retrieval
   * index actually serves, one level finer than the document-granular ANN
   * family in [[Ann]].
+  *
+  * Every serve is the per-query form of [[Ann]]'s filter-and-refine
+  * skeleton: a candidate generator builds (query × chunk) candidates — the
+  * broadcast cross join, the IVF probe-table join (in memory, or a
+  * persisted layout read through [[layoutScan]]), or the PQ/ADC shortlist
+  * — and [[exactPerQuery]] scores them by exact integer inner product and
+  * cuts each query's top k in [[rankPerQuery]] (which also cuts the ADC
+  * shortlist itself).
   *
   * Scale design: the brute-force scorer here is the EXACT baseline — one
   * narrow scan of the chunk table against a broadcast query set, per-query
@@ -94,37 +104,33 @@ object Retrieval {
     }
   }
 
-  /** Fixed read schemas for the persisted IVF-PQ layouts — supplied to the
-    * reader so an index built from an EMPTY corpus (a partitioned dir with
-    * sidecars but no data files) serves an empty result instead of dying in
-    * schema inference. Contract: `doc_id`/`chunk_idx`/`chunk_start` are
-    * BIGINT (the [[graft.text.CorpusClean.chunkByTokens]] output types).
+  /** Fixed read schemas for the persisted chunk-index layouts — supplied
+    * to the reader so an index built from an EMPTY corpus (a partitioned
+    * dir with sidecars but no data files) serves an empty result instead of
+    * dying in schema inference. Contract: `doc_id`/`chunk_idx`/`chunk_start`
+    * are BIGINT (the [[graft.text.CorpusClean.chunkByTokens]] output types).
     */
-  private val pqCodesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("chunk_idx",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("chunk_start",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("pq_code",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType, containsNull = false)),
-    org.apache.spark.sql.types.StructField("list",
-      org.apache.spark.sql.types.IntegerType)))
+  private val pqCodesSchema = new StructType().add("doc_id", LongType)
+    .add("chunk_idx", LongType).add("chunk_start", LongType)
+    .add("pq_code", ArrayType(IntegerType, containsNull = false))
+    .add("list", IntegerType)
 
-  private val pqVecsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("chunk_idx",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("vec",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType)),
-    org.apache.spark.sql.types.StructField("list",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("vb",
-      org.apache.spark.sql.types.IntegerType)))
+  private val pqVecsSchema = new StructType().add("doc_id", LongType)
+    .add("chunk_idx", LongType).add("vec", ArrayType(LongType))
+    .add("list", IntegerType).add("vb", IntegerType)
+
+  private val flatChunkSchema = new StructType().add("doc_id", LongType)
+    .add("chunk_idx", LongType).add("chunk_start", LongType)
+    .add("vec", ArrayType(LongType)).add("list", IntegerType)
+
+  /** A chunk index's MIP augmentation constant M² (its `_mip_m2.json`). */
+  private def mipM2(spark: SparkSession, path: String): Long =
+    Sidecar.read(spark, path, "_mip_m2.json").trim.toLong
+
+  /** An IVF-PQ chunk index's `_vecs/` doc-hash bucket count. */
+  private def nVecBuckets(spark: SparkSession, path: String): Long =
+    Sidecar.requiredLong(Sidecar.read(spark, path, "_vecs_meta.json"),
+      "nVecBuckets", s"$path/_vecs_meta.json")
 
   /** Deterministic, engine-portable stand-in embedding: dimension `i` is a
     * 4-nibble fold of `md5(text || ':' || salt || ':' || i)` reduced mod
@@ -155,6 +161,30 @@ object Retrieval {
   def innerProduct(a: Column, b: Column): Column =
     graft.functions.KFunctions.array_dot_long(a, b)
 
+  /** The per-query rank cut every chunk serve ends in: `row_number` over
+    * `(score desc, doc_id, chunk_idx)` per query, kept while rank ≤ k
+    * (Spark collapses the bound map-side, WindowGroupLimit). Output:
+    * `(query_id, rank, doc_id, chunk_idx, chunk_start, <score>)`.
+    */
+  private def rankPerQuery(scored: DataFrame, k: Int, score: String)
+      : DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col(score).desc, col("doc_id"), col("chunk_idx"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select("query_id", "rank", "doc_id", "chunk_idx", "chunk_start", score)
+  }
+
+  /** The refine half of every chunk serve: the exact integer inner product
+    * of each (query, chunk) candidate's chunk vector `vecCol` and query
+    * vector `qv`, then [[rankPerQuery]] on it as `score`.
+    */
+  private def exactPerQuery(cands: DataFrame, vecCol: String, k: Int)
+      : DataFrame =
+    rankPerQuery(cands.select(col("query_id"), col("doc_id"),
+      col("chunk_idx"), col("chunk_start"),
+      innerProduct(col(vecCol), col("qv")).as("score")), k, "score")
+
   /** Top-`k` chunks per query by inner product (maximum-inner-product
     * retrieval — the scoring real dense retrievers use pre-normalization).
     * `chunks` carries `(doc_id, chunk_idx, chunk_start, vecCol)`, `queries`
@@ -175,17 +205,7 @@ object Retrieval {
         maxQueries)
     }.getOrElse {
       // (Left carries the measured count; this path doesn't need it)
-      val scored = chunks
-        .join(broadcast(q))
-        .select(col("query_id"), col("doc_id"), col("chunk_idx"),
-          col("chunk_start"),
-          innerProduct(col(vecCol), col("qv")).as("score"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("score").desc, col("doc_id"), col("chunk_idx"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "chunk_idx", "chunk_start",
-          "score")
+      exactPerQuery(chunks.join(broadcast(q)), vecCol, k)
     }
   }
 
@@ -209,13 +229,16 @@ object Retrieval {
   def retrieveChunks(docs: DataFrame, queries: DataFrame, k: Int,
                      chunkTokens: Int = 32, overlapTokens: Int = 8,
                      dim: Int = 4, salt: String = "emb",
-                     textCol: String = "text"): DataFrame = {
-    val q = queries.select(col("query_id"),
-      hashEmbedding(col(textCol), dim, salt).as("vec"))
+                     textCol: String = "text"): DataFrame =
     topKChunks(
       embeddedChunks(docs, chunkTokens, overlapTokens, dim, salt, textCol),
-      q, k)
-  }
+      embeddedQueries(queries, dim, salt, textCol), k)
+
+  /** Embed a query set's `textCol`: `(query_id, vec)`. */
+  private def embeddedQueries(queries: DataFrame, dim: Int, salt: String,
+                              textCol: String): DataFrame =
+    queries.select(col("query_id"),
+      hashEmbedding(col(textCol), dim, salt).as("vec"))
 
   /** Per-query probe table for an IVF-indexed chunk corpus: each query's
     * `nProbe` nearest inverted lists by squared-euclidean distance to the
@@ -266,18 +289,9 @@ object Retrieval {
       topKChunksIvf(assigned, model, shard, k, nProbe, vecCol, probeCol,
         maxQueries)
     }.getOrElse {
-      val probes = probeTable(queries, model, nProbe, vecCol, probeCol)
-      val scored = assigned
-        .join(broadcast(probes), "list")
-        .select(col("query_id"), col("doc_id"), col("chunk_idx"),
-          col("chunk_start"),
-          innerProduct(col(vecCol), col("qv")).as("score"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("score").desc, col("doc_id"), col("chunk_idx"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "chunk_idx", "chunk_start",
-          "score")
+      exactPerQuery(assigned.join(broadcast(
+        probeTable(queries, model, nProbe, vecCol, probeCol)), "list"),
+        vecCol, k)
     }
   }
 
@@ -322,14 +336,37 @@ object Retrieval {
     // embedding and the centroid argmin per MATCH, not per row — measured
     // 34 s vs 6 s at sf10 for ~10 matches/chunk. The persisted path
     // ([[writeChunkIndex]]) gets the same materialization from parquet.
-    val lists = probeTable(q, model, np, "vec", "vaug")
-      .select("list").distinct().collect().map(_.getInt(0)).sorted
-    val pruned = assigned
-      .where(col("list").isin(lists.map(Integer.valueOf).toSeq: _*))
+    val lists = probedLists(probeTable(q, model, np, "vec", "vaug"))
+    val pruned = assigned.where(inLists(lists))
       .repartition(col("list"), col("doc_id"), col("chunk_idx"))
     topKChunksIvf(pruned, model, q, k, np, probeCol = "vaug",
       maxQueries = maxQueries)
   }
+
+  /** The union of the probed lists of a probe table (≤ nLists ints —
+    * metadata-sized by construction), collected to become a static
+    * partition filter ([[inLists]]).
+    */
+  private def probedLists(probes: DataFrame): Seq[Int] =
+    probes.select("list").distinct().collect().map(_.getInt(0)).sorted.toSeq
+
+  private def inLists(lists: Seq[Int]): Column =
+    col("list").isin(lists.map(Integer.valueOf): _*)
+
+  /** MIP augmentation (Bachrach et al.): append `sqrt(M² − |vec|²)` to each
+    * chunk vector as `vaug`. A norm past M² (a chunk appended after the
+    * fit) clamps to 0 — its score stays exact, it only probes slightly
+    * worse until a rebuild refreshes M².
+    */
+  private def mipAugmented(chunks: DataFrame, m2: Long): DataFrame =
+    chunks.withColumn("vaug", concat(col("vec").cast("array<double>"),
+      array(sqrt(greatest(lit(0L),
+        lit(m2) - innerProduct(col("vec"), col("vec")))))))
+
+  /** [[mipAugmented]] of one fit-sample vector, on the driver. */
+  private def augmentedPoint(v: Array[Long], m2: Long): Array[Double] =
+    v.map(_.toDouble) :+
+      math.sqrt(math.max(0L, m2 - v.map(x => x * x).sum).toDouble)
 
   /** Chunk → embed → (one fused pass: M² max-aggregate + bounded fit
     * sample) → driver-side Lloyd's → assign. Returns the fully-assigned
@@ -368,12 +405,9 @@ object Retrieval {
       case _             => 0L   // empty corpus: nothing to index
     }
     val model = fitLloyd(sample, m2, nLists, seed)
-    val augmented = chunks.withColumn("vaug",
-      concat(col("vec").cast("array<double>"),
-        array(sqrt(lit(m2) - nsq))))
     // assign the FULL chunk table against the sampled-fit centroids — a
     // pure codegen map over broadcast-literal centroids, no ML transform
-    val assigned = Ann.assignWithModel(augmented, model, "vaug")
+    val assigned = Ann.assignWithModel(mipAugmented(chunks, m2), model, "vaug")
       .select("doc_id", "chunk_idx", "chunk_start", "vec", "list")
     (assigned, model, m2, sample)
   }
@@ -387,10 +421,7 @@ object Retrieval {
   private[graft] def fitLloyd(sampleVecs: Array[Array[Long]], m2: Long,
                               nLists: Int, seed: Long,
                               maxIter: Int = 25): Ann.IvfModel = {
-    val pts = sampleVecs.map { v =>
-      val nsq = v.map(x => x * x).sum
-      v.map(_.toDouble) :+ math.sqrt(math.max(0L, m2 - nsq).toDouble)
-    }
+    val pts = sampleVecs.map(augmentedPoint(_, m2))
     if (pts.isEmpty)
       return Ann.IvfModel(Array(Array.fill(1)(0.0)))
     Ann.IvfModel(lloyd(pts, nLists, seed, maxIter))
@@ -474,8 +505,7 @@ object Retrieval {
     */
   private def augmentedQueries(queries: DataFrame, dim: Int, salt: String,
                                textCol: String): DataFrame =
-    queries.select(col("query_id"),
-        hashEmbedding(col(textCol), dim, salt).as("vec"))
+    embeddedQueries(queries, dim, salt, textCol)
       .withColumn("vaug", concat(col("vec").cast("array<double>"),
         array(lit(0.0d))))
 
@@ -492,8 +522,7 @@ object Retrieval {
     val (assigned, model, m2, _) = buildIndex(docs, nLists, chunkTokens,
       overlapTokens, dim, salt, textCol, seed, fitBudget)
     Ann.writeIvf(assigned, model, path)
-    graft.util.Sidecar.write(docs.sparkSession, path, "_mip_m2.json",
-      m2.toString)
+    Sidecar.write(docs.sparkSession, path, "_mip_m2.json", m2.toString)
   }
 
   /** Per-subspace PQ codebooks fitted on the SAME bounded, deterministic
@@ -506,11 +535,7 @@ object Retrieval {
   private def pqFitFromSample(sample: Array[Array[Long]], m2: Long,
                               m: Int, ksub: Int, seed: Long): Ann.PqModel = {
     val mNorm = math.sqrt(math.max(1L, m2).toDouble)
-    val pts = sample.map { v =>
-      val nsq = v.map(x => x * x).sum
-      (v.map(_.toDouble) :+ math.sqrt(math.max(0L, m2 - nsq).toDouble))
-        .map(_ / mNorm)
-    }
+    val pts = sample.map(augmentedPoint(_, m2).map(_ / mNorm))
     val dAug = pts.headOption.map(_.length).getOrElse(m)
     require(dAug % m == 0, s"m=$m must divide augmented dim=$dAug")
     val dsub = dAug / m
@@ -560,39 +585,19 @@ object Retrieval {
     val (assigned, model, m2, sample) = buildIndex(docs, nLists, chunkTokens,
       overlapTokens, dim, salt, textCol, seed, fitBudget)
     val pqModel = pqFitFromSample(sample, m2, m, ksub, seed)
-    val nsq = innerProduct(col("vec"), col("vec"))
-    val aug = assigned.withColumn("vaug",
-      concat(col("vec").cast("array<double>"),
-        array(sqrt(greatest(lit(0L), lit(m2) - nsq)))))
-    // codes keep the writer-task sharding (the ADC scan WANTS parallelism
-    // — scoring is CPU-bound, and one file per list would serialize it)
-    Ann.pqEncode(aug, "vaug", pqModel)
-      .select(col("doc_id"), col("chunk_idx"), col("chunk_start"),
-        col("list"), col("pq_code"))
-      .write.mode("overwrite").partitionBy("list").parquet(path)
+    val (codes, vecs) = pqFrames(mipAugmented(assigned, m2), pqModel,
+      nVecBuckets)
+    // codes first: the codes layout's overwrite clears the whole index dir
+    codes.write.mode("overwrite").partitionBy("list").parquet(path)
     // the full-precision side table (underscore prefix keeps it invisible
-    // to the codes read's file discovery, like the sidecars). ONE sized
-    // file per (list, vb) dir, rows id-sorted: the fetch is a cheap probe
-    // join, and the naive write's (writer tasks × dirs) slivers cost it a
-    // task per sliver — measured 116 tasks for a 1.5M-row fetch at sf10,
-    // pure scheduling overhead. A 100 TB build salts the repartition key
-    // to hold files at target size instead.
-    assigned
-      .withColumn("vb",
-        pmod(xxhash64(col("doc_id")), lit(nVecBuckets.toLong)).cast("int"))
-      .select(col("doc_id"), col("chunk_idx"), col("vec"), col("list"),
-        col("vb"))
-      .repartition(col("list"), col("vb"))
-      .sortWithinPartitions("doc_id", "chunk_idx")
-      .write.mode("overwrite").partitionBy("list", "vb")
+    // to the codes read's file discovery, like the sidecars)
+    vecs.write.mode("overwrite").partitionBy("list", "vb")
       .parquet(s"$path/_vecs")
     val spark = docs.sparkSession
-    graft.util.Sidecar.write(spark, path, "_ivf_centroids.json",
-      model.toJson)
-    graft.util.Sidecar.write(spark, path, "_pq_codebooks.json",
-      Ann.PqModel.toJson(pqModel))
-    graft.util.Sidecar.write(spark, path, "_mip_m2.json", m2.toString)
-    graft.util.Sidecar.write(spark, path, "_vecs_meta.json",
+    Sidecar.write(spark, path, "_ivf_centroids.json", model.toJson)
+    Sidecar.write(spark, path, "_pq_codebooks.json", Ann.PqModel.toJson(pqModel))
+    Sidecar.write(spark, path, "_mip_m2.json", m2.toString)
+    Sidecar.write(spark, path, "_vecs_meta.json",
       s"""{"nVecBuckets": $nVecBuckets}""")
   }
 
@@ -635,7 +640,7 @@ object Retrieval {
     * concurrent ingest committing between shards cannot give different
     * shards different views; spec-pinned).
     */
-  def retrieveFromChunkIndexPq(spark: org.apache.spark.sql.SparkSession,
+  def retrieveFromChunkIndexPq(spark: SparkSession,
                                path: String, queries: DataFrame,
                                k: Int, nProbe: Int,
                                shortlist: Int = 0,
@@ -647,29 +652,38 @@ object Retrieval {
                                committedOnly: Boolean = false): DataFrame =
     retrievePqWithSnapshot(spark, path, queries, k, nProbe, shortlist, dim,
       salt, textCol, exactRerank, maxQueries, collectGate,
-      if (committedOnly)
-        Some(graft.util.StreamCommit.committedView(spark, path))
+      if (committedOnly) Some(StreamCommit.committedView(spark, path))
       else None)
+
+  private type View = (Seq[(String, Long, String)], StreamCommit.LogState)
 
   /** One layout table's committed parquet files (partition globs relative
     * to `root`) in one [[graft.util.StreamCommit.committedView]], read
     * with the pinned schema — an empty frame when nothing is committed.
     */
-  private def readCommitted(spark: org.apache.spark.sql.SparkSession,
-                            root: String, partGlobs: Seq[String],
-                            view: (Seq[(String, Long, String)],
-                              graft.util.StreamCommit.LogState),
-                            schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    val files = graft.util.StreamCommit.committedDataFiles(
-      graft.util.StreamCommit.fs(spark, root),
-      partGlobs.map(g => s"${graft.util.StreamCommit.escapeGlob(root)}/$g"),
+  private def readCommitted(spark: SparkSession, root: String,
+                            partGlobs: Seq[String], view: View,
+                            schema: StructType): DataFrame = {
+    val files = StreamCommit.committedDataFiles(StreamCommit.fs(spark, root),
+      partGlobs.map(g => s"${StreamCommit.escapeGlob(root)}/$g"),
       view._1, view._2)
     if (files.isEmpty)
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else spark.read.option("basePath", root).schema(schema).parquet(files: _*)
   }
+
+  /** One serve's scan of a layout table: without a snapshot, the whole
+    * table under `filter` (static partition pruning); with one, only the
+    * committed files under `partGlobs` ([[readCommitted]]).
+    */
+  private def layoutScan(spark: SparkSession, root: String, schema: StructType,
+                         filter: Column, partGlobs: Seq[String],
+                         snapshot: Option[View]): DataFrame =
+    snapshot match {
+      case None       => spark.read.schema(schema).parquet(root).where(filter)
+      case Some(view) => readCommitted(spark, root, partGlobs, view, schema)
+    }
 
   /** Deep self-check of a persisted IVF-PQ chunk index — the dense
     * sibling of [[graft.ann.Bm25.validateIndex]]: the codes layout and
@@ -683,9 +697,9 @@ object Retrieval {
     * files — a deep admin check, not a serving-path cost. Returns
     * (nCodes, nVecs, codesWithoutVec, vecsWithoutCode, ok).
     */
-  def validatePqIndex(spark: org.apache.spark.sql.SparkSession,
+  def validatePqIndex(spark: SparkSession,
                       path: String): (Long, Long, Long, Long, Boolean) = {
-    val view = graft.util.StreamCommit.committedView(spark, path)
+    val view = StreamCommit.committedView(spark, path)
     val codes = readCommitted(spark, path, Seq("list=*/*"), view,
       pqCodesSchema).select(col("doc_id"), col("chunk_idx"), lit(1L).as("c"))
     val vecs = readCommitted(spark, s"$path/_vecs", Seq("list=*/vb=*/*"),
@@ -709,16 +723,14 @@ object Retrieval {
     * snapshot-coherence by injecting a stale snapshot.
     */
   private[graft] def retrievePqWithSnapshot(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String, queries: DataFrame, k: Int, nProbe: Int,
       shortlist: Int, dim: Int, salt: String, textCol: String,
       exactRerank: Boolean, maxQueries: Long, collectGate: Long,
-      snapshot: Option[(Seq[(String, Long, String)],
-        graft.util.StreamCommit.LogState)]): DataFrame = {
+      snapshot: Option[View]): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val sl = if (shortlist > 0) shortlist else 10 * k
     require(sl >= k, s"shortlist=$sl must be >= k=$k")
-    val committedOnly = snapshot.isDefined
     val nq = shardedByQueryCount(queries, maxQueries,
       "retrieveFromChunkIndexPq") { shard =>
         retrievePqWithSnapshot(spark, path, shard, k, nProbe, shortlist,
@@ -732,10 +744,8 @@ object Retrieval {
       // the one per-serve-call snapshot serves both layout scans — the
       // codes and vecs views of any batch commit or vanish together, and
       // every query shard of one logical call sees one index view
-      val ivfModel = Ann.IvfModel.fromJson(
-        graft.util.Sidecar.read(spark, path, "_ivf_centroids.json"))
-      val pqModel = Ann.PqModel.fromJson(
-        graft.util.Sidecar.read(spark, path, "_pq_codebooks.json"))
+      val ivfModel = Ann.loadIvfModel(spark, path)
+      val pqModel = Ann.loadPqModel(spark, path)
       val np = math.min(nProbe, ivfModel.nLists)
       val q = augmentedQueries(queries, dim, salt, textCol)
       // normalized augmented query for ADC (a query augments with 0, so its
@@ -743,24 +753,16 @@ object Retrieval {
       // they inner-product to 0 against everything either way)
       val qnorm = sqrt(graft.functions.KFunctions.array_dot(col("vaug"),
         col("vaug")))
-      val qn = q.select(col("query_id"), col("vec").as("qvec"),
+      val qn = q.select(col("query_id"), col("vec").as("qv"),
         when(qnorm > 0d, transform(col("vaug"), x => x / qnorm))
           .otherwise(col("vaug")).as("qn"))
       val probes = probeTable(q, ivfModel, np, "vec", "vaug")
         .select("query_id", "list")
         .join(qn, "query_id")
-      val lists = probes.select("list").distinct().collect()
-        .map(_.getInt(0)).sorted
-      def listFilter(c: Column): Column =
-        c.isin(lists.map(Integer.valueOf).toSeq: _*)
-      val scan =
-        (if (!committedOnly)
-          spark.read.schema(pqCodesSchema).parquet(path)
-            .where(listFilter(col("list")))
-        else
-          readCommitted(spark, path, lists.toSeq.map(l => s"list=$l/*"),
-            snapshot.get, pqCodesSchema))
-          .select("doc_id", "chunk_idx", "chunk_start", "list", "pq_code")
+      val lists = probedLists(probes)
+      val scan = layoutScan(spark, path, pqCodesSchema, inLists(lists),
+        lists.map(l => s"list=$l/*"), snapshot)
+        .select("doc_id", "chunk_idx", "chunk_start", "list", "pq_code")
       // ADC decode via the broadcast-codebook kernel; summation order is
       // identical to the per-subspace literal reconstruction it replaced.
       // Decoded BEFORE the multiplying probe join: each chunk reconstructs
@@ -771,25 +773,20 @@ object Retrieval {
         graft.functions.PqDecode(
           org.apache.spark.sql.graftbridge.ColumnBridge.resolvedExpression(
             col("pq_code")), cbBc))
-      val sw = Window.partitionBy("query_id")
-        .orderBy(col("adc").desc, col("doc_id"), col("chunk_idx"))
-      val short = scan.withColumn("dec", recon)
+      val short = rankPerQuery(scan.withColumn("dec", recon)
         .join(broadcast(probes), "list")
         .withColumn("adc",
-          graft.functions.KFunctions.array_dot(col("dec"), col("qn")))
-        .withColumn("srank", row_number().over(sw))
-        .where(col("srank") <= sl)
+          graft.functions.KFunctions.array_dot(col("dec"), col("qn"))),
+        sl, "adc")
       if (!exactRerank) {
         // ADC-only serving: the shortlist order IS the ranking — zero
         // vector IO, one codes scan total
-        short.where(col("srank") <= k)
-          .select(col("query_id"), col("srank").cast("long").as("rank"),
-            col("doc_id"), col("chunk_idx"), col("chunk_start"),
+        short.where(col("rank") <= k)
+          .select(col("query_id"), col("rank"), col("doc_id"),
+            col("chunk_idx"), col("chunk_start"),
             round(col("adc"), 6).as("score"))
       } else {
-        val nVb = graft.util.Sidecar.requiredLong(
-          graft.util.Sidecar.read(spark, path, "_vecs_meta.json"),
-          "nVecBuckets", s"$path/_vecs_meta.json")
+        val nVb = nVecBuckets(spark, path)
         // vb derived IN the plan (Spark's xxhash64 — never a driver-side
         // reimplementation that could diverge from the write-side column).
         // The shortlist carries IDS ONLY — query vectors re-attach at the
@@ -797,7 +794,7 @@ object Retrieval {
         // an nq·sl set of vector payloads.
         val shortIds = short.select(col("query_id"), col("doc_id"),
           col("chunk_idx"), col("chunk_start"),
-          pmod(xxhash64(col("doc_id")), lit(nVb)).cast("int").as("vb"))
+          vecBucket(nVb).as("vb"))
         // the shortlist is ≤ nq·sl rows by construction. In the serving
         // regime (bounded query batches) it COLLECTS: one codes/ADC pass
         // total, the shortlist re-enters as a broadcast local relation,
@@ -832,29 +829,13 @@ object Retrieval {
               mat.select("vb").distinct().collect()
                 .map(_.getInt(0)).sorted)
           }
-        val side =
-          (if (!committedOnly)
-            spark.read.schema(pqVecsSchema).parquet(s"$path/_vecs")
-              .where(listFilter(col("list")) &&
-                col("vb").isin(vbs.map(Integer.valueOf).toSeq: _*))
-          else
-            readCommitted(spark, s"$path/_vecs",
-              for { l <- lists.toSeq; v <- vbs.toSeq }
-                yield s"list=$l/vb=$v/*",
-              snapshot.get, pqVecsSchema))
-            .select("doc_id", "chunk_idx", "vec")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("doc_id"), col("chunk_idx"))
-        side.join(shortSrc, Seq("doc_id", "chunk_idx"))
-          .join(broadcast(qn.select(col("query_id"), col("qvec"))),
-            "query_id")
-          .select(col("query_id"), col("doc_id"), col("chunk_idx"),
-            col("chunk_start"),
-            innerProduct(col("vec"), col("qvec")).as("score"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= k)
-          .select("query_id", "rank", "doc_id", "chunk_idx", "chunk_start",
-            "score")
+        val side = layoutScan(spark, s"$path/_vecs", pqVecsSchema,
+          inLists(lists) && col("vb").isin(vbs.map(Integer.valueOf).toSeq: _*),
+          for { l <- lists; v <- vbs.toSeq } yield s"list=$l/vb=$v/*",
+          snapshot).select("doc_id", "chunk_idx", "vec")
+        exactPerQuery(side.join(shortSrc, Seq("doc_id", "chunk_idx"))
+          .join(broadcast(qn.select(col("query_id"), col("qv"))),
+            "query_id"), "vec", k)
       }
     }
   }
@@ -905,64 +886,27 @@ object Retrieval {
     * `(doc_id, chunk_idx)` rows corrupt the serve's top-k (each duplicate
     * takes its own rank slot).
     *
-    * Protocol (plain parquet, no table format needed):
-    *   1. marker check: `_stream_appends/b<id>` exists → fully applied,
-    *      no-op (returns false);
-    *   2. scrub: delete every `b<id>-*` file from BOTH layouts — a replay
-    *      after a mid-promote crash removes whatever subset landed;
-    *   3. stage: write codes and vecs into `_staging/b<id>/` (underscore
-    *      dir — invisible to every reader, like the sidecars);
-    *   4. promote: per-file rename into the live layout under a
-    *      `b<id>-`-prefixed name, VECS FIRST (orphan vectors are invisible
-    *      to serving — the same ordering contract as
-    *      [[appendToChunkIndexPq]]);
-    *   5. marker write, then staging cleanup.
-    * Every step is idempotent or scrubbed, so any crash point replays to
-    * the single-application state. File renames are atomic on
-    * rename-capable stores (local, HDFS, ABFS); an S3 deployment fronts
-    * this with a rename-capable committer the same way it must for every
-    * other multi-file layout in the repo. Concurrent zombie applications
-    * of the SAME batchId are the one unguarded case (no lock file) —
-    * Spark's streaming engine serializes foreachBatch per query, which is
-    * the deployment contract here.
-    *
-    * `streamId` namespaces the batch tag: batchIds are only stable within
-    * ONE streaming checkpoint lineage (a new checkpoint restarts at 0 and
-    * would silently no-op against the old lineage's markers, dropping
-    * data), so every new checkpoint directory — and every concurrent
-    * stream into one index — carries its own streamId.
+    * The protocol is [[graft.util.StreamCommit.applyBatch]]; this layout
+    * stages codes and vecs and promotes VECS FIRST (orphan vectors are
+    * invisible to serving — the same ordering contract as
+    * [[appendToChunkIndexPq]]). Returns false for an already-applied batch.
     */
   def applyPqIngestBatch(batch: DataFrame, path: String, batchId: Long,
                          chunkTokens: Int = 32, overlapTokens: Int = 8,
                          dim: Int = 4, salt: String = "emb",
                          textCol: String = "text",
-                         streamId: String = ""): Boolean = {
-    graft.util.StreamCommit.requireValidStreamId(streamId)
-    val spark = batch.sparkSession
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    val tag = graft.util.StreamCommit.tag(streamId, batchId)
-    if (graft.util.StreamCommit.markerExists(fs, path, tag)) return false
-    // marker gone ≠ never applied: compaction deletes folded markers, and
-    // a rollback deliberately excised the batch — gate on the ingest log
-    if (graft.util.StreamCommit.refuseReplayOfRemoved(
-      graft.util.StreamCommit.readState(spark, path), streamId, batchId,
-      path)) return false
-    val prefix = s"$tag-"
-    graft.util.StreamCommit.scrub(fs, chunkBatchGlobs(path)(tag))
-    val staging = s"$path/_staging/$tag"
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val (codes, vecs) = pqAppendFrames(batch, path, chunkTokens,
-      overlapTokens, dim, salt, textCol)
-    vecs.write.mode("overwrite").partitionBy("list", "vb")
-      .parquet(s"$staging/vecs")
-    codes.write.mode("overwrite").partitionBy("list").parquet(s"$staging/codes")
-    graft.util.StreamCommit.promote(fs, s"$staging/vecs", s"$path/_vecs",
-      prefix)
-    graft.util.StreamCommit.promote(fs, s"$staging/codes", path, prefix)
-    graft.util.StreamCommit.writeMarker(fs, path, tag)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    true
-  }
+                         streamId: String = ""): Boolean =
+    StreamCommit.applyBatch(batch.sparkSession, path, streamId, batchId,
+      chunkBatchGlobs(path), Seq("vecs" -> s"$path/_vecs", "codes" -> path)) {
+      (staging, _) =>
+        val (codes, vecs) = pqAppendFrames(batch, path, chunkTokens,
+          overlapTokens, dim, salt, textCol)
+        vecs.write.mode("overwrite").partitionBy("list", "vb")
+          .parquet(s"$staging/vecs")
+        codes.write.mode("overwrite").partitionBy("list")
+          .parquet(s"$staging/codes")
+        ""
+    }
 
   /** One ingest batch's data files in a chunk index, by batch tag, CODES
     * FIRST — the mirror of the vecs-first promote ordering, so a rollback
@@ -974,7 +918,7 @@ object Retrieval {
     */
   private[graft] def chunkBatchGlobs(path: String)(tagName: String)
       : Seq[String] = {
-    val pg = graft.util.StreamCommit.escapeGlob(path)
+    val pg = StreamCommit.escapeGlob(path)
     Seq(s"$pg/list=*/$tagName-*", s"$pg/_vecs/list=*/vb=*/$tagName-*")
   }
 
@@ -988,18 +932,18 @@ object Retrieval {
     * never silently partially). Idempotent; must not race an in-flight
     * ingest of the same tag (administrative single-writer).
     */
-  def removePqIngestBatch(spark: org.apache.spark.sql.SparkSession,
+  def removePqIngestBatch(spark: SparkSession,
                           path: String, batchId: Long,
                           streamId: String = "",
                           allowMissing: Boolean = false): Boolean =
-    graft.util.StreamCommit.removeBatchGuarded(spark, path, streamId,
-      batchId, chunkBatchGlobs(path)(graft.util.StreamCommit.tag(streamId,
-        batchId)), allowMissing = allowMissing)
+    StreamCommit.removeBatchGuarded(spark, path, streamId, batchId,
+      chunkBatchGlobs(path)(StreamCommit.tag(streamId, batchId)),
+      allowMissing = allowMissing)
 
   /** [[removePqIngestBatch]] for the IVF-flat chunk index (same layout
     * minus the `_vecs/` table; same guarded protocol).
     */
-  def removeChunkIngestBatch(spark: org.apache.spark.sql.SparkSession,
+  def removeChunkIngestBatch(spark: SparkSession,
                              path: String, batchId: Long,
                              streamId: String = "",
                              allowMissing: Boolean = false): Boolean =
@@ -1008,7 +952,8 @@ object Retrieval {
   /** The two append frames (codes, vecs) for [[appendToChunkIndexPq]],
     * exposed so the ordering contract above is testable: writing `vecs`
     * alone simulates a death between the jobs, and serving must then be
-    * identical to the un-appended index.
+    * identical to the un-appended index. The first half is the flat
+    * index's [[chunkAppendFrame]].
     */
   private[graft] def pqAppendFrames(docs: DataFrame, path: String,
                                     chunkTokens: Int = 32,
@@ -1017,32 +962,33 @@ object Retrieval {
                                     textCol: String = "text")
       : (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
-    val model = Ann.IvfModel.fromJson(
-      graft.util.Sidecar.read(spark, path, "_ivf_centroids.json"))
-    val pqModel = Ann.PqModel.fromJson(
-      graft.util.Sidecar.read(spark, path, "_pq_codebooks.json"))
-    val m2 = graft.util.Sidecar.read(spark, path, "_mip_m2.json").trim.toLong
-    val nVb = graft.util.Sidecar.requiredLong(
-      graft.util.Sidecar.read(spark, path, "_vecs_meta.json"),
-      "nVecBuckets", s"$path/_vecs_meta.json")
-    val chunks = embeddedChunks(docs, chunkTokens, overlapTokens, dim, salt,
-      textCol)
-    val nsq = innerProduct(col("vec"), col("vec"))
-    val augmented = chunks.withColumn("vaug",
-      concat(col("vec").cast("array<double>"),
-        array(sqrt(greatest(lit(0L), lit(m2) - nsq)))))
-    val assigned = Ann.assignWithModel(augmented, model, "vaug")
-    val codes = Ann.pqEncode(assigned, "vaug", pqModel)
-      .select(col("doc_id"), col("chunk_idx"), col("chunk_start"),
-        col("list"), col("pq_code"))
-    val vecs = assigned
-      .withColumn("vb", pmod(xxhash64(col("doc_id")), lit(nVb)).cast("int"))
-      .select(col("doc_id"), col("chunk_idx"), col("vec"), col("list"),
-        col("vb"))
-      .repartition(col("list"), col("vb"))
-      .sortWithinPartitions("doc_id", "chunk_idx")
-    (codes, vecs)
+    pqFrames(chunkAppendFrame(docs, path, chunkTokens, overlapTokens, dim,
+      salt, textCol), Ann.loadPqModel(spark, path), nVecBuckets(spark, path))
   }
+
+  /** The vector side table's doc-hash bucket `vb = hash(doc_id) mod nVb`. */
+  private def vecBucket(nVb: Long): Column =
+    pmod(xxhash64(col("doc_id")), lit(nVb)).cast("int")
+
+  /** The two IVF-PQ layout frames of MIP-augmented, list-assigned chunks,
+    * shared by the build and every append. Codes `(doc_id, chunk_idx,
+    * chunk_start, list, pq_code)` keep the writer-task sharding (the ADC
+    * scan WANTS parallelism — scoring is CPU-bound, and one file per list
+    * would serialize it). Vecs `(doc_id, chunk_idx, vec, list, vb)` write
+    * ONE sized file per (list, vb) dir, rows id-sorted: the fetch is a
+    * cheap probe join, and the naive write's (writer tasks × dirs) slivers
+    * cost it a task per sliver — measured 116 tasks for a 1.5M-row fetch
+    * at sf10, pure scheduling overhead. A 100 TB build salts the
+    * repartition key to hold files at target size instead.
+    */
+  private def pqFrames(augmented: DataFrame, pqModel: Ann.PqModel, nVb: Long)
+      : (DataFrame, DataFrame) =
+    (Ann.pqEncode(augmented, "vaug", pqModel).select(col("doc_id"),
+      col("chunk_idx"), col("chunk_start"), col("list"), col("pq_code")),
+      augmented.withColumn("vb", vecBucket(nVb)).select(col("doc_id"),
+        col("chunk_idx"), col("vec"), col("list"), col("vb"))
+        .repartition(col("list"), col("vb"))
+        .sortWithinPartitions("doc_id", "chunk_idx"))
 
   /** Collapse a chunk-level ranked result to a document-level ranking:
     * each (query, doc) keeps its best chunk rank, then docs re-rank by
@@ -1122,80 +1068,42 @@ object Retrieval {
                          dim: Int = 4, salt: String = "emb",
                          textCol: String = "text"): Unit =
     chunkAppendFrame(docs, path, chunkTokens, overlapTokens, dim, salt,
-      textCol)
+      textCol).drop("vaug")
       .write.mode("append").partitionBy("list").parquet(path)
 
-  /** Chunk, embed, augment with the INDEX'S stored M² (outlier norms
-    * clamp to 0 — see [[appendToChunkIndex]]'s contract), and assign
-    * against its stored centroids — the one frame construction the flat
-    * index's batch append AND streaming ingest share (the flat sibling
-    * of [[pqAppendFrames]]; a one-sided edit here cannot diverge them).
+  /** Chunk, embed, MIP-augment with the INDEX'S stored M² and assign
+    * against its stored centroids: `(doc_id, chunk_idx, chunk_start, vec,
+    * vaug, list)`. The one frame construction behind every append — flat
+    * batch and streaming (minus `vaug`) and the first half of
+    * [[pqAppendFrames]] — so a one-sided edit cannot diverge them.
     */
   private def chunkAppendFrame(docs: DataFrame, path: String,
                                chunkTokens: Int, overlapTokens: Int,
                                dim: Int, salt: String,
                                textCol: String): DataFrame = {
     val spark = docs.sparkSession
-    val model = Ann.IvfModel.fromJson(
-      graft.util.Sidecar.read(spark, path, "_ivf_centroids.json"))
-    val m2 = graft.util.Sidecar.read(spark, path, "_mip_m2.json").trim.toLong
-    val chunks = embeddedChunks(docs, chunkTokens, overlapTokens, dim, salt,
-      textCol)
-    val nsq = innerProduct(col("vec"), col("vec"))
-    val augmented = chunks.withColumn("vaug",
-      concat(col("vec").cast("array<double>"),
-        array(sqrt(greatest(lit(0L), lit(m2) - nsq)))))
-    Ann.assignWithModel(augmented, model, "vaug")
-      .select("doc_id", "chunk_idx", "chunk_start", "vec", "list")
+    Ann.assignWithModel(mipAugmented(embeddedChunks(docs, chunkTokens,
+      overlapTokens, dim, salt, textCol), mipM2(spark, path)),
+      Ann.loadIvfModel(spark, path), "vaug")
   }
 
   /** EXACTLY-ONCE application of one ingest batch into a persisted
     * IVF-flat chunk index — the [[appendToChunkIndex]] counterpart of
-    * [[applyPqIngestBatch]], same [[graft.util.StreamCommit]] protocol.
-    * The flat layout is the easy case: one partitioned table, no side
-    * table, no stats payload — marker gate, scrub, stage, prefixed
-    * promote, marker.
+    * [[applyPqIngestBatch]]: the [[graft.util.StreamCommit.applyBatch]]
+    * protocol over one staged partitioned table.
     */
   def applyChunkIngestBatch(batch: DataFrame, path: String, batchId: Long,
                             chunkTokens: Int = 32, overlapTokens: Int = 8,
                             dim: Int = 4, salt: String = "emb",
                             textCol: String = "text",
-                            streamId: String = ""): Boolean = {
-    graft.util.StreamCommit.requireValidStreamId(streamId)
-    val spark = batch.sparkSession
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    val tag = graft.util.StreamCommit.tag(streamId, batchId)
-    if (graft.util.StreamCommit.markerExists(fs, path, tag)) return false
-    // same ingest-log gate as [[applyPqIngestBatch]]: folded → no-op
-    // replay, deliberately removed → loud refusal (never resurrect a
-    // rollback)
-    if (graft.util.StreamCommit.refuseReplayOfRemoved(
-      graft.util.StreamCommit.readState(spark, path), streamId, batchId,
-      path)) return false
-    graft.util.StreamCommit.scrub(fs, chunkBatchGlobs(path)(tag))
-    val staging = s"$path/_staging/$tag"
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    chunkAppendFrame(batch, path, chunkTokens, overlapTokens, dim, salt,
-      textCol)
-      .write.mode("overwrite").partitionBy("list").parquet(staging)
-    graft.util.StreamCommit.promote(fs, staging, path, s"$tag-")
-    graft.util.StreamCommit.writeMarker(fs, path, tag)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    true
-  }
-
-  private val flatChunkSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("chunk_idx",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("chunk_start",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("vec",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType)),
-    org.apache.spark.sql.types.StructField("list",
-      org.apache.spark.sql.types.IntegerType)))
+                            streamId: String = ""): Boolean =
+    StreamCommit.applyBatch(batch.sparkSession, path, streamId, batchId,
+      chunkBatchGlobs(path), Seq("" -> path)) { (staging, _) =>
+      chunkAppendFrame(batch, path, chunkTokens, overlapTokens, dim, salt,
+        textCol).drop("vaug")
+        .write.mode("overwrite").partitionBy("list").parquet(staging)
+      ""
+    }
 
   /** Serve a persisted chunk index: the union of every query's probed
     * lists is collected (≤ nLists ints — metadata-sized by construction)
@@ -1206,25 +1114,20 @@ object Retrieval {
     * base files + marker-committed ingest batches (the same snapshot
     * contract as [[retrieveFromChunkIndexPq]]).
     */
-  def retrieveFromChunkIndex(spark: org.apache.spark.sql.SparkSession,
+  def retrieveFromChunkIndex(spark: SparkSession,
                              path: String, queries: DataFrame, k: Int,
                              nProbe: Int, dim: Int = 4, salt: String = "emb",
                              textCol: String = "text",
                              maxQueries: Long = 1000000L,
                              committedOnly: Boolean = false): DataFrame = {
-    val model = Ann.IvfModel.fromJson(
-      graft.util.Sidecar.read(spark, path, "_ivf_centroids.json"))
+    val model = Ann.loadIvfModel(spark, path)
     val np = math.min(nProbe, model.nLists)
     val q = augmentedQueries(queries, dim, salt, textCol)
-    val lists = probeTable(q, model, np, "vec", "vaug")
-      .select("list").distinct().collect().map(_.getInt(0)).sorted
-    val scan =
-      if (!committedOnly)
-        spark.read.parquet(path)
-          .where(col("list").isin(lists.map(Integer.valueOf).toSeq: _*))
-      else
-        readCommitted(spark, path, lists.toSeq.map(l => s"list=$l/*"),
-          graft.util.StreamCommit.committedView(spark, path), flatChunkSchema)
+    val lists = probedLists(probeTable(q, model, np, "vec", "vaug"))
+    val scan = layoutScan(spark, path, flatChunkSchema, inLists(lists),
+      lists.map(l => s"list=$l/*"),
+      if (committedOnly) Some(StreamCommit.committedView(spark, path))
+      else None)
     topKChunksIvf(scan, model, q, k, np, probeCol = "vaug",
       maxQueries = maxQueries)
   }

@@ -61,11 +61,22 @@ object LmScore {
                            totalTokens: Long,
                            combCk: Option[DataFrame] = None) {
 
+    // set once unpersist() frees combCk: uni/bi/tri are filters of it, so
+    // every later read would die on a missing checkpoint block
+    @volatile private var released = false
+
+    private[text] def requireLive(use: String): Unit =
+      if (released) throw new IllegalStateException(
+        s"LmModel.$use after unpersist(): the model's count tables were " +
+          "released with its training checkpoint. Finish using the model " +
+          "before unpersist(), or save() it and LmModel.load() it again")
+
     /** Persist the model as three parquet tables + a JSON sidecar with N
       * (shared [[graft.util.Sidecar]] convention, like the ANN layouts).
       * Re-loading makes scoring independent of the one-time training pass.
       */
     def save(dir: String): Unit = {
+      requireLive("save")
       uni.write.mode("overwrite").parquet(s"$dir/uni.parquet")
       bi.write.mode("overwrite").parquet(s"$dir/bi.parquet")
       tri.write.mode("overwrite").parquet(s"$dir/tri.parquet")
@@ -89,14 +100,21 @@ object LmScore {
       * cache read.
       */
     def cache(): LmModel = {
+      requireLive("cache")
       uni.persist(); bi.persist(); tri.persist()
       uni.count(); bi.count(); tri.count()
       this
     }
 
+    /** Release the cached tables and, for a [[train]]ed model, its
+      * training checkpoint. A trained model is unusable afterwards: any
+      * later [[score]], [[save]] or [[cache]] fails naming `unpersist()`.
+      * A loaded model stays usable (it re-reads its parquet).
+      */
     def unpersist(): LmModel = {
       uni.unpersist(); bi.unpersist(); tri.unpersist()
       combCk.foreach(graft.util.Checkpoints.free)
+      released = combCk.isDefined
       this
     }
   }
@@ -222,6 +240,7 @@ object LmScore {
   def score(corpus: DataFrame, model: LmModel, idCol: String = "doc_id",
             textCol: String = "text",
             broadcastMaxGrams: Long = 20000000L): DataFrame = {
+    model.requireLive("score")
     val t = toks(col(textCol))
     // one struct per position, built by O(1) array indexing inside a single
     // narrow transform — never a positions self-join or window

@@ -1,15 +1,18 @@
 package graft.util
 
 /** Shared mechanics of the exactly-once micro-batch commit protocol the
-  * streaming index ingests use (IVF-PQ chunk index, BM25 postings index):
-  * every batch's files land in the live partitioned layout under a
-  * batch-tagged filename prefix, gated by a marker file —
+  * streaming index ingests use (IVF-flat and IVF-PQ chunk indexes, BM25
+  * postings index): every batch's files land in the live partitioned layout
+  * under a batch-tagged filename prefix, gated by a marker file —
   *
-  *   marker check → scrub this tag's files → stage under `_staging/` →
-  *   per-file rename into the layout → marker write → staging cleanup
+  *   marker gate → replay gate → scrub this tag's files → stage under
+  *   `_staging/` → per-file rename into the layout → marker write →
+  *   staging cleanup
   *
   * so a foreachBatch replay (at-least-once contract, same batchId) at ANY
-  * crash point converges to the single-application state.
+  * crash point converges to the single-application state. [[applyBatch]]
+  * runs the protocol once for every layout; a layout supplies only its
+  * staging writes.
   *
   * `streamId` namespaces the tag. batchIds are only stable within ONE
   * streaming checkpoint lineage — a new checkpoint restarts at 0, and an
@@ -643,6 +646,54 @@ object StreamCommit {
     afterMarkerDelete()
     scrub(f, dataGlobs)
     had
+  }
+
+  /** EXACTLY-ONCE application of one ingest batch `(streamId, batchId)` to
+    * the layout at `path` — the whole protocol every ingest layout shares:
+    *
+    *   1. marker gate: the tag's marker exists → fully applied, no-op;
+    *   2. replay gate ([[refuseReplayOfRemoved]]): marker gone ≠ never
+    *      applied — compaction deletes folded markers (no-op), and a
+    *      recorded rollback is refused loudly;
+    *   3. scrub: delete every file of this tag (`globs(tag)`) — a replay
+    *      after a mid-promote crash removes whatever subset landed;
+    *   4. stage: `stage(stagingDir, logState)` writes the batch under
+    *      `_staging/<tag>/` (invisible to every reader, like the sidecars)
+    *      and returns the marker body;
+    *   5. promote: each `(stagedSubdir, targetRoot)` of `promotes`, in
+    *      order, per-file renamed under a `<tag>-`-prefixed name;
+    *   6. marker write, then staging cleanup.
+    *
+    * Every step is idempotent or scrubbed, so any crash point replays to
+    * the single-application state. Returns false when the batch was
+    * already applied. File renames are atomic on rename-capable stores
+    * (local, HDFS, ABFS); an S3 deployment fronts this with a
+    * rename-capable committer. Concurrent zombie applications of the SAME
+    * tag are the one unguarded case (no lock file) — Spark's streaming
+    * engine serializes foreachBatch per query, which is the deployment
+    * contract here.
+    */
+  private[graft] def applyBatch(spark: org.apache.spark.sql.SparkSession,
+                                path: String, streamId: String,
+                                batchId: Long, globs: String => Seq[String],
+                                promotes: Seq[(String, String)])
+      (stage: (String, LogState) => String): Boolean = {
+    requireValidStreamId(streamId)
+    val f = fs(spark, path)
+    val t = tag(streamId, batchId)
+    if (markerExists(f, path, t)) return false
+    val st = readState(spark, path)
+    if (refuseReplayOfRemoved(st, streamId, batchId, path)) return false
+    scrub(f, globs(t))
+    val staging = s"$path/_staging/$t"
+    f.delete(new org.apache.hadoop.fs.Path(staging), true)
+    val body = stage(staging, st)
+    promotes.foreach { case (sub, target) =>
+      promote(f, if (sub.isEmpty) staging else s"$staging/$sub", target, s"$t-")
+    }
+    writeMarker(f, path, t, body)
+    f.delete(new org.apache.hadoop.fs.Path(staging), true)
+    true
   }
 
   /** Apply-side replay gate shared by the streaming-ingest apply paths:

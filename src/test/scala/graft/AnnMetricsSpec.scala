@@ -1,8 +1,9 @@
 package graft
 
-import graft.ann.Ann
+import graft.ann.{Ann, Retrieval}
 import graft.functions.KFunctions
 import graft.metrics.GraftMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -79,6 +80,114 @@ class AnnMetricsSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [list"),
       s"list predicate must prune partitions:\n${plan.take(1500)}")
     assert(probed.collect().map(_.getLong(0)).toSet == half)
+
+    // filter-and-refine parity: at its exhaustive setting every candidate
+    // generator reaches every vector, so the shared rank step must return
+    // the exact path's rows
+    def rowsOf(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val root = java.nio.file.Files.createTempDirectory("ann-parity").toString
+    Ann.writeBucketed(corpus, s"$root/lsh", "embedding", dim = 64, bits = 6)
+    Ann.withBucket(emb, "embedding", dim = 64, bits = 6)
+      .select(col("vec_id").as("id"), col("bucket")).write.parquet(s"$root/sigs")
+    Ann.writeIvfPq(corpus, "vec_id", "embedding", s"$root/ivfpq",
+      nLists = 8, m = 8, ksub = 16)
+    val pqModel = Ann.loadPqModel(spark, s"$root/ivfpq")
+    val n = corpus.count().toInt
+    val annGenerators = Seq(
+      "lshTopK" -> Ann.lshTopK(corpus, "vec_id", "embedding", 64, q, 10,
+        bits = 6, probeHamming = 6),
+      "lshTopKBucketed" -> Ann.lshTopKBucketed(spark, s"$root/lsh", "vec_id",
+        "embedding", 64, q, 10, bits = 6, probeHamming = 6),
+      "lshTopKFromSigs" -> Ann.lshTopKFromSigs(spark.read.parquet(s"$root/sigs"),
+        corpus, "vec_id", "embedding", q, queryId = 0L, k = 10, probeHamming = 6),
+      "ivfTopK" -> Ann.ivfTopK(assigned, model, "vec_id", "embedding", q, 10,
+        nProbe = 8),
+      "ivfTopKBucketed" -> Ann.ivfTopKBucketed(spark, path, "vec_id",
+        "embedding", q, 10, nProbe = 8),
+      "pqTopKRerank" -> Ann.pqTopKRerank(Ann.pqEncode(corpus, "embedding",
+        pqModel), corpus, "vec_id", "embedding", q, pqModel, 10, shortlist = n),
+      "ivfPqTopK" -> Ann.ivfPqTopK(spark, s"$root/ivfpq", corpus, "vec_id",
+        "embedding", q, 10, nProbe = 8, shortlist = n))
+    annGenerators.foreach { case (name, df) =>
+      assert(rowsOf(df) == brute, s"$name at its exhaustive setting")
+    }
+    // the per-query chunk family against topKChunks (retrieveChunks)
+    import spark.implicits._
+    val docs = (0L until 40L).map(i => (i, s"par w$i kappa " * 16))
+      .toDF("doc_id", "text")
+    val qs = Seq((1L, "par w1 kappa"), (5L, "par w5 kappa"))
+      .toDF("query_id", "text")
+    Retrieval.writeChunkIndex(docs, s"$root/chunks", nLists = 4,
+      fitBudget = 32)
+    Retrieval.writeChunkIndexPq(docs, s"$root/chunkspq", nLists = 4, m = 5,
+      ksub = 8, fitBudget = 32)
+    def chunkRows(df: DataFrame) = df.orderBy("query_id", "rank")
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    val exactChunks = chunkRows(Retrieval.retrieveChunks(docs, qs, k = 4))
+    val chunkGenerators = Seq(
+      "retrieveChunksIvf" -> Retrieval.retrieveChunksIvf(docs, qs, k = 4,
+        nLists = 4, nProbe = 4, fitBudget = 32),
+      "retrieveFromChunkIndex" -> Retrieval.retrieveFromChunkIndex(spark,
+        s"$root/chunks", qs, k = 4, nProbe = 4),
+      "retrieveFromChunkIndexPq" -> Retrieval.retrieveFromChunkIndexPq(spark,
+        s"$root/chunkspq", qs, k = 4, nProbe = 4, shortlist = 100000))
+    assert(exactChunks.size == 8)
+    chunkGenerators.foreach { case (name, df) =>
+      assert(chunkRows(df) == exactChunks, s"$name at its exhaustive setting")
+    }
+  }
+
+  test("every single-query ANN entry point fails loudly on a wrong-dim query") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val q63 = emb.filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+      .take(63)
+    val root = java.nio.file.Files.createTempDirectory("ann-dim").toString
+    Ann.writeBucketed(corpus, s"$root/lsh", "embedding", dim = 64, bits = 4)
+    Ann.withBucket(emb, "embedding", dim = 64, bits = 4)
+      .select(col("vec_id").as("id"), col("bucket")).write.parquet(s"$root/sigs")
+    val (assigned, model) = Ann.ivfAssign(corpus, "embedding", nLists = 4)
+    Ann.writeIvf(assigned, model, s"$root/ivf")
+    Ann.writeIvfPq(corpus, "vec_id", "embedding", s"$root/ivfpq",
+      nLists = 4, m = 8, ksub = 8)
+    val pqModel = Ann.loadPqModel(spark, s"$root/ivfpq")
+    val encoded = Ann.pqEncode(corpus, "embedding", pqModel)
+    val scorer = "ANN dim mismatch: query has 63 dims"
+    val ivfProbe = "query dim 63 != centroid dim 64"
+    val adcTable = "query dim 63 != model dim 64"
+    val cases: Seq[(String, () => DataFrame, String)] = Seq(
+      ("bruteForceTopK", () =>
+        Ann.bruteForceTopK(corpus, "vec_id", "embedding", q63, 5), scorer),
+      ("bruteForceTopKQuantized", () => Ann.bruteForceTopKQuantized(
+        Ann.quantizeInt8(corpus, "embedding"), "vec_id", q63, 5), scorer),
+      ("lshTopK", () => Ann.lshTopK(corpus, "vec_id", "embedding", 64, q63, 5,
+        bits = 4, probeHamming = 4), scorer),
+      ("lshTopKBucketed", () => Ann.lshTopKBucketed(spark, s"$root/lsh",
+        "vec_id", "embedding", 64, q63, 5, bits = 4, probeHamming = 4), scorer),
+      ("lshTopKFromSigs", () => Ann.lshTopKFromSigs(
+        spark.read.parquet(s"$root/sigs"), corpus, "vec_id", "embedding", q63,
+        queryId = 0L, k = 5, probeHamming = 4), scorer),
+      ("ivfTopK", () => Ann.ivfTopK(assigned, model, "vec_id", "embedding",
+        q63, 5, nProbe = 4), ivfProbe),
+      ("ivfTopKBucketed", () => Ann.ivfTopKBucketed(spark, s"$root/ivf",
+        "vec_id", "embedding", q63, 5, nProbe = 4), ivfProbe),
+      ("pqTopK", () => Ann.pqTopK(encoded, "vec_id", q63, pqModel, 5), adcTable),
+      ("pqTopKRerank", () => Ann.pqTopKRerank(encoded, corpus, "vec_id",
+        "embedding", q63, pqModel, 5), adcTable),
+      ("ivfPqTopK", () => Ann.ivfPqTopK(spark, s"$root/ivfpq", corpus,
+        "vec_id", "embedding", q63, 5, nProbe = 4), ivfProbe))
+    val silent = cases.filterNot { case (_, run, expected) =>
+      try { run().collect(); false }
+      catch {
+        case e: Exception => Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains(expected))
+      }
+    }.map(_._1)
+    assert(silent.isEmpty,
+      s"entry points without their loud dim check: ${silent.mkString(", ")}")
   }
 
   test("IVF-PQ layout: sidecars round-trip, probe partition-prunes, recall floor") {

@@ -20,6 +20,24 @@ class LmScoreSpec extends SparkSpec {
   private def refDocs = Seq((1L, "a b a b"), (2L, "a b c"))
     .toDF("doc_id", "text")
 
+  test("a trained model used after unpersist() fails loudly, naming unpersist()") {
+    val model = LmScore.train(refDocs).cache()
+    val docs = Seq((2L, "a b c")).toDF("doc_id", "text")
+    assert(LmScore.score(docs, model).count() == 1L)
+    model.unpersist()
+    val e = intercept[IllegalStateException](
+      LmScore.score(docs, model).collect())
+    assert(e.getMessage.contains("unpersist()"), e.getMessage)
+    val dir = java.nio.file.Files.createTempDirectory("lm-released").toString
+    val es = intercept[IllegalStateException](model.save(s"$dir/m"))
+    assert(es.getMessage.contains("unpersist()"), es.getMessage)
+    // a loaded model re-reads its parquet, so releasing its cache is harmless
+    LmScore.train(refDocs).save(s"$dir/saved")
+    val loaded = LmScore.LmModel.load(spark, s"$dir/saved").cache()
+    loaded.unpersist()
+    assert(LmScore.score(docs, loaded).count() == 1L)
+  }
+
   test("in-model doc: trigram hits, no backoff, hand-computed avg") {
     val model = LmScore.train(refDocs)
     assert(model.totalTokens === 7L)
