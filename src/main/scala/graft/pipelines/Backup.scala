@@ -4,6 +4,7 @@ import graft.codec.{CompressionCodec, SegmentCodec}
 import graft.catalog._
 import graft.functions.Enrichment
 import graft.model.KRecord
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeRow}
@@ -11,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.util.SerializableConfiguration
 
 /** Backup pipeline config (subset of the reference's YAML Config,
   * crates/kafka-backup-core/src/config.rs:8). Defaults mirror
@@ -32,22 +34,6 @@ case class BackupConfig(
     includeTopics: Seq[String] = Nil,
     excludeTopics: Seq[String] = Nil)
 
-/** Java-serializable Hadoop Configuration carrier for task closures
-  * (Configuration itself is Writable but not java.io.Serializable).
-  */
-final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
-
 /** The ingest pipeline (reference query lifecycle §3.1): source records →
   * header enrichment (F11) → per-(topic,partition) segment roll (K1/St4) →
   * storage put → manifest assembly (K2).
@@ -63,6 +49,11 @@ final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.
   * shuffle. Records stream through rolling segment buffers, so memory is
   * bounded by `maxSegmentBytes` per task regardless of input size. Segment
   * metadata (one row per ~128 MB) is the only thing collected to the driver.
+  *
+  * Storage: the driver's Hadoop conf is broadcast once per job. Segments go
+  * through [[SegmentFiles]]: plain files on a `file://` root (no `.crc`
+  * sidecar; the KBAK footer CRC covers them), Hadoop FS on every other
+  * scheme. `manifest.json` is always written through Hadoop FS.
   */
 object Backup {
 
@@ -76,13 +67,14 @@ object Backup {
       s"maxSegmentBytes must be in (0, ~2GB): ${config.maxSegmentBytes}")
 
     val cfg = config // avoid closing over `this`
-    // capture the driver's Hadoop conf (spark.hadoop.* — object-store
-    // credentials, endpoints) for the executors; a bare `new Configuration()`
-    // in the task would silently drop them
-    val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    // the driver's Hadoop conf (spark.hadoop.* — object-store credentials,
+    // endpoints, registered schemes) ships to the executors once per job; a
+    // bare `new Configuration()` in the task would silently drop them
+    val hadoopConf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     // built once: under AQE `toRdd` runs the shuffle map stage eagerly
     val written: Seq[SegmentRow] = writerInput(spark, records, config).queryExecution.toRdd
-      .mapPartitions(it => writeTaskPartition(it, cfg, hadoopConf))
+      .mapPartitions(it => writeTaskPartition(it, cfg, hadoopConf.value.value))
       .collect().toSeq
 
     // original_partition_count (manifest.rs:81-89) from the observed max
@@ -216,9 +208,8 @@ object Backup {
     * wire form; the partition's decimal bytes are encoded once per run.
     */
   private def writeTaskPartition(it: Iterator[InternalRow], cfg: BackupConfig,
-                                 hadoopConf: SerializableHadoopConf): Iterator[SegmentRow] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(cfg.backupRoot), hadoopConf.value)
+                                 hadoopConf: Configuration): Iterator[SegmentRow] = {
+    val files = new SegmentFiles(cfg.backupRoot, hadoopConf)
     val out = scala.collection.mutable.ArrayBuffer.empty[SegmentRow]
 
     var curTopic: String = null
@@ -264,8 +255,7 @@ object Backup {
           body.backing, 0, body.size, cfg.compression, cfg.zstdLevel)
       val key = Manifest.segmentKey(cfg.backupId, curTopic, curPartition, startOffset,
         cfg.compression.extension)
-      val path = new org.apache.hadoop.fs.Path(s"${cfg.backupRoot}/$key")
-      val os = fs.create(path, true)
+      val os = files.create(key)
       try SegmentCodec.writeSegment(os,
         SegmentCodec.SegmentHeader(SegmentCodec.Version, cfg.compression, count, startOffset,
           endOffset), cBuf, cOff, cLen)

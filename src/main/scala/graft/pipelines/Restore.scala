@@ -3,11 +3,11 @@ package graft.pipelines
 import graft.catalog.{BackupManifest, Manifest, SegmentMetadata}
 import graft.codec.{LegacySegment, SegmentCodec}
 import graft.model.KRecord
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
@@ -37,7 +37,9 @@ case class RestoreConfig(
   * The manifest already names every selected object and its size, so the scan
   * lists no path and runs no job before the action: the selected segments are
   * split into size-balanced tasks on the driver and each task opens its keys
-  * directly. That scan ([[scan]]) has two callers: [[records]] and deep
+  * directly: plain files through `java.nio` on a `file://` root, Hadoop FS
+  * elsewhere ([[SegmentFiles]]), with the Hadoop conf broadcast once per
+  * job. That scan ([[scan]]) has two callers: [[records]] and deep
   * validation ([[graft.validation.Validation.deep]]), which re-reads every
   * segment the way a restore does. Decode is a streaming iterator (no
   * per-task materialization), and the ts window is re-applied per record
@@ -72,11 +74,11 @@ object Restore {
 
   /** The one reader of segment objects, shared by [[records]] and
     * [[graft.validation.Validation.deep]]. `segments` run as [[scanTasks]]'
-    * size-balanced contiguous tasks; each task opens its own `FileSystem`
-    * from the driver's Hadoop conf (spark.hadoop.* credentials, endpoints and
-    * registered schemes travel with the tasks, as in Backup). Per segment, in
-    * manifest order, `f` gets the segment and a thunk that reads its object
-    * whole into an array presized from the manifest.
+    * size-balanced contiguous tasks. The driver's Hadoop conf (spark.hadoop.*
+    * credentials, endpoints and registered schemes) is broadcast once per
+    * call, as in Backup, and each task opens its [[SegmentFiles]] from it.
+    * Per segment, in manifest order, `f` gets the segment and a thunk that
+    * reads its object whole ([[SegmentFiles.read]]).
     */
   private[graft] def scan[T: ClassTag](spark: SparkSession, root: String,
                                        segments: Seq[(String, Int, SegmentMetadata)])(
@@ -84,33 +86,18 @@ object Restore {
     if (segments.isEmpty) spark.sparkContext.emptyRDD[T]
     else {
       val tasks = scanTasks(spark, segments)
-      val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      val hadoopConf = spark.sparkContext.broadcast(
+        new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
       spark.sparkContext.parallelize(tasks, tasks.size).flatMap { task =>
-        val fs = FileSystem.get(new java.net.URI(root), hadoopConf.value)
+        val files = new SegmentFiles(root, hadoopConf.value.value)
         task.iterator.flatMap { case (topic, partition, s) =>
           val expected = math.min(
             s.compressed_size + SegmentCodec.HeaderSize + SegmentCodec.FooterSize,
             Int.MaxValue - 8L).toInt
-          f(topic, partition, s, () => readObject(fs, new Path(s"$root/${s.key}"), expected))
+          f(topic, partition, s, () => files.read(s.key, expected))
         }
       }
     }
-
-  /** Read a whole object into an array presized from the manifest. When the
-    * object has exactly `expected` bytes (every KBAK segment) no copy is made;
-    * any other size is still read in full.
-    */
-  private def readObject(fs: FileSystem, path: Path, expected: Int): Array[Byte] = {
-    val in = fs.open(path)
-    try {
-      val buf = new Array[Byte](expected)
-      var n = 0
-      var r = 0
-      while (n < expected && r >= 0) { r = in.read(buf, n, expected - n); if (r > 0) n += r }
-      val rest = if (r < 0) Array.emptyByteArray else in.readAllBytes()
-      if (n == expected && rest.isEmpty) buf else java.util.Arrays.copyOf(buf, n) ++ rest
-    } finally in.close()
-  }
 
   /** The scan tasks for `segments`: contiguous runs in manifest order, so a
     * task reads each (topic, partition)'s segments in offset order and the

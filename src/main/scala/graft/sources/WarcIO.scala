@@ -212,8 +212,8 @@ object WarcIO {
                 contentCol: String, dateIso: String = "2020-01-01T00:00:00Z",
                 gzip: Boolean = false): Long = {
     val spark = df.sparkSession
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration))
     import spark.implicits._
     val files = df.select(col(urlCol).cast("string"), col(contentCol))
       .as[(String, Array[Byte])]
@@ -223,7 +223,7 @@ object WarcIO {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val name = f"part-$pid%05d.warc" + (if (gzip) ".gz" else "")
           val path = new org.apache.hadoop.fs.Path(dir, name)
-          val fs = path.getFileSystem(conf.value)
+          val fs = path.getFileSystem(conf.value.value)
           val raw = fs.create(path, true)
           val out =
             if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw

@@ -260,8 +260,8 @@ class BackupRestoreSpec extends SparkSpec {
     try assert(failure(RestoreConfig(root, "l1")).contains(gone))
     finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
 
-    // flip one compressed-body byte; rewrite through the Hadoop FS so its
-    // checksum sidecar follows and only the KBAK CRC can object
+    // flip one compressed-body byte; segment reads on a local root are plain
+    // file reads with no Hadoop checksum, so only the KBAK CRC can object
     val victim = segs.last.key
     val vp = new Path(s"$root/$victim")
     val data = {
@@ -508,6 +508,103 @@ class BackupRestoreSpec extends SparkSpec {
     }
   }
 
+  /** A fresh zstd backup of `n` single-segment partitions of topic `lay`. */
+  private def layoutBackup(root: String, n: Int = 4): graft.catalog.BackupManifest = {
+    import spark.implicits._
+    val recs = for (p <- 0 until n; i <- 0 until 5)
+      yield KRecord("lay", p, i.toLong, 1700000000000L + i, s"k$i".getBytes,
+        s"v$p-$i".getBytes, Nil)
+    Backup.run(spark, recs.toDS().toDF(), BackupConfig("lay", root, CompressionCodec.Zstd))
+  }
+
+  private def filesUnder(root: String): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(java.nio.file.Paths.get(root))
+    try { import scala.jdk.CollectionConverters._; walk.iterator().asScala.toList }
+    finally walk.close()
+  }
+
+  test("a local backup leaves no checksum sidecar beside its segments") {
+    val root = Files.createTempDirectory("graft-nocrc").toString
+    val m = layoutBackup(root)
+    assert(m.totalSegments == 4)
+    val names = filesUnder(root).map(_.getFileName.toString)
+    assert(names.count(_.startsWith("segment-")) == 4)
+    assert(!names.exists(n => n.startsWith(".segment-") && n.endsWith(".crc")), names)
+    assert(Restore.records(spark, RestoreConfig(root, "lay")).count() == 20)
+  }
+
+  test("re-backing up a key removes a stale Hadoop sidecar; Hadoop reads still verify") {
+    val root = Files.createTempDirectory("graft-stalecrc").toString
+    val key = layoutBackup(root).topics.head.partitions.head.segments.head.key
+    val fs = fsOf(root)
+    val hp = new Path(s"$root/$key")
+    val os = fs.create(hp, true)
+    try os.write("not a segment".getBytes) finally os.close()
+    val sidecar = java.nio.file.Paths.get(root, key).resolveSibling(
+      s".${hp.getName}.crc")
+    assert(Files.exists(sidecar), "the Hadoop write planted a sidecar")
+
+    layoutBackup(root)
+    assert(!Files.exists(sidecar), "the re-backup left the stale sidecar")
+    val viaHadoop = {
+      val in = fs.open(hp) // checksummed: a stale sidecar raises ChecksumException
+      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
+    }
+    assert(viaHadoop.toSeq == Files.readAllBytes(java.nio.file.Paths.get(root, key)).toSeq)
+    assert(Restore.records(spark, RestoreConfig(root, "lay")).count() == 20)
+  }
+
+  test("local segment files and directories take Hadoop's umask") {
+    import java.nio.file.attribute.PosixFilePermission._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = Files.createTempDirectory("graft-umask").toString
+    conf.set("fs.permissions.umask-mode", "077")
+    try layoutBackup(root)
+    finally conf.unset("fs.permissions.umask-mode")
+    val segs = filesUnder(root).filter(_.getFileName.toString.startsWith("segment-"))
+    assert(segs.size == 4)
+    val open = Set(GROUP_READ, GROUP_WRITE, GROUP_EXECUTE, OTHERS_READ, OTHERS_WRITE,
+      OTHERS_EXECUTE)
+    (segs ++ segs.map(_.getParent)).foreach { p =>
+      val perms = Files.getPosixFilePermissions(p)
+      assert(!perms.stream().anyMatch(open.contains(_)), s"$p: $perms")
+    }
+  }
+
+  test("a Hadoop setting made at runtime reaches the backup and restore tasks") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the scheme exists only in this conf; with the FileSystem cache off for
+    // it, every task resolves it from the conf it was shipped
+    conf.set("fs.graftrt.impl", classOf[RuntimeSchemeFileSystem].getName)
+    conf.setBoolean("fs.graftrt.impl.disable.cache", true)
+    try {
+      val root = "graftrt:" + Files.createTempDirectory("graft-rtscheme").toString
+      assert(layoutBackup(root).totalSegments == 4)
+      assert(Restore.records(spark, RestoreConfig(root, "lay")).count() == 20)
+      val deep = Validation.deep(spark, root, "lay").collect()
+      assert(deep.length == 4 && deep.forall(_.getAs[String]("outcome") == "Passed"),
+        deep.mkString("\n"))
+    } finally {
+      conf.unset("fs.graftrt.impl")
+      conf.unset("fs.graftrt.impl.disable.cache")
+    }
+  }
+
+  test("the restore scan ships no Hadoop conf inside its tasks") {
+    val root = Files.createTempDirectory("graft-shipconf").toString
+    val m = layoutBackup(root, n = 10)
+    val segments = Restore.selectedSegments(m, RestoreConfig(root, "lay"))
+    assert(segments.size == 10)
+    val rdd = Restore.scan(spark, root, segments) { (_, _, _, read) =>
+      Iterator.single(read().length)
+    }
+    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      .serialize(rdd).remaining()
+    // the driver's Hadoop conf alone serializes to ~100 KB
+    assert(bytes < 16 * 1024, s"serialized scan RDD: $bytes bytes")
+    assert(rdd.collect().length == 10)
+  }
+
   test("restore metrics observation counts records and bytes (A5)") {
     manifest
     val (df, obs) = Restore.withMetrics(
@@ -517,4 +614,12 @@ class BackupRestoreSpec extends SparkSpec {
     assert(row("records_restored") == 1000L)
     assert(row("bytes_restored").asInstanceOf[Long] > 0L)
   }
+}
+
+/** A local FS under the `graftrt` scheme, which only a runtime
+  * `fs.graftrt.impl` setting registers.
+  */
+class RuntimeSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "graftrt"
+  override def getUri: java.net.URI = java.net.URI.create("graftrt:///")
 }

@@ -530,9 +530,9 @@ class ChaosSpec extends SparkSpec {
       val in = fs.open(hp)
       try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
     }
-    // flip one bit inside the 8-byte footer (CRC region) — rewrite through the
-    // Hadoop FS so its .crc sidecar follows (gotcha: out-of-band edits trip
-    // Hadoop's checksum, not our KBAK CRC)
+    // flip one bit inside the 8-byte footer (CRC region) — segment reads on a
+    // local root are plain file reads with no Hadoop checksum, so the KBAK
+    // CRC is the only check that can object
     bytes(bytes.length - 6) = (bytes(bytes.length - 6) ^ 0x01).toByte
     val os = fs.create(hp, true)
     try os.write(bytes) finally os.close()

@@ -115,9 +115,9 @@ class ValidationStreamingSpec extends SparkSpec {
 
   test("validate --deep flags a corrupted segment") {
     manifest
-    // corrupt one byte of one segment body — rewrite through the Hadoop FS
-    // API (local FS keeps .crc sidecars; editing bytes behind its back trips
-    // Hadoop's checksum instead of our KBAK CRC)
+    // corrupt one byte of one segment body — segment reads on a local root
+    // are plain file reads that never consult a Hadoop .crc sidecar, so the
+    // KBAK CRC is the check that must catch it
     val seg = manifest.topics.head.partitions.head.segments.head
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
