@@ -236,18 +236,10 @@ object QueriesData {
     * comparison is apples-to-apples.
     */
   private def exactCosinePairs(e: DataFrame, threshold: Double): DataFrame = {
-    val vd = col("embedding").cast("array<double>")
-    val unit = e.select(col("vec_id").as("id"), vd.as("vec"))
-      .withColumn("norm", sqrt(
-        graft.functions.KFunctions.array_dot(col("vec"), col("vec"))))
-      .filter(col("norm") =!= 0.0d && !isnan(col("norm")))
-      .withColumn("unit", transform(col("vec"), x => x / col("norm")))
-      .select("id", "unit")
-    unit.select(col("id").as("id_a"), col("unit").as("unit_a"))
+    val unit = Dedup.unitVectors(e, "vec_id", "embedding")
+    Dedup.cosineCut(unit.select(col("id").as("id_a"), col("unit").as("unit_a"))
       .join(unit.select(col("id").as("id_b"), col("unit").as("unit_b")),
-        col("id_a") < col("id_b"))
-      .filter(round(graft.functions.KFunctions.array_dot(
-        col("unit_a"), col("unit_b")), 6) >= threshold)
+        col("id_a") < col("id_b")), threshold)
       .select("id_a", "id_b")
   }
 
@@ -4762,14 +4754,11 @@ object QueriesData {
       // sf10 — and its pair set counts EQUAL to the one-shot plan's
       // (57,845,156; union-distinct over an exact candidate partition).
       // See SCALING.md round-18 for the full variance-aware table with
-      // per-run disk stamps. Bucket-range staging (ranges > 1) remains
-      // the bounded-spill lever for corpora orders of magnitude past
-      // this tier; on it, the int16 prefilter keeps every geometry
-      // <8 GB scratch.
+      // per-run disk stamps; the int16 prefilter keeps every geometry
+      // <8 GB scratch on that tier.
       val approx = Dedup.embeddingPairs(e, "vec_id", "embedding", dim = 64,
         bits = 5, threshold = 0.3, knownCount = Some(n), tables = 8,
-        stagedTableBatch = if (n > 100000L) 4 else 0,
-        stagedBucketRanges = if (n > 100000L) 1 else 0)
+        stagedTableBatch = if (n > 100000L) 4 else 0)
       // the brute-force ground truth is O(n²): audit only below a measured
       // count (sf<=0.1 batteries), carry an explicit null above it — a 100TB
       // corpus audits on a sampled slice instead, never all-pairs

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
 import java.nio.charset.StandardCharsets
@@ -111,18 +110,8 @@ object Manifest {
 
   def path(backupRoot: String, backupId: String): String = s"$backupRoot/$backupId/manifest.json"
 
-  // the ACTIVE session's hadoop conf, when one exists: a fresh Configuration
-  // would drop every spark.hadoop.* setting (object-store credentials,
-  // endpoints, default FS), making the manifest the one component that
-  // fails auth while segment IO succeeds
-  private def hadoopConf() =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
   private def fs(backupRoot: String) = org.apache.hadoop.fs.FileSystem.get(
-    new java.net.URI(backupRoot), hadoopConf())
+    new java.net.URI(backupRoot), graft.util.ActiveHadoopConf())
 
   // serializes read-merge-write within this JVM (the reference's save_lock,
   // backup/engine.rs:40-47); cross-process writers of the SAME backup_id
@@ -203,15 +192,5 @@ object Manifest {
     rows.toDF("topic", "partition", "segment_key", "start_offset", "end_offset",
       "start_timestamp", "end_timestamp", "record_count", "uncompressed_size",
       "compressed_size")
-  }
-
-  /** F6 segment time-window pruning as a DataFrame filter over the catalog —
-    * the analog of partition pruning, driven by our stats instead of file
-    * listing (manifest.rs:169-179, restore/engine.rs:1504-1511).
-    */
-  def pruneTimeWindow(segments: DataFrame, start: Option[Long], end: Option[Long]): DataFrame = {
-    val afterStart = start.map(s => col("end_timestamp") >= lit(s)).getOrElse(lit(true))
-    val beforeEnd = end.map(e => col("start_timestamp") <= lit(e)).getOrElse(lit(true))
-    segments.filter(afterStart && beforeEnd)
   }
 }

@@ -513,15 +513,76 @@ object Dedup {
     sig.reduce((a: Column, b: Column) => a.bitwiseOR(b))
   }
 
+  /** The unit-vector projection every embedding pair path starts from:
+    * `(id, vec, norm, unit)`, with `vec` the input cast to `array<double>`
+    * and `unit = vec / norm`. Normalizing once per ROW makes each candidate
+    * pair cost a single dot product instead of dot + two norms. Zero
+    * vectors can't cosine-pair (ANSI division by 0), and a NaN norm (any
+    * NaN element) would pass `=!= 0`, get an all-ones signature (NaN
+    * compares greater than everything in Spark SQL), bucket every broken
+    * row together and emit cosine = NaN pairs — both are excluded here.
+    */
+  private[graft] def unitVectors(df: DataFrame, idCol: String,
+                                 vecCol: String): DataFrame = {
+    val vd = col(vecCol).cast("array<double>")
+    df.select(col(idCol).as("id"), vd.as("vec"))
+      .withColumn("norm",
+        sqrt(graft.functions.KFunctions.array_dot(col("vec"), col("vec"))))
+      .filter(col("norm") =!= 0.0d && !isnan(col("norm")))
+      .withColumn("unit", transform(col("vec"), x => x / col("norm")))
+  }
+
+  /** The exact-cosine pair cut of every embedding pair path: rows carrying
+    * `(id_a, id_b, unit_a, unit_b)` become `(id_a, id_b, cosine)`, the unit
+    * dot rounded to 6 dp (deterministic, so a pair found several times
+    * carries one cosine) and kept at or above `threshold`.
+    */
+  private[graft] def cosineCut(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("cosine", round(
+        graft.functions.KFunctions.array_dot(col("unit_a"), col("unit_b")), 6))
+      .filter(col("cosine") >= threshold)
+      .select("id_a", "id_b", "cosine")
+
+  /** Within-cell cosine pairs over an `(id, unit, list)` assignment: a
+    * self-join on the cell id `list`, each unordered pair once
+    * (`id_a < id_b`), then [[cosineCut]]. The exchange partitions by cell,
+    * so each task's pair expansion is bounded by its cells' |c|².
+    */
+  private[dedup] def cellPairs(assigned: DataFrame, threshold: Double): DataFrame = {
+    val a = assigned.select(col("list"), col("id").as("id_a"), col("unit").as("unit_a"))
+    val b = assigned.select(col("list"), col("id").as("id_b"), col("unit").as("unit_b"))
+    cosineCut(a.join(b, Seq("list")).filter(col("id_a") < col("id_b")), threshold)
+  }
+
+  /** The band rows of the LSH candidate stage: one row per (vector, table
+    * in `tables`) with `carry` plus `(tbl, bucket)` — `tbl` is the position
+    * in `tables` (any key that separates the batch's plane families works),
+    * `bucket` the [[hyperplaneSignature]] of `vec` in that table's plane
+    * family. A pure map: posexplode is row-local.
+    */
+  private def bandRows(units: DataFrame, dim: Int, bits: Int, tables: Seq[Int],
+                       carry: Column*): DataFrame =
+    units.select(carry :+ posexplode(array(tables.map(t =>
+      hyperplaneSignature(col("vec"), dim, bits, table = t)): _*))
+      .as(Seq("tbl", "bucket")): _*)
+
+  /** The buckets a PROBE-side band row visits: its own first, then one per
+    * flip bit with that bit XOR-toggled (1-bit multi-probe). The corpus
+    * side keeps its own bucket only — probing is one-directional, query
+    * onto stored. A pair differing in one flipped bit is found from both
+    * orientations; `id_a < id_b` keeps one.
+    */
+  private def probeBuckets(bucket: Column, flipBits: Seq[Int]): Column =
+    array(bucket +: flipBits.map(j => bucket.bitwiseXOR(lit(1L << j))): _*)
+
   /** The banded, probe-expanded LSH signature rows of [[embeddingPairs]]'
-    * candidate stage as a persistable table `(id, tbl, bucket, is_probe)`:
-    * one raw row per (vector, table) plus — on the PROBE side only — one
-    * row per flip bit with that bit XOR-toggled (the multi-probe
-    * expansion). Zero- and NaN-norm vectors are excluded exactly like
-    * [[embeddingPairs]]. Signatures are engine-native (the murmur2-derived
-    * hyperplanes); the relational half downstream of this table is
-    * [[bandPairsFromSigs]], which the fixture-based DuckDB oracle
-    * (`d_embedding_band_pairs`) hash-checks.
+    * candidate stage as a persistable table `(id, tbl, bucket, is_probe)`,
+    * built by the mining path's own [[unitVectors]], [[bandRows]] and
+    * [[probeBuckets]]: one raw row per (vector, table) plus — PROBE side
+    * only — one row per flip bit with that bit XOR-toggled. Signatures are
+    * engine-native (the murmur2-derived hyperplanes); the relational half
+    * downstream of this table is [[bandPairsFromSigs]], which the
+    * fixture-based DuckDB oracle (`d_embedding_band_pairs`) hash-checks.
     */
   def embeddingBandSignatures(df: DataFrame, idCol: String, vecCol: String,
                               dim: Int, bits: Int, tables: Int,
@@ -529,21 +590,10 @@ object Dedup {
     require(tables >= 1, "tables must be >= 1")
     require(flipBits.forall(j => j >= 0 && j < bits),
       s"flip bits $flipBits must lie in [0, $bits)")
-    val vd = col(vecCol).cast("array<double>")
-    val base = df.select(col(idCol).as("id"), vd.as("vec"))
-      .withColumn("norm",
-        sqrt(graft.functions.KFunctions.array_dot(col("vec"), col("vec"))))
-      .filter(col("norm") =!= 0.0d && !isnan(col("norm")))
-    val sigs = base.select(col("id"),
-      posexplode(array((0 until tables).map(t =>
-        hyperplaneSignature(col("vec"), dim, bits, table = t)): _*))
-        .as(Seq("tbl", "bucket")))
-    val raw = sigs.withColumn("is_probe", lit(false))
-    if (flipBits.isEmpty) raw
-    else raw.unionByName(sigs.select(col("id"), col("tbl"),
-      explode(array(flipBits.map(j =>
-        col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-      .withColumn("is_probe", lit(true)))
+    bandRows(unitVectors(df, idCol, vecCol), dim, bits, 0 until tables, col("id"))
+      .select(col("id"), col("tbl"),
+        posexplode(probeBuckets(col("bucket"), flipBits)).as(Seq("probe", "bucket")))
+      .select(col("id"), col("tbl"), col("bucket"), (col("probe") > 0).as("is_probe"))
   }
 
   /** The asymmetric band join over an [[embeddingBandSignatures]] table —
@@ -562,10 +612,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Embedding near-duplicate pairs: bucket on the hyperplane signature,
-    * exact cosine verify within buckets. At scale only same-bucket pairs
-    * shuffle; `bits` trades recall for bucket size.
-    */
   /** Occupancy-aware signature width: a FIXED 2^bits bucket count cannot
     * survive corpus growth — the bucket self-join is O(n²/2^bits), and the
     * sf1→sf10 scaling run measured 31× cost on 10× data at bits=5. Widen
@@ -579,44 +625,51 @@ object Dedup {
     math.min(math.max(bits, needed), 30)
   }
 
-  /** @param multiProbe force 1-bit multi-probe on; it also turns on
-    *   automatically whenever occupancy widening raises the signature width
-    *   past `bits`, so default-recall behavior survives corpus growth (pairs
-    *   differing in one widened bit stay candidates; ≥2-bit differences are
-    *   the accepted LSH miss at any width)
+  /** Embedding near-duplicate pairs `(id_a, id_b, cosine)` at exact cosine
+    * `>= threshold`, mined in one filter-and-refine skeleton:
+    *  1. unit vectors ([[unitVectors]]) with their int16 payload;
+    *  2. per-table sign-LSH band rows ([[bandRows]]), the probe side
+    *     expanded by the one flip policy ([[probeBuckets]]);
+    *  3. a band join on `(tbl, bucket)` that carries the int16 payload;
+    *  4. the `threshold − margin` prefilter on the quantized dot;
+    *  5. `distinct` over the surviving id pairs (a pair found by several
+    *     tables or probes collapses here);
+    *  6. the exact-cosine finish ([[cosineCut]]) on full unit vectors
+    *     re-attached by id.
+    * Only same-(table, bucket) pairs shuffle; `bits` trades recall for
+    * bucket size. The prefilter is exact by construction (see `margin`),
+    * so the output equals brute-force exact cosine over the LSH candidates.
+    *
+    * @param bits requested signature width; occupancy widening
+    *   ([[effectiveBits]]) may raise it so buckets stay near
+    *   `targetBucketSize` rows
+    * @param threshold exact cosine (6 dp) at or above which a candidate
+    *   pair is kept
+    * @param targetBucketSize expected bucket occupancy the width aims at
+    * @param multiProbe force 1-bit multi-probe on every bit; it also turns
+    *   on automatically, over the widened bits only, whenever occupancy
+    *   widening raises the signature width past `bits`, so default-recall
+    *   behavior survives corpus growth (pairs differing in one widened bit
+    *   stay candidates; ≥2-bit differences are the accepted LSH miss at any
+    *   width)
     * @param knownCount corpus row count if the caller already has it; when
     *   absent the width heuristic runs an eager `df.count()`, which executes
     *   the full upstream pipeline once before the real job — pass it for
     *   expensive inputs
-    * @param idOnlyBand quantized-prefilter band-join shape: ship only
-    *   (tbl, bucket, id) through the band exchange, DISTINCT the candidate
-    *   id-pairs (collapsing table×probe duplication), then attach int16
-    *   payloads by id join at distinct-candidate scale. Output identical
-    *   either way (spec-pinned); pick by the measured exchange weight
-    *   (SCALING.md A/B). Ignored unless quantizedPrefilter && tables > 1.
     * @param tables number of INDEPENDENT hyperplane tables (classic
     *   multi-table LSH). One table recalls p^bits of pairs at hyperplane
     *   agreement probability p = 1 - θ/π — fine for true near-dups (p ≈ 1)
     *   but structurally blind to borderline similarity (measured 9% recall
     *   at cosine 0.3, bits 5). L tables union their candidates:
-    *   recall = 1-(1-p^bits)^L, cost = L× candidate volume plus one distinct
-    *   over the FILTERED pair output (pairs found in several tables carry
-    *   identical cosines). Default 1 = the historical single-table plan,
-    *   shuffle-free through the signature stage.
+    *   recall = 1-(1-p^bits)^L at L× the candidate volume. Table 0 is the
+    *   historical single-table signature.
     * @param stagedTableBatch 0 (default) mines all tables in one band
-    *   join; N ≥ 1 mines N tables per EAGER batch job, distinct-unioning
-    *   survivors into a checkpointed accumulator — bounds peak
-    *   scratch-disk spill at N/tables of the one-shot plan for
-    *   spill-constrained tiers (pair set identical, spec-pinned). Only
-    *   meaningful with the payload-carrying quantized multi-table shape.
-    * @param stagedBucketRanges 0/1 (default) mines each table batch's
-    *   whole bucket space at once; K ≥ 2 further splits every batch into
-    *   K bucket-hash ranges mined one at a time — each candidate pair
-    *   meets on exactly one (table, bucket) key, so the ranges partition
-    *   the candidate set EXACTLY and peak spill drops another K-fold
-    *   (measured at sf10 on the 78 GB tier: one whole table's probe-
-    *   widened candidates alone spill ~75 GB; 8 ranges bound it). Same
-    *   shape constraint as stagedTableBatch; usable with or without it.
+    *   join; 1 ≤ N < tables mines N tables per EAGER batch job,
+    *   distinct-unioning exact pairs into a checkpointed accumulator —
+    *   bounds peak scratch-disk spill at N/tables of the one-shot plan for
+    *   spill-constrained tiers (pair set identical, spec-pinned). The
+    *   returned accumulator is DISK_ONLY checkpoint blocks; callers drop it
+    *   when done.
     */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                      bits: Int = 12, threshold: Double = 0.95,
@@ -624,303 +677,103 @@ object Dedup {
                      multiProbe: Boolean = false,
                      knownCount: Option[Long] = None,
                      tables: Int = 1,
-                     quantizedPrefilter: Boolean = true,
-                     idOnlyBand: Boolean = false,
-                     stagedTableBatch: Int = 0,
-                     stagedBucketRanges: Int = 0): DataFrame = {
+                     stagedTableBatch: Int = 0): DataFrame = {
     require(tables >= 1, "tables must be >= 1")
     require(stagedTableBatch >= 0, "stagedTableBatch must be >= 0")
-    require(stagedBucketRanges >= 0, "stagedBucketRanges must be >= 0")
-    require(stagedTableBatch == 0 || (quantizedPrefilter && tables > 1 && !idOnlyBand),
-      "stagedTableBatch applies to the payload-carrying quantized " +
-        "multi-table shape only")
-    require(stagedBucketRanges <= 1 || (quantizedPrefilter && tables > 1 && !idOnlyBand),
-      "stagedBucketRanges applies to the payload-carrying quantized " +
-        "multi-table shape only")
     val effBits = effectiveBits(knownCount.getOrElse(df.count()), bits, targetBucketSize)
-    val probe = multiProbe || effBits > bits
-    // pre-normalize ONCE per row: inside the bucket join each candidate pair
-    // then costs a single dot product instead of dot + two norms (the pair
-    // side of this plan is the O(bucket²) part — per-pair work dominates)
-    val vd = col(vecCol).cast("array<double>")
-    val base = df.select(col(idCol).as("id"), vd.as("vec"))
-      .withColumn("norm",
-        sqrt(graft.functions.KFunctions.array_dot(col("vec"), col("vec"))))
-      // zero vectors can't cosine-pair (ANSI division by 0), and a NaN norm
-      // (any NaN element) would pass =!= 0, get an all-ones signature (NaN
-      // compares greater than everything in Spark SQL), bucket every broken
-      // row together, and emit cosine=NaN pairs through the >= threshold
-      .filter(col("norm") =!= 0.0d && !isnan(col("norm")))
-      .withColumn("unit", transform(col("vec"), x => x / col("norm")))
-    // ONE flip policy for both branches (single- and multi-table probe sides
-    // must never diverge — the multi-table branch once silently dropped it):
-    // explicit multiProbe flips every bit, the automatic occupancy-widening
-    // companion flips only the widened bits [bits, effBits)
+    // ONE flip policy: explicit multiProbe flips every bit; the automatic
+    // occupancy-widening companion flips only the widened bits
+    // [bits, effBits) — precisely the candidates the widening removed (pairs
+    // equal on the requested bits, off by one widened sign), at
+    // (effBits-bits+1)× candidate volume instead of (effBits+1)×
     val flipBits = if (multiProbe) 0 until effBits else bits until effBits
-    def probedBuckets(bucket: Column): Column =
-      explode(array(bucket +: flipBits.map(j =>
-        bucket.bitwiseXOR(lit(1L << j))): _*))
-    if (tables > 1) {
-      // multi-table: (table, bucket) is the join key; each table's bucket
-      // comes from its own plane family. Signature stage is still a pure map
-      // (posexplode is row-local); the only new shuffle is the final
-      // distinct, which runs on the threshold-FILTERED pair set.
-      // The same probe contract applies per table: occupancy widening (or an
-      // explicit multiProbe) flips the shared flip set on the probe side, so
-      // corpus growth doesn't silently shrink each table's recall
-      if (quantizedPrefilter) {
-        // Shuffle-compressed two-stage scoring, EXACT by construction. The
-        // candidate join is the dominant exchange: every vector ships once
-        // per (table, probe) — 8 tables × 4 probes of a 64-dim double array
-        // is ~16 KB of exchange per vector, the int16 payload ~4 KB. Stage
-        // 1 scores candidates on the packed shorts (native BinaryDot16)
-        // and keeps any pair whose quantized cosine clears
-        // `threshold − margin`, where margin bounds the quantization error
-        // ANALYTICALLY for unit vectors: with s = max|x|/32767 ≤ 1/32767,
-        // |e_i| ≤ s/2, ‖x‖₁ ≤ √d, the error telescopes to
-        //   margin(d) = (√d + d/65534)/32767 + d/(4·32767²)
-        //   (≈ 0.000245 at d=64),
-        // plus 1e-6 for the final 6-dp rounding — so every pair the exact
-        // stage would keep survives the prefilter and the output is
-        // IDENTICAL to the direct form (spec-pinned equality). Stage 2
-        // re-attaches full vectors BY ID to the distinct survivor pairs
-        // (output-sized, not candidate-sized) and applies the exact cosine.
-        //
-        // int16, not int8, is a measured scale decision: the prefilter
-        // keeps the [thr − margin, thr) shoulder as false survivors, and
-        // on a near-orthogonal corpus (exact cosines massed just below the
-        // threshold) the int8 margin (≈ 0.066 at d=64) made that shoulder
-        // CANDIDATE-scale — the survivors' distinct() sort was the
-        // measured 60 GB spill that forced staged mining on the 78 GB
-        // scratch tier. The ~250× tighter int16 margin collapses survivors
-        // to output-scale for 2× the candidate-join payload — see
-        // SCALING.md for the measured sf10 before/after.
-        val margin = (math.sqrt(dim) + dim / 65534.0) / 32767.0 +
-          dim / (4.0 * 32767.0 * 32767.0) + 1e-6
-        val stagedMode = stagedTableBatch > 0 && stagedTableBatch < tables ||
-          stagedBucketRanges > 1
-        // the idOnlyBand A/B shape has no staged form — honoring staging
-        // there would silently measure the unstaged plan (and leak the
-        // DISK_ONLY corpus projection on its early return)
-        require(!(idOnlyBand && stagedMode),
-          "idOnlyBand has no staged form: run idOnlyBand=false for staged " +
-            "mining, or drop stagedTableBatch/stagedBucketRanges")
-        // Staged mining consumes this projection ~3× PER BATCH (the batch's
-        // signature scan plus the per-batch finish's two unit joins) — a
-        // dozen-plus corpus re-derivations at typical batch geometries.
-        // One DISK_ONLY materialization replaces them all: it is
-        // corpus-ROW-sized (≈2× the input vector bytes) and CONSTANT in
-        // the batch count, so unlike the band-join shuffle scratch that
-        // staging exists to bound, it cannot grow with the staging depth —
-        // compatible with the bounded-spill contract by construction.
-        // DISK_ONLY for the same reason as the accumulator checkpoints:
-        // the staged tier's executor memory belongs to the band-join
-        // sorts. Freed at the end of the staged loop.
-        val baseQ = {
-          val q = base.withColumn("qb",
-            graft.functions.KFunctions.pack_unit_int16(col("unit")))
-            .withColumn("qs",
-              array_max(transform(col("unit"), x => abs(x))) / 32767.0d)
-          if (stagedMode)
-            q.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          else q
-        }
-        // exact-cosine finish, shared by both band shapes: re-attach full
-        // unit vectors BY ID to the distinct survivor pairs (output-sized,
-        // not candidate-sized) and apply the exact threshold. Units come
-        // from baseQ (a superset projection of base) so the staged mode's
-        // persisted copy serves the finish too; Catalyst prunes the
-        // quantized columns away on the unpersisted path.
-        def finish(survivors: DataFrame): DataFrame = survivors
-          .join(baseQ.select(col("id").as("id_a"), col("unit").as("unit_a")), Seq("id_a"))
-          .join(baseQ.select(col("id").as("id_b"), col("unit").as("unit_b")), Seq("id_b"))
-          .withColumn("cosine", round(
-            graft.functions.KFunctions.array_dot(col("unit_a"), col("unit_b")), 6))
-          .filter(col("cosine") >= threshold)
-          .select("id_a", "id_b", "cosine")
-        if (idOnlyBand) {
-          // A/B alternative shape: the band join moves (tbl, bucket, id)
-          // ONLY (16-byte rows instead of the ~4 KB int16 payload per
-          // (table × probe) copy), candidate id-pairs go DISTINCT first —
-          // collapsing the (table × probe) duplication before any scoring —
-          // and the quantized payloads attach by TWO id joins at
-          // distinct-candidate scale. Same output by construction
-          // (spec-pinned pair-identical); which shape wins depends on
-          // distinct-candidate volume vs payload fan-out — see SCALING.md
-          // for the measured sf1/sf10 A/B.
-          val sigs = baseQ.select(col("id"),
-            posexplode(array((0 until tables).map(t =>
-              hyperplaneSignature(col("vec"), dim, effBits, table = t)): _*))
-              .as(Seq("tbl", "bucket")))
-          val a =
-            if (!probe) sigs.select(col("tbl"), col("bucket"), col("id").as("id_a"))
-            else sigs.select(col("tbl"),
-              probedBuckets(col("bucket")).as("bucket"), col("id").as("id_a"))
-          val b = sigs.select(col("tbl"), col("bucket"), col("id").as("id_b"))
-          val cand = a.join(b, Seq("tbl", "bucket"))
-            .filter(col("id_a") < col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-          val survivors = cand
-            .join(baseQ.select(col("id").as("id_a"),
-              col("qb").as("qb_a"), col("qs").as("qs_a")), Seq("id_a"))
-            .join(baseQ.select(col("id").as("id_b"),
-              col("qb").as("qb_b"), col("qs").as("qs_b")), Seq("id_b"))
-            .filter(graft.functions.KFunctions.binary_dot16(col("qb_a"), col("qb_b"))
-              .cast("double") * col("qs_a") * col("qs_b") >= threshold - margin)
-            .select("id_a", "id_b")
-          return finish(survivors)
-        }
-        // distinct quantized-survivor id-pairs for a SUBSET of the table
-        // ids (the join key is the batch-local posexplode position — any
-        // key that separates the batch's plane families works) and,
-        // optionally, ONE hash range of the bucket space: every candidate
-        // pair meets on exactly one (tbl, bucket) key value, so filtering
-        // BOTH join sides to hash(bucket) % ranges == r partitions the
-        // candidate set exactly — the union over r is the full join, no
-        // overlap, and each range batch carries ~1/ranges of the band
-        // join's sort spill
-        def survivorsFor(ts: Seq[Int], ranges: Int = 1,
-                         range: Int = 0): DataFrame = {
-          val sigs = baseQ.select(col("id"), col("qb"), col("qs"),
-            posexplode(array(ts.map(t =>
-              hyperplaneSignature(col("vec"), dim, effBits, table = t)): _*))
-              .as(Seq("tbl", "bucket")))
-          def inRange(df: DataFrame): DataFrame =
-            if (ranges <= 1) df
-            else df.filter(pmod(xxhash64(col("bucket")), lit(ranges.toLong))
-              === range)
-          val a = inRange(
-            if (!probe) sigs.select(col("tbl"), col("bucket"),
-              col("id").as("id_a"), col("qb").as("qb_a"), col("qs").as("qs_a"))
-            else sigs.select(col("tbl"),
-              probedBuckets(col("bucket")).as("bucket"),
-              col("id").as("id_a"), col("qb").as("qb_a"), col("qs").as("qs_a")))
-          val b = inRange(sigs.select(col("tbl"), col("bucket"),
-            col("id").as("id_b"), col("qb").as("qb_b"), col("qs").as("qs_b")))
-          a.join(b, Seq("tbl", "bucket"))
-            .filter(col("id_a") < col("id_b"))
-            .filter(graft.functions.KFunctions.binary_dot16(col("qb_a"), col("qb_b"))
-              .cast("double") * col("qs_a") * col("qs_b") >= threshold - margin)
-            .select("id_a", "id_b")
-            .distinct()
-        }
-        if (stagedMode) {
-          // Staged mining (the bounded-spill configuration): run the band
-          // join over `stagedTableBatch` tables × one bucket-hash range at
-          // a time, each batch its own EAGER job, distinct-unioning
-          // survivors into a checkpointed accumulator between batches. The
-          // candidate volume — and with it the band-join sort's
-          // scratch-disk spill, the resource that exhausted the 78 GB tier
-          // at sf10 (SCALING.md) — peaks at (batch/tables)/ranges of the
-          // one-shot plan's; the price is one signature scan of the
-          // (row-sized, never pair-sized) corpus per batch. The
-          // accumulator stays output-sized (true pairs survive the
-          // quantized threshold, not raw candidates). Pair set ≡ one-shot
-          // by construction (union-distinct over an exact partition of the
-          // candidate set) — spec-pinned.
-          // DISK_ONLY checkpoints: the default MEMORY_AND_DISK level
-          // unrolls each batch's survivor pairs as deserialized VALUES in
-          // the memory store WHILE 32 band-join sorts hold their pages —
-          // measured hard heap OOM at sf10 on the default 16 GB heap; the
-          // staged mode exists for resource-constrained tiers, so its own
-          // bookkeeping must not bid for executor memory
-          val diskOnly = org.apache.spark.storage.StorageLevel.DISK_ONLY
-          val batch =
-            if (stagedTableBatch > 0) stagedTableBatch else tables
-          val ranges = math.max(1, stagedBucketRanges)
-          // the exact-cosine finish runs PER BATCH, so the accumulator
-          // holds only exact-threshold TRUE pairs. Accumulating raw
-          // quantize-passed survivors instead is a measured scale trap: on
-          // a near-orthogonal corpus the [thr − margin, thr) shoulder is
-          // FAT — the survivor set is candidate-scale, and the one deferred
-          // finish at the end re-joined vectors onto all of it at once
-          // (measured 60+ GB spill in that single final stage at sf10,
-          // after every mining batch had stayed bounded). Per-batch finish
-          // does the same total join work in bounded slices, and the
-          // union-distinct is over (id_a, id_b, cosine) with a
-          // deterministic 6-dp cosine — the pair set is identical to the
-          // one-shot plan's (spec-pinned).
-          var acc: DataFrame = null
-          for (g <- (0 until tables).grouped(batch); r <- 0 until ranges) {
-            val s = finish(survivorsFor(g, ranges, r))
-            val prev = acc
-            acc = (if (prev == null) s else prev.union(s).distinct())
-              .localCheckpoint(true, diskOnly)
-            if (prev != null) graft.util.Checkpoints.free(prev)
-            // release the finished batch's SHUFFLE FILES now: Spark frees
-            // shuffle scratch via ContextCleaner when the ShuffleDependency
-            // is garbage-collected, and with the accumulator lineage cut by
-            // the checkpoint nothing references the dead batch — but an
-            // unpressured driver heap may not GC for the whole loop, and
-            // the per-batch band-join scratch then ACCUMULATES on disk
-            // (measured: 16 bounded batches climbed to a 95 GB monotone
-            // peak and exhausted the 78 GB tier that one batch alone fits
-            // in comfortably). An explicit GC per batch keeps peak scratch
-            // at one batch's footprint — the entire point of staging.
-            System.gc()
-          }
-          // the persisted projection served its last consumer (the final
-          // batch's finish ran eagerly into the checkpoint above)
-          baseQ.unpersist(false)
-          // the returned accumulator IS the result (output-sized true
-          // pairs, disk-only blocks); callers drop it when done — the
-          // eager-checkpoint contract shared with the iterative operators.
-          return acc
-        }
-        return finish(survivorsFor(0 until tables))
-      }
-      val sigs = base.select(col("id"), col("unit"),
-        posexplode(array((0 until tables).map(t =>
-          hyperplaneSignature(col("vec"), dim, effBits, table = t)): _*))
-          .as(Seq("tbl", "bucket")))
-      val a =
-        if (!probe) sigs.select(col("tbl"), col("bucket"),
-          col("id").as("id_a"), col("unit").as("unit_a"))
-        else sigs.select(col("tbl"),
-          probedBuckets(col("bucket")).as("bucket"),
-          col("id").as("id_a"), col("unit").as("unit_a"))
+    // The band join is the dominant exchange: every vector ships once per
+    // (table, probe) — 8 tables × 4 probes of a 64-dim double array is
+    // ~16 KB of exchange per vector, the int16 payload ~4 KB. The prefilter
+    // scores candidates on the packed shorts (native BinaryDot16) and keeps
+    // any pair whose quantized cosine clears `threshold − margin`, where
+    // margin bounds the quantization error ANALYTICALLY for unit vectors:
+    // with s = max|x|/32767 ≤ 1/32767, |e_i| ≤ s/2, ‖x‖₁ ≤ √d, the error
+    // telescopes to
+    //   margin(d) = (√d + d/65534)/32767 + d/(4·32767²)
+    //   (≈ 0.000245 at d=64),
+    // plus 1e-6 for the final 6-dp rounding — so every pair the exact finish
+    // would keep survives the prefilter (spec-pinned equality). int16, not
+    // int8, is a measured scale decision: the int8 margin (≈ 0.066 at d=64)
+    // left a candidate-scale [thr − margin, thr) shoulder of false survivors
+    // on a near-orthogonal corpus, whose distinct() sort was the measured
+    // 60 GB spill at sf10; the ~250× tighter int16 margin collapses
+    // survivors to output scale for 2× the band-join payload (SCALING.md)
+    val margin = (math.sqrt(dim) + dim / 65534.0) / 32767.0 +
+      dim / (4.0 * 32767.0 * 32767.0) + 1e-6
+    val staged = stagedTableBatch > 0 && stagedTableBatch < tables
+    val diskOnly = org.apache.spark.storage.StorageLevel.DISK_ONLY
+    // Staged mining consumes this projection ~3× PER BATCH (the batch's
+    // signature scan plus its finish's two unit joins). One DISK_ONLY
+    // materialization replaces them: it is corpus-ROW-sized and constant in
+    // the batch count, so it cannot grow with the staging depth; disk-only
+    // because the staged tier's executor memory belongs to the band-join
+    // sorts. Freed after the last batch.
+    val units = {
+      val q = unitVectors(df, idCol, vecCol)
+        .withColumn("qb", graft.functions.KFunctions.pack_unit_int16(col("unit")))
+        .withColumn("qs", array_max(transform(col("unit"), x => abs(x))) / 32767.0d)
+      if (staged) q.persist(diskOnly) else q
+    }
+    // steps 2-5 for a subset of the tables: distinct quantized-survivor
+    // id pairs
+    def survivors(ts: Seq[Int]): DataFrame = {
+      val sigs = bandRows(units, dim, effBits, ts, col("id"), col("qb"), col("qs"))
+      val a = sigs.select(col("tbl"),
+        if (flipBits.isEmpty) col("bucket")
+        else explode(probeBuckets(col("bucket"), flipBits)).as("bucket"),
+        col("id").as("id_a"), col("qb").as("qb_a"), col("qs").as("qs_a"))
       val b = sigs.select(col("tbl"), col("bucket"),
-        col("id").as("id_b"), col("unit").as("unit_b"))
-      return a.join(b, Seq("tbl", "bucket"))
+        col("id").as("id_b"), col("qb").as("qb_b"), col("qs").as("qs_b"))
+      a.join(b, Seq("tbl", "bucket"))
         .filter(col("id_a") < col("id_b"))
-        .withColumn("cosine", round(
-          graft.functions.KFunctions.array_dot(col("unit_a"), col("unit_b")), 6))
-        .filter(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        .filter(graft.functions.KFunctions.binary_dot16(col("qb_a"), col("qb_b"))
+          .cast("double") * col("qs_a") * col("qs_b") >= threshold - margin)
+        .select("id_a", "id_b")
         .distinct()
     }
-    val sigs = base.withColumn("bucket", hyperplaneSignature(col("vec"), dim, effBits))
-      .select("id", "bucket", "unit")
-    // Multi-probe recovers the recall narrowing costs: the probe side also
-    // visits 1-bit-flipped buckets, so pairs whose signatures differ in
-    // exactly one flipped hyperplane sign become candidates again. A pair
-    // differing in bit j is found from BOTH orientations (x's flip hits y's
-    // bucket and vice versa), so the id_a < id_b filter still yields each
-    // pair exactly once and no dedup shuffle is needed.
-    //
-    // WHICH bits get flipped is the cost/recall knob: when the probe is the
-    // AUTOMATIC companion of occupancy widening, only the widened bits
-    // [bits, effBits) are flipped — that restores precisely the candidates
-    // the widening removed (pairs equal on the requested bits, off by one
-    // widened sign) at (effBits-bits+1)× candidate volume instead of
-    // (effBits+1)×. A caller forcing multiProbe=true gets all bits flipped
-    // (deliberate recall boost past the requested width). Either way, ≥2-bit
-    // differences remain the accepted LSH miss. (Flip set: the shared
-    // flipBits/probedBuckets above — identical policy in both branches.)
-    val a =
-      if (!probe)
-        sigs.select(col("bucket"), col("id").as("id_a"), col("unit").as("unit_a"))
-      else sigs.select(
-        probedBuckets(col("bucket")).as("bucket"),
-        col("id").as("id_a"), col("unit").as("unit_a"))
-    val b = sigs.select(col("bucket"), col("id").as("id_b"), col("unit").as("unit_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(
-        graft.functions.KFunctions.array_dot(col("unit_a"), col("unit_b")), 6))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    // step 6: full unit vectors re-attached BY ID to the distinct survivor
+    // pairs (output-sized, not candidate-sized); Catalyst prunes the
+    // quantized columns away on the unpersisted path
+    def finish(pairs: DataFrame): DataFrame = cosineCut(pairs
+      .join(units.select(col("id").as("id_a"), col("unit").as("unit_a")), Seq("id_a"))
+      .join(units.select(col("id").as("id_b"), col("unit").as("unit_b")), Seq("id_b")),
+      threshold)
+    if (!staged) return finish(survivors(0 until tables))
+    // Staged mining (the bounded-spill configuration): each table batch is
+    // its own EAGER job, its exact pairs distinct-unioned into a checkpointed
+    // accumulator. The band-join sort's scratch-disk spill — the resource
+    // that exhausted the 78 GB tier at sf10 (SCALING.md) — peaks at
+    // batch/tables of the one-shot plan's, for one corpus scan per batch.
+    // The finish runs PER BATCH so the accumulator holds exact pairs only
+    // (a deferred finish over all raw survivors measured 60+ GB of spill in
+    // its single final stage at sf10); the pair set equals the one-shot
+    // plan's (union-distinct over an exact partition of the candidates,
+    // deterministic 6-dp cosine — spec-pinned). DISK_ONLY checkpoints: the
+    // default level unrolled each batch's pairs in the memory store while
+    // the band-join sorts held their pages (a measured heap OOM at sf10).
+    var acc: DataFrame = null
+    for (g <- (0 until tables).grouped(stagedTableBatch)) {
+      val s = finish(survivors(g))
+      val prev = acc
+      acc = (if (prev == null) s else prev.union(s).distinct())
+        .localCheckpoint(true, diskOnly)
+      if (prev != null) graft.util.Checkpoints.free(prev)
+      // release the finished batch's SHUFFLE FILES now: ContextCleaner frees
+      // them only when the ShuffleDependency is garbage-collected, and an
+      // unpressured driver heap may not GC for the whole loop — the
+      // per-batch scratch then ACCUMULATES on disk (measured: 16 bounded
+      // batches climbed to a 95 GB peak on a 78 GB tier that one batch fits
+      // in comfortably)
+      System.gc()
+    }
+    units.unpersist(false)
+    acc
   }
 
   /** SemDeDup-style semantic near-dup candidates (Abbas et al. 2023,
@@ -931,15 +784,19 @@ object Dedup {
     * [[Clusters.dropDuplicateGroups]] to keep one canonical doc per
     * semantic-dup group.
     *
+    * Fit and assignment are [[SemDedup.fitAssign]]'s (so the zero-norm/NaN
+    * exclusion of [[unitVectors]] runs before the fit, and a single cell,
+    * k = 1, takes the mean centroid instead of Spark ML's k ≥ 2 k-means);
+    * the pair search is [[cellPairs]].
+    *
     * Scale shape: the quadratic term is Σ clusterSize², bounded by the
     * caller through `nClusters` (size ≈ n/k for k-means' roughly balanced
     * cells — the paper's own tractability argument). The cluster id is the
     * join key, so the only data-sized exchange is one hash shuffle of the
-    * UNIT-normalized vectors on `list`; normalization runs map-side exactly
-    * as [[embeddingPairs]], with the same zero-norm/NaN hardening. Unlike
-    * the hyperplane-LSH path this misses only CROSS-cluster pairs (no
-    * banding loss inside a cell) — audit with the measured
-    * `exact_pair_recall` column like every approximate family here.
+    * UNIT-normalized vectors on `list`. Unlike the hyperplane-LSH path this
+    * misses only CROSS-cluster pairs (no banding loss inside a cell) — audit
+    * with the measured `exact_pair_recall` column like every approximate
+    * family here.
     *
     * Canonical-winner note: the paper keeps the member farthest from the
     * cluster centroid; this repo keeps the MINIMUM id everywhere (the
@@ -975,39 +832,9 @@ object Dedup {
                     maxClusters: Int = 512,
                     knownCount: Option[Long] = None,
                     maxTrainRows: Int = 200000, maxIter: Int = 10): DataFrame = {
-    require(nClusters >= 1, s"nClusters must be >= 1: $nClusters")
-    require(targetCellSize >= 2 && maxTrainRows >= maxClusters,
-      "targetCellSize >= 2 and maxTrainRows >= maxClusters required")
-    val n = knownCount.getOrElse(df.count())
-    val k = math.max(nClusters,
-      math.min(maxClusters.toLong, n / targetCellSize + 1L).toInt)
-    import org.apache.spark.ml.functions.array_to_vector
-    val feats = df.withColumn("__sem_vec",
-      array_to_vector(col(vecCol).cast("array<double>")))
-    val trainFrac = math.min(1.0, maxTrainRows.toDouble / math.max(n, 1L))
-    val train =
-      if (trainFrac < 1.0) feats.sample(withReplacement = false, trainFrac, seed)
-      else feats
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setSeed(seed).setMaxIter(maxIter)
-      .setFeaturesCol("__sem_vec").setPredictionCol("list")
-      .fit(train)
-    val assigned = model.transform(feats).drop("__sem_vec")
-    val vd = col(vecCol).cast("array<double>")
-    val base = assigned.select(col(idCol).as("id"), col("list"), vd.as("vec"))
-      .withColumn("norm",
-        sqrt(graft.functions.KFunctions.array_dot(col("vec"), col("vec"))))
-      .filter(col("norm") =!= 0.0d && !isnan(col("norm")))
-      .withColumn("unit", transform(col("vec"), x => x / col("norm")))
-      .select("id", "list", "unit")
-    val a = base.select(col("list"), col("id").as("id_a"), col("unit").as("unit_a"))
-    val b = base.select(col("list"), col("id").as("id_b"), col("unit").as("unit_b"))
-    a.join(b, Seq("list"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(
-        graft.functions.KFunctions.array_dot(col("unit_a"), col("unit_b")), 6))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    val (assigned, _) = SemDedup.fitAssign(df, idCol, vecCol, nClusters, seed,
+      targetCellSize, maxClusters, maxTrainRows, maxIter, knownCount)
+    cellPairs(assigned, threshold)
   }
 
   /** Substring-level duplication surface — the span-granular counterpart of

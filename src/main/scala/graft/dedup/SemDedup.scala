@@ -88,19 +88,9 @@ object SemDedup {
     val assigned = graft.text.CorpusPipeline.materializeStage(
       assignedPlan, staging, "semdedup-assigned")
 
-    // within-cluster candidate pairs — the cluster id is the join key, so
-    // the exchange partitions by cluster and each task's pair expansion is
-    // bounded by its clusters' |c|²
-    val a = assigned.select(col("list"), col("id").as("id_a"),
-      col("unit").as("unit_a"))
-    val b = assigned.select(col("list"), col("id").as("id_b"),
-      col("unit").as("unit_b"))
-    val pairs = a.join(b, Seq("list"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(
-        graft.functions.KFunctions.array_dot(col("unit_a"), col("unit_b")), 6))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b")
+    // within-cluster pairs: the cluster id is the join key, so each task's
+    // pair expansion is bounded by its clusters' |c|²
+    val pairs = Dedup.cellPairs(assigned, threshold).select("id_a", "id_b")
 
     val comps = Clusters.connectedComponents(pairs,
       checkpointDir = checkpointDir)
@@ -137,9 +127,10 @@ object SemDedup {
       .select("id", "list", "component", "centroid_cos", "keep")
   }
 
-  /** The fit-and-assign front half of [[semanticDedup]], exposed so the
-    * battery's fixture-split oracle can persist the `(id, unit, list)`
-    * assignment after the (un-oracleable, iterative) k-means fit and
+  /** The fit-and-assign front half of [[semanticDedup]] and
+    * [[Dedup.semanticPairs]], also exposed so the battery's fixture-split
+    * oracle can persist the `(id, unit, list)` assignment after the
+    * (un-oracleable, iterative) k-means fit and
     * recompute the relational back half — within-cluster cosine grouping +
     * least-centroid-similar exemplar selection — in BOTH engines. Returns
     * the UNmaterialized assignment plan `(id, unit, list)` (unit = the
@@ -156,19 +147,12 @@ object SemDedup {
     require(nClusters >= 1, s"nClusters must be >= 1, got $nClusters")
     require(targetCellSize >= 2 && maxTrainRows >= maxClusters,
       "targetCellSize >= 2 and maxTrainRows >= maxClusters required")
-    val vd = col(vecCol).cast("array<double>")
-    // zero-norm / NaN vectors can't cosine-compare — exclude them up front
-    // (same hardening as embeddingPairs: an all-NaN row would otherwise
-    // poison its whole cluster with NaN cosines)
-    val base = corpus.select(col(idCol).as("id"), vd.as("vec"))
-      .withColumn("norm",
-        sqrt(graft.functions.KFunctions.array_dot(col("vec"), col("vec"))))
-      .filter(col("norm") =!= 0.0d && !isnan(col("norm")))
-      .withColumn("unit", transform(col("vec"), x => x / col("norm")))
-      .select("id", "vec", "unit")
-    // occupancy-scaled cell count — nClusters is the floor, never the k
-    // (same clamp as Dedup.semanticPairs; a fixed k is the silent-quadratic
-    // trap its cost model documents)
+    // zero-norm / NaN vectors are excluded before the fit: an all-NaN row
+    // would otherwise poison its whole cluster with NaN cosines
+    val base = Dedup.unitVectors(corpus, idCol, vecCol).select("id", "vec", "unit")
+    // occupancy-scaled cell count — nClusters is the floor, never the k (a
+    // fixed k is the silent-quadratic trap Dedup.semanticPairs' cost model
+    // documents)
     val n = knownCount.getOrElse(base.count())
     val k = math.max(nClusters,
       math.min(maxClusters.toLong, n / targetCellSize + 1L).toInt)

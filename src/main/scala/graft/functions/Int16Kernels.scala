@@ -6,143 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Per-vector symmetric int8 quantization of an `array<double>` to a
-  * `binary` payload: `byte_i = round(x_i / s)` with `s = max|x| / 127`.
-  *
-  * This is the shuffle-compression rung for pairwise similarity: the
-  * embedding-LSH candidate join moves every vector once per (table, probe)
-  * — at 8 tables × 4 probes a 64-dim double array costs ~20 KB of exchange
-  * per vector, the same payload as int8 bytes costs ~2.5 KB. The scale is
-  * NOT stored here (binary stays a plain byte payload); callers reconstruct
-  * it as `array_max(abs(x)) / 127` on the row — one cheap pass per ROW,
-  * while the dot products that consume the bytes run once per candidate
-  * PAIR.
-  *
-  * An all-zero vector (max|x| = 0) quantizes to all-zero bytes. NULL array
-  * or any NULL element → NULL (same contract as [[DoubleArrayDot]]).
-  * Elements are clamped to [-127, 127], which by construction only guards
-  * float noise — |x_i| ≤ max|x| means |x_i / s| ≤ 127 exactly.
-  */
-case class PackUnitInt8(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"pack_unit_int8 expects array<double>, got ${dt.catalogString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pack_unit_int8"
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    var maxAbs = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i)) return null
-      val v = math.abs(a.getDouble(i))
-      if (v > maxAbs) maxAbs = v
-      i += 1
-    }
-    val out = new Array[Byte](n)
-    if (maxAbs > 0.0) {
-      val s = maxAbs / 127.0
-      i = 0
-      while (i < n) {
-        val q = Math.round(a.getDouble(i) / s)
-        out(i) = math.max(-127L, math.min(127L, q)).toByte
-        i += 1
-      }
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val maxAbs = ctx.freshName("maxAbs")
-      val s = ctx.freshName("s")
-      val q = ctx.freshName("q")
-      val out = ctx.freshName("out")
-      s"""
-         |final int $n = $a.numElements();
-         |double $maxAbs = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double __v = Math.abs($a.getDouble($i));
-         |  if (__v > $maxAbs) $maxAbs = __v;
-         |}
-         |if (!${ev.isNull}) {
-         |  byte[] $out = new byte[$n];
-         |  if ($maxAbs > 0.0) {
-         |    double $s = $maxAbs / 127.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      long $q = Math.round($a.getDouble($i) / $s);
-         |      $out[$i] = (byte) Math.max(-127L, Math.min(127L, $q));
-         |    }
-         |  }
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PackUnitInt8 =
-    copy(child = newChild)
-}
-
-/** Dot product of two int8 `binary` payloads (signed bytes) as a native
-  * codegen expression: `Σ a_i · b_i` over the raw byte values, returned as
-  * int (64 dims × 127² fits far inside Int range; ≤ ~130k dims before
-  * overflow). NULL when either side is NULL or lengths differ — the same
-  * shape contract as [[DoubleArrayDot]].
-  */
-case class BinaryDot(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!left.resolved || !right.resolved ||
-      (left.dataType == BinaryType && right.dataType == BinaryType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"binary_dot expects (binary, binary), got " +
-        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "binary_dot"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[Array[Byte]]
-    val b = r.asInstanceOf[Array[Byte]]
-    if (a.length != b.length) return null
-    var sum = 0
-    var i = 0
-    while (i < a.length) { sum += a(i) * b(i); i += 1 }
-    sum
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-         |if ($a.length != $b.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $sum = 0;
-         |  for (int $i = 0; $i < $a.length; $i++) $sum += $a[$i] * $b[$i];
-         |  ${ev.value} = $sum;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): BinaryDot =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Per-vector symmetric int16 quantization of an `array<double>` to a
   * little-endian 2-bytes-per-element `binary` payload:
   * `short_i = round(x_i / s)` with `s = max|x| / 32767`.
@@ -151,16 +14,22 @@ case class BinaryDot(left: Expression, right: Expression) extends BinaryExpressi
   * mining ([[graft.dedup.Dedup.embeddingPairs]]): the filter must keep
   * every pair whose EXACT cosine clears the threshold, so its cut line
   * sits at `threshold − margin(d)` where margin bounds the quantization
-  * error analytically. At int8 the margin is ≈ √d/127 (0.066 at d=64) —
-  * on a near-orthogonal corpus the [thr−margin, thr) shoulder is FAT, the
-  * survivor set is candidate-scale, and the survivors' distinct() sort
-  * was the measured 60 GB spill that forced staged mining on bounded
+  * error analytically. At int8 the margin would be ≈ √d/127 (0.066 at
+  * d=64) — on a near-orthogonal corpus the [thr−margin, thr) shoulder is
+  * FAT, the survivor set is candidate-scale, and the survivors' distinct()
+  * sort was the measured 60 GB spill that forced staged mining on bounded
   * scratch tiers. At int16 the margin is ≈ √d/32767 (0.00025 at d=64):
   * survivors collapse to output-scale and the spill disappears, for 2×
   * the exchange payload (still 4× smaller than raw doubles).
   *
-  * Same contracts as [[PackUnitInt8]]: all-zero vector → all-zero bytes;
-  * NULL array or element → NULL; clamp guards float noise only.
+  * The scale is NOT stored here (binary stays a plain payload); callers
+  * reconstruct it as `array_max(abs(x)) / 32767` on the row — one cheap
+  * pass per ROW, while the dots that consume the bytes run once per
+  * candidate PAIR. An all-zero vector (max|x| = 0) quantizes to all-zero
+  * bytes. NULL array or any NULL element → NULL (same contract as
+  * [[DoubleArrayDot]]). Elements are clamped to [-32767, 32767], which by
+  * construction only guards float noise — |x_i| ≤ max|x| means
+  * |x_i / s| ≤ 32767 exactly.
   */
 case class PackUnitInt16(child: Expression) extends UnaryExpression {
 

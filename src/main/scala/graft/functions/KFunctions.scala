@@ -160,18 +160,9 @@ object KFunctions {
   def nearest_centroid(v: Column, centroids: Array[Array[Double]]): Column =
     exprCol(NearestCentroid(exprOf(v), centroids))
 
-  /** Per-vector int8 quantization to a binary payload (see [[PackUnitInt8]]) —
-    * the shuffle-compression form of a vector for pairwise candidate joins.
-    */
-  def pack_unit_int8(v: Column): Column = exprCol(PackUnitInt8(exprOf(v)))
-
-  /** Signed-byte dot of two int8 binary payloads (see [[BinaryDot]]). */
-  def binary_dot(a: Column, b: Column): Column =
-    exprCol(BinaryDot(exprOf(a), exprOf(b)))
-
   /** Per-vector int16 quantization to a little-endian binary payload (see
-    * [[PackUnitInt16]]) — the tight-margin prefilter form: ~250× smaller
-    * analytic error bound than int8 for 2× the payload.
+    * [[PackUnitInt16]]) — the shuffle-compressed, tight-margin prefilter
+    * form of a vector for pairwise candidate joins.
     */
   def pack_unit_int16(v: Column): Column = exprCol(PackUnitInt16(exprOf(v)))
 

@@ -42,17 +42,8 @@ object OffsetMappingStore {
   def toJson(m: OffsetMapping): String = Serialization.writePretty(m)
   def fromJson(s: String): OffsetMapping = JsonMethods.parse(s).extract[OffsetMapping]
 
-  // the ACTIVE session's Hadoop conf, like Manifest.hadoopConf — a fresh
-  // Configuration() would drop every spark.hadoop.* setting (s3a creds,
-  // endpoints), making the mapping the one artifact that fails auth on a
-  // remote backupRoot while manifest and segment IO succeed
-  private def fs(root: String) = {
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-  }
+  private def fs(root: String) =
+    new org.apache.hadoop.fs.Path(root).getFileSystem(graft.util.ActiveHadoopConf())
 
   def path(root: String, backupId: String) = s"$root/$backupId/$FileName"
 

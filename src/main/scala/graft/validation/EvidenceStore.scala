@@ -17,7 +17,7 @@ import java.security.KeyPair
 object EvidenceStore {
 
   private def fs(root: String) = org.apache.hadoop.fs.FileSystem.get(
-    new java.net.URI(root), new org.apache.hadoop.conf.Configuration())
+    new java.net.URI(root), graft.util.ActiveHadoopConf())
 
   private def put(root: String, key: String, bytes: Array[Byte]): Unit = {
     val f = fs(root)

@@ -622,4 +622,12 @@ class BackupRestoreSpec extends SparkSpec {
 class RuntimeSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftrt"
   override def getUri: java.net.URI = java.net.URI.create("graftrt:///")
+  // listings as plain statuses: the local ones load their permissions
+  // through java.io.File, which rejects any scheme but file:, so a
+  // recursive listFiles would fail on this scheme alone
+  override def listStatus(f: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] =
+    super.listStatus(f).map(s => new org.apache.hadoop.fs.FileStatus(s.getLen,
+      s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime,
+      s.getPath))
 }

@@ -50,9 +50,8 @@ class ChaosSpec extends SparkSpec {
 
   test("task death inside a staged-mining batch: retry converges to the exact one-shot pair set") {
     import spark.implicits._
-    // the bounded-spill machinery (batch jobs over (table-group × bucket-
-    // hash range), DISK_ONLY checkpoint accumulator, per-batch exact
-    // finish) must survive a task death mid-batch like every other
+    // the bounded-spill machinery (one batch job per table group, DISK_ONLY
+    // checkpoint accumulator, per-batch exact finish) must survive a task death mid-batch like every other
     // multi-job writer in the repo: the retried batch re-mines its exact
     // candidate partition and the union-distinct accumulator ends
     // pair-identical to the undisturbed run
@@ -73,7 +72,7 @@ class ChaosSpec extends SparkSpec {
       graft.dedup.Dedup.embeddingPairs(input, "vec_id", "embedding",
         dim = 16, bits = 5, threshold = 0.8, tables = 4,
         knownCount = Some(144L),
-        stagedTableBatch = 2, stagedBucketRanges = 2)
+        stagedTableBatch = 2)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
         .toMap
     val undisturbed = pairsOf(df)

@@ -300,35 +300,6 @@ class DataOpsSpec extends SparkSpec {
     single.foreach { case (k, v) => assert(multi(k) == v) }
   }
 
-  test("int8 kernels: pack/dot match a scala reference, null and shape semantics") {
-    import spark.implicits._
-    val vs = Seq(
-      (1L, Array(0.9, -0.3, 0.1, 0.0)),
-      (2L, Array(0.5, 0.5, -0.5, 0.5)),
-      (3L, Array(0.0, 0.0, 0.0, 0.0)), // all-zero → all-zero bytes
-      (4L, Array(1e-9, -1e-9, 0.0, 0.0)) // tiny scale still exact shape
-    ).toDF("id", "v").withColumn("v", col("v").cast("array<double>"))
-    val out = vs.select(col("id"),
-        graft.functions.KFunctions.pack_unit_int8(col("v")).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("b")).toMap
-    def ref(a: Array[Double]): Array[Byte] = {
-      val m = a.map(math.abs).max
-      if (m == 0) Array.fill(a.length)(0: Byte)
-      else a.map(x => Math.round(x / (m / 127.0)).toByte)
-    }
-    assert(out(1L).sameElements(ref(Array(0.9, -0.3, 0.1, 0.0))))
-    assert(out(2L).sameElements(ref(Array(0.5, 0.5, -0.5, 0.5))))
-    assert(out(3L).sameElements(Array[Byte](0, 0, 0, 0)))
-    // dot: scala reference, length mismatch → null
-    val d = spark.range(1).select(
-      graft.functions.KFunctions.binary_dot(
-        lit(Array[Byte](1, -2, 3)), lit(Array[Byte](4, 5, -6))).as("d"),
-      graft.functions.KFunctions.binary_dot(
-        lit(Array[Byte](1)), lit(Array[Byte](1, 2))).as("m")).head()
-    assert(d.getInt(0) == 1 * 4 + -2 * 5 + 3 * -6)
-    assert(d.isNullAt(1))
-  }
-
   test("int16 kernels: pack/dot match a scala reference; round-trip dot is inside the analytic margin") {
     import spark.implicits._
     val vs = Seq(
@@ -408,51 +379,50 @@ class DataOpsSpec extends SparkSpec {
       (1000L + id, baseVecs(id.toInt - 1)._2.map(x =>
         x + (rnd.nextFloat() - 0.5f) * 0.1f)))
     val df = (baseVecs ++ clones).toDF("vec_id", "embedding")
-    // probe=true exercises the probedBuckets leg of the prefilter branch —
+    // the reference: the same band candidates, scored by a plain-Scala exact
+    // cosine (sequential double dots, Spark's HALF_UP 6-dp round) — no
+    // quantization, no prefilter, no staging
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val units = (baseVecs ++ clones).map { case (id, v) =>
+      val d = v.map(_.toDouble)
+      val n = math.sqrt(dot(d, d))
+      id -> d.map(_ / n)
+    }.toMap
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // 240 rows at bits=5/default targetBucketSize never trigger occupancy
-    // widening, so without the explicit multiProbe case that leg would go
-    // untested (advisor finding)
+    // widening, so the explicit multiProbe case is what exercises the
+    // probe leg of the band join
+    val effBits = Dedup.effectiveBits(240L, 5, 1024)
+    assert(effBits == 5)
     for (thr <- Seq(0.3, 0.8); probe <- Seq(false, true)) {
-      def run(q: Boolean, idOnly: Boolean = false, staged: Int = 0,
-              ranges: Int = 0) =
-        Dedup.embeddingPairs(df, "vec_id", "embedding",
-          dim = 16, bits = 5, threshold = thr, tables = 8,
-          multiProbe = probe, quantizedPrefilter = q, idOnlyBand = idOnly,
-          stagedTableBatch = staged, stagedBucketRanges = ranges)
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      val direct = run(false)
-      val pre = run(true)
-      // the bounded-spill staged mining (2 and 3 tables per batch — 3
-      // leaves a ragged final batch) is pair-identical too
-      for (batch <- Seq(2, 3)) {
-        val st = run(true, staged = batch)
-        assert(st == direct,
-          s"thr=$thr probe=$probe batch=$batch: staged mining drifted; " +
-            s"missing=${(direct.keySet -- st.keySet).take(5)}, " +
-            s"extra=${(st.keySet -- direct.keySet).take(5)}")
+      val flips = if (probe) 0 until effBits else Seq.empty[Int]
+      val reference = Dedup.bandPairsFromSigs(Dedup.embeddingBandSignatures(df,
+          "vec_id", "embedding", dim = 16, bits = effBits, tables = 8,
+          flipBits = flips))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .map(p => p -> round6(dot(units(p._1), units(p._2))))
+        .filter(_._2 >= thr).toMap
+      assert(reference.nonEmpty, s"thr=$thr fixture must produce pairs")
+      // one-shot (0), then the bounded-spill staged mining at 2 and 3
+      // tables per batch (3 leaves a ragged final batch)
+      for (staged <- Seq(0, 2, 3)) {
+        val got = Dedup.embeddingPairs(df, "vec_id", "embedding",
+            dim = 16, bits = 5, threshold = thr, tables = 8,
+            multiProbe = probe, stagedTableBatch = staged)
+          .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+        assert(got == reference,
+          s"thr=$thr probe=$probe staged=$staged: got=${got.size} " +
+            s"reference=${reference.size}; " +
+            s"missing=${(reference.keySet -- got.keySet).take(5)}, " +
+            s"extra=${(got.keySet -- reference.keySet).take(5)}, " +
+            s"cosine drift=${got.filter(kv => reference.get(kv._1).exists(_ != kv._2)).take(5)}")
       }
-      // the bucket-hash range split partitions the candidate set exactly —
-      // pair-identical with table batching (the sf10 78 GB configuration)
-      // and alone (batch = all tables, ranges only)
-      for ((batch, ranges) <- Seq((2, 4), (0, 3))) {
-        val st = run(true, staged = batch, ranges = ranges)
-        assert(st == direct,
-          s"thr=$thr probe=$probe batch=$batch ranges=$ranges: range-staged " +
-            s"mining drifted; " +
-            s"missing=${(direct.keySet -- st.keySet).take(5)}, " +
-            s"extra=${(st.keySet -- direct.keySet).take(5)}")
-      }
-      assert(pre == direct,
-        s"thr=$thr probe=$probe: prefiltered=${pre.size} direct=${direct.size}; " +
-          s"missing=${(direct.keySet -- pre.keySet).take(5)}, " +
-          s"extra=${(pre.keySet -- direct.keySet).take(5)}")
-      // both band-exchange shapes of the prefilter are pair-identical
-      val idb = run(true, idOnly = true)
-      assert(idb == direct,
-        s"thr=$thr probe=$probe: id-only band drifted; " +
-          s"missing=${(direct.keySet -- idb.keySet).take(5)}, " +
-          s"extra=${(idb.keySet -- direct.keySet).take(5)}")
-      assert(direct.nonEmpty, s"thr=$thr fixture must produce pairs")
     }
   }
 
@@ -528,6 +498,43 @@ class DataOpsSpec extends SparkSpec {
     val pz = Dedup.semanticPairs(withZero, "vec_id", "embedding",
       nClusters = 4, threshold = 0.999)
     assert(!pz.collect().exists(r => r.getLong(0) == 999L || r.getLong(1) == 999L))
+  }
+
+  test("semanticPairs with one cell (k = 1) returns exactly the brute-force pairs") {
+    import spark.implicits._
+    // nClusters = 1 on fewer than targetCellSize rows gives k = 1: one cell
+    // holding every vector, so the pair set is the brute-force one
+    def pseudo(id: Long, j: Int): Float = {
+      val x = math.sin(id * 12.9898 + j * 78.233) * 43758.5453
+      ((x - math.floor(x)) - 0.5).toFloat
+    }
+    val rows = (1L to 50L).map(id => (id, Array.tabulate(4)(pseudo(id, _))))
+    val df = rows.toDF("vec_id", "embedding")
+    val got = Dedup.semanticPairs(df, "vec_id", "embedding",
+        nClusters = 1, threshold = 0.8)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val units = rows.map { case (id, v) =>
+      val d = v.map(_.toDouble)
+      val n = math.sqrt(dot(d, d))
+      id -> d.map(_ / n)
+    }.toMap
+    val brute = (for {
+      (a, ua) <- units.toSeq
+      (b, ub) <- units.toSeq
+      if a < b
+      c = BigDecimal(dot(ua, ub)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if c >= 0.8
+    } yield (a, b) -> c).toMap
+    assert(brute.nonEmpty, "fixture must produce pairs")
+    assert(got == brute, s"got=${got.size} brute=${brute.size}; " +
+      s"missing=${(brute.keySet -- got.keySet).take(5)}, " +
+      s"extra=${(got.keySet -- brute.keySet).take(5)}")
   }
 
   test("approximate battery entries carry measured recall above their floors") {

@@ -238,6 +238,29 @@ class ProduceEvidenceSpec extends SparkSpec {
     assert(!EvidenceStore.verify(root, "evidence/nope/2024/09/nope.json"))
   }
 
+  test("evidence store resolves its FileSystem through the session's Hadoop conf") {
+    import graft.validation.{Evidence, EvidenceReport, EvidenceStore}
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the scheme exists only in the session's conf; with the FileSystem
+    // cache off for it, every lookup resolves it from the conf it is given
+    conf.set("fs.graftrt.impl", classOf[RuntimeSchemeFileSystem].getName)
+    conf.setBoolean("fs.graftrt.impl.disable.cache", true)
+    try {
+      val root = "graftrt:" +
+        java.nio.file.Files.createTempDirectory("graft-evrt").toString
+      val r = EvidenceReport("b7", 1700000000456L, 20, 2, "ef" * 32,
+        Map("message_count" -> "Passed"))
+      val key = EvidenceStore.save(root, "evidence", r,
+        Evidence.generateKeyPair(), nowMs = 1726000000000L)
+      assert(EvidenceStore.list(root, "evidence") == Seq(key))
+      assert(EvidenceStore.load(root, key) == r)
+      assert(EvidenceStore.verify(root, key))
+    } finally {
+      conf.unset("fs.graftrt.impl")
+      conf.unset("fs.graftrt.impl.disable.cache")
+    }
+  }
+
   test("evidence PDF: valid single-page document carrying the report content") {
     import graft.validation.{EvidencePdf, EvidenceReport}
     val r = EvidenceReport("b9", 1700000000123L, 500, 4, "cd" * 32,
