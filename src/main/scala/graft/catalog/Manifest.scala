@@ -3,7 +3,6 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
-import java.nio.charset.StandardCharsets
 
 /** Per-segment statistics — a min/max catalog entry
   * (crates/kafka-backup-core/src/manifest.rs:7-165). Offset and timestamp
@@ -47,8 +46,9 @@ case class TopicBackup(
       if (partitions.isEmpty) 1 else partitions.map(_.partition_id).max + 1)
 }
 
-/** The backup catalog, stored as JSON at `{backup_id}/manifest.json`
-  * (backup/engine.rs:1219).
+/** The backup catalog: committed as the versioned log
+  * `{backup_id}/_graft_log/<v>` and exported as JSON at
+  * `{backup_id}/manifest.json` (backup/engine.rs:1219).
   */
 case class BackupManifest(
     backup_id: String,
@@ -110,61 +110,63 @@ object Manifest {
 
   def path(backupRoot: String, backupId: String): String = s"$backupRoot/$backupId/manifest.json"
 
-  private def fs(backupRoot: String) = org.apache.hadoop.fs.FileSystem.get(
-    new java.net.URI(backupRoot), graft.util.ActiveHadoopConf())
-
-  // serializes read-merge-write within this JVM (the reference's save_lock,
-  // backup/engine.rs:40-47); cross-process writers of the SAME backup_id
-  // still race — coordinate those at the orchestration layer
-  private val saveLock = new Object
-
-  /** Atomic read-modify-write save with merge (K2): union with any manifest
-    * already in storage so concurrent/partial runs stay discoverable. Goes
-    * through Hadoop FS, so remote roots (s3a://, abfss://, gs://) work the
-    * same as local paths.
+  /** The catalog a backup without a log entry has: its `manifest.json`
+    * read as version 0 (every backup written before the log existed, and
+    * the reference's own backups), or none.
     */
-  def save(backupRoot: String, m: BackupManifest): BackupManifest = saveLock.synchronized {
-    val f = fs(backupRoot)
-    val p = new org.apache.hadoop.fs.Path(path(backupRoot, m.backup_id))
-    val merged = if (f.exists(p)) load(backupRoot, m.backup_id).merge(m) else m
-    // Two save strategies, chosen by filesystem semantics:
-    //  - file/hdfs/viewfs: write-tmp-then-rename — FileContext.rename(
-    //    OVERWRITE) is atomic there, so a crash mid-write can never truncate
-    //    the previously valid manifest;
-    //  - ADLS (abfs/wasb) renames are atomic metadata ops — rename path too;
-    //  - s3/gs object stores: ONE overwrite-create PUT, committed atomically
-    //    at close. A rename there is delete+server-side-copy: a crash between
-    //    the two leaves the backup with NO manifest — worse than the
-    //    torn-write risk the rename exists to prevent (and some schemes have
-    //    no FileContext binding at all).
-    val atomicRename = Set("file", "hdfs", "viewfs", "abfs", "abfss", "wasb", "wasbs")
-      .contains(Option(f.getUri.getScheme).getOrElse("file"))
-    if (atomicRename) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, s".manifest.json.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      val os = f.create(tmp, true)
-      try os.write(toJson(merged).getBytes(StandardCharsets.UTF_8)) finally os.close()
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, f.getConf)
-        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch { case e: Throwable =>
-        // leave no orphaned tmp behind on failure, then surface the error
-        try f.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-      }
-    } else {
-      val os = f.create(p, true)
-      try os.write(toJson(merged).getBytes(StandardCharsets.UTF_8)) finally os.close()
+  private def exported(conf: org.apache.hadoop.conf.Configuration, backupRoot: String,
+                       backupId: String): Option[BackupManifest] = {
+    val p = new org.apache.hadoop.fs.Path(path(backupRoot, backupId))
+    val f = p.getFileSystem(conf)
+    Option.when(f.exists(p))(fromJson(graft.util.Sidecar.readText(f, p)))
+  }
+
+  /** Merge `m` into the committed catalog and commit the result as the
+    * next version of `{backup_id}/_graft_log/` — the catalog's commit
+    * point. Segments are durable before their catalog entry is, and the
+    * merge is idempotent, so a lost compare-and-swap (a concurrent save of
+    * the same backup id, in this JVM or another) re-reads the newer
+    * version and merges again; each lost round bumps
+    * `manifest_cas_retry_total`. Goes through Hadoop FS, so remote roots
+    * (s3a://, abfss://, gs://) work the same as local paths.
+    *
+    * `manifest.json` is an export for the reference format, replaced after
+    * each commit through [[graft.util.Sidecar.replace]]. graft itself reads
+    * only the log: under concurrent writers the export may lag the newest
+    * entry (an older writer's export can land last). Every entry holds the
+    * full merged catalog, as `manifest.json` does, so a commit writes
+    * O(catalog) bytes and the log keeps up to
+    * [[graft.util.VersionedLog.KeptVersions]] copies of it.
+    */
+  def save(backupRoot: String, m: BackupManifest): BackupManifest =
+    commitMerged(backupRoot, m, () => ())
+
+  /** [[save]] with a hook run between the catalog read and the commit, so
+    * specs can interleave two writers deterministically.
+    */
+  private[graft] def commitMerged(backupRoot: String, m: BackupManifest,
+                                  beforeCommit: () => Unit): BackupManifest = {
+    val conf = graft.util.ActiveHadoopConf()
+    val (merged, body) = graft.util.VersionedLog.advance(conf,
+      s"$backupRoot/${m.backup_id}", "manifest_cas_retry_total") { entry =>
+      val merged = entry.map(fromJson).orElse(exported(conf, backupRoot, m.backup_id))
+        .fold(m)(_.merge(m))
+      beforeCommit()
+      (merged, toJson(merged))
     }
+    graft.util.Sidecar.replace(conf, new org.apache.hadoop.fs.Path(path(backupRoot, m.backup_id)),
+      body)
     merged
   }
 
+  /** The newest committed catalog; `FileNotFoundException` when the backup
+    * has neither a log entry nor a `manifest.json`.
+    */
   def load(backupRoot: String, backupId: String): BackupManifest = {
-    val f = fs(backupRoot)
-    val in = f.open(new org.apache.hadoop.fs.Path(path(backupRoot, backupId)))
-    try fromJson(new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8))
-    finally in.close()
+    val conf = graft.util.ActiveHadoopConf()
+    graft.util.VersionedLog.latest(conf, s"$backupRoot/$backupId").map(e => fromJson(e._2))
+      .orElse(exported(conf, backupRoot, backupId))
+      .getOrElse(throw new java.io.FileNotFoundException(path(backupRoot, backupId)))
   }
 
   /** Storage key for a segment

@@ -53,7 +53,8 @@ case class BackupConfig(
   * Storage: the driver's Hadoop conf is broadcast once per job. Segments go
   * through [[SegmentFiles]]: plain files on a `file://` root (no `.crc`
   * sidecar; the KBAK footer CRC covers them), Hadoop FS on every other
-  * scheme. `manifest.json` is always written through Hadoop FS.
+  * scheme. The catalog commit ([[Manifest.save]]: the `_graft_log/` entry,
+  * then the `manifest.json` export) always goes through Hadoop FS.
   */
 object Backup {
 

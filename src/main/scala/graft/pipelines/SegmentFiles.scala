@@ -3,10 +3,10 @@ package graft.pipelines
 import java.io.{FileNotFoundException, OutputStream}
 import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Files, NoSuchFileException, StandardOpenOption}
-import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import graft.util.Sidecar
 
 /** Segment object I/O under one backup root, the only way the backup
   * writer and the restore scan touch segment bytes. Built inside a task
@@ -33,17 +33,14 @@ private[graft] final class SegmentFiles(root: String, conf: Configuration) {
   def create(key: String): OutputStream =
     if (!local) fs.create(path(key), true)
     else {
-      val umask = FsPermission.getUMask(conf)
-      def mode(p: FsPermission) = PosixFilePermissions.asFileAttribute(
-        PosixFilePermissions.fromString(p.applyUMask(umask).toString))
       val f = file(key)
-      Files.createDirectories(f.getParent, mode(FsPermission.getDirDefault))
+      Files.createDirectories(f.getParent, Sidecar.localMode(conf, FsPermission.getDirDefault))
       // a sidecar left by an earlier Hadoop write of this key would no longer
       // match, and Hadoop's checksummed reads would reject the new bytes
       Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
       Channels.newOutputStream(FileChannel.open(f, java.util.Set.of(StandardOpenOption.CREATE,
         StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING),
-        mode(FsPermission.getFileDefault)))
+        Sidecar.localMode(conf, FsPermission.getFileDefault)))
     }
 
   /** Read the whole object at `key`. A missing object raises

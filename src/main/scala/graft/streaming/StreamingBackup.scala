@@ -18,10 +18,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - St4 rotation: size-based rolls inside the batch writer; micro-batch
   *    boundaries supply the time-based roll.
   *
-  * Each micro-batch runs the batch Backup pipeline and merges its manifest.
-  * `foreachBatch` executes sequentially per query, which serializes the
-  * read-modify-write manifest merge exactly like the reference's save_lock
-  * (backup/engine.rs:40-47). Sinks are idempotent: segment keys derive from
+  * Each micro-batch runs the batch Backup pipeline and commits its merged
+  * manifest as the next catalog log version ([[Manifest.save]]); concurrent
+  * writers of the same backup id, in any process, re-merge on a lost
+  * compare-and-swap where the reference serializes with its in-process
+  * save_lock (backup/engine.rs:40-47). Sinks are idempotent: segment keys derive from
   * start offsets, manifest merge dedups on (key, start_offset), so batch
   * replay after failure re-writes the same objects (exactly-once effect on
   * top of at-least-once delivery).

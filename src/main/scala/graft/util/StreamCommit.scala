@@ -236,27 +236,6 @@ object StreamCommit {
       LogState(version + 1, watermarks, removed, payload)
   }
 
-  private val LogDir = "_graft_log"
-  /** Log entries kept after a commit: the newest and the nine below it. */
-  private[graft] val KeptVersions = 10
-  private val EntryRe = "([0-9]+)".r
-  private val TempRe = "\\.([0-9]+)\\..*\\.tmp".r
-
-  private def readText(f: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): String = {
-    val in = f.open(p)
-    new String(
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close(),
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  private def logNames(f: org.apache.hadoop.fs.FileSystem, path: String)
-      : Seq[String] =
-    Option(f.globStatus(new org.apache.hadoop.fs.Path(
-      s"${escapeGlob(path)}/$LogDir/*"))).getOrElse(Array.empty).toSeq
-      .map(_.getPath.getName)
-
   /** The layout's current state: the highest-numbered log entry. A layout
     * whose log holds no entry yet reads the sidecar the protocol kept
     * before the log existed (`_bm25_stats.json` or
@@ -265,20 +244,17 @@ object StreamCommit {
     * on; with neither, the state is version 0 and empty.
     */
   private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
-                               path: String): LogState = {
-    val f = fs(spark, path)
-    logNames(f, path).collect { case EntryRe(v) => v.toLong }.maxOption match {
-      case Some(v) =>
-        parseState(v, readText(f, new org.apache.hadoop.fs.Path(
-          s"$path/$LogDir/$v")))
+                               path: String): LogState =
+    VersionedLog.latest(spark.sparkContext.hadoopConfiguration, path) match {
+      case Some((v, body)) => parseState(v, body)
       case None =>
+        val f = fs(spark, path)
         Seq("_bm25_stats.json", "_ingest_watermarks.json")
           .map(n => new org.apache.hadoop.fs.Path(s"$path/$n"))
           .find(f.exists)
-          .map(p => parseLegacy(readText(f, p)))
+          .map(p => parseLegacy(Sidecar.readText(f, p)))
           .getOrElse(LogState(0L, Map.empty, Map.empty, Map.empty))
     }
-  }
 
   private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
 
@@ -328,73 +304,27 @@ object StreamCommit {
       s""""payload":${obj(st.payload)(_.toString)}}"""
   }
 
-  /** Commit `next` as log entry `next.version` — the compare-and-swap every
-    * administrative writer (compaction, guarded removal, BM25's batch
-    * append and index build) goes through. The entry is created with
-    * `CheckpointFileManager.createAtomic(overwriteIfPossible = false)`,
-    * the offset/commit-log primitive of Structured Streaming: write a
-    * temp, rename it to the version's name, refuse if that name exists.
-    * Two writers that read the same version race for the same name and
-    * exactly one wins; the other gets a `FileAlreadyExistsException`,
-    * which this turns into an `IllegalStateException` naming the "CAS
-    * conflict" and the caller's recovery hint (a compaction re-runs
-    * whole; a BM25 batch append must NOT re-run — its postings already
-    * landed), plus an `ingest_log_cas_conflict_total` bump. Rename without
-    * overwrite is atomic on HDFS; on the local, `chaos:` and object-store
-    * filesystems the manager checks for the target before renaming — the
-    * same guarantee Spark's own streaming metadata logs have there.
-    *
-    * Afterwards every entry more than [[KeptVersions]]−1 below the newest
-    * is deleted, along with the temps of crashed or losing writers for
-    * versions already taken. A writer that held its state so long that
-    * its target version had already been deleted by that rule would
-    * re-create a version below the newest: its entry falls outside the
-    * kept window, is deleted by the same pass, and the commit fails as a
-    * CAS conflict.
+  /** Commit `next` as log entry `next.version` through
+    * [[VersionedLog.commit]] — the compare-and-swap every administrative
+    * writer (compaction, guarded removal, BM25's batch append and index
+    * build) goes through. A lost round (the version was already taken, or
+    * fell below the kept window while this writer held its state) becomes
+    * an `IllegalStateException` naming the "CAS conflict" and the caller's
+    * recovery hint (a compaction re-runs whole; a BM25 batch append must
+    * NOT re-run — its postings already landed), plus an
+    * `ingest_log_cas_conflict_total` bump.
     */
   private[graft] def commit(spark: org.apache.spark.sql.SparkSession,
                             path: String, next: LogState,
-                            recoveryHint: String): Unit = {
-    def conflict(what: String): Nothing = {
+                            recoveryHint: String): Unit =
+    VersionedLog.commit(spark.sparkContext.hadoopConfiguration, path,
+      next.version, render(next)).foreach { what =>
       graft.metrics.GraftCounters.inc("ingest_log_cas_conflict_total")
       throw new IllegalStateException(
         s"ingest log CAS conflict at $path: $what — a concurrent " +
           "administrative writer (compaction / remove-ingest-batch / " +
           s"index append) committed first. Recovery: $recoveryHint")
     }
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$LogDir")
-    val cfm = org.apache.spark.sql.execution.streaming.checkpointing
-      .CheckpointFileManager.create(dir, spark.sparkContext.hadoopConfiguration)
-    cfm.mkdirs(dir)
-    val out = cfm.createAtomic(
-      new org.apache.hadoop.fs.Path(dir, next.version.toString),
-      overwriteIfPossible = false)
-    try out.write(
-      render(next).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => out.cancel(); throw e }
-    val f = fs(spark, path)
-    try out.close()
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        // the losing temp stays behind on a failed rename; every writer of
-        // this version loses now, so sweeping all of its temps is safe
-        scrub(f, Seq(s"${escapeGlob(path)}/$LogDir/.${next.version}.*.tmp"))
-        conflict(s"version ${next.version} was already committed")
-    }
-    val names = logNames(f, path)
-    val newest = names.collect { case EntryRe(v) => v.toLong }.max
-    val floor = newest - (KeptVersions - 1)
-    names.foreach {
-      case n @ EntryRe(v) if v.toLong < floor =>
-        f.delete(new org.apache.hadoop.fs.Path(dir, n), false)
-      case n @ TempRe(v) if v.toLong <= newest =>
-        f.delete(new org.apache.hadoop.fs.Path(dir, n), false)
-      case _ => ()
-    }
-    if (next.version < floor)
-      conflict(s"version ${next.version} is below the kept window " +
-        s"[$floor, $newest]")
-  }
 
   /** A marker body's counter deltas (BM25: `n_docs`, `total_tokens`);
     * a dense layout's empty marker adds nothing.
@@ -726,7 +656,7 @@ object StreamCommit {
       s"${escapeGlob(path)}/_stream_appends/*"))).getOrElse(Array.empty).toSeq
       .flatMap { st =>
         parseTag(st.getPath.getName).map { case (sid, id) =>
-          (sid, id, readText(fs, st.getPath))
+          (sid, id, Sidecar.readText(fs, st.getPath))
         }
       }
 }

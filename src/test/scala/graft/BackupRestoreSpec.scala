@@ -571,6 +571,35 @@ class BackupRestoreSpec extends SparkSpec {
     }
   }
 
+  test("the local manifest.json export drops a stale Hadoop sidecar and takes Hadoop's umask") {
+    import java.nio.file.attribute.PosixFilePermission._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = Files.createTempDirectory("graft-export").toString
+    layoutBackup(root)
+    val fs = fsOf(root)
+    val hp = new Path(graft.catalog.Manifest.path(root, "lay"))
+    val local = java.nio.file.Paths.get(root, "lay", "manifest.json")
+    // the export as a checksummed Hadoop write left it, sidecar and all
+    val os = fs.create(hp, true)
+    try os.write(Files.readAllBytes(local)) finally os.close()
+    val sidecar = local.resolveSibling(".manifest.json.crc")
+    assert(Files.exists(sidecar), "the Hadoop write planted a sidecar")
+
+    conf.set("fs.permissions.umask-mode", "077")
+    try layoutBackup(root)
+    finally conf.unset("fs.permissions.umask-mode")
+    assert(!Files.exists(sidecar), "the export left the stale sidecar")
+    val perms = Files.getPosixFilePermissions(local)
+    assert(!perms.stream().anyMatch(Set(GROUP_READ, GROUP_WRITE, OTHERS_READ, OTHERS_WRITE)
+      .contains(_)), perms)
+    val viaHadoop = {
+      val in = fs.open(hp) // checksummed: a stale sidecar raises ChecksumException
+      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
+    }
+    assert(graft.catalog.Manifest.fromJson(new String(viaHadoop, "UTF-8")) ==
+      graft.catalog.Manifest.load(root, "lay"))
+  }
+
   test("a Hadoop setting made at runtime reaches the backup and restore tasks") {
     val conf = spark.sparkContext.hadoopConfiguration
     // the scheme exists only in this conf; with the FileSystem cache off for

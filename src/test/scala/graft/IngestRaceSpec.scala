@@ -645,7 +645,7 @@ class IngestRaceSpec extends SparkSpec {
       }
       assert(logVersions(path) == (3L to 12L),
         "the newest KeptVersions entries must remain")
-      assert(StreamCommit.KeptVersions == 10)
+      assert(graft.util.VersionedLog.KeptVersions == 10)
       assert(StreamCommit.readState(spark, path) == states.last)
       // a writer that held version 1 all along: its target (2) was
       // deleted by retention, so create-if-absent would succeed — the
