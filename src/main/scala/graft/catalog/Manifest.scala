@@ -16,17 +16,7 @@ case class SegmentMetadata(
     end_timestamp: Long,
     record_count: Long,
     uncompressed_size: Long,
-    compressed_size: Long) {
-
-  /** Time-window overlap (manifest.rs:169-179): None bound = unbounded; both
-    * ends inclusive.
-    */
-  def overlapsTimeWindow(start: Option[Long], end: Option[Long]): Boolean = {
-    val afterStart = start.forall(s => end_timestamp >= s)
-    val beforeEnd = end.forall(e => start_timestamp <= e)
-    afterStart && beforeEnd
-  }
-}
+    compressed_size: Long)
 
 case class PartitionBackup(partition_id: Int, segments: List[SegmentMetadata]) {
   def lastOffset: Option[Long] =
@@ -62,10 +52,17 @@ case class BackupManifest(
     topics.flatMap(_.partitions).flatMap(_.segments).map(_.record_count).sum
   def totalSegments: Int = topics.flatMap(_.partitions).map(_.segments.size).sum
 
-  /** Merge `other` into this manifest (backup/engine.rs:1240-1301): topics and
-    * partitions unioned; segments deduped by key OR start_offset with the
-    * EXISTING entry winning; result sorted by start_offset. Idempotent, so
-    * crash-retried uploads stay consistent.
+  /** Merge `other`, a newer run's catalog, into this manifest
+    * (backup/engine.rs:1240-1301): topics and partitions unioned; within a
+    * (topic, partition) `other`'s segments supersede every existing entry
+    * that shares a key with one of them or whose whole offset range lies
+    * inside the span they cover (lowest start to highest end), and the
+    * result is sorted by start_offset. A run's segment overwrites the
+    * object at its key, so an older entry kept beside it would describe
+    * bytes no longer stored; an entry reaching outside the span keeps
+    * offsets the new run never wrote (say, ones retention has since
+    * deleted from Kafka), so it stays. Idempotent, so crash-retried
+    * uploads stay consistent.
     */
   def merge(other: BackupManifest): BackupManifest = {
     val byTopic = topics.map(t => t.name -> t).toMap
@@ -80,14 +77,14 @@ case class BackupManifest(
             b.partitions.map(_.partition_id)).distinct.sorted
           val mergedParts = partIds.map { pid =>
             (byPart.get(pid), b.partitions.find(_.partition_id == pid)) match {
-              case (Some(pa), None) => pa
+              case (Some(pa), pb) if pb.forall(_.segments.isEmpty) => pa
               case (None, Some(pb)) => pb
               case (Some(pa), Some(pb)) =>
-                val existingKeys = pa.segments.map(_.key).toSet
-                val existingStarts = pa.segments.map(_.start_offset).toSet
-                val novel = pb.segments.filterNot(s =>
-                  existingKeys.contains(s.key) || existingStarts.contains(s.start_offset))
-                PartitionBackup(pid, (pa.segments ++ novel).sortBy(_.start_offset))
+                val (lo, hi) = (pb.segments.map(_.start_offset).min, pb.segments.map(_.end_offset).max)
+                val keys = pb.segments.map(_.key).toSet
+                val kept = pa.segments.filterNot(e => keys(e.key) ||
+                  (lo <= e.start_offset && e.end_offset <= hi))
+                PartitionBackup(pid, (kept ++ pb.segments).sortBy(_.start_offset))
               case _ => PartitionBackup(pid, Nil)
             }
           }

@@ -118,4 +118,57 @@ object Compression {
         lz4.fastDecompressor().decompress(data, off + 4, out, 0, size)
         out
     }
+
+  /** Above this many bytes out per compressed byte, a zstd frame that does
+    * not state its content size is not trusted for an up-front allocation
+    * of the catalog's size. Kafka payloads compress a few times over (the
+    * perfbench source about 4:1), so a corrupt catalog size is what lands
+    * past it.
+    */
+  private val TrustedZstdRatio = 32L
+
+  /** Decompress `data[off, off + len)` into exactly `size` bytes, the body
+    * length the catalog recorded (`uncompressed_size`). A body of any other
+    * length is corrupt: this throws before allocating when the body itself
+    * states its length (an lz4 prefix, a zstd frame's content size, an
+    * uncompressed body), after inflating otherwise.
+    *
+    * zstd inflates straight into one array of `size` bytes: the backup
+    * writer streams its frames, which state no content size, so
+    * [[decompress]] would grow a buffer and copy it. Only a size past
+    * [[TrustedZstdRatio]] times the compressed length takes that growing
+    * path, so a corrupt catalog value can never allocate more than the
+    * body inflates to.
+    */
+  def decompress(data: Array[Byte], off: Int, len: Int, codec: CompressionCodec,
+                 size: Long): Array[Byte] = {
+    def mismatch(actual: Long): Nothing = throw new java.io.IOException(
+      s"body is $actual bytes uncompressed, the catalog says $size")
+    if (size < 0 || size > Int.MaxValue - 8)
+      throw new java.io.IOException(s"the catalog's uncompressed size $size is out of range")
+    codec match {
+      case CompressionCodec.Zstd =>
+        val stated = Zstd.getFrameContentSize(data, off, len)
+        if (stated >= 0 && stated != size) mismatch(stated)
+        if (stated < 0 && size > len * TrustedZstdRatio) {
+          val out = decompress(data, off, len, codec)
+          if (out.length != size) mismatch(out.length)
+          out
+        } else {
+          val out = new Array[Byte](size.toInt)
+          val n = try Zstd.decompressByteArray(out, 0, out.length, data, off, len)
+            catch { case e: com.github.luben.zstd.ZstdException => throw new java.io.IOException(
+              s"body does not inflate to the catalog's $size bytes: ${e.getMessage}", e) }
+          if (n != size) mismatch(n)
+          out
+        }
+      case CompressionCodec.Lz4 =>
+        val stored = ByteBuffer.wrap(data, off, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
+        if (stored != size) mismatch(stored)
+        decompress(data, off, len, codec)
+      case CompressionCodec.None =>
+        if (len != size) mismatch(len)
+        decompress(data, off, len, codec)
+    }
+  }
 }

@@ -234,13 +234,26 @@ object SegmentCodec {
     * returned records (they come from the storage key, not the bytes). Only
     * records with `windowStartMs <= timestamp <= windowEndMs` are returned
     * (the PITR window, both ends inclusive; see [[decodeBody]]).
+    *
+    * The standalone decoder, the reference the specs hold restore's
+    * row decoder (`graft.pipelines.KbakReader`) to; restore and deep
+    * validation read through that reader.
     */
   def decode(data: Array[Byte], topic: String = null, partition: Int = -1,
              windowStartMs: Long = Long.MinValue,
              windowEndMs: Long = Long.MaxValue): Iterator[KRecord] = {
+    val header = verify(data)
+    val body = Compression.decompress(data, HeaderSize, bodyLength(data), header.codec)
+    decodeBody(body, topic, partition, header.recordCount, windowStartMs, windowEndMs)
+  }
+
+  /** Check a whole segment (length, header magic and version, footer magic,
+    * CRC) and return its header. The compressed body is the
+    * [[bodyLength]] bytes at [[HeaderSize]].
+    */
+  def verify(data: Array[Byte]): SegmentHeader = {
     require(data.length >= HeaderSize + FooterSize, "Segment too short")
     val header = parseHeader(data)
-    // footer check
     val fbuf = ByteBuffer.wrap(data, data.length - FooterSize, FooterSize)
       .order(ByteOrder.LITTLE_ENDIAN)
     val storedCrc = fbuf.getInt
@@ -249,10 +262,11 @@ object SegmentCodec {
     val crc = new CRC32()
     crc.update(data, 0, data.length - FooterSize)
     require(crc.getValue.toInt == storedCrc, "Segment CRC mismatch")
-    val body = Compression.decompress(
-      data, HeaderSize, data.length - HeaderSize - FooterSize, header.codec)
-    decodeBody(body, topic, partition, header.recordCount, windowStartMs, windowEndMs)
+    header
   }
+
+  /** The compressed body's length in a whole segment. */
+  def bodyLength(data: Array[Byte]): Int = data.length - HeaderSize - FooterSize
 
   /** Iterate length-prefixed records from a decompressed body, keeping only
     * those with `windowStartMs <= timestamp <= windowEndMs`. A record outside

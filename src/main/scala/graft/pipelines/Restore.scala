@@ -1,15 +1,12 @@
 package graft.pipelines
 
 import graft.catalog.{BackupManifest, Manifest, SegmentMetadata}
-import graft.codec.{LegacySegment, SegmentCodec}
 import graft.model.KRecord
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 import scala.reflect.ClassTag
-import scala.util.control.NonFatal
 
 /** Restore/PITR options (reference RestoreConfig, restore/engine.rs):
   * time window bounds are epoch millis, both ends INCLUSIVE
@@ -27,96 +24,86 @@ case class RestoreConfig(
     partitionMapping: Map[Int, Int] = Map.empty,
     completedSegmentKeys: Set[String] = Set.empty)
 
-/** The restore "query" (reference lifecycle §3.2): manifest catalog → segment
-  * pruning (F6) → checkpoint anti-join (F9) → manifest-keyed scan + KBAK
-  * decode with the record time filter inside (S8/S10, F7) → topic/partition
+/** The restore "query" (reference lifecycle §3.2): a read of the backup
+  * through the `kbak` DataSource V2 ([[KbakSource]]) → topic/partition
   * remap (F13/F14).
   *
-  * Scale shape: pruning happens on the CATALOG (one row per segment), so at
-  * 100 TB a narrow PITR window touches only the overlapping ~128 MB objects.
-  * The manifest already names every selected object and its size, so the scan
-  * lists no path and runs no job before the action: the selected segments are
-  * split into size-balanced tasks on the driver and each task opens its keys
-  * directly: plain files through `java.nio` on a `file://` root, Hadoop FS
-  * elsewhere ([[SegmentFiles]]), with the Hadoop conf broadcast once per
-  * job. That scan ([[scan]]) has two callers: [[records]] and deep
-  * validation ([[graft.validation.Validation.deep]]), which re-reads every
-  * segment the way a restore does. Decode is a streaming iterator (no
-  * per-task materialization), and the ts window is re-applied per record
-  * inside it, because segment stats are ranges, not predicates; a record
-  * outside the window is skipped before its key, value and headers are
-  * allocated.
+  * The read loads the catalog once and plans from it alone: the window,
+  * partition and topic predicates are pushed into the scan, which prunes
+  * the catalog (topic include/exclude F2, partition filter F5, time-window
+  * segment pruning F6, the completed-segment anti set F9; one row per
+  * segment, so at 100 TB a narrow PITR window touches only the overlapping
+  * ~128 MB objects) and re-applies the window per record inside decode,
+  * because segment stats are ranges, not predicates (S8/S10, F7). The
+  * selected segments are split into size-balanced tasks on the driver
+  * ([[scanTasks]]), so planning lists no path and runs no job; each task
+  * opens its keys directly, plain files through `java.nio` on a `file://`
+  * root, Hadoop FS elsewhere with the conf broadcast once per scan
+  * ([[SegmentRoot]]), and decodes every record straight into an
+  * `UnsafeRow`. Deep validation ([[graft.validation.Validation.deep]])
+  * re-reads every segment through the same [[KbakReader]] in [[scan]], one
+  * outcome row per segment.
   */
 object Restore {
 
-  /** The restored record set as a canonical-record Dataset (the produce step
-    * K3 is a separate sink; tests consume this directly). Segments are
-    * decoded magic-sniffed: KBAK binary or legacy JSON (S10/S11). A missing
-    * or corrupt segment fails the restore with its key in the message; no
+  /** The restored record set: a `kbak` read of the backup, typed as
+    * `KRecord` only here at the API edge (the produce step K3 is a
+    * separate sink; tests consume this directly). Segments are decoded
+    * magic-sniffed: KBAK binary or legacy JSON (S10/S11). A missing or
+    * corrupt segment fails the restore with its key in the message; no
     * setting skips it, because a restore must never drop data silently.
     */
   def records(spark: SparkSession, cfg: RestoreConfig): Dataset[KRecord] = {
-    import spark.implicits._
-    val segments = selectedSegments(Manifest.load(cfg.backupRoot, cfg.backupId), cfg)
-    if (segments.isEmpty) spark.emptyDataset[KRecord]
-    else {
-      val lo = cfg.windowStartMs.getOrElse(Long.MinValue)
-      val hi = cfg.windowEndMs.getOrElse(Long.MaxValue)
-      spark.createDataset(scan(spark, cfg.backupRoot, segments) { (topic, partition, s, read) =>
-        try LegacySegment.decodeAny(read(), s.key, topic, partition, lo, hi)
-        catch { case NonFatal(e) =>
-          throw new java.io.IOException(
-            s"restore of segment ${s.key} failed: ${e.getMessage}", e)
-        }
-      })
-    }
+    val read = KbakSource.read(spark, KbakSelection.options(cfg))
+    val pushed = cfg.windowStartMs.map(col("timestamp") >= _).toSeq ++
+      cfg.windowEndMs.map(col("timestamp") <= _) ++
+      cfg.sourcePartitions.map(ps => col("partition").isin(ps: _*))
+    pushed.reduceOption(_ && _).fold(read)(read.filter).as(KbakSource.encoder)
   }
 
-  /** The one reader of segment objects, shared by [[records]] and
-    * [[graft.validation.Validation.deep]]. `segments` run as [[scanTasks]]'
-    * size-balanced contiguous tasks. The driver's Hadoop conf (spark.hadoop.*
-    * credentials, endpoints and registered schemes) is broadcast once per
-    * call, as in Backup, and each task opens its [[SegmentFiles]] from it.
-    * Per segment, in manifest order, `f` gets the segment and a thunk that
-    * reads its object whole ([[SegmentFiles.read]]).
+  /** Deep validation's segment scan: `segments` run as [[scanTasks]]'
+    * size-balanced contiguous tasks, and per segment, in manifest order,
+    * `f` gets the segment and an unopened [[KbakReader]] over all of its
+    * records, the restore read's own decoder.
     */
   private[graft] def scan[T: ClassTag](spark: SparkSession, root: String,
                                        segments: Seq[(String, Int, SegmentMetadata)])(
-      f: (String, Int, SegmentMetadata, () => Array[Byte]) => Iterator[T]): RDD[T] =
+      f: (String, Int, SegmentMetadata, KbakReader) => Iterator[T]): RDD[T] =
     if (segments.isEmpty) spark.sparkContext.emptyRDD[T]
     else {
       val tasks = scanTasks(spark, segments)
-      val hadoopConf = spark.sparkContext.broadcast(
-        new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      val store = SegmentRoot(spark.sparkContext, root)
       spark.sparkContext.parallelize(tasks, tasks.size).flatMap { task =>
-        val files = new SegmentFiles(root, hadoopConf.value.value)
-        task.iterator.flatMap { case (topic, partition, s) =>
-          val expected = math.min(
-            s.compressed_size + SegmentCodec.HeaderSize + SegmentCodec.FooterSize,
-            Int.MaxValue - 8L).toInt
-          f(topic, partition, s, () => files.read(s.key, expected))
+        val files = store.open()
+        task.iterator.flatMap { case segment @ (topic, partition, s) =>
+          f(topic, partition, s, new KbakReader(Seq(segment), files, Bounds.All, Bounds.All))
         }
       }
     }
 
   /** The scan tasks for `segments`: contiguous runs in manifest order, so a
     * task reads each (topic, partition)'s segments in offset order and the
-    * tasks concatenate to the manifest order. The runs are balanced by
-    * `compressed_size + spark.sql.files.openCostInBytes`, and there are
-    * `min(#segments, max(defaultParallelism, ⌈total / spark.sql.files.maxPartitionBytes⌉))`
-    * of them, sized by the confs Spark's file sources split by.
+    * tasks concatenate to the manifest order. There are
+    * `min(#segments, max(defaultParallelism, ⌈Σ compressed_size / spark.sql.files.maxPartitionBytes⌉))`
+    * of them: the stored bytes alone size the count, so many small segments
+    * never plan a second wave on an idle cluster. The runs are balanced by
+    * `compressed_size + spark.sql.files.openCostInBytes`, the weights
+    * Spark's file sources split by.
     */
-  private def scanTasks(spark: SparkSession, segments: Seq[(String, Int, SegmentMetadata)])
-      : Seq[Seq[(String, Int, SegmentMetadata)]] = {
-    def bytesConf(name: String) = JavaUtils.byteStringAsBytes(spark.conf.get(name))
-    val openCost = bytesConf("spark.sql.files.openCostInBytes")
-    val maxBytes = math.max(1L, bytesConf("spark.sql.files.maxPartitionBytes"))
-    val weights = segments.map(_._3.compressed_size + openCost).toIndexedSeq
-    val wanted = math.max(spark.sparkContext.defaultParallelism.toLong,
-      (weights.sum + maxBytes - 1) / maxBytes)
-    val k = math.min(segments.size.toLong, wanted).toInt
-    splitContiguous(weights, k).map(r => segments.slice(r.start, r.end))
-  }
+  private[graft] def scanTasks(spark: SparkSession, segments: Seq[(String, Int, SegmentMetadata)])
+      : Seq[Seq[(String, Int, SegmentMetadata)]] =
+    if (segments.isEmpty) Nil
+    else {
+      def bytesConf(name: String) = JavaUtils.byteStringAsBytes(spark.conf.get(name))
+      val openCost = bytesConf("spark.sql.files.openCostInBytes")
+      val maxBytes = math.max(1L, bytesConf("spark.sql.files.maxPartitionBytes"))
+      val stored = segments.map(_._3.compressed_size).sum
+      val wanted = math.max(spark.sparkContext.defaultParallelism.toLong,
+        (stored + maxBytes - 1) / maxBytes)
+      val k = math.min(segments.size.toLong, wanted).toInt
+      val weights = segments.map(_._3.compressed_size + openCost).toIndexedSeq
+      splitContiguous(weights, k).map(r => segments.slice(r.start, r.end))
+    }
 
   /** Split `weights` into exactly `k` (1 ≤ k ≤ weights.size) non-empty
     * contiguous runs whose largest sum is minimal: binary-search the smallest
@@ -164,25 +151,13 @@ object Restore {
     }
   }
 
-  /** Catalog-side planning: topic include/exclude (F2) → partition filter (F5)
-    * → time-window segment pruning (F6) → completed-segment anti set (F9).
-    * Driver-side list ops — the manifest is small (1 row per 128 MB object).
+  /** The keys of the segments `cfg`'s restore reads, in manifest order:
+    * the scan's own catalog pruning ([[KbakSelection.segments]]), topic
+    * include/exclude (F2) → partition filter (F5) → time-window segment
+    * pruning (F6) → completed-segment anti set (F9).
     */
   def prunedSegmentKeys(manifest: BackupManifest, cfg: RestoreConfig): Seq[String] =
-    selectedSegments(manifest, cfg).map(_._3.key)
-
-  /** [[prunedSegmentKeys]]' segments with their (topic, partition). */
-  private[graft] def selectedSegments(manifest: BackupManifest,
-                                      cfg: RestoreConfig): Seq[(String, Int, SegmentMetadata)] =
-    for {
-      t <- manifest.topics
-      if graft.functions.KHash.topicMatches(t.name, cfg.includeTopics, cfg.excludeTopics)
-      p <- t.partitions
-      if cfg.sourcePartitions.forall(_.contains(p.partition_id))
-      s <- p.segments
-      if s.overlapsTimeWindow(cfg.windowStartMs, cfg.windowEndMs)
-      if !cfg.completedSegmentKeys.contains(s.key)
-    } yield (t.name, p.partition_id, s)
+    KbakSelection.of(cfg).segments(manifest).map(_._3.key)
 
   /** A5 restore-report metrics via `Dataset.observe` (restore/engine.rs
     * 346-357): record/byte counters accumulate during the ACTION that
@@ -245,7 +220,7 @@ object Restore {
         DryRunValidation(cfg.backupId, valid = false, errors.result(),
           warnings.result(), 0, 0, 0, None, Nil)
       case Some(m) =>
-        val selected = selectedSegments(m, cfg)
+        val selected = KbakSelection.of(cfg).segments(m)
         if (m.totalSegments == 0) warnings += "backup contains no segments"
         else if (selected.isEmpty)
           errors += "no segments match the configured filters/window"

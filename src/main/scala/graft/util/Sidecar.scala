@@ -88,8 +88,9 @@ object Sidecar {
 
   def readText(fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
     val in = fs.open(p)
-    new String(try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close(),
-      java.nio.charset.StandardCharsets.UTF_8)
+    // bulk reads: Hadoop's `IOUtils.readFullyToByteArray` reads one byte per
+    // call through the checksummed stream
+    new String(try in.readAllBytes() finally in.close(), java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** Extract a required long field from a flat JSON sidecar body. */

@@ -15,11 +15,13 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `CheckpointFileManager.createAtomic(overwriteIfPossible = false)` —
   * write a temp, rename it to the version's name, refuse if the name
   * exists. Two writers that read the same version race for the same name
-  * and exactly one wins. Rename without overwrite is atomic on HDFS; on
-  * the local, `chaos:` and object-store filesystems the manager checks for
-  * the target before renaming, and a second writer inside that gap renames
-  * over the first. So a commit reads its entry back and counts a different
-  * body as lost; two writers can both count as winners only when one's
+  * and exactly one wins. On the local filesystem the temp is published
+  * with link(2) (`Files.createLink`), which refuses an existing name in one
+  * step. Rename without overwrite is atomic on HDFS; on the `chaos:` and
+  * object-store filesystems the manager checks for the target before
+  * renaming, and a second writer inside that gap renames over the first.
+  * So a commit there reads its entry back and counts a different body as
+  * lost; two writers can both count as winners only when one's
   * check-to-rename gap spans the other's whole rename and read-back.
   *
   * Disk cost: at most [[KeptVersions]] full-state entries per log.
@@ -61,21 +63,30 @@ object VersionedLog {
   def commit(conf: Configuration, path: String, version: Long,
              body: String): Option[String] = {
     val dir = new Path(s"$path/_graft_log")
-    // entries carry no `.crc` on the local filesystem: a rename moves a file
-    // and then its `.crc`, so two writers renaming onto one entry could
-    // leave one's entry beside the other's `.crc`
-    val noCrc = new Configuration(conf)
-    noCrc.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.RawLocalFs")
-    val cfm = CheckpointFileManager.create(dir, noCrc)
-    cfm.mkdirs(dir)
     val entry = new Path(dir, version.toString)
     val f = dir.getFileSystem(conf)
     val taken = try {
-      val out = cfm.createAtomic(entry, overwriteIfPossible = false)
-      try out.write(body.getBytes(UTF_8)) catch { case e: Throwable => out.cancel(); throw e }
-      out.close()
-      // a second writer inside the manager's check-to-rename gap renamed over it
-      Sidecar.readText(f, entry) != body
+      if (f.getUri.getScheme == "file") {
+        // plain `java.nio`, as `Sidecar.replace` on `file`: no `.crc`, no
+        // forked `chmod`/`readlink` helpers
+        import java.nio.file.Files
+        import org.apache.hadoop.fs.permission.FsPermission.{getDirDefault, getFileDefault}
+        val d = Files.createDirectories(java.nio.file.Paths.get(f.makeQualified(dir).toUri),
+          Sidecar.localMode(conf, getDirDefault))
+        val tmp = d.resolve(s".$version.${java.util.UUID.randomUUID()}.tmp")
+        Files.write(Files.createFile(tmp, Sidecar.localMode(conf, getFileDefault)),
+          body.getBytes(UTF_8))
+        try Files.createLink(d.resolve(entry.getName), tmp) finally Files.deleteIfExists(tmp)
+        false
+      } else {
+        val cfm = CheckpointFileManager.create(dir, conf)
+        cfm.mkdirs(dir)
+        val out = cfm.createAtomic(entry, overwriteIfPossible = false)
+        try out.write(body.getBytes(UTF_8)) catch { case e: Throwable => out.cancel(); throw e }
+        out.close()
+        // a second writer inside the manager's check-to-rename gap renamed over it
+        Sidecar.readText(f, entry) != body
+      }
     } catch {
       // a writer that already took this version refused this rename, or
       // swept this temp (see the retention rule below)

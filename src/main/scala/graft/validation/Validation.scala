@@ -1,8 +1,7 @@
 package graft.validation
 
 import graft.catalog.Manifest
-import graft.codec.LegacySegment
-import graft.pipelines.{Restore, RestoreConfig}
+import graft.pipelines.{KbakSelection, KbakSource, Restore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
@@ -96,35 +95,40 @@ object Validation {
   }
 
   /** `validate --deep` (cli/commands/validate.rs:48-233): re-read and decode
-    * every segment the manifest names, verify its CRC (decode throws on a
-    * mismatch), and check its record count and offset range against the
-    * manifest entry. The reads go through restore's segment scan
-    * ([[Restore.scan]]: manifest keys, size-balanced tasks, one presized read
-    * per object) and its magic-sniffing decoder, so KBAK and legacy JSON
-    * segments validate exactly as they restore, in one job. A missing object
-    * gives NULL `actual_*` and "object missing"; a read or decode failure
-    * gives -1 and the exception's message. Files the manifest does not name
-    * are never opened.
+    * every segment the manifest names, verify its CRC and its catalog
+    * uncompressed size (the read throws on a mismatch), and check its record
+    * count and offset range against the manifest entry. The reads go
+    * through [[Restore.scan]] (manifest keys, size-balanced tasks) and the
+    * restore read's own decoder ([[graft.pipelines.KbakReader]]), so KBAK
+    * and legacy JSON segments validate exactly as they restore, in one job.
+    * A missing object gives NULL `actual_*` and "object missing"; a read or
+    * decode failure gives -1 and its message. Files the manifest does not
+    * name are never opened.
     */
   def deep(spark: SparkSession, backupRoot: String, backupId: String): DataFrame = {
     import spark.implicits._
-    val segments = Restore.selectedSegments(Manifest.load(backupRoot, backupId),
-      RestoreConfig(backupRoot, backupId))
-    Restore.scan(spark, backupRoot, segments) { (topic, partition, s, read) =>
+    val segments = KbakSelection().segments(Manifest.load(backupRoot, backupId))
+    val offsetAt = KbakSource.schema.fieldIndex("offset")
+    Restore.scan(spark, backupRoot, segments) { (topic, partition, s, reader) =>
       val (actualCount, actualStart, actualEnd, error) =
         try {
           var n = 0L
           var lo = Long.MaxValue
           var hi = Long.MinValue
-          LegacySegment.decodeAny(read(), s.key, topic, partition).foreach { r =>
-            n += 1; lo = math.min(lo, r.offset); hi = math.max(hi, r.offset)
+          while (reader.next()) {
+            val offset = reader.get().getLong(offsetAt)
+            n += 1; lo = math.min(lo, offset); hi = math.max(hi, offset)
           }
           (Some(n), Some(if (n == 0) -1L else lo), Some(if (n == 0) -1L else hi), null: String)
         } catch {
-          case _: java.io.FileNotFoundException => (None, None, None, "object missing")
           // Throwable: decoder JNI paths can surface Errors; anything
-          // non-fatal must become a Failed row, not a task failure
-          case e: Throwable if NonFatal(e) => (Some(-1L), Some(-1L), Some(-1L), e.getMessage)
+          // non-fatal must become a Failed row, not a task failure. The
+          // reader wraps the failure in an error naming the segment, which
+          // the row names already.
+          case e: Throwable if NonFatal(e) => Option(e.getCause).getOrElse(e) match {
+            case _: java.io.FileNotFoundException => (None, None, None, "object missing")
+            case cause => (Some(-1L), Some(-1L), Some(-1L), cause.getMessage)
+          }
         }
       Iterator.single((s.key, topic, partition, s.record_count, actualCount, s.start_offset,
         actualStart, s.end_offset, actualEnd, error))

@@ -49,6 +49,11 @@ class BackupRestoreSpec extends SparkSpec {
     assert(restored.count() == 1000)
     val restoredIds = restored.map(_.offset).collect().sorted
     assert(restoredIds.toSeq == (0L until 1000L))
+    // the same read through the registered `kbak` format
+    val viaFormat = spark.read.format("kbak").option("backupRoot", tmp)
+      .option("backupId", "b1").load()
+    assert(viaFormat.schema == restored.schema)
+    assert(viaFormat.select("offset").as[Long].collect().sorted.toSeq == restoredIds.toSeq)
     // per-partition offset order preserved within each decoded segment scan
     val byPart = restored.collect().groupBy(r => (r.topic, r.partition))
     byPart.foreach { case (_, rs) =>
@@ -136,7 +141,8 @@ class BackupRestoreSpec extends SparkSpec {
     val segs = m.topics.flatMap(_.partitions).flatMap(_.segments)
     def expectedTasks: Int = {
       def bytes(k: String) = JavaUtils.byteStringAsBytes(spark.conf.get(k))
-      val total = segs.map(_.compressed_size + bytes("spark.sql.files.openCostInBytes")).sum
+      // stored bytes alone count; the open cost only weighs the balancing
+      val total = segs.map(_.compressed_size).sum
       val byBytes = math.ceil(total.toDouble / bytes("spark.sql.files.maxPartitionBytes")).toLong
       math.min(segs.size.toLong,
         math.max(spark.sparkContext.defaultParallelism.toLong, byBytes)).toInt
@@ -167,6 +173,24 @@ class BackupRestoreSpec extends SparkSpec {
       val n = check()
       assert(n > spark.sparkContext.defaultParallelism && n < segs.size)
     } finally confs.foreach(spark.conf.unset)
+  }
+
+  test("150 small segments plan one scan task per core under local[4]") {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    // 10 partitions × 15 one-minute segments: 150 × openCostInBytes (4 MB)
+    // outweighs maxPartitionBytes (128 MB) five times over, the stored
+    // bytes not once
+    val recs = for (p <- 0 until 10; i <- 0 until 150)
+      yield KRecord("small", p, i.toLong, t0 + i * 6000L, null, Array.fill(64)(i.toByte), Nil)
+    val root = Files.createTempDirectory("graft-small").toString
+    val m = Backup.run(spark, recs.toDS().toDF(), BackupConfig("sm", root,
+      CompressionCodec.Zstd, maxSegmentIntervalMs = Some(59999L), enrichHeaders = false))
+    assert(m.totalSegments == 150)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val ds = Restore.records(spark, RestoreConfig(root, "sm"))
+    assert(ds.rdd.getNumPartitions == 4)
+    assert(ds.count() == 1500)
   }
 
   test("contiguous split: exactly k non-empty runs with the minimal largest sum") {
@@ -413,11 +437,64 @@ class BackupRestoreSpec extends SparkSpec {
     assert(df.filter(col("partition") === 7).count() > 0)
   }
 
-  test("manifest merge dedups by key/start_offset, existing wins (J5)") {
+  test("manifest merge: a new run's entry supersedes overlaps (J5)") {
     val m = Manifest.load(tmp, "b1")
     val merged = m.merge(m)
-    assert(merged.totalSegments == m.totalSegments)
-    assert(merged.totalRecords == m.totalRecords)
+    assert(merged == m, "merge is idempotent")
+    def seg(start: Long, end: Long) = SegmentMetadata(
+      Manifest.segmentKey("b", "t", 0, start, ""), start, end, start, end, end - start + 1, 1, 1)
+    def catalog(segs: SegmentMetadata*) = graft.catalog.BackupManifest("b", 0L, None, Nil,
+      "none", List(TopicBackup("t", Some(1), List(PartitionBackup(0, segs.toList)))))
+    // the old run's [0, 99] shares the new [0, 149]'s key, [100, 199]
+    // lies inside the new span [0, 249], [300, 399] touches nothing new
+    val old = catalog(seg(0, 99), seg(100, 199), seg(300, 399))
+    val fresh = catalog(seg(0, 149), seg(150, 249))
+    assert(old.merge(fresh).topics.head.partitions.head.segments ==
+      List(seg(0, 149), seg(150, 249), seg(300, 399)))
+  }
+
+  test("manifest merge: a run starting inside an older segment loses no offset (J5)") {
+    def seg(start: Long, end: Long) = SegmentMetadata(
+      Manifest.segmentKey("b", "t", 0, start, ""), start, end, start, end, end - start + 1, 1, 1)
+    def catalog(segs: SegmentMetadata*) = graft.catalog.BackupManifest("b", 0L, None, Nil,
+      "none", List(TopicBackup("t", Some(1), List(PartitionBackup(0, segs.toList)))))
+    def offsets(m: graft.catalog.BackupManifest) =
+      m.topics.head.partitions.head.segments.flatMap(s => s.start_offset to s.end_offset).toSet
+    // retention deleted offsets 0..499 from Kafka after the first run, so
+    // the re-run starts at 500: only the old segment still holds 0..499
+    val old = catalog(seg(0, 999))
+    val fresh = catalog(seg(500, 1200), seg(1201, 1500))
+    val merged = old.merge(fresh)
+    val lost = (0L to 1500L).toSet -- offsets(merged)
+    assert(lost.isEmpty, s"${lost.size} offsets lost, the lowest ${lost.minOption}")
+    assert(merged.topics.head.partitions.head.segments ==
+      List(seg(0, 999), seg(500, 1200), seg(1201, 1500)))
+    // an older segment reaching past the span's end stays too
+    assert(catalog(seg(0, 99), seg(100, 2000)).merge(fresh).topics.head.partitions.head
+      .segments == List(seg(0, 99), seg(100, 2000), seg(500, 1200), seg(1201, 1500)))
+    // a run that writes nothing for the partition leaves it as it was
+    assert(old.merge(catalog()) == old)
+  }
+
+  test("re-backing up an overlapping source to the same id restores it record-identically") {
+    val root = Files.createTempDirectory("graft-overlap").toString
+    val all = KRecord.fromEvents(spark, sf0001)
+    def cfg = BackupConfig("ov", root, CompressionCodec.Zstd, maxSegmentBytes = 16 * 1024,
+      enrichHeaders = false)
+    Backup.run(spark, all.filter(col("offset") < 500), cfg)
+    val m = Backup.run(spark, all, cfg)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("topic", "partition", "offset", "timestamp", "key", "value").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3),
+          Option(r.getAs[Array[Byte]](4)).map(_.toSeq), Option(r.getAs[Array[Byte]](5)).map(_.toSeq)))
+        .sortBy(r => (r._1, r._2, r._3)).toSeq
+    val restored = rows(Restore.records(spark, RestoreConfig(root, "ov")).toDF())
+    assert(restored.map(r => (r._1, r._2, r._3)).distinct.size == restored.size, "duplicates")
+    assert(restored == rows(all))
+    // no entry describes fewer records than its segment holds
+    assert(m.totalRecords == restored.size)
+    val deep = Validation.deep(spark, root, "ov").collect()
+    assert(deep.forall(_.getAs[String]("outcome") == "Passed"), deep.mkString("\n"))
   }
 
   test("manifest merge: current session's partition count wins (J5 expansion)") {
@@ -622,16 +699,19 @@ class BackupRestoreSpec extends SparkSpec {
   test("the restore scan ships no Hadoop conf inside its tasks") {
     val root = Files.createTempDirectory("graft-shipconf").toString
     val m = layoutBackup(root, n = 10)
-    val segments = Restore.selectedSegments(m, RestoreConfig(root, "lay"))
+    val segments = graft.pipelines.KbakSelection().segments(m)
     assert(segments.size == 10)
-    val rdd = Restore.scan(spark, root, segments) { (_, _, _, read) =>
-      Iterator.single(read().length)
+    val rdd = Restore.scan(spark, root, segments) { (_, _, _, reader) =>
+      Iterator.single(Iterator.continually(reader.next()).takeWhile(identity).size)
     }
-    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
-      .serialize(rdd).remaining()
+    def serialized(r: org.apache.spark.rdd.RDD[_]): Int =
+      org.apache.spark.SparkEnv.get.closureSerializer.newInstance().serialize(r).remaining()
     // the driver's Hadoop conf alone serializes to ~100 KB
-    assert(bytes < 16 * 1024, s"serialized scan RDD: $bytes bytes")
-    assert(rdd.collect().length == 10)
+    assert(serialized(rdd) < 16 * 1024, s"serialized scan RDD: ${serialized(rdd)} bytes")
+    assert(rdd.collect().toSeq == Seq.fill(10)(5))
+    // the restore read's tasks carry the file root alone
+    val restore = Restore.records(spark, RestoreConfig(root, "lay")).queryExecution.toRdd
+    assert(serialized(restore) < 16 * 1024, s"serialized restore RDD: ${serialized(restore)} bytes")
   }
 
   test("restore metrics observation counts records and bytes (A5)") {

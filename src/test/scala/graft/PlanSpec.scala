@@ -434,4 +434,79 @@ class PlanSpec extends SparkSpec {
       s"top-k must plan as TakeOrderedAndProject:\n${p.take(1200)}")
     assert(p.contains("partial_count"), "pair/unigram counts must partial-aggregate")
   }
+
+  /** A zstd backup of topics `pa` and `pb`, 4 partitions each, 40 records
+    * one second apart rolled every 10 s: 32 segments.
+    */
+  private lazy val pitr = {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val recs = for (t <- Seq("pa", "pb"); p <- 0 until 4; i <- 0 until 40)
+      yield graft.model.KRecord(t, p, i.toLong, t0 + i * 1000L, s"k$i".getBytes,
+        s"$t-$p-$i".getBytes, Nil)
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-pitr").toString
+    val m = graft.pipelines.Backup.run(spark, recs.toDS().toDF(),
+      graft.pipelines.BackupConfig("pp", root, graft.codec.CompressionCodec.Zstd,
+        maxSegmentIntervalMs = Some(9999L), enrichHeaders = false))
+    assert(m.totalSegments == 32)
+    (root, t0, m)
+  }
+
+  test("narrow PITR restore: one kbak batch scan with every filter pushed, no object round trip") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val (root, t0, m) = pitr
+    // records 8-12: the window straddles the 10 s roll
+    val (lo, hi) = (t0 + 8000L, t0 + 12000L)
+    val cfg = graft.pipelines.RestoreConfig(root, "pp", Some(lo), Some(hi),
+      sourcePartitions = Some(Seq(1, 2)))
+    val df = graft.pipelines.Restore.records(spark, cfg).toDF().filter(col("topic") === "pa")
+    val p = df.queryExecution.explainString(FormattedMode)
+    assert(p.contains("BatchScan kbak"), p)
+    for (pushed <- Seq(s"timestamp >= $lo", s"timestamp <= $hi", "partition IN (1, 2)",
+        "topic = 'pa'"))
+      assert(p.contains(pushed), s"$pushed not pushed:\n$p")
+    assert(!p.contains("SerializeFromObject") && !p.contains("ExternalRDD"), p)
+    assert(!p.contains("Filter"), s"a pushed filter is evaluated again above the scan:\n$p")
+    // the input partitions hold exactly the segments that overlap the window
+    val scan = df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b }.get
+    val read = scan.inputPartitions.flatMap(
+      _.asInstanceOf[graft.pipelines.KbakPartition].segments.map(_._3.key))
+    val overlapping = for {
+      t <- m.topics if t.name == "pa"
+      part <- t.partitions if Set(1, 2)(part.partition_id)
+      s <- part.segments if s.end_timestamp >= lo && s.start_timestamp <= hi
+    } yield s.key
+    assert(read == overlapping && read.size == 4, read)
+    val rows = df.collect()
+    assert(rows.length == 2 * 5 &&
+      rows.forall(r => r.getAs[Long]("timestamp") >= lo && r.getAs[Long]("timestamp") <= hi))
+  }
+
+  test("a catalog uncompressed size that disagrees with the body fails the restore, naming the segment") {
+    val (_, t0, _) = pitr
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-size").toString
+    val m = {
+      import spark.implicits._
+      val recs = (0 until 20).map(i => graft.model.KRecord("sz", 0, i.toLong, t0 + i,
+        null, s"v$i".getBytes, Nil))
+      graft.pipelines.Backup.run(spark, recs.toDS().toDF(),
+        graft.pipelines.BackupConfig("sz", root, graft.codec.CompressionCodec.Zstd,
+          enrichHeaders = false))
+    }
+    val seg = m.topics.head.partitions.head.segments.head
+    def failure(): String = {
+      val e = intercept[Exception](graft.pipelines.Restore.records(spark,
+        graft.pipelines.RestoreConfig(root, "sz")).count())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        .mkString("\n")
+    }
+    for (wrong <- Seq(seg.uncompressed_size + 1, seg.uncompressed_size - 1)) {
+      graft.catalog.Manifest.save(root, m.copy(topics = m.topics.map(t => t.copy(
+        partitions = t.partitions.map(p => p.copy(segments = List(
+          seg.copy(uncompressed_size = wrong))))))))
+      val msg = failure()
+      assert(msg.contains(seg.key) && msg.contains(s"$wrong"), msg)
+    }
+  }
 }

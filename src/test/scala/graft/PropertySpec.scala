@@ -173,6 +173,85 @@ class PropertySpec extends SparkSpec {
       .contains("record 42: header key of 65536 bytes exceeds the u16 wire limit"))
   }
 
+  // a window [1000, 2000] and timestamps that sit on, just outside and
+  // far from its bounds
+  private val (windowLo, windowHi) = (1000L, 2000L)
+  private val pitrSegment: Gen[List[KRecord]] = for {
+    n <- Gen.chooseNum(0, 30)
+    base <- Gen.chooseNum(0L, Long.MaxValue / 2)
+    recs <- Gen.sequence[List[KRecord], KRecord]((0 until n).map(i => for {
+      ts <- Gen.frequency(4 -> Gen.oneOf(windowLo - 1, windowLo, windowHi, windowHi + 1),
+        4 -> Gen.chooseNum(0L, 3000L), 1 -> Gen.oneOf(Long.MinValue, Long.MaxValue))
+      key <- bytesOrNull
+      value <- bytesOrNull
+      hs <- Gen.frequency(2 -> Gen.const(Nil), 3 -> Gen.resize(4, Gen.listOf(header)))
+    } yield KRecord("t", 0, base + i, ts, key, value, hs)))
+  } yield recs
+
+  test("kbak rows equal the KRecord encoder's rows of the decoded records, byte for byte") {
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.connector.catalog.SupportsRead
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.catalog.{Manifest, PartitionBackup, SegmentMetadata, TopicBackup}
+    import graft.codec.LegacySegment
+    import graft.pipelines.KbakSource
+    import scala.jdk.CollectionConverters._
+    spark // the scan plans its tasks against the active session
+    val toRow = ExpressionEncoder[KRecord]().createSerializer()
+    def encoded(rs: Iterator[KRecord]): List[Seq[Byte]] =
+      rs.map(r => toRow(r).asInstanceOf[UnsafeRow].getBytes.toSeq).toList
+    val codecs = Seq(CompressionCodec.None, CompressionCodec.Zstd, CompressionCodec.Lz4)
+    var n = 0
+    check("kbak row parity", Prop.forAll(pitrSegment) { recs =>
+      n += 1
+      val root = java.nio.file.Files.createTempDirectory("graft-rows").toString
+      // partitions 0-2: the records as KBAK under each codec; 3: legacy JSON
+      val segments = (codecs.map(Some(_)) :+ None).zipWithIndex.map { case (codec, p) =>
+        val rs = recs.map(_.copy(partition = p))
+        val key = codec.fold(s"rows/topics/t/partition=$p/segment-0.json")(c =>
+          Manifest.segmentKey("rows", "t", p, 0L, c.extension))
+        val data = codec.fold(LegacySegment.encodeLegacy(rs))(SegmentCodec.encode(rs, _))
+        val raw = codec.fold(0L)(c => Compression.decompress(data, SegmentCodec.HeaderSize,
+          SegmentCodec.bodyLength(data), c).length.toLong)
+        val path = java.nio.file.Paths.get(root, key)
+        java.nio.file.Files.createDirectories(path.getParent)
+        java.nio.file.Files.write(path, data)
+        val ts = rs.map(_.timestamp)
+        (p, data, SegmentMetadata(key, recs.headOption.fold(0L)(_.offset),
+          recs.lastOption.fold(0L)(_.offset), if (ts.isEmpty) 0L else ts.min,
+          if (ts.isEmpty) 0L else ts.max, rs.size.toLong, raw,
+          data.length.toLong - SegmentCodec.HeaderSize - SegmentCodec.FooterSize))
+      }
+      Manifest.save(root, BackupManifest("rows", 0L, None, Nil, "mixed", List(TopicBackup("t",
+        Some(4), segments.map { case (p, _, s) => PartitionBackup(p, List(s)) }.toList))))
+      // drive the source as Spark does: push the window, plan, read
+      val options = new CaseInsensitiveStringMap(
+        Map("backupRoot" -> root, "backupId" -> "rows").asJava)
+      val table = new KbakSource().getTable(KbakSource.schema, Array.empty, options)
+      val builder = table.asInstanceOf[SupportsRead].newScanBuilder(options)
+        .asInstanceOf[SupportsPushDownV2Filters]
+      def bound(op: String, v: Long) = new Predicate(op,
+        Array(Expressions.column("timestamp"), Expressions.literal(Long.box(v))))
+      val rest = builder.pushPredicates(Array(bound(">=", windowLo), bound("<=", windowHi)))
+      val batch = builder.build().toBatch
+      val factory = batch.createReaderFactory()
+      val got = batch.planInputPartitions().toList.flatMap { part =>
+        val reader = factory.createReader(part)
+        Iterator.continually(reader.next()).takeWhile(identity)
+          .map(_ => reader.get().asInstanceOf[UnsafeRow].getBytes.toSeq).toList
+      }
+      val want = segments.flatMap { case (p, data, s) =>
+        encoded(LegacySegment.decodeAny(data, s.key, "t", p, windowLo, windowHi))
+      }
+      rest.isEmpty && got == want
+    }, min = 60)
+    assert(n >= 60)
+  }
+
   test("offsets.db writer/reader round-trips arbitrary marks") {
     val mark: Gen[(String, String, Int, Long)] = for {
       backup <- Gen.resize(20, text).suchThat(_.nonEmpty)

@@ -134,6 +134,46 @@ class SegmentCodecSpec extends AnyFunSuite {
     assert(Compression.compress(payload, CompressionCodec.Lz4).length < payload.length / 3)
   }
 
+  test("a body must inflate to the catalog's size, and a wrong size allocates no more than the body") {
+    import com.github.luben.zstd.{Zstd, ZstdOutputStream}
+    def streamed(raw: Array[Byte]): Array[Byte] = { // as the backup writer frames zstd
+      val out = new java.io.ByteArrayOutputStream()
+      val z = new ZstdOutputStream(out)
+      z.write(raw); z.close()
+      out.toByteArray
+    }
+    def inflate(body: Array[Byte], codec: CompressionCodec, size: Long) =
+      Compression.decompress(body, 0, body.length, codec, size)
+    def failure(body: Array[Byte], codec: CompressionCodec, size: Long): String =
+      intercept[java.io.IOException](inflate(body, codec, size)).getMessage
+    val noisy = Array.tabulate[Byte](4096)(i => (i * 7919 % 251).toByte)
+    val zeros = new Array[Byte](1 << 20) // far past the trusted ratio
+    for (raw <- Seq(noisy, zeros); codec <- Seq(CompressionCodec.None, CompressionCodec.Zstd,
+        CompressionCodec.Lz4)) {
+      val bodies = if (codec == CompressionCodec.Zstd) Seq(streamed(raw), Zstd.compress(raw))
+        else Seq(Compression.compress(raw, codec))
+      for (body <- bodies) {
+        assert(inflate(body, codec, raw.length).sameElements(raw), s"$codec")
+        for (wrong <- Seq(raw.length - 1L, raw.length + 1L)) {
+          val msg = failure(body, codec, wrong)
+          assert(msg.contains("catalog") && msg.contains(s"$wrong"), s"$codec: $msg")
+        }
+      }
+    }
+    assert(Zstd.getFrameContentSize(streamed(noisy), 0, streamed(noisy).length) < 0)
+    // a corrupt catalog size near 2 GB: the streamed frame states no content
+    // size, so only the ratio bound keeps the reader from allocating it
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    for (body <- Seq(streamed(noisy), Zstd.compress(noisy))) {
+      val before = threads.getCurrentThreadAllocatedBytes
+      assert(failure(body, CompressionCodec.Zstd, Int.MaxValue - 8L)
+        .contains(s"body is ${noisy.length} bytes uncompressed"))
+      val allocated = threads.getCurrentThreadAllocatedBytes - before
+      assert(allocated < (16L << 20), s"$allocated bytes allocated")
+    }
+  }
+
   test("extension mapping") {
     assert(CompressionCodec.Zstd.extension == ".zst")
     assert(CompressionCodec.fromExtension("a/b/segment-0.bin.zst") == CompressionCodec.Zstd)
