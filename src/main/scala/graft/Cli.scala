@@ -64,6 +64,12 @@ object Cli {
         s" (known: ${known.toSeq.sorted.mkString(", ")})")
   }
 
+  /** The ingest batches an ingest-log state records pending (not yet
+    * folded).
+    */
+  private def pendingBatches(st: graft.util.StreamCommit.LogState): Int =
+    st.pending.values.map(_.size).sum
+
   def run(spark: SparkSession, args: Array[String]): Unit = args(0) match {
     case "backup" =>
       val Array(_, eventsDir, root, id, rest @ _*) = args: @unchecked
@@ -394,11 +400,11 @@ object Cli {
     // ingest-bm25 <docsDir> <indexDir> <checkpointDir> [streamId]
     // Exactly-once STREAMING ingest into a persisted BM25 index: the docs
     // directory is a file-stream source (new parquet files become
-    // micro-batches), each batch lands via the marker-gated StreamCommit
-    // protocol, and Trigger.AvailableNow drains everything currently
-    // present then stops — re-running with the same checkpoint ingests
-    // only files added since. A NEW checkpoint dir needs a NEW streamId
-    // (batchIds restart at 0 per checkpoint lineage).
+    // micro-batches), each batch lands via the StreamCommit protocol (one
+    // ingest-log commit per batch), and Trigger.AvailableNow drains
+    // everything currently present then stops — re-running with the same
+    // checkpoint ingests only files added since. A NEW checkpoint dir
+    // needs a NEW streamId (batchIds restart at 0 per checkpoint lineage).
     case "ingest-bm25" =>
       val Array(_, docsDir, indexDir, ckpt, rest @ _*) = args: @unchecked
       val sid = rest.lift(0).filter(_ != "-").getOrElse("")
@@ -410,11 +416,10 @@ object Cli {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
-      val ifs = graft.util.StreamCommit.fs(spark, indexDir)
       println(s"""{"index":${graft.util.Json.escape(indexDir)},""" +
         s""""n_postings":${spark.read.parquet(indexDir).count()},""" +
-        s""""pending_markers":${
-          graft.util.StreamCommit.listMarkers(ifs, indexDir).size}}""")
+        s""""pending_markers":${pendingBatches(
+          graft.util.StreamCommit.readState(spark, indexDir))}}""")
 
     // ingest-chunks <docsDir> <indexDir> <checkpointDir> [pq|flat] [streamId]
     // The dense siblings of ingest-bm25: exactly-once streaming ingest into
@@ -437,31 +442,31 @@ object Cli {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
-      val cfs = graft.util.StreamCommit.fs(spark, indexDir)
       println(s"""{"index":${graft.util.Json.escape(indexDir)},""" +
         s""""kind":"$kind",""" +
         s""""n_chunks":${spark.read.parquet(indexDir).count()},""" +
-        s""""pending_markers":${
-          graft.util.StreamCommit.listMarkers(cfs, indexDir).size}}""")
+        s""""pending_markers":${pendingBatches(
+          graft.util.StreamCommit.readState(spark, indexDir))}}""")
 
     // remove-ingest-batch <indexDir> <bm25|pq|flat> <batchId> [streamId]
     //   [--missing-ok]
     // Roll back one streaming-ingested batch (poisoned-data recovery):
-    // the removal intent is committed to the ingest log FIRST (the commit
-    // point), then the marker is deleted and the batch's tagged files are
-    // scrubbed (both layouts, codes-first, for pq). Crashed removals
-    // re-run to convergence; batches already compacted below the
-    // watermark (for bm25, their deltas folded into the base stats)
-    // without a removal record are refused loudly.
+    // the removal is committed to the ingest log FIRST (the commit point),
+    // then the batch's tagged files are scrubbed (both layouts,
+    // codes-first, for pq); `marker_removed` says whether the batch was
+    // pending. Crashed removals re-run to convergence; batches already
+    // compacted below the watermark (for bm25, their deltas folded into
+    // the base stats) without a removal record are refused loudly.
     case "remove-ingest-batch" =>
       val Array(_, indexDir, kind, batchIdS, rest @ _*) = args: @unchecked
       requireKnownFlags("remove-ingest-batch", rest, Set("--missing-ok"))
       val batchId = batchIdS.toLong
       val sid = rest.filterNot(_.startsWith("--"))
         .lift(0).filter(_ != "-").getOrElse("")
-      // --missing-ok: record a removal with no marker and no data files —
-      // ONLY for pre-intent-record crash residue; a typoed batchId would
-      // otherwise brick the stream's future apply, hence the default guard
+      // --missing-ok: record a removal of a batch never committed and
+      // without data files — ONLY for pre-intent-record crash residue; a
+      // typoed batchId would otherwise brick the stream's future apply,
+      // hence the default guard
       val missingOk = rest.contains("--missing-ok")
       val had = kind match {
         case "bm25" =>
@@ -483,26 +488,24 @@ object Cli {
 
     // compact-ingest-markers <indexDir>   (IVF-PQ / IVF-flat chunk index)
     // compact-bm25-stats <indexDir>       (BM25 index)
-    // The one marker compaction every ingest layout shares: fold the
-    // ingest markers into the per-stream contiguous watermarks of the
-    // layout's ingest log (a BM25 marker's stats delta into the base
-    // stats), delete them, and scrub crashed removals' leftovers from the
-    // layout's tables — run periodically to bound a long-lived stream's
-    // per-serve marker scan. A concurrent admin op fails loudly (CAS
-    // conflict) instead of losing an update.
+    // The one compaction every ingest layout shares: fold the pending
+    // batches into the per-stream contiguous watermarks of the layout's
+    // ingest log (a BM25 batch's stats delta into the base stats) and
+    // scrub crashed removals' leftovers from the layout's tables — run
+    // periodically to bound a long-lived stream's pending set
+    // (`pending_markers` counts the batches left pending).
     case verb @ ("compact-ingest-markers" | "compact-bm25-stats") =>
       val root = args(1)
       val tagGlobs: String => Seq[String] =
         if (verb == "compact-bm25-stats") graft.ann.Bm25.batchGlobs(root)
         else graft.ann.Retrieval.chunkBatchGlobs(root)
-      val wfs = graft.util.StreamCommit.fs(spark, root)
-      val before = graft.util.StreamCommit.listMarkers(wfs, root).size
-      val wm = graft.util.StreamCommit.compactMarkers(spark, root, tagGlobs)
-      val after = graft.util.StreamCommit.listMarkers(wfs, root).size
+      val before = pendingBatches(graft.util.StreamCommit.readState(spark, root))
+      val st = graft.util.StreamCommit.compact(spark, root, tagGlobs)
+      val after = pendingBatches(st)
       println(s"""{"index":${graft.util.Json.escape(root)},""" +
         s""""folded_markers":${before - after},""" +
         s""""pending_markers":$after,""" +
-        s""""watermarks":${wm.toSeq.sortBy(_._1).map { case (k, v) =>
+        s""""watermarks":${st.watermarks.toSeq.sortBy(_._1).map { case (k, v) =>
           s"${graft.util.Json.escape(k)}:$v" }.mkString("{", ",", "}")}}""")
 
     // validate-bm25-index <indexDir>
@@ -922,11 +925,8 @@ object Cli {
       val captured = graft.sources.ClusterAdmin.captureSnapshot(admin, nowMs)
       val snap = graft.remap.ConsumerGroupSnapshot.restrictTo(captured, backed)
       val path = new org.apache.hadoop.fs.Path(s"$root/$id/consumer-groups-snapshot.json")
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(path, true)
-      try out.write(
-        graft.remap.ConsumerGroupSnapshot.toJson(snap).getBytes("UTF-8"))
-      finally out.close()
+      graft.util.Sidecar.replace(spark.sparkContext.hadoopConfiguration, path,
+        graft.remap.ConsumerGroupSnapshot.toJson(snap))
       println(s"snapshot-groups $id: kept ${snap.groups.size} of " +
         s"${captured.groups.size} groups with offsets on backed-up topics -> $path")
 

@@ -584,7 +584,7 @@ object QueriesData {
     // the ingest-assembled sibling: the SAME serve against a layout built
     // half by writeIndex and half through the exactly-once streaming
     // ingest protocol (two micro-batches, a stats compaction between
-    // them, the second batch's stats still marker-borne at serve time) —
+    // them, the second batch's stats still pending at serve time) —
     // so the protocol's END STATE, not just its specs, is hash-checked
     // against plain BM25 over the full corpus in DuckDB
     "a_bm25_ingest" -> ((s, d) => {
@@ -602,7 +602,7 @@ object QueriesData {
     // folded ACROSS the recorded gap; the committed serve must rank
     // exactly BM25 over the corpus minus the removed batch (queries drawn
     // from the surviving corpus) — resurrection in any form (orphaned
-    // postings, a delta that outlived its marker, a leaked committed
+    // postings, a delta that outlived its batch, a leaked committed
     // file) shifts df/idf or the candidates and breaks the hash
     "a_bm25_rollback" -> ((s, d) => {
       val path = ensureBm25RollbackIndex(s, d)
@@ -618,10 +618,10 @@ object QueriesData {
 
     // serve-read isolation, hash-checked END TO END: the cached layout is
     // the ingest-assembled index PLUS a fully-promoted POISON batch whose
-    // marker never landed (the exact crash-before-marker state) —
-    // duplicate copies of every query-slice doc, which would tie into
-    // every top-5 and shift every df/idf if visible. committedOnly pins
-    // the scan to base files + marker/folded batches, so the serve must
+    // ingest-log commit never landed (the exact crash-before-commit
+    // state) — duplicate copies of every query-slice doc, which would tie
+    // into every top-5 and shift every df/idf if visible. committedOnly
+    // pins the scan to base files + pending/folded batches, so the serve must
     // hash-match plain BM25 over the committed corpus alone
     "a_bm25_committed" -> ((s, d) => {
       val path = ensureBm25CommittedIndex(s, d)
@@ -4497,7 +4497,7 @@ object QueriesData {
     * odd doc_ids land as two `applyIngestBatch` micro-batches with a stats
     * compaction between them — the cached layout carries the protocol's
     * real artifacts (batch-tagged posting files, one folded watermark, one
-    * live marker whose stats delta folds at serve time), and the battery
+    * pending batch whose stats delta folds at serve time), and the battery
     * oracle compares its serve against plain BM25 over the full corpus.
     */
   def ensureBm25IngestIndex(s: SparkSession, dir: String): String =
@@ -4520,7 +4520,7 @@ object QueriesData {
     * layout's committed serve must rank exactly plain BM25 over the
     * corpus MINUS the removed batch — any resurrection (orphaned postings
     * below the watermark, a folded delta that should have died with the
-    * marker, a leaked file in the committed pruning) shifts df/idf or the
+    * removal, a leaked file in the committed pruning) shifts df/idf or the
     * candidate set and breaks the hash.
     */
   def ensureBm25RollbackIndex(s: SparkSession, dir: String): String =
@@ -4543,9 +4543,9 @@ object QueriesData {
 
   /** [[ensureBm25IngestIndex]] plus a POISON batch: duplicate copies of
     * the battery's query-slice docs land fully promoted (batchId 2, same
-    * stream) and then the batch's marker is deleted — the exact
-    * crash-before-marker state a concurrent serve can observe. If
-    * committed-only serving leaked the unmarked files, the duplicates
+    * stream) and then the batch's ingest-log entry is deleted — the exact
+    * crash-before-commit state a concurrent serve can observe. If
+    * committed-only serving leaked the uncommitted files, the duplicates
     * would tie into every query's top-5 (identical text → identical
     * per-term contributions) and inflate every matched term's df, shifting
     * the hashed scores; the entry's oracle is plain BM25 over the
@@ -4567,9 +4567,8 @@ object QueriesData {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
       graft.ann.Bm25.applyIngestBatch(poison, build.getAbsolutePath,
         batchId = 2L, streamId = "ingest")
-      graft.util.StreamCommit.fs(s, build.getAbsolutePath).delete(
-        new org.apache.hadoop.fs.Path(
-          s"${build.getAbsolutePath}/_stream_appends/ingest~b2"), false)
+      new java.io.File(build, "_graft_log").listFiles()
+        .filter(_.getName.matches("[0-9]+")).maxBy(_.getName.toLong).delete()
     }
 
   def ensureIvfPq(s: SparkSession, dir: String): String =

@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.util.StreamCommit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -183,7 +184,7 @@ object Bm25 {
 
   /** Persist the inverted index as term-bucketed parquet: postings
     * partitioned by `bucket = pmod(xxhash64(term), nBuckets)` plus the
-    * corpus stats as the payload of ingest-log version 0
+    * corpus stats as the payload of the first ingest-log entry
     * ([[graft.util.StreamCommit.LogState]]). All postings of a term live
     * in exactly one bucket, so a query probes only its terms' buckets
     * (static partition pruning) and still sees every posting — and the
@@ -195,11 +196,9 @@ object Bm25 {
     val (nDocs, totalTokens) = corpusStats(docs, textCol)
     bucketedPostings(docs, textCol, nBuckets)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    graft.util.StreamCommit.commit(docs.sparkSession, path,
-      graft.util.StreamCommit.LogState(0L, Map.empty, Map.empty,
-        Map("n_docs" -> nDocs, "total_tokens" -> totalTokens,
-          "n_buckets" -> nBuckets.toLong)),
-      "rebuild the index")
+    StreamCommit.advance(docs.sparkSession, path)(_ =>
+      StreamCommit.LogState(payload = Map("n_docs" -> nDocs,
+        "total_tokens" -> totalTokens, "n_buckets" -> nBuckets.toLong)))
   }
 
   /** Incremental ingest into a persisted index: new documents' postings
@@ -212,46 +211,39 @@ object Bm25 {
     * (spec-pinned) — no staleness window, unlike the dense index's
     * fit-frozen centroids. Same contract as the chunk-index append: the
     * caller appends NEW docs (re-appending a doc double-counts it), and
-    * the stats commit after the data lands, so a crash between the two —
-    * or a CAS conflict in [[graft.util.StreamCommit.commit]] — leaves the
-    * stats one append behind: postings appended, stats not yet advanced.
+    * the stats commit after the data lands, so a crash between the two
+    * leaves the stats one append behind: postings appended, stats not yet
+    * advanced. A concurrent log writer costs the stats commit a retry
+    * round, not the update.
     */
   def appendToIndex(docs: DataFrame, path: String,
                     textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val st = graft.util.StreamCommit.readState(spark, path)
-    val (n0, t0, nBuckets) = liveStatsFrom(Seq.empty, st)
+    val (_, _, nBuckets) = liveStatsFrom(StreamCommit.readState(spark, path))
     val (dn, dt) = corpusStats(docs, textCol)
     bucketedPostings(docs, textCol, nBuckets)
       .write.mode("append").partitionBy("bucket").parquet(path)
-    // the watermarks and removed sets ride through: dropping a watermark
-    // would re-serve every folded-but-undeleted marker's delta; dropping
-    // removed would resurrect rolled-back batches' leftover postings
-    graft.util.StreamCommit.commit(spark, path, st.next(payload = st.payload ++
-      Map("n_docs" -> (n0 + dn), "total_tokens" -> (t0 + dt))),
-      "the batch's postings are ALREADY appended — do NOT re-run " +
-        "appendToIndex (it would append them a second time, doubling tf/df " +
-        "contributions); advance the stats only — re-read the ingest log " +
-        s"and commit (+$dn docs, +$dt tokens) — or rebuild the index")
+    StreamCommit.advance(spark, path) { st =>
+      st.copy(payload = st.payload ++
+        Map("n_docs" -> (stat(st.payload, "n_docs") + dn),
+          "total_tokens" -> (stat(st.payload, "total_tokens") + dt)))
+    }
   }
 
-  /** Serving-time corpus stats `(nDocs, totalTokens, nBuckets)`: the
-    * ingest log's base stats plus every live unfolded streaming-ingest
-    * marker's delta ([[graft.util.StreamCommit.livePayload]]; one small
-    * marker file per un-compacted micro-batch, which
-    * [[compactStreamStats]] bounds). Callers take `markers` and `st` from
-    * one [[graft.util.StreamCommit.committedView]], whose
-    * markers-before-state read order keeps a concurrent compaction from
-    * dropping or double-counting deltas (Bm25Spec pins the
-    * interleavings).
-    */
-  private[graft] def liveStatsFrom(markers: Seq[(String, Long, String)],
-                                   st: graft.util.StreamCommit.LogState)
-      : (Long, Long, Int) = {
-    val p = graft.util.StreamCommit.livePayload(markers, st)
-    def stat(k: String) = p.getOrElse(k, throw new IllegalArgumentException(
+  private def stat(p: Map[String, Long], k: String): Long =
+    p.getOrElse(k, throw new IllegalArgumentException(
       s"the ingest log carries no BM25 $k — not a BM25 index"))
-    (stat("n_docs"), stat("total_tokens"), stat("n_buckets").toInt)
+
+  /** Serving-time corpus stats `(nDocs, totalTokens, nBuckets)` of one
+    * ingest-log state: its base stats plus every pending streaming-ingest
+    * batch's delta ([[graft.util.StreamCommit.livePayload]]; one small
+    * entry per un-compacted micro-batch, which [[compactStreamStats]]
+    * bounds).
+    */
+  private[graft] def liveStatsFrom(st: StreamCommit.LogState)
+      : (Long, Long, Int) = {
+    val p = StreamCommit.livePayload(st)
+    (stat(p, "n_docs"), stat(p, "total_tokens"), stat(p, "n_buckets").toInt)
   }
 
   /** EXACTLY-ONCE application of one ingest batch — the BM25 sibling of
@@ -260,57 +252,55 @@ object Bm25 {
     * postings. The extra wrinkle is the corpus stats: a replayed
     * `appendToIndex` would double-count (n_docs, total_tokens) with no way
     * to tell, so the batch's delta is NOT added to the base — it travels
-    * IN the marker file (the same write that commits the batch), and
-    * [[retrieveFromIndex]] serves base + unfolded marker deltas. Stats and
+    * IN the log commit that records the batch pending, and
+    * [[retrieveFromIndex]] serves base + pending deltas. Stats and
     * postings therefore commit in ONE atomic step, and every crash point
     * replays clean.
     */
   def applyIngestBatch(batch: DataFrame, path: String, batchId: Long,
                        streamId: String = "",
                        textCol: String = "text"): Boolean =
-    graft.util.StreamCommit.applyBatch(batch.sparkSession, path, streamId,
+    StreamCommit.applyBatch(batch.sparkSession, path, streamId,
       batchId, batchGlobs(path), Seq("" -> path)) { (staging, st) =>
-      val (_, _, nBuckets) = liveStatsFrom(Seq.empty, st)
+      val (_, _, nBuckets) = liveStatsFrom(st)
       val (dn, dt) = corpusStats(batch, textCol)
       bucketedPostings(batch, textCol, nBuckets)
         .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-      s"""{"n_docs":$dn,"total_tokens":$dt}"""
+      Map("n_docs" -> dn, "total_tokens" -> dt)
     }
 
   /** One ingest batch's posting files, by batch tag. */
   private[graft] def batchGlobs(path: String)(tagName: String): Seq[String] =
-    Seq(s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/$tagName-*")
+    Seq(s"${StreamCommit.escapeGlob(path)}/bucket=*/$tagName-*")
 
   /** Roll back one streaming-ingested batch (the "remove a poisoned
-    * batch" administrative operation): the shared intent-record-first
-    * protocol of [[graft.util.StreamCommit.removeBatchGuarded]] over this
-    * layout's posting files. Once the removal is recorded, the batch's
-    * marker delta never serves and never folds, its posting files are
-    * uncommitted in committed-only serves, and [[applyIngestBatch]]
-    * refuses to re-apply it. A batch already folded into the base stats
-    * is refused loudly — its delta cannot be subtracted (rebuild, or trim
-    * and re-append, instead).
+    * batch" administrative operation): the shared record-first protocol
+    * of [[graft.util.StreamCommit.removeBatchGuarded]] over this layout's
+    * posting files. Once the removal is recorded, the batch's delta never
+    * serves and never folds, its posting files are uncommitted in
+    * committed-only serves, and [[applyIngestBatch]] refuses to re-apply
+    * it. A batch already folded into the base stats is refused loudly —
+    * its delta cannot be subtracted (rebuild, or trim and re-append,
+    * instead).
     */
   def removeIngestBatch(spark: SparkSession, path: String, batchId: Long,
                         streamId: String = "",
                         afterPreCheck: () => Unit = () => (),
-                        afterMarkerDelete: () => Unit = () => (),
                         allowMissing: Boolean = false): Boolean =
-    graft.util.StreamCommit.removeBatchGuarded(spark, path, streamId,
-      batchId, batchGlobs(path)(graft.util.StreamCommit.tag(streamId, batchId)),
-      afterPreCheck, afterMarkerDelete, allowMissing)
+    StreamCommit.removeBatchGuarded(spark, path, streamId,
+      batchId, batchGlobs(path)(StreamCommit.tag(streamId, batchId)),
+      afterPreCheck, allowMissing)
 
-  /** Fold accumulated streaming-ingest marker deltas into the base stats
-    * and delete the folded markers — the shared
-    * [[graft.util.StreamCommit.compactMarkers]] over this layout's posting
-    * files (it also scrubs crashed removals' leftover postings). Run it
-    * periodically to bound a long-lived stream's per-serve marker scan.
-    * Streaming ingest batches never touch the ingest log, so they are
-    * safe concurrently with it; concurrent administrative writers fail
-    * loudly on at least one side.
+  /** Fold the pending streaming-ingest batches' deltas into the base
+    * stats — the shared [[graft.util.StreamCommit.compact]] over this
+    * layout's posting files (it also scrubs crashed removals' leftover
+    * postings). Run it periodically to bound a long-lived stream's
+    * pending set. Every ingest-log writer commits through one retried
+    * log advance, so it is safe concurrently with ingest and with the
+    * other administrative writers.
     */
   def compactStreamStats(spark: SparkSession, path: String): Unit =
-    graft.util.StreamCommit.compactMarkers(spark, path, batchGlobs(path))
+    StreamCommit.compact(spark, path, batchGlobs(path))
 
   private val postingsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
@@ -332,18 +322,17 @@ object Bm25 {
     *
     * Visibility vs a concurrent streaming ingest: the default serve reads
     * whatever files are in the layout, so a batch mid-promote (or crashed
-    * before its marker) is PARTIALLY visible — its landed postings score
-    * with a df that includes them but corpus stats that don't (the stats
-    * delta only exists once the marker lands). That is an at-least-once
-    * read mode: transient, bounded by one batch, converging at the next
-    * marker. `committedOnly = true` buys snapshot isolation at marker
-    * granularity instead: the scan is pinned to base files + batches whose
-    * marker is present (or already folded — compaction deletes markers,
-    * the folded watermark is the durable record), the SAME marker snapshot
-    * feeds the corpus stats, so a half-landed batch is entirely invisible
-    * and stats always match the scanned postings exactly. Cost: one
+    * before its log commit) is PARTIALLY visible — its landed postings
+    * score with a df that includes them but corpus stats that don't (the
+    * stats delta only exists once the batch commits). That is an
+    * at-least-once read mode: transient, bounded by one batch, converging
+    * at the next commit. `committedOnly = true` buys snapshot isolation at
+    * batch granularity instead: the scan is pinned to base files + batches
+    * the ingest log records pending or folded, the SAME log state feeds
+    * the corpus stats, so a half-landed batch is entirely invisible and
+    * stats always match the scanned postings exactly. Cost: one
     * driver-side file listing of the probed buckets (base + one-ish file
-    * set per un-compacted batch — metadata-sized; compaction bounds it).
+    * set per ingest batch — metadata-sized).
     */
   def retrieveFromIndex(spark: SparkSession, path: String,
                         queries: DataFrame, k: Int,
@@ -351,11 +340,11 @@ object Bm25 {
                         textCol: String = "text",
                         maxQueries: Long = 1000000L,
                         committedOnly: Boolean = false): DataFrame = {
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    // ONE committed view feeds both the stats and (in committed-only mode)
-    // the file pruning — stats and scan can't diverge
-    val (markers, st) = graft.util.StreamCommit.committedView(spark, path)
-    val (nDocs, totalTokens, nBuckets) = liveStatsFrom(markers, st)
+    val fs = StreamCommit.fs(spark, path)
+    // ONE log state feeds both the stats and (in committed-only mode) the
+    // file pruning — stats and scan can't diverge
+    val st = StreamCommit.readState(spark, path)
+    val (nDocs, totalTokens, nBuckets) = liveStatsFrom(st)
     val buckets = queries.where(col(textCol).isNotNull)
       .select(explode(terms(col(textCol))).as("term"))
       .select(termBucket(nBuckets).as("bucket"))
@@ -368,10 +357,9 @@ object Bm25 {
       else {
         val globs =
           if (buckets.isEmpty) Seq.empty[String]
-          else Seq(s"${graft.util.StreamCommit.escapeGlob(path)}" +
+          else Seq(s"${StreamCommit.escapeGlob(path)}" +
             s"/bucket={${buckets.mkString(",")}}/*")
-        val files = graft.util.StreamCommit.committedDataFiles(fs, globs,
-          markers, st)
+        val files = StreamCommit.committedDataFiles(fs, globs, st)
         if (files.isEmpty)
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -406,12 +394,11 @@ object Bm25 {
     */
   def validateIndex(spark: SparkSession, path: String)
       : (Long, Long, Long, Long, Boolean) = {
-    val fs = graft.util.StreamCommit.fs(spark, path)
-    val (markers, st) = graft.util.StreamCommit.committedView(spark, path)
-    val (nDocs, totalTokens, _) = liveStatsFrom(markers, st)
-    val files = graft.util.StreamCommit.committedDataFiles(fs,
-      Seq(s"${graft.util.StreamCommit.escapeGlob(path)}/bucket=*/*"),
-      markers, st)
+    val fs = StreamCommit.fs(spark, path)
+    val st = StreamCommit.readState(spark, path)
+    val (nDocs, totalTokens, _) = liveStatsFrom(st)
+    val files = StreamCommit.committedDataFiles(fs,
+      Seq(s"${StreamCommit.escapeGlob(path)}/bucket=*/*"), st)
     val (distinctDocs, sumTf) =
       if (files.isEmpty) (0L, 0L)
       else {

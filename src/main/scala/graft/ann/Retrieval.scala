@@ -627,14 +627,14 @@ object Retrieval {
     * enough.
     *
     * `committedOnly = true` pins BOTH layout scans (codes and `_vecs`) to
-    * base files + batches whose [[graft.util.StreamCommit]] marker is
-    * present, via a driver-side listing of the probed partitions — so a
-    * streaming-ingest batch that is mid-promote (or crashed before its
-    * marker) is entirely invisible: without it the default scan could
-    * shortlist a SUBSET of a half-landed batch's chunks (at-least-once
-    * visibility, transient, converges at the marker). Cost: one file
-    * listing per layout over the probed lists (metadata-sized). ONE
-    * marker+watermark snapshot is taken per logical serve CALL, before
+    * base files + batches the [[graft.util.StreamCommit]] ingest log
+    * records committed, via a driver-side listing of the probed
+    * partitions — so a streaming-ingest batch that is mid-promote (or
+    * crashed before its log commit) is entirely invisible: without it the
+    * default scan could shortlist a SUBSET of a half-landed batch's chunks
+    * (at-least-once visibility, transient, converges at the commit). Cost:
+    * one file listing per layout over the probed lists (metadata-sized).
+    * ONE ingest-log state is read per logical serve CALL, before
     * any query sharding — an over-gate query set that recurses through
     * hash shards serves every shard from the same index view (a
     * concurrent ingest committing between shards cannot give different
@@ -652,21 +652,19 @@ object Retrieval {
                                committedOnly: Boolean = false): DataFrame =
     retrievePqWithSnapshot(spark, path, queries, k, nProbe, shortlist, dim,
       salt, textCol, exactRerank, maxQueries, collectGate,
-      if (committedOnly) Some(StreamCommit.committedView(spark, path))
+      if (committedOnly) Some(StreamCommit.readState(spark, path))
       else None)
 
-  private type View = (Seq[(String, Long, String)], StreamCommit.LogState)
-
   /** One layout table's committed parquet files (partition globs relative
-    * to `root`) in one [[graft.util.StreamCommit.committedView]], read
-    * with the pinned schema — an empty frame when nothing is committed.
+    * to `root`) in one ingest-log state, read with the pinned schema — an
+    * empty frame when nothing is committed.
     */
   private def readCommitted(spark: SparkSession, root: String,
-                            partGlobs: Seq[String], view: View,
+                            partGlobs: Seq[String],
+                            view: StreamCommit.LogState,
                             schema: StructType): DataFrame = {
     val files = StreamCommit.committedDataFiles(StreamCommit.fs(spark, root),
-      partGlobs.map(g => s"${StreamCommit.escapeGlob(root)}/$g"),
-      view._1, view._2)
+      partGlobs.map(g => s"${StreamCommit.escapeGlob(root)}/$g"), view)
     if (files.isEmpty)
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
@@ -679,7 +677,7 @@ object Retrieval {
     */
   private def layoutScan(spark: SparkSession, root: String, schema: StructType,
                          filter: Column, partGlobs: Seq[String],
-                         snapshot: Option[View]): DataFrame =
+                         snapshot: Option[StreamCommit.LogState]): DataFrame =
     snapshot match {
       case None       => spark.read.schema(schema).parquet(root).where(filter)
       case Some(view) => readCommitted(spark, root, partGlobs, view, schema)
@@ -699,7 +697,7 @@ object Retrieval {
     */
   def validatePqIndex(spark: SparkSession,
                       path: String): (Long, Long, Long, Long, Boolean) = {
-    val view = StreamCommit.committedView(spark, path)
+    val view = StreamCommit.readState(spark, path)
     val codes = readCommitted(spark, path, Seq("list=*/*"), view,
       pqCodesSchema).select(col("doc_id"), col("chunk_idx"), lit(1L).as("c"))
     val vecs = readCommitted(spark, s"$path/_vecs", Seq("list=*/vb=*/*"),
@@ -727,7 +725,7 @@ object Retrieval {
       path: String, queries: DataFrame, k: Int, nProbe: Int,
       shortlist: Int, dim: Int, salt: String, textCol: String,
       exactRerank: Boolean, maxQueries: Long, collectGate: Long,
-      snapshot: Option[View]): DataFrame = {
+      snapshot: Option[StreamCommit.LogState]): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val sl = if (shortlist > 0) shortlist else 10 * k
     require(sl >= k, s"shortlist=$sl must be >= k=$k")
@@ -905,7 +903,7 @@ object Retrieval {
           .parquet(s"$staging/vecs")
         codes.write.mode("overwrite").partitionBy("list")
           .parquet(s"$staging/codes")
-        ""
+        Map.empty
     }
 
   /** One ingest batch's data files in a chunk index, by batch tag, CODES
@@ -926,11 +924,11 @@ object Retrieval {
     * IVF-flat chunk index — the administrative "remove a poisoned batch"
     * operation: the shared intent-record-first protocol of
     * [[graft.util.StreamCommit.removeBatchGuarded]] (removal recorded in
-    * the ingest log before any mutation, then marker delete, then the
-    * codes-first scrub of [[chunkBatchGlobs]]), including its
-    * serve-vs-rollback reader contract (in-flight serves fail loudly,
-    * never silently partially). Idempotent; must not race an in-flight
-    * ingest of the same tag (administrative single-writer).
+    * the ingest log before any mutation, then the codes-first scrub of
+    * [[chunkBatchGlobs]]), including its serve-vs-rollback reader
+    * contract (in-flight serves fail loudly, never silently partially).
+    * Idempotent; must not race an in-flight ingest of the same tag
+    * (administrative single-writer).
     */
   def removePqIngestBatch(spark: SparkSession,
                           path: String, batchId: Long,
@@ -1102,7 +1100,7 @@ object Retrieval {
       chunkAppendFrame(batch, path, chunkTokens, overlapTokens, dim, salt,
         textCol).drop("vaug")
         .write.mode("overwrite").partitionBy("list").parquet(staging)
-      ""
+      Map.empty
     }
 
   /** Serve a persisted chunk index: the union of every query's probed
@@ -1111,7 +1109,7 @@ object Retrieval {
     * index files are ever read; scoring and ranking are then exactly
     * [[topKChunksIvf]]. Query text must use the same (chunkTokens, dim,
     * salt) the index was built with. `committedOnly` pins the scan to
-    * base files + marker-committed ingest batches (the same snapshot
+    * base files + log-committed ingest batches (the same snapshot
     * contract as [[retrieveFromChunkIndexPq]]).
     */
   def retrieveFromChunkIndex(spark: SparkSession,
@@ -1126,7 +1124,7 @@ object Retrieval {
     val lists = probedLists(probeTable(q, model, np, "vec", "vaug"))
     val scan = layoutScan(spark, path, flatChunkSchema, inLists(lists),
       lists.map(l => s"list=$l/*"),
-      if (committedOnly) Some(StreamCommit.committedView(spark, path))
+      if (committedOnly) Some(StreamCommit.readState(spark, path))
       else None)
     topKChunksIvf(scan, model, q, k, np, probeCol = "vaug",
       maxQueries = maxQueries)

@@ -284,27 +284,29 @@ object SegmentCodec {
     private def fill(): Unit =
       while (pending == null && consumed < expected && buf.remaining() >= 4) {
         val totalLen = buf.getInt
-        require(buf.remaining() >= totalLen, "Record data truncated")
+        require(totalLen >= 16 && buf.remaining() >= totalLen, "Record data truncated")
         val limit = buf.position() + totalLen
+        // every field is bounded by its record, as the `kbak` reader's are: a
+        // length that overruns the record fails before anything is allocated
+        buf.limit(limit)
         val timestamp = buf.getLong
         val offset = buf.getLong
         if (timestamp >= windowStartMs && timestamp <= windowEndMs) {
-          val key = readBytes(buf.getInt)
-          val value = readBytes(buf.getInt)
-          val headerCount = buf.getShort & 0xffff
+          val key = readBytes(int())
+          val value = readBytes(int())
+          val headerCount = short()
           val headers = new scala.collection.mutable.ArrayBuffer[KHeader](headerCount)
           var i = 0
           while (i < headerCount) {
-            val klen = buf.getShort & 0xffff
-            val kb = new Array[Byte](klen); buf.get(kb)
-            val hv = readBytes(buf.getInt)
+            val kb = new Array[Byte](need(short())); buf.get(kb)
+            val hv = readBytes(int())
             headers += KHeader(new String(kb, StandardCharsets.UTF_8), hv)
             i += 1
           }
           pending = KRecord(segTopic, segPartition, offset, timestamp, key, value,
             headers.toSeq)
         }
-        buf.position(limit)
+        buf.limit(body.length).position(limit)
         consumed += 1
       }
 
@@ -316,7 +318,14 @@ object SegmentCodec {
       pending = null
       r
     }
+    /** `n` more bytes of the current record, or a truncation error. */
+    private def need(n: Int): Int = {
+      require(n >= 0 && n <= buf.remaining(), "Record data truncated")
+      n
+    }
+    private def int(): Int = { need(4); buf.getInt }
+    private def short(): Int = { need(2); buf.getShort & 0xffff }
     private def readBytes(len: Int): Array[Byte] =
-      if (len < 0) null else { val a = new Array[Byte](len); buf.get(a); a }
+      if (len < 0) null else { val a = new Array[Byte](need(len)); buf.get(a); a }
   }
 }

@@ -95,7 +95,6 @@ object Backup {
     */
   private[graft] def writerInput(spark: SparkSession, records: DataFrame,
                                  config: BackupConfig): DataFrame = {
-    import spark.implicits._
     // topic resolution needs a distinct scan of the source — only pay for it
     // when include/exclude filters are actually configured
     val filtered =
@@ -104,8 +103,9 @@ object Backup {
     // the typed input contract, checked at analysis only: `as[KRecord]`
     // resolves its deserializer eagerly (columns by name, legal upcasts only)
     // and fails here on a missing or ill-typed column; no row is ever
-    // deserialized through it
-    filtered.as[KRecord]
+    // deserialized through it. The encoder is the one derived once per JVM
+    // (a product encoder derived per call costs a runtime reflection pass)
+    filtered.as(KbakSource.encoder)
     canonical(filtered)
       .repartition(col("topic"), col("partition"))
       .sortWithinPartitions("topic", "partition", "offset")

@@ -131,11 +131,6 @@ case class OffsetMapping(
     }
     copy(entries = updated)
   }
-
-  def sortedKeys: Seq[(String, Int)] = entries.keys.toSeq.map { k =>
-    val i = k.lastIndexOf('/')
-    (k.substring(0, i), k.substring(i + 1).toInt)
-  }.sorted
 }
 
 /** A consumer-group reset decision for one (group, topic, partition). */

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
 
-import java.nio.charset.StandardCharsets
 
 /** Persistence for [[OffsetMapping]] as `{backup_id}/offset-mapping.json`,
   * plus the reference's fallback chain for the `offset-reset` commands
@@ -51,10 +50,8 @@ object OffsetMappingStore {
     * is rebuilt whole by each three-phase run, never merged).
     */
   def save(root: String, backupId: String, m: OffsetMapping): String = {
-    val f = fs(root)
     val p = new org.apache.hadoop.fs.Path(path(root, backupId))
-    val os = f.create(p, true)
-    try os.write(toJson(m).getBytes(StandardCharsets.UTF_8)) finally os.close()
+    graft.util.Sidecar.replace(graft.util.ActiveHadoopConf(), p, toJson(m))
     p.toString
   }
 
@@ -62,12 +59,7 @@ object OffsetMappingStore {
     val f = fs(root)
     val p = new org.apache.hadoop.fs.Path(path(root, backupId))
     if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(fromJson(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)))
-      finally in.close()
-    }
+    else Some(fromJson(graft.util.Sidecar.readText(f, p)))
   }
 
   /** Build a bounded driver-side mapping from the distributed produce-pairs

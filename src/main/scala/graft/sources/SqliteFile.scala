@@ -225,7 +225,6 @@ object SqliteFile {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, conf)
     val in = fs.open(p)
-    try open(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in))
-    finally in.close()
+    try open(in.readAllBytes()) finally in.close()
   }
 }

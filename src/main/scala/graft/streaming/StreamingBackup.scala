@@ -79,14 +79,4 @@ object StreamingBackup {
     KRecord.eventsProjection(
       spark.readStream.schema(schema).parquet(dir), numPartitions)
   }
-
-  /** St6 lag observation: per-source lag rows from the last progress event of
-    * a running query (latestOffset vs endOffset when the source reports them).
-    */
-  def lastProgressLag(q: StreamingQuery): Seq[(String, String, String)] = {
-    Option(q.lastProgress).toSeq.flatMap { p =>
-      p.sources.toSeq.map(s =>
-        (s.description, Option(s.endOffset).getOrElse(""), Option(s.latestOffset).getOrElse("")))
-    }
-  }
 }

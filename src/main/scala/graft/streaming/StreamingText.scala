@@ -169,9 +169,9 @@ object StreamingText {
     * Returns the configured writer; the caller picks trigger/checkpoint
     * and calls `start()` — the checkpoint is what makes batchIds stable
     * across restarts, which the exactly-once contract rests on. Run
-    * [[graft.util.StreamCommit.compactMarkers]] (CLI
-    * `compact-ingest-markers`) periodically to bound a long-lived
-    * stream's marker count (what committed-only serves scan).
+    * [[graft.util.StreamCommit.compact]] (CLI `compact-ingest-markers`)
+    * periodically to bound a long-lived stream's pending set in the
+    * ingest log.
     */
   def ingestChunkIndexPqStream(docStream: DataFrame, indexPath: String,
                                chunkTokens: Int = 32, overlapTokens: Int = 8,
@@ -189,7 +189,7 @@ object StreamingText {
   /** [[ingestChunkIndexPqStream]] for the IVF-FLAT chunk index — the
     * layout [[retrieveStream]] serves. Same exactly-once per-batch apply
     * ([[graft.ann.Retrieval.applyChunkIngestBatch]]); the flat layout is
-    * the easy case (one table, empty markers).
+    * the easy case (one table, no counter delta).
     */
   def ingestChunkIndexStream(docStream: DataFrame, indexPath: String,
                              chunkTokens: Int = 32, overlapTokens: Int = 8,
@@ -207,11 +207,11 @@ object StreamingText {
   /** The lexical sibling of [[ingestChunkIndexPqStream]]: a document
     * stream feeds a persisted BM25 index with exactly-once micro-batch
     * appends ([[graft.ann.Bm25.applyIngestBatch]] — postings land under
-    * batch-tagged filenames, the stats delta commits atomically inside
-    * the batch marker, and serving adds unfolded marker deltas to the
-    * ingest log's base stats). Run [[graft.ann.Bm25.compactStreamStats]]
-    * — the shared marker compaction — periodically to bound the marker
-    * count of a long-lived stream.
+    * batch-tagged filenames, the stats delta commits atomically in the
+    * ingest-log entry that records the batch, and serving adds pending
+    * deltas to the log's base stats). Run
+    * [[graft.ann.Bm25.compactStreamStats]] — the shared compaction —
+    * periodically to bound the pending set of a long-lived stream.
     */
   def ingestBm25IndexStream(docStream: DataFrame, indexPath: String,
                             textCol: String = "text",

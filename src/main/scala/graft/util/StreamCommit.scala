@@ -3,10 +3,11 @@ package graft.util
 /** Shared mechanics of the exactly-once micro-batch commit protocol the
   * streaming index ingests use (IVF-flat and IVF-PQ chunk indexes, BM25
   * postings index): every batch's files land in the live partitioned layout
-  * under a batch-tagged filename prefix, gated by a marker file —
+  * under a batch-tagged filename prefix, and the batch commits through the
+  * layout's ingest log alone —
   *
-  *   marker gate → replay gate → scrub this tag's files → stage under
-  *   `_staging/` → per-file rename into the layout → marker write →
+  *   replay gate → scrub this tag's files → stage under `_staging/` →
+  *   per-file rename into the layout → log commit (batch into `pending`) →
   *   staging cleanup
   *
   * so a foreachBatch replay (at-least-once contract, same batchId) at ANY
@@ -17,16 +18,17 @@ package graft.util
   * `streamId` namespaces the tag. batchIds are only stable within ONE
   * streaming checkpoint lineage — a new checkpoint restarts at 0, and an
   * un-namespaced batch 0 would silently no-op against the old stream's
-  * marker, DROPPING data. Every new checkpoint directory must therefore
+  * record, DROPPING data. Every new checkpoint directory must therefore
   * carry its own streamId (concurrent streams into one index get distinct
   * namespaces the same way).
   *
-  * Administrative state — compaction watermarks, recorded rollbacks and a
-  * layout's base counters — lives in ONE versioned ingest log per layout
-  * (`_graft_log/<version>`, [[LogState]]), committed by create-if-absent
-  * ([[commit]]), the offset/commit-log discipline of Structured
-  * Streaming. One compaction ([[compactMarkers]]) and one guarded removal
-  * ([[removeBatchGuarded]]) serve every ingest layout.
+  * The ingest log (`_graft_log/<version>`, [[LogState]]) is the layout's
+  * ONE commit record: applied batches, compaction watermarks, recorded
+  * rollbacks and the base counters. Every writer — apply, compaction
+  * ([[compact]]), guarded removal ([[removeBatchGuarded]]) and BM25's
+  * batch append and build — commits through [[advance]], the
+  * offset/commit-log discipline of Structured Streaming: a lost round
+  * re-derives from the newer state.
   */
 object StreamCommit {
 
@@ -35,12 +37,12 @@ object StreamCommit {
     require(streamId.matches("[A-Za-z0-9_-]*"),
       s"streamId must match [A-Za-z0-9_-]*, got '$streamId'")
 
-  /** Marker name / filename-prefix stem for one (streamId, batchId). */
+  /** Filename-prefix stem for one (streamId, batchId). */
   def tag(streamId: String, batchId: Long): String =
     if (streamId.isEmpty) s"b$batchId" else s"$streamId~b$batchId"
 
-  /** Inverse of [[tag]]: (streamId, batchId), or None for foreign files. */
-  def parseTag(name: String): Option[(String, Long)] = name match {
+  /** Inverse of [[tag]]: (streamId, batchId), or None for foreign names. */
+  private def parseTag(name: String): Option[(String, Long)] = name match {
     case TagRe(sid, id) => Some((if (sid == null) "" else sid, id.toLong))
     case _              => None
   }
@@ -60,47 +62,42 @@ object StreamCommit {
 
   /** True iff a data file belongs to the COMMITTED view of a
     * streaming-ingested layout: base files (no batch-tag prefix), files of
-    * a batch whose marker is present, and files of a batch already FOLDED
-    * below its stream's watermark — compaction deletes markers but
-    * promoted files keep their tag prefix forever, so for those the
-    * watermark (not marker presence) is the durable commit record. A
-    * batchId in the log's `removed` set OVERRIDES both: recording the
-    * removal intent is the rollback's commit point ([[removeBatchGuarded]]),
-    * so a recorded batch's leftover files (a rollback that crashed before
-    * its scrub) are never committed, even while its marker lingers or
+    * a batch the log records `pending`, and files of a batch already
+    * FOLDED below its stream's watermark (promoted files keep their tag
+    * prefix forever). A batchId in the log's `removed` set OVERRIDES both:
+    * recording the removal is the rollback's commit point
+    * ([[removeBatchGuarded]]), so a recorded batch's leftover files (a
+    * rollback that crashed before its scrub) are never committed, even
     * after a watermark folds across the gap.
     */
-  private def isCommittedFile(name: String, markerTags: Set[String],
-                              st: LogState): Boolean =
+  private def isCommittedFile(name: String, st: LogState): Boolean =
     tagOfFileName(name) match {
       case None => true
       case Some((sid, id)) =>
         !st.removedOf(sid).contains(id) &&
-          (markerTags.contains(tag(sid, id)) || id <= st.watermark(sid))
+          (st.pendingOf(sid).contains(id) || id <= st.watermark(sid))
     }
 
   /** The committed parquet data files under the given partition-directory
-    * globs, for one [[committedView]] — the driver-side file pruning a
+    * globs, in one log state — the driver-side file pruning a
     * committed-only serve snapshot uses instead of a per-row
     * `input_file_name()` filter (which would pay a regex per scanned ROW;
     * this pays one list per layout, and the file count is base-files +
     * one-ish per ingest batch — metadata-sized). A half-promoted batch
-    * (files landed, marker not yet written, or crashed before its marker)
-    * is invisible to the returned set.
+    * (files landed, log not yet committed, or crashed before it) is
+    * invisible to the returned set.
     */
   private[graft] def committedDataFiles(
       fs: org.apache.hadoop.fs.FileSystem, globs: Seq[String],
-      markers: Seq[(String, Long, String)], st: LogState): Seq[String] = {
-    val tags = markers.map(m => tag(m._1, m._2)).toSet
+      st: LogState): Seq[String] =
     globs
       .flatMap { g =>
         Option(fs.globStatus(new org.apache.hadoop.fs.Path(g)))
           .getOrElse(Array.empty).toSeq
       }
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
-        isCommittedFile(f.getPath.getName, tags, st))
+        isCommittedFile(f.getPath.getName, st))
       .map(_.getPath.toString)
-  }
 
   def fs(spark: org.apache.spark.sql.SparkSession, path: String)
       : org.apache.hadoop.fs.FileSystem =
@@ -160,55 +157,21 @@ object StreamCommit {
     }
   }
 
-  /** Write the marker that commits the batch (its existence IS the
-    * applied-ness of the tag; `body` may carry per-batch metadata, e.g.
-    * BM25's stats delta). Written to a dot-temp name and renamed into
-    * place: the marker's EXISTENCE is the commit, so a create-then-write
-    * would expose a visible empty marker between the two — a crash there
-    * would gate replays forever while the body (BM25's stats delta) was
-    * never recorded, and a concurrent reader could fold a torn delta.
-    * Dot-prefixed temps are harmless to [[listMarkers]] — its `*` glob
-    * DOES match dot-files (Hadoop globStatus has no hidden-file rule), but
-    * [[parseTag]] rejects the `.tag.tmp.x` shape — and never gate a
-    * replay. A crash between the temp write and the rename leaves the
-    * temp behind; this tag's replay reaches this function again and the
-    * scrub below removes it, so temps never accumulate on a live stream
-    * (abandoned streams' stragglers are swept by [[compactMarkers]]).
-    */
-  def writeMarker(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                  tagName: String, body: String = ""): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/_stream_appends/$tagName")
-    fs.mkdirs(marker.getParent)
-    // tag names are charset-restricted ([[requireValidStreamId]]) so the
-    // embedded tag never needs glob escaping; the layout path does
-    scrub(fs, Seq(
-      s"${escapeGlob(path)}/_stream_appends/.$tagName.tmp.*"))
-    val tmp = new org.apache.hadoop.fs.Path(marker.getParent,
-      s".$tagName.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    require(fs.rename(tmp, marker), s"marker rename failed: $tmp -> $marker")
-  }
-
-  def markerExists(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                   tagName: String): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(s"$path/_stream_appends/$tagName"))
-
   /** One state of a streaming-ingested layout's ingest log — the single
-    * admin record every ingest layout (BM25 postings, IVF-flat and IVF-PQ
+    * commit record every ingest layout (BM25 postings, IVF-flat and IVF-PQ
     * chunk indexes) keeps under `<layout>/_graft_log/<version>`:
     *
-    *   - `watermarks`: streamId → highest batchId permanently committed by
-    *     [[compactMarkers]] (its marker folded and deleted);
+    *   - `pending`: streamId → batchId → counter delta of every applied
+    *     batch not yet folded (BM25: `n_docs`, `total_tokens`; empty for
+    *     the dense layouts);
+    *   - `watermarks`: streamId → highest batchId folded by [[compact]];
     *   - `removed`: batchIds deliberately rolled back by
     *     [[removeBatchGuarded]], so compaction can extend a watermark
     *     ACROSS an intentional gap (an unrecorded gap still pins it — that
-    *     is an in-flight crash, and folding past it would stamp an
-    *     uncommitted batch committed forever);
+    *     is an in-flight or crashed batch, and folding past it would stamp
+    *     an uncommitted batch committed forever);
     *   - `payload`: the layout's base counters, advanced by the folded
-    *     markers' bodies — BM25 carries `n_docs`, `total_tokens` and
+    *     batches' deltas — BM25 carries `n_docs`, `total_tokens` and
     *     `n_buckets`; the dense layouts carry nothing.
     *
     * `removed` entries are KEPT, never pruned — the record is what makes a
@@ -217,279 +180,256 @@ object StreamCommit {
     * keeps a rollback's leftover files uncommitted ([[committedDataFiles]])
     * until something scrubs them. The growth bound is one long per
     * DELIBERATE rollback per stream (rare administrative operations; a
-    * rebuild resets it). Pruning entries at or below the watermark was
-    * considered and rejected: with the intent-record-FIRST removal
-    * ordering, a recorded entry does not imply its scrub completed, so
-    * pruning could re-commit orphaned files.
+    * rebuild resets it).
     */
-  private[graft] case class LogState(version: Long,
-                                     watermarks: Map[String, Long],
-                                     removed: Map[String, Set[Long]],
-                                     payload: Map[String, Long]) {
+  private[graft] case class LogState(
+      watermarks: Map[String, Long] = Map.empty,
+      removed: Map[String, Set[Long]] = Map.empty,
+      payload: Map[String, Long] = Map.empty,
+      pending: Map[String, Map[Long, Map[String, Long]]] = Map.empty) {
     def watermark(streamId: String): Long = watermarks.getOrElse(streamId, -1L)
     def removedOf(streamId: String): Set[Long] =
       removed.getOrElse(streamId, Set.empty)
-    /** The state to commit as the next version. */
-    def next(watermarks: Map[String, Long] = watermarks,
-             removed: Map[String, Set[Long]] = removed,
-             payload: Map[String, Long] = payload): LogState =
-      LogState(version + 1, watermarks, removed, payload)
+    def pendingOf(streamId: String): Map[Long, Map[String, Long]] =
+      pending.getOrElse(streamId, Map.empty)
+    /** `pending` with one stream's batches replaced by `ids`. */
+    private[StreamCommit] def withPending(streamId: String,
+                                          ids: Map[Long, Map[String, Long]])
+        : Map[String, Map[Long, Map[String, Long]]] =
+      if (ids.isEmpty) pending - streamId else pending + (streamId -> ids)
   }
 
-  /** The layout's current state: the highest-numbered log entry. A layout
-    * whose log holds no entry yet reads the sidecar the protocol kept
-    * before the log existed (`_bm25_stats.json` or
-    * `_ingest_watermarks.json`) at its recorded version, so the first
-    * commit writes the next version and the sidecar is ignored from then
-    * on; with neither, the state is version 0 and empty.
-    */
+  /** The layout's current state: the newest log entry. */
   private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
                                path: String): LogState =
-    VersionedLog.latest(spark.sparkContext.hadoopConfiguration, path) match {
-      case Some((v, body)) => parseState(v, body)
+    stateOf(spark, path,
+      VersionedLog.latest(spark.sparkContext.hadoopConfiguration, path)
+        .map(_._2))
+
+  /** The state a log entry body records. Two older forms still read: a
+    * layout whose log holds no entry reads the sidecar the protocol kept
+    * before the log existed (`_bm25_stats.json` or
+    * `_ingest_watermarks.json`), and a layout whose newest entry carries no
+    * `pending` (written when each batch committed through a
+    * `_stream_appends/<tag>` marker file) reads its live markers as
+    * `pending` — until the first [[advance]], which records them in the
+    * log and deletes them.
+    */
+  private def stateOf(spark: org.apache.spark.sql.SparkSession, path: String,
+                      body: Option[String]): LogState = {
+    import org.json4s.JNothing
+    val j = body.map(org.json4s.jackson.JsonMethods.parse(_))
+    val st = j match {
+      case Some(e) => LogState(longs(e \ "watermarks"),
+        removedSets(e \ "removed"), longs(e \ "payload"),
+        pendingSets(e \ "pending"))
       case None =>
         val f = fs(spark, path)
         Seq("_bm25_stats.json", "_ingest_watermarks.json")
           .map(n => new org.apache.hadoop.fs.Path(s"$path/$n"))
           .find(f.exists)
           .map(p => parseLegacy(Sidecar.readText(f, p)))
-          .getOrElse(LogState(0L, Map.empty, Map.empty, Map.empty))
+          .getOrElse(LogState())
     }
+    if (j.exists(e => (e \ "pending") != JNothing)) st
+    else st.copy(pending = legacyMarkers(spark, path, st))
+  }
+
+  /** The live `_stream_appends/<tag>` markers of a layout the marker
+    * protocol wrote, as `pending`: a marker at or below its stream's
+    * watermark was folded (its delta is in the payload) and one recorded
+    * removed was rolled back, so neither is pending.
+    */
+  private def legacyMarkers(spark: org.apache.spark.sql.SparkSession,
+                            path: String, st: LogState)
+      : Map[String, Map[Long, Map[String, Long]]] = {
+    val f = fs(spark, path)
+    Option(f.globStatus(new org.apache.hadoop.fs.Path(
+      s"${escapeGlob(path)}/_stream_appends/*"))).getOrElse(Array.empty).toSeq
+      .flatMap(m => parseTag(m.getPath.getName).map { case (sid, id) =>
+        (sid, id, m.getPath) })
+      .filter { case (sid, id, _) =>
+        id > st.watermark(sid) && !st.removedOf(sid).contains(id) }
+      .groupBy(_._1)
+      .map { case (sid, ms) => sid -> ms.map { case (_, id, p) =>
+        val body = Sidecar.readText(f, p)
+        id -> (if (body.isEmpty) Map.empty[String, Long]
+          else longs(org.json4s.jackson.JsonMethods.parse(body)))
+      }.toMap }
+  }
 
   private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
 
-  private def longs(j: org.json4s.JValue): Map[String, Long] = j match {
-    case org.json4s.JObject(fields) =>
-      fields.map { case (k, v) => k -> v.extract[Long] }.toMap
-    case _ => Map.empty
-  }
-
-  private def removedSets(j: org.json4s.JValue): Map[String, Set[Long]] =
+  private def fields(j: org.json4s.JValue): List[(String, org.json4s.JValue)] =
     j match {
-      case org.json4s.JObject(fields) =>
-        fields.map { case (k, v) => k -> v.extract[Seq[Long]].toSet }.toMap
-      case _ => Map.empty
+      case org.json4s.JObject(fs) => fs
+      case _                      => Nil
     }
 
-  private def parseState(version: Long, body: String): LogState = {
-    val j = org.json4s.jackson.JsonMethods.parse(body)
-    LogState(version, longs(j \ "watermarks"), removedSets(j \ "removed"),
-      longs(j \ "payload"))
-  }
+  private def longs(j: org.json4s.JValue): Map[String, Long] =
+    fields(j).map { case (k, v) => k -> v.extract[Long] }.toMap
+
+  private def removedSets(j: org.json4s.JValue): Map[String, Set[Long]] =
+    fields(j).map { case (k, v) => k -> v.extract[Seq[Long]].toSet }.toMap
+
+  private def pendingSets(j: org.json4s.JValue)
+      : Map[String, Map[Long, Map[String, Long]]] =
+    fields(j).map { case (sid, ids) =>
+      sid -> fields(ids).map { case (id, d) => id.toLong -> longs(d) }.toMap
+    }.toMap
 
   /** A pre-log sidecar body: the BM25 stats form (`n_docs`, `folded`,
-    * `removed`, `version`), the dense watermark envelope (`watermarks`,
-    * `removed`, `version`), or the oldest bare `{sid: wm}` map (version 0).
+    * `removed`), the dense watermark envelope (`watermarks`, `removed`),
+    * or the oldest bare `{sid: wm}` map.
     */
   private def parseLegacy(body: String): LogState = {
     val j = org.json4s.jackson.JsonMethods.parse(body)
-    val version = (j \ "version").extractOpt[Long].getOrElse(0L)
     if ((j \ "n_docs") != org.json4s.JNothing)
-      LogState(version, longs(j \ "folded"), removedSets(j \ "removed"),
+      LogState(longs(j \ "folded"), removedSets(j \ "removed"),
         Seq("n_docs", "total_tokens", "n_buckets")
           .map(k => k -> (j \ k).extract[Long]).toMap)
     else if ((j \ "watermarks") != org.json4s.JNothing)
-      LogState(version, longs(j \ "watermarks"), removedSets(j \ "removed"),
-        Map.empty)
-    else LogState(0L, longs(j), Map.empty, Map.empty)
+      LogState(longs(j \ "watermarks"), removedSets(j \ "removed"))
+    else LogState(longs(j))
   }
 
   private def render(st: LogState): String = {
-    def obj[V](m: Map[String, V])(v: V => String) = m.toSeq.sortBy(_._1)
-      .map { case (k, x) => s"${Json.escape(k)}:${v(x)}" }
+    def obj[K, V](m: Map[K, V])(v: V => String) = m.toSeq
+      .sortBy(_._1.toString)
+      .map { case (k, x) => s"${Json.escape(k.toString)}:${v(x)}" }
       .mkString("{", ",", "}")
-    s"""{"watermarks":${obj(st.watermarks)(_.toString)},""" +
+    def counters(m: Map[String, Long]) = obj(m)(_.toString)
+    s"""{"watermarks":${counters(st.watermarks)},""" +
       s""""removed":${obj(st.removed.filter(_._2.nonEmpty))(
         _.toSeq.sorted.mkString("[", ",", "]"))},""" +
-      s""""payload":${obj(st.payload)(_.toString)}}"""
+      s""""payload":${counters(st.payload)},""" +
+      s""""pending":${obj(st.pending.filter(_._2.nonEmpty))(
+        obj(_)(counters))}}"""
   }
 
-  /** Commit `next` as log entry `next.version` through
-    * [[VersionedLog.commit]] — the compare-and-swap every administrative
-    * writer (compaction, guarded removal, BM25's batch append and index
-    * build) goes through. A lost round (the version was already taken, or
-    * fell below the kept window while this writer held its state) becomes
-    * an `IllegalStateException` naming the "CAS conflict" and the caller's
-    * recovery hint (a compaction re-runs whole; a BM25 batch append must
-    * NOT re-run — its postings already landed), plus an
-    * `ingest_log_cas_conflict_total` bump.
+  /** Commit the state `next` derives from the newest one as the next log
+    * version through [[VersionedLog.advance]]: a round lost to a
+    * concurrent writer re-derives from the newer state (so `next` must be
+    * a merge, and may throw to refuse) and bumps
+    * `ingest_log_cas_retry_total`. A layout whose marker files this
+    * commit recorded as `pending` drops them afterwards (a crash before
+    * the delete leaves them inert: the newest entry now carries
+    * `pending`). Returns the committed state.
     */
-  private[graft] def commit(spark: org.apache.spark.sql.SparkSession,
-                            path: String, next: LogState,
-                            recoveryHint: String): Unit =
-    VersionedLog.commit(spark.sparkContext.hadoopConfiguration, path,
-      next.version, render(next)).foreach { what =>
-      graft.metrics.GraftCounters.inc("ingest_log_cas_conflict_total")
-      throw new IllegalStateException(
-        s"ingest log CAS conflict at $path: $what — a concurrent " +
-          "administrative writer (compaction / remove-ingest-batch / " +
-          s"index append) committed first. Recovery: $recoveryHint")
+  private[graft] def advance(spark: org.apache.spark.sql.SparkSession,
+                             path: String)(next: LogState => LogState)
+      : LogState = {
+    val (st, _) = VersionedLog.advance(spark.sparkContext.hadoopConfiguration,
+      path, "ingest_log_cas_retry_total") { body =>
+      val s = next(stateOf(spark, path, body))
+      (s, render(s))
     }
+    val f = fs(spark, path)
+    if (f.exists(markerDir(path))) f.delete(markerDir(path), true)
+    st
+  }
 
-  /** A marker body's counter deltas (BM25: `n_docs`, `total_tokens`);
-    * a dense layout's empty marker adds nothing.
+  private def markerDir(path: String) =
+    new org.apache.hadoop.fs.Path(s"$path/_stream_appends")
+
+  /** Serving-time counters: the log's payload plus every pending batch's
+    * delta (a removed batch is never pending, a folded one is in the
+    * payload already).
     */
-  private def markerDelta(body: String): Map[String, Long] =
-    if (body.isEmpty) Map.empty
-    else longs(org.json4s.jackson.JsonMethods.parse(body))
-
-  private def plus(payload: Map[String, Long],
-                   markers: Seq[(String, Long, String)]): Map[String, Long] =
-    markers.flatMap(m => markerDelta(m._3)).foldLeft(payload) {
+  private[graft] def livePayload(st: LogState): Map[String, Long] =
+    st.pending.values.flatMap(_.values).flatten.foldLeft(st.payload) {
       case (p, (k, d)) => p.updated(k, p.getOrElse(k, 0L) + d)
     }
 
-  /** Serving-time counters: the log's payload plus every marker that is
-    * neither folded (at or below its stream's watermark — its delta is
-    * already in the payload) nor recorded removed (a rollback's intent
-    * record commits the removal BEFORE its marker delete, so a lingering
-    * marker's delta must not serve).
-    */
-  private[graft] def livePayload(markers: Seq[(String, Long, String)],
-                                 st: LogState): Map[String, Long] =
-    plus(st.payload, markers.filter { case (sid, id, _) =>
-      id > st.watermark(sid) && !st.removedOf(sid).contains(id) })
-
-  /** One committed view of a layout: its markers listed FIRST, the log
-    * state read SECOND. Compaction commits the new state (watermark and
-    * folded deltas) strictly before deleting the markers it folded, so
-    * with this order every interleaving of a concurrent compaction
-    * converges: a view that sees the PRE-compaction state also sees every
-    * unfolded marker (none deleted yet when the list ran), and a view
-    * that sees the POST-compaction state filters the already-listed
-    * folded markers out via the watermark. The reverse order would read
-    * an old state and then a post-delete marker list, dropping a
-    * just-folded batch — and its delta — from the view.
-    */
-  private[graft] def committedView(spark: org.apache.spark.sql.SparkSession,
-                                   path: String)
-      : (Seq[(String, Long, String)], LogState) = {
-    val markers = listMarkers(fs(spark, path), path)
-    (markers, readState(spark, path))
-  }
-
   /** The per-stream contiguous fold: extend the watermark over the
-    * contiguous run above `from` in which every batchId has a marker OR is
+    * contiguous run above `from` in which every batchId is pending OR
     * recorded removed. batchIds within one checkpoint lineage are
-    * contiguous from 0, so an UNRECORDED gap means an in-flight crash and
-    * pins the fold — but a stream that makes NO progress while holding
-    * unfolded markers is also the signature of a lineage that does not
-    * start at 0 (a manual ingest with 1-based ids), for which compaction
-    * would silently never bound the marker scan; that case logs a warning
-    * naming the first missing id and bumps `ingest_compact_pinned_total`
-    * so it is observable.
+    * contiguous from 0, so an UNRECORDED gap means an in-flight or
+    * crashed batch and pins the fold.
     */
-  private[graft] def contiguousFold(path: String, streamId: String,
-                                    from: Long, ids: Set[Long],
-                                    removed: Set[Long]): Long = {
+  private def contiguousFold(from: Long, ids: Set[Long],
+                             removed: Set[Long]): Long = {
     var w = from
     while (ids.contains(w + 1) || removed.contains(w + 1)) w += 1
-    if (w == from && ids.exists(_ > from)) {
-      graft.metrics.GraftCounters.inc("ingest_compact_pinned_total")
-      org.slf4j.LoggerFactory.getLogger("graft.util.StreamCommit").warn(
-        s"compaction of stream '$streamId' at $path made no progress: " +
-          s"batch ${from + 1} has no marker and no removal record while " +
-          s"later batches (${ids.filter(_ > from).toSeq.sorted.take(5)
-            .mkString(",")}...) wait unfolded — either an in-flight batch " +
-          "(fold resumes when its marker lands), a crashed removal that " +
-          "was never recorded (re-run remove-ingest-batch --missing-ok), " +
-          "or a lineage whose batchIds do not start at 0 (unsupported: " +
-          "compaction can never bound this stream's marker scan)")
-    }
     w
   }
 
-  /** Marker compaction for every ingest layout — bounds the per-serve
-    * marker scan of long-lived streams. Per stream, the watermark extends
-    * over the contiguous markers-or-removed run ([[contiguousFold]]); the
-    * bodies of the folded markers that were not rolled back add their
-    * deltas into the payload (BM25's `n_docs`/`total_tokens`; dense
-    * markers are empty and add nothing). The log commit ([[commit]]) is
-    * the commit point; marker deletion after it is idempotent (a
-    * surviving folded marker is redundant with the watermark — every read
-    * path agrees — and the next compaction deletes it). The compaction
-    * also sweeps stale marker temps (crashed [[writeMarker]] attempts of
-    * abandoned streams; a compaction that deletes a concurrently in-flight
-    * temp fails that marker's rename loudly, and the batch replays) and
-    * finishes crashed removals by scrubbing every recorded-removed
-    * batch's leftover files through the layout's `tagGlobs` (batch tag →
-    * data-file globs).
-    *
-    * The state is read BEFORE the markers are listed, so a removal's
-    * intent record landing in between moves the version and fails this
-    * compaction's commit — a stale marker listing can never fold a
-    * rolled-back batch (or its delta) silently. Returns the new
-    * watermarks.
+  /** One compaction step on a log state: per stream, the watermark
+    * extends over the contiguous pending-or-removed run
+    * ([[contiguousFold]]) and the folded batches' deltas move from
+    * `pending` into the payload.
     */
-  def compactMarkers(spark: org.apache.spark.sql.SparkSession, path: String,
-                     tagGlobs: String => Seq[String]): Map[String, Long] = {
-    val f = fs(spark, path)
-    scrub(f, Seq(s"${escapeGlob(path)}/_stream_appends/.*.tmp.*"))
-    // state FIRST, markers second (see scaladoc)
-    val st = readState(spark, path)
-    compactMarkersFrom(spark, path, st, listMarkers(f, path), tagGlobs)
+  private def fold(st: LogState): LogState = {
+    val wm = st.watermarks ++ (st.pending.keySet ++ st.removed.keySet)
+      .map(sid => sid -> contiguousFold(st.watermark(sid),
+        st.pendingOf(sid).keySet, st.removedOf(sid)))
+      .filter { case (sid, w) => w > st.watermark(sid) }
+    val (folded, left) = st.pending.map { case (sid, ids) =>
+      val (f, l) = ids.partition(_._1 <= wm.getOrElse(sid, -1L))
+      (sid -> f, sid -> l)
+    }.unzip
+    st.copy(watermarks = wm,
+      payload = livePayload(LogState(payload = st.payload,
+        pending = folded.toMap)),
+      pending = left.filter(_._2.nonEmpty).toMap)
   }
 
-  /** The read-modify-write half of [[compactMarkers]] — the pre-read
-    * state and pre-listed markers are injectable so the specs can pin the
-    * compaction-vs-removal race orders deterministically.
+  /** Compaction for every ingest layout — bounds the `pending` map of
+    * long-lived streams: [[fold]] in one [[advance]] (skipped when nothing
+    * folds and no marker file is left to record and delete), then the
+    * scrub of every recorded-removed batch's leftover files through the
+    * layout's `tagGlobs` (batch tag → data-file globs), which finishes
+    * crashed removals; a compaction killed before or during that scrub
+    * re-runs to the same state. A stream left with
+    * pending batches and no progress — an in-flight batch, a removal that
+    * crashed before recording, or a lineage whose batchIds do not start
+    * at 0 — logs a warning naming its first missing id and bumps
+    * `ingest_compact_pinned_total`. Returns the committed state.
     */
-  private[graft] def compactMarkersFrom(
-      spark: org.apache.spark.sql.SparkSession, path: String, st: LogState,
-      markers: Seq[(String, Long, String)],
-      tagGlobs: String => Seq[String]): Map[String, Long] = {
-    val f = fs(spark, path)
-    val byStream = markers.groupBy(_._1)
-    val wm = st.watermarks ++ (byStream.keySet ++ st.removed.keySet)
-      .map(sid => sid -> contiguousFold(path, sid, st.watermark(sid),
-        byStream.getOrElse(sid, Seq.empty).map(_._2).toSet, st.removedOf(sid)))
-      .filter { case (sid, w) => w > st.watermark(sid) }
-    if (wm != st.watermarks)
-      commit(spark, path, st.next(watermarks = wm,
-        payload = plus(st.payload, markers.filter { case (sid, id, _) =>
-          id > st.watermark(sid) && id <= wm.getOrElse(sid, -1L) &&
-            !st.removedOf(sid).contains(id) })),
-        "re-run the compaction — it is idempotent (unfolded markers are " +
-          "re-read; the conflicting writer's update is the one on disk)")
-    markers
-      .filter { case (sid, id, _) => id <= wm.getOrElse(sid, -1L) }
-      .foreach { case (sid, id, _) =>
-        f.delete(new org.apache.hadoop.fs.Path(
-          s"$path/_stream_appends/${tag(sid, id)}"), false)
+  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
+              tagGlobs: String => Seq[String]): LogState = {
+    val cur = readState(spark, path)
+    val st =
+      if (fold(cur) == cur && !fs(spark, path).exists(markerDir(path))) cur
+      else advance(spark, path)(fold)
+    st.pending.keys.filter(sid => st.watermark(sid) == cur.watermark(sid))
+      .foreach { sid =>
+        graft.metrics.GraftCounters.inc("ingest_compact_pinned_total")
+        org.slf4j.LoggerFactory.getLogger("graft.util.StreamCommit").warn(
+          s"compaction of stream '$sid' at $path made no progress: batch " +
+            s"${st.watermark(sid) + 1} is neither applied nor recorded " +
+            s"removed while later batches (${st.pendingOf(sid).keys.toSeq
+              .sorted.take(5).mkString(",")}...) wait unfolded — either an " +
+            "in-flight batch (fold resumes when it commits), a crashed " +
+            "removal that was never recorded (re-run remove-ingest-batch " +
+            "--missing-ok), or a lineage whose batchIds do not start at 0 " +
+            "(unsupported: compaction can never fold this stream)")
       }
-    scrub(f, st.removed.toSeq.flatMap { case (sid, ids) =>
+    scrub(fs(spark, path), st.removed.toSeq.flatMap { case (sid, ids) =>
       ids.toSeq.sorted.flatMap(id => tagGlobs(tag(sid, id))) })
-    wm
+    st
   }
 
   /** Roll back one streaming-ingested batch — the administrative "remove
-    * a poisoned batch" operation, INTENT-RECORD-FIRST, for every ingest
-    * layout (each passes its batch's data-file globs). Protocol:
+    * a poisoned batch" operation for every ingest layout (each passes its
+    * batch's data-file globs). Protocol:
     *   1. pre-check: a batch already recorded removed is an idempotent
-    *      no-op that finishes a crashed attempt's physical cleanup
-    *      (lingering marker deleted, leftover files scrubbed); a batch at
-    *      or below the watermark and NOT recorded removed is permanently
+    *      no-op that finishes a crashed attempt's scrub; a batch at or
+    *      below the watermark and NOT recorded removed is permanently
     *      committed — folded, its delta (if any) in the payload where it
     *      cannot be subtracted — refuse loudly; a batch with NO trace at
-    *      all (no marker, no data files) is refused unless `allowMissing`
-    *      — recording a never-ingested batchId would permanently refuse
-    *      its future apply;
-    *   2. commit the batchId into the log's `removed` set — THE COMMIT
-    *      POINT of the removal, and the whole race guard: a concurrent
-    *      [[compactMarkers]] that committed between the state read and
-    *      this commit takes the version and fails THIS commit with
-    *      NOTHING yet mutated (re-run; if the batch is now below the
-    *      watermark it was concurrently folded — the loud "concurrently
-    *      compacted" failure, files intact, still served correctly,
-    *      rebuild to remove); a compaction that reads state AFTER this
-    *      commit sees the recorded removal, so its fold skips the batch
-    *      (and its delta) and extends the watermark across the deliberate
-    *      gap. Every later mutation happens strictly after the version
-    *      any stale compaction must fail against;
-    *   3. delete the marker (a delta it carries dies with it);
-    *   4. scrub the batch's data files, in glob order (the PQ index
-    *      passes codes before vecs). A crash anywhere after step 2 leaves
-    *      a recorded removal whose re-run (step 1's no-op arm) — or the
+    *      all (not pending, no data files) is refused unless
+    *      `allowMissing` — recording a never-ingested batchId would
+    *      permanently refuse its future apply;
+    *   2. one [[advance]] moves the batch from `pending` to `removed` —
+    *      THE COMMIT POINT of the removal. Each round re-checks the fold
+    *      guard, so a compaction that folded the batch meanwhile fails the
+    *      removal loudly ("concurrently compacted") with NOTHING mutated;
+    *      a compaction after this commit sees the record, skips the batch
+    *      (and its delta) and extends the watermark across the gap;
+    *   3. scrub the batch's data files, in glob order (the PQ index
+    *      passes codes before vecs). A crash after step 2 leaves a
+    *      recorded removal whose re-run (step 1's no-op arm) — or the
     *      next compaction — converges; until the scrub completes, the
     *      record keeps the leftovers out of every committed serve
     *      ([[committedDataFiles]]) while default serves may see them
@@ -500,80 +440,69 @@ object StreamCommit {
     * Reader contract (serve-vs-rollback): rollback does NOT quiesce
     * serves. A serve planned before the rollback holds a file listing and
     * fails LOUDLY (FileNotFoundException) when executed after the scrub —
-    * it never silently serves a partial batch. Returns false when the
-    * batch was already removed or its marker was already absent
-    * (leftovers are still scrubbed).
+    * it never silently serves a partial batch. Returns whether the batch
+    * was pending (false when it was already removed, or never committed —
+    * its leftovers are still scrubbed).
     */
   private[graft] def removeBatchGuarded(
       spark: org.apache.spark.sql.SparkSession, path: String,
       streamId: String, batchId: Long, dataGlobs: Seq[String],
       afterPreCheck: () => Unit = () => (),
-      afterMarkerDelete: () => Unit = () => (),
       allowMissing: Boolean = false): Boolean = {
     requireValidStreamId(streamId)
     val f = fs(spark, path)
     val st0 = readState(spark, path)
-    val tagName = tag(streamId, batchId)
-    def deleteMarker(): Boolean = markerExists(f, path, tagName) &&
-      f.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/$tagName"), false)
     if (st0.removedOf(streamId).contains(batchId)) {
-      // finish a crashed earlier attempt: the intent record IS the
-      // removal's commit point, so complete the physical cleanup
-      deleteMarker()
+      // finish a crashed earlier attempt: the record IS the removal's
+      // commit point, so complete the physical cleanup
       scrub(f, dataGlobs)
       return false
     }
-    if (batchId <= st0.watermark(streamId))
+    def folded(st: LogState) = batchId <= st.watermark(streamId) &&
+      !st.removedOf(streamId).contains(batchId)
+    if (folded(st0))
       throw new IllegalStateException(
         s"ingest batch $batchId of stream '$streamId' at $path is at or " +
           s"below the compaction watermark (${st0.watermark(streamId)}) — " +
           "folded batches are permanently committed (a folded stats delta " +
           "cannot be subtracted); rebuild the index instead")
-    // refuse to record a removal for a batch with NO trace (no marker, no
-    // data files): batchIds are engine-assigned and contiguous, so a
+    val had = st0.pendingOf(streamId).contains(batchId)
+    // refuse to record a removal for a batch with NO trace (not pending,
+    // no data files): batchIds are engine-assigned and contiguous, so a
     // recorded removal of a NOT-YET-ingested id would permanently refuse
     // that id's future apply — a fat-fingered `remove-ingest-batch 7`
     // (meant 1) would otherwise brick the stream when micro-batch 7
     // arrives. allowMissing=true is the explicit override for the one
     // legitimate traceless case: residue of a removal that crashed before
-    // recording (marker and files already gone, the watermark pinned at
+    // recording (batch and files already gone, the watermark pinned at
     // the unrecorded gap) that needs the removal recorded to let
     // compaction fold across it.
-    if (!allowMissing && !markerExists(f, path, tagName) &&
-      dataGlobs.forall(g =>
+    if (!allowMissing && !had && dataGlobs.forall(g =>
         Option(f.globStatus(new org.apache.hadoop.fs.Path(g)))
           .getOrElse(Array.empty).isEmpty))
       throw new IllegalArgumentException(
-        s"ingest batch $batchId of stream '$streamId' at $path has no " +
-          "marker and no data files — nothing to remove. If this batchId " +
-          "was never ingested, recording its removal would permanently " +
-          "refuse its future apply (batchIds are engine-assigned); if it " +
-          "is the residue of a removal that crashed after its scrub but " +
-          "before recording (watermark pinned at the gap), re-run with " +
-          "allowMissing/--missing-ok to record it")
+        s"ingest batch $batchId of stream '$streamId' at $path was never " +
+          "committed and has no data files — nothing to remove. If this " +
+          "batchId was never ingested, recording its removal would " +
+          "permanently refuse its future apply (batchIds are " +
+          "engine-assigned); if it is the residue of a removal that " +
+          "crashed after its scrub but before recording (watermark pinned " +
+          "at the gap), re-run with allowMissing/--missing-ok to record it")
     afterPreCheck()
-    try {
-      commit(spark, path, st0.next(removed = st0.removed +
-        (streamId -> (st0.removedOf(streamId) + batchId))),
-        "nothing is mutated yet (the intent record is the removal's FIRST " +
-          s"write) — re-run remove-ingest-batch $batchId (idempotent)")
-    } catch {
-      case e: IllegalStateException =>
-        val now = readState(spark, path)
-        if (batchId <= now.watermark(streamId) &&
-          !now.removedOf(streamId).contains(batchId))
-          throw new IllegalStateException(
-            s"ingest batch $batchId of stream '$streamId' at $path was " +
-              "concurrently compacted (concurrently folded below the " +
-              "watermark by a compaction that committed between this " +
-              "removal's state read and its intent record). Its data " +
-              "files were NOT scrubbed: the index still serves the batch " +
-              "correctly; rebuild the index to remove it", e)
-        throw e
+    advance(spark, path) { st =>
+      if (folded(st))
+        throw new IllegalStateException(
+          s"ingest batch $batchId of stream '$streamId' at $path was " +
+            "concurrently compacted (concurrently folded below the " +
+            "watermark by a compaction that committed after this " +
+            "removal's pre-check). Its data files were NOT scrubbed: the " +
+            "index still serves the batch correctly; rebuild the index to " +
+            "remove it")
+      st.copy(pending = st.withPending(streamId,
+          st.pendingOf(streamId) - batchId),
+        removed = st.removed +
+          (streamId -> (st.removedOf(streamId) + batchId)))
     }
-    val had = deleteMarker()
-    afterMarkerDelete()
     scrub(f, dataGlobs)
     had
   }
@@ -581,22 +510,25 @@ object StreamCommit {
   /** EXACTLY-ONCE application of one ingest batch `(streamId, batchId)` to
     * the layout at `path` — the whole protocol every ingest layout shares:
     *
-    *   1. marker gate: the tag's marker exists → fully applied, no-op;
-    *   2. replay gate ([[refuseReplayOfRemoved]]): marker gone ≠ never
-    *      applied — compaction deletes folded markers (no-op), and a
-    *      recorded rollback is refused loudly;
-    *   3. scrub: delete every file of this tag (`globs(tag)`) — a replay
-    *      after a mid-promote crash removes whatever subset landed;
-    *   4. stage: `stage(stagingDir, logState)` writes the batch under
-    *      `_staging/<tag>/` (invisible to every reader, like the sidecars)
-    *      and returns the marker body;
-    *   5. promote: each `(stagedSubdir, targetRoot)` of `promotes`, in
+    *   1. replay gate: a batch the log records pending or folded is
+    *      already applied (no-op), and a recorded rollback is refused
+    *      loudly ([[refuseReplayOfRemoved]]);
+    *   2. scrub: delete every file of this tag (`globs(tag)`) — a replay
+    *      after a crash before the log commit removes whatever subset
+    *      landed;
+    *   3. stage: `stage(stagingDir, logState)` writes the batch under
+    *      `_staging/<tag>/` (invisible to every reader) and returns the
+    *      batch's counter delta;
+    *   4. promote: each `(stagedSubdir, targetRoot)` of `promotes`, in
     *      order, per-file renamed under a `<tag>-`-prefixed name;
-    *   6. marker write, then staging cleanup.
+    *   5. commit: one [[advance]] adds the batch and its delta to
+    *      `pending` (re-checking step 1's gate each round, so a batch
+    *      recorded removed meanwhile is refused), then staging cleanup.
     *
     * Every step is idempotent or scrubbed, so any crash point replays to
-    * the single-application state. Returns false when the batch was
-    * already applied. File renames are atomic on rename-capable stores
+    * the single-application state; concurrent applies of different tags
+    * all land (a lost log round re-derives). Returns false when the batch
+    * was already applied. File renames are atomic on rename-capable stores
     * (local, HDFS, ABFS); an S3 deployment fronts this with a
     * rename-capable committer. Concurrent zombie applications of the SAME
     * tag are the one unguarded case (no lock file) — Spark's streaming
@@ -607,39 +539,43 @@ object StreamCommit {
                                 path: String, streamId: String,
                                 batchId: Long, globs: String => Seq[String],
                                 promotes: Seq[(String, String)])
-      (stage: (String, LogState) => String): Boolean = {
+      (stage: (String, LogState) => Map[String, Long]): Boolean = {
     requireValidStreamId(streamId)
+    def applied(st: LogState) =
+      refuseReplayOfRemoved(st, streamId, batchId, path) ||
+        st.pendingOf(streamId).contains(batchId)
+    val st = readState(spark, path)
+    if (applied(st)) return false
     val f = fs(spark, path)
     val t = tag(streamId, batchId)
-    if (markerExists(f, path, t)) return false
-    val st = readState(spark, path)
-    if (refuseReplayOfRemoved(st, streamId, batchId, path)) return false
     scrub(f, globs(t))
     val staging = s"$path/_staging/$t"
     f.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val body = stage(staging, st)
+    val delta = stage(staging, st)
     promotes.foreach { case (sub, target) =>
       promote(f, if (sub.isEmpty) staging else s"$staging/$sub", target, s"$t-")
     }
-    writeMarker(f, path, t, body)
+    advance(spark, path) { cur =>
+      if (applied(cur)) cur
+      else cur.copy(pending = cur.withPending(streamId,
+        cur.pendingOf(streamId) + (batchId -> delta)))
+    }
     f.delete(new org.apache.hadoop.fs.Path(staging), true)
     true
   }
 
   /** Apply-side replay gate shared by the streaming-ingest apply paths:
-    * returns true (skip — the batch is already committed AND folded; its
-    * marker was deleted by compaction, so the marker-existence gate alone
-    * would wrongly re-apply it) for a batchId at or below the stream's
-    * watermark, and REFUSES loudly a batchId recorded as deliberately
-    * removed — an at-least-once replay (or a manual re-ingest) of a
-    * rolled-back batch would silently resurrect data an administrator
-    * excised (the recorded removal makes its files uncommitted forever,
-    * so the re-applied data would be half-visible at best). Fixed data
-    * re-ingests under a FRESH batchId (or a fresh streamId/checkpoint).
+    * returns true (skip — the batch is already committed AND folded) for
+    * a batchId at or below the stream's watermark, and REFUSES loudly a
+    * batchId recorded as deliberately removed — an at-least-once replay
+    * (or a manual re-ingest) of a rolled-back batch would silently
+    * resurrect data an administrator excised (the recorded removal makes
+    * its files uncommitted forever, so the re-applied data would be
+    * half-visible at best). Fixed data re-ingests under a FRESH batchId
+    * (or a fresh streamId/checkpoint).
     */
-  private[graft] def refuseReplayOfRemoved(st: LogState, streamId: String,
-                                           batchId: Long,
-                                           path: String): Boolean = {
+  private def refuseReplayOfRemoved(st: LogState, streamId: String,
+                                    batchId: Long, path: String): Boolean = {
     if (st.removedOf(streamId).contains(batchId))
       throw new IllegalStateException(
         s"ingest batch $batchId of stream '$streamId' at $path was " +
@@ -648,15 +584,4 @@ object StreamCommit {
           "Re-ingest corrected data under a fresh batchId or streamId")
     batchId <= st.watermark(streamId)
   }
-
-  /** All markers under the layout: (streamId, batchId, marker body). */
-  def listMarkers(fs: org.apache.hadoop.fs.FileSystem, path: String)
-      : Seq[(String, Long, String)] =
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"${escapeGlob(path)}/_stream_appends/*"))).getOrElse(Array.empty).toSeq
-      .flatMap { st =>
-        parseTag(st.getPath.getName).map { case (sid, id) =>
-          (sid, id, Sidecar.readText(fs, st.getPath))
-        }
-      }
 }

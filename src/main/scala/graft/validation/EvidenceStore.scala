@@ -28,7 +28,7 @@ object EvidenceStore {
   private def get(root: String, key: String): Array[Byte] = {
     val f = fs(root)
     val in = f.open(new org.apache.hadoop.fs.Path(s"$root/$key"))
-    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
+    try in.readAllBytes() finally in.close()
   }
 
   /** storage.rs:10-27 key layout; month layout from the save instant. */

@@ -308,20 +308,19 @@ class Bm25Spec extends SparkSpec {
         .orderBy("query_id", "rank").collect().toSeq
       val once = serve()
       assert(once.nonEmpty && once == full)
-      // marker present → replay is a pure no-op
+      // batch committed → replay is a pure no-op
       assert(!Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
       assert(serve() == full)
-      // crash after promote, before marker: replay scrubs and re-lands —
-      // postings AND the stats delta commit together in the marker write
+      // crash after promote, before the log commit: replay scrubs and
+      // re-lands — postings AND the stats delta commit together in the
+      // log entry that records the batch
       val fs = graft.util.StreamCommit.fs(spark, path)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b1"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       assert(Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
       assert(serve() == full)
-      // mid-promote crash: some of b1's posting files landed, no marker —
+      // mid-promote crash: some of b1's posting files landed, no commit —
       // replay still converges to the identical serve
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b1"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       val b1files = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
         s"$path/bucket=*/b1-*"))).getOrElse(Array.empty)
       assert(b1files.nonEmpty)
@@ -330,7 +329,7 @@ class Bm25Spec extends SparkSpec {
       assert(Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
       assert(serve() == full)
       // distinct streamIds namespace their batchIds: s2's batch 1 is not
-      // gated by the default stream's b1 marker
+      // gated by the default stream's committed batch 1
       assert(Bm25.applyIngestBatch(
         Seq((900001L, "zzqx unique ingest probe")).toDF("doc_id", "text"),
         path, batchId = 1L, streamId = "s2"))
@@ -357,24 +356,29 @@ class Bm25Spec extends SparkSpec {
       def serve() = Bm25.retrieveFromIndex(spark, path, qs, k = 5)
         .orderBy("query_id", "rank").collect().toSeq
       val before = serve()
-      val fs = graft.util.StreamCommit.fs(spark, path)
-      // keep b1's marker body around to fake a failed post-fold delete
-      val b1body = graft.util.StreamCommit.listMarkers(fs, path)
-        .find(m => m._1 == "" && m._2 == 1L).get._3
+      val pre = graft.util.StreamCommit.readState(spark, path)
       Bm25.compactStreamStats(spark, path)
-      assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty,
-        "compact must delete folded markers")
+      val folded = graft.util.StreamCommit.readState(spark, path)
+      assert(folded.pending.isEmpty && folded.watermarks == Map("" -> 1L),
+        "compact must fold the pending batches")
+      assert(folded.payload("n_docs") == Bm25.corpusStats(
+        seed.unionByName(b0docs).unionByName(b1docs))._1)
       assert(serve() == before, "fold must not change served stats")
-      // crash between the stats overwrite and marker deletion: the folded
-      // watermark makes a surviving folded marker inert, not double-counted
-      graft.util.StreamCommit.writeMarker(fs, path, "b1", b1body)
+      // a layout the marker protocol wrote, killed between its fold and
+      // its marker deletes: the folded watermark makes a surviving folded
+      // marker inert, not double-counted
+      IngestLogFixtures.toMarkerLayout(path)
+      java.nio.file.Files.write(java.nio.file.Paths.get(path,
+        "_stream_appends", "b1"), org.json4s.jackson.JsonMethods.compact(
+        org.json4s.Extraction.decompose(pre.pending("")(1L))(
+          org.json4s.DefaultFormats)).getBytes("UTF-8"))
+      assert(graft.util.StreamCommit.readState(spark, path) == folded)
       assert(serve() == before, "folded-but-surviving marker must be inert")
-      Bm25.compactStreamStats(spark, path)
-      assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
       // a batch append after compaction rides the watermarks through its
-      // log commit; the final index serves like a full rebuild
-      graft.util.StreamCommit.writeMarker(fs, path, "b1", b1body) // survive again
+      // log commit (and drops the surviving marker); the final index
+      // serves like a full rebuild
       Bm25.appendToIndex(late, path)
+      assert(IngestLogFixtures.markerTags(path).isEmpty)
       assert(serve() == Bm25.topK(docs, qs, k = 5)
         .orderBy("query_id", "rank").collect().toSeq,
         "appendToIndex must preserve the folded watermark")
@@ -420,12 +424,11 @@ class Bm25Spec extends SparkSpec {
         Bm25.applyIngestBatch(b1docs, path, batchId = 1L)
       }
       assert(exReplay.getMessage.contains("rolled back"))
-      // crash-mid-ingest state under a NEW batchId (files promoted, marker
-      // never landed — the promoted-without-marker shape): a removal of it
-      // records the intent and scrubs the leftovers, returning false
+      // crash-mid-ingest state under a NEW batchId (files promoted, log
+      // commit never landed): a removal of it records the intent and
+      // scrubs the leftovers, returning false
       assert(Bm25.applyIngestBatch(b1docs, path, batchId = 2L))
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b2"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       assert(!Bm25.removeIngestBatch(spark, path, batchId = 2L))
       assert(Option(fs.globStatus(new org.apache.hadoop.fs.Path(
         s"$path/bucket=*/b2-*"))).getOrElse(Array.empty).isEmpty)
@@ -440,47 +443,7 @@ class Bm25Spec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
-  test("liveStats: markers-before-sidecar read order makes a concurrent compact harmless in every interleaving") {
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val seed = docs.filter(col("doc_id") % 3 === 0)
-    val b0docs = docs.filter(col("doc_id") % 3 === 1)
-    val b1docs = docs.filter(col("doc_id") % 3 === 2)
-    val dir = java.nio.file.Files.createTempDirectory("bm25ls").toFile
-    val path = dir.getAbsolutePath
-    try {
-      Bm25.writeIndex(seed, path, nBuckets = 8)
-      assert(Bm25.applyIngestBatch(b0docs, path, batchId = 0L))
-      assert(Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
-      val fs = graft.util.StreamCommit.fs(spark, path)
-      def state() = graft.util.StreamCommit.readState(spark, path)
-      // ground truth: the union corpus's exact stats
-      val (truthN, truthT) = Bm25.corpusStats(docs)
-      // interleaving A (no compact): old markers + old log state
-      val preMarkers = graft.util.StreamCommit.listMarkers(fs, path)
-      val preState = state()
-      assert(Bm25.liveStatsFrom(preMarkers, preState)._1 == truthN)
-      assert(Bm25.liveStatsFrom(preMarkers, preState)._2 == truthT)
-      // interleaving B — THE race the read order exists for: markers were
-      // listed, then a compact commits fully (new log entry written,
-      // folded markers deleted), then the log state is read. The new
-      // state's watermark must filter the already-listed markers, so the
-      // deltas are counted exactly once. (A state-first order would
-      // combine the old base with the post-delete empty marker list and
-      // drop both batches' deltas here.)
-      Bm25.compactStreamStats(spark, path)
-      val postState = state()
-      assert(Bm25.liveStatsFrom(preMarkers, postState) ==
-        (truthN, truthT, 8),
-        "compact between marker list and state read must not drop deltas")
-      // interleaving C (read starts after the compact): empty marker list +
-      // new log state
-      assert(Bm25.liveStatsFrom(
-        graft.util.StreamCommit.listMarkers(fs, path), postState) ==
-        (truthN, truthT, 8))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
-  test("stats sidecar CAS: a stale read-modify-write fails loudly and bumps the conflict counter") {
+  test("ingest log advance: a stale read-modify-write loses its round, re-derives on the newer state and bumps the retry counter") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val seed = docs.filter(col("doc_id") % 3 === 0)
     val other = docs.filter(col("doc_id") % 3 === 1)
@@ -489,30 +452,27 @@ class Bm25Spec extends SparkSpec {
     try {
       Bm25.writeIndex(seed, path, nBuckets = 8)
       import graft.util.StreamCommit
-      // writer A reads the log state...
-      val stale = StreamCommit.readState(spark, path)
-      // ...writer B's full append commits in between (version bumps)...
-      Bm25.appendToIndex(other, path)
-      val after = StreamCommit.readState(spark, path)
-      assert(after.version == stale.version + 1)
-      // ...writer A's commit must now fail LOUDLY, not silently overwrite
-      val c0 = graft.metrics.GraftCounters.get("ingest_log_cas_conflict_total")
-      val ex = intercept[IllegalStateException] {
-        StreamCommit.commit(spark, path, stale.next(payload = stale.payload ++
-          Map("n_docs" -> (stale.payload("n_docs") + 99),
-            "total_tokens" -> (stale.payload("total_tokens") + 99))),
-          "test hint")
+      val base = StreamCommit.readState(spark, path).payload
+      val (on, ot) = Bm25.corpusStats(other)
+      val r0 = graft.metrics.GraftCounters.get("ingest_log_cas_retry_total")
+      // writer A derives its round from the log state; writer B's full
+      // append commits inside that round, so A's commit loses and A
+      // re-derives on top of B's stats instead of overwriting them
+      var rounds = 0
+      val st = StreamCommit.advance(spark, path) { st =>
+        rounds += 1
+        if (rounds == 1) Bm25.appendToIndex(other, path)
+        st.copy(payload = st.payload ++
+          Map("n_docs" -> (st.payload("n_docs") + 99),
+            "total_tokens" -> (st.payload("total_tokens") + 99)))
       }
-      assert(ex.getMessage.contains("CAS conflict"))
-      assert(
-        graft.metrics.GraftCounters.get("ingest_log_cas_conflict_total") ==
-          c0 + 1)
-      // the log still holds writer B's consistent update
-      assert(StreamCommit.readState(spark, path) == after)
-      // a fresh read-modify-write (the documented recovery) succeeds
-      val retry = StreamCommit.readState(spark, path)
-      StreamCommit.commit(spark, path, retry.next(), "test hint")
-      assert(StreamCommit.readState(spark, path).version == retry.version + 1)
+      assert(rounds == 2)
+      assert(graft.metrics.GraftCounters.get("ingest_log_cas_retry_total") ==
+        r0 + 1)
+      assert(StreamCommit.readState(spark, path) == st)
+      assert(st.payload("n_docs") == base("n_docs") + on + 99 &&
+        st.payload("total_tokens") == base("total_tokens") + ot + 99,
+        "both writers' updates must land")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
@@ -539,29 +499,28 @@ class Bm25Spec extends SparkSpec {
       val afterB0 = serveCommitted()
       assert(afterB0 == Bm25.topK(seed.unionByName(b0docs), qs, k = 5)
         .orderBy("query_id", "rank").collect().toSeq)
-      // b1 fully promoted but its marker never lands (crash before marker):
-      // the committed-only serve must be row-identical to the pre-batch
-      // index — the half-landed batch is entirely invisible
+      // b1 fully promoted but its log commit never lands (crash before
+      // commit): the committed-only serve must be row-identical to the
+      // pre-batch index — the half-landed batch is entirely invisible
       assert(Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
       val fs = graft.util.StreamCommit.fs(spark, path)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b1"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       assert(Option(fs.globStatus(new org.apache.hadoop.fs.Path(
         s"$path/bucket=*/b1-*"))).getOrElse(Array.empty).nonEmpty,
         "fixture: b1's postings files must still be in the layout")
       assert(serveCommitted() == afterB0,
-        "a promoted batch without its marker must be invisible to the " +
-          "committed-only serve")
-      // replay lands the marker: committed-only == default == full rebuild
+        "a promoted batch without its log commit must be invisible to " +
+          "the committed-only serve")
+      // replay lands the commit: committed-only == default == full rebuild
       assert(Bm25.applyIngestBatch(b1docs, path, batchId = 1L))
       val full = Bm25.topK(docs, qs, k = 5)
         .orderBy("query_id", "rank").collect().toSeq
       assert(serveCommitted() == full && serveDefault() == full)
-      // compaction deletes the markers but the files keep their b<id>-
-      // prefixes: the folded watermark (not marker presence) must keep the
-      // batches visible — the naive base+marker filter would drop them here
+      // compaction folds the pending batches but the files keep their b<id>-
+      // prefixes: the folded watermark (not `pending`) must keep the
+      // batches visible — the naive base+pending filter would drop them
       Bm25.compactStreamStats(spark, path)
-      assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
+      assert(graft.util.StreamCommit.readState(spark, path).pending.isEmpty)
       assert(serveCommitted() == full,
         "folded (compacted) batches must stay visible to the " +
           "committed-only serve")

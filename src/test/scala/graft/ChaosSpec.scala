@@ -350,7 +350,10 @@ class ChaosSpec extends SparkSpec {
     // the ingest protocol runs on the plain local path; ONLY the compact
     // under test runs against the chaos: view of the same directory (its
     // promote-time listFiles doesn't support the chaos scheme, and the
-    // failure point under test is compact's marker delete anyway)
+    // failure point under test is compact's marker delete anyway). The
+    // layout is rewritten in the form the marker protocol wrote — each
+    // batch a `_stream_appends/<tag>` marker file beside the log — whose
+    // first new log commit records the markers and then deletes them
     val idx = s"$dir/idx"
     val chaosIdx = s"chaos:$dir/idx"
     val seed = (0L until 30L).map(i => (i, s"cch w$i mu " * 18))
@@ -369,6 +372,8 @@ class ChaosSpec extends SparkSpec {
       graft.ann.Bm25.writeIndex(seed, idx, nBuckets = 4)
       assert(graft.ann.Bm25.applyIngestBatch(b0, idx, batchId = 0L))
       assert(graft.ann.Bm25.applyIngestBatch(b1, idx, batchId = 1L))
+      IngestLogFixtures.toMarkerLayout(idx)
+      assert(IngestLogFixtures.markerTags(idx) == Set("b0", "b1"))
       val expected = rows(graft.ann.Bm25.topK(
         seed.unionByName(b0).unionByName(b1), qs, k = 4))
       // every access after the first chaos-side write goes through the
@@ -378,17 +383,18 @@ class ChaosSpec extends SparkSpec {
         graft.ann.Bm25.retrieveFromIndex(spark, chaosIdx, qs, k = 4,
           committedOnly = committed))
       assert(serve() == expected)
-      // kill the compact on its FIRST marker delete: the ingest-log entry
-      // — deltas folded, watermark recorded — has already committed, and
+      // kill the compact on its marker delete: the ingest-log entry —
+      // deltas folded, watermark recorded — has already committed, and
       // every folded marker survives the crash
-      ChaosFileSystem.armPathDeleteFailure("/_stream_appends/b", times = 1)
+      ChaosFileSystem.armPathDeleteFailure("/_stream_appends", times = 1)
       try intercept[java.io.IOException] {
         graft.ann.Bm25.compactStreamStats(spark, chaosIdx)
       } finally ChaosFileSystem.disarm()
       assert(ChaosFileSystem.failureFired, "the injected delete must fire")
-      val fs = graft.util.StreamCommit.fs(spark, chaosIdx)
-      assert(graft.util.StreamCommit.listMarkers(fs, chaosIdx).nonEmpty,
+      assert(IngestLogFixtures.markerTags(idx) == Set("b0", "b1"),
         "fixture: folded markers must survive the crash")
+      val folded = graft.util.StreamCommit.readState(spark, chaosIdx)
+      assert(folded.watermarks == Map("" -> 1L) && folded.pending.isEmpty)
       // the folded watermark makes the survivors inert for BOTH serve
       // modes — stats identical to the undisturbed path
       assert(serve() == expected,
@@ -397,7 +403,8 @@ class ChaosSpec extends SparkSpec {
         "committed-only serve must treat folded batches as committed")
       // the re-run compact deletes the survivors and changes nothing else
       graft.ann.Bm25.compactStreamStats(spark, chaosIdx)
-      assert(graft.util.StreamCommit.listMarkers(fs, chaosIdx).isEmpty)
+      assert(IngestLogFixtures.markerTags(idx).isEmpty)
+      assert(graft.util.StreamCommit.readState(spark, chaosIdx) == folded)
       assert(serve() == expected && serve(committed = true) == expected)
     } finally
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -3,17 +3,18 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ann.{Bm25, Retrieval}
 import graft.util.StreamCommit
+import IngestLogFixtures._
 
-/** The ingest-protocol admin races: marker compaction vs batch rollback on
-  * the one versioned ingest log (`_graft_log/`) every layout keeps — dense
-  * chunk indexes and BM25 — in BOTH interleaving orders; each must fail
-  * LOUDLY on at least one side instead of silently stamping a scrubbed
-  * batch permanently committed (or folding its stats delta). Plus the
-  * log's create-if-absent CAS between two admins holding one version, its
-  * retention window, the migration of layouts written with the pre-log
-  * sidecars, the serve-vs-rollback reader contract and the
-  * one-snapshot-per-serve-call coherence of the committed-only dense
-  * serve.
+/** The ingest-protocol races on the one versioned ingest log
+  * (`_graft_log/`) every layout keeps — dense chunk indexes and BM25:
+  * compaction inside a rollback must fail the rollback LOUDLY instead of
+  * silently stamping a scrubbed batch permanently committed (or folding its
+  * stats delta); removals and compactions killed before their scrub
+  * converge; concurrent writers whose log round is lost re-derive and all
+  * land. Plus the log's retention window, the migration of layouts written
+  * with the pre-log sidecars or the per-batch marker files, the
+  * serve-vs-rollback reader contract and the one-snapshot-per-serve-call
+  * coherence of the committed-only dense serve.
   */
 class IngestRaceSpec extends SparkSpec {
   import spark.implicits._
@@ -22,65 +23,11 @@ class IngestRaceSpec extends SparkSpec {
     (lo until hi).map(i => (i, s"$word w$i rho " * 18)).toDF("doc_id", "text")
 
   private def compactDense(path: String) =
-    StreamCommit.compactMarkers(spark, path, Retrieval.chunkBatchGlobs(path))
+    StreamCommit.compact(spark, path, Retrieval.chunkBatchGlobs(path))
+      .watermarks
 
-  private def conflicts = graft.metrics.GraftCounters
-    .get("ingest_log_cas_conflict_total")
-
-  test("dense race, removal-then-stale-compact: a compact whose marker listing predates a rollback fails its CAS loudly; a fresh compact extends the watermark ACROSS the recorded removal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_race1").toFile
-    val path = dir.getAbsolutePath
-    try {
-      Retrieval.writeChunkIndex(mkDocs(0, 40, "rca"), path, nLists = 4,
-        fitBudget = 48)
-      assert(Retrieval.applyChunkIngestBatch(mkDocs(40, 50, "rca"), path,
-        batchId = 0L, streamId = "r1"))
-      assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rca"), path,
-        batchId = 1L, streamId = "r1"))
-      val fs = StreamCommit.fs(spark, path)
-      // the doomed compact reads its state and lists markers FIRST...
-      val staleState = StreamCommit.readState(spark, path)
-      val staleMarkers = StreamCommit.listMarkers(fs, path)
-      assert(staleMarkers.map(_._2).sorted == Seq(0L, 1L))
-      // ...then the rollback completes (marker delete, scrub, recorded)
-      assert(Retrieval.removeChunkIngestBatch(spark, path, batchId = 1L,
-        streamId = "r1"))
-      val afterRemove = StreamCommit.readState(spark, path)
-      assert(afterRemove.removed == Map("r1" -> Set(1L)))
-      assert(afterRemove.version == staleState.version + 1,
-        "a rollback must bump the log version (that IS the guard)")
-      // the stale compact would stamp the scrubbed batch 1 committed — its
-      // CAS must fail loudly and leave the log untouched
-      val c0 = conflicts
-      val ex = intercept[IllegalStateException] {
-        StreamCommit.compactMarkersFrom(spark, path, staleState, staleMarkers,
-          Retrieval.chunkBatchGlobs(path))
-      }
-      assert(ex.getMessage.contains("CAS conflict"))
-      assert(conflicts == c0 + 1)
-      assert(StreamCommit.readState(spark, path) == afterRemove)
-      // batch 0's marker must survive (the failed compact deletes nothing)
-      assert(StreamCommit.listMarkers(fs, path).map(_._2) == Seq(0L))
-      // a FRESH compact folds batch 0 and extends the watermark across the
-      // deliberately removed batch 1 — a rollback no longer pins the
-      // watermark (and with it the committed serve's marker scan) forever
-      assert(compactDense(path) == Map("r1" -> 1L))
-      assert(StreamCommit.listMarkers(fs, path).isEmpty)
-      // later batches keep folding past the gap
-      assert(Retrieval.applyChunkIngestBatch(mkDocs(60, 70, "rca"), path,
-        batchId = 2L, streamId = "r1"))
-      assert(compactDense(path) == Map("r1" -> 2L))
-      // committed serve sees folded batches 0 and 2, never the removed 1
-      val qs = Seq((7L, "rca w7 rho"), (47L, "rca w47 rho"),
-        (57L, "rca w57 rho"), (67L, "rca w67 rho")).toDF("query_id", "text")
-      val served = Retrieval.retrieveFromChunkIndex(spark, path, qs, k = 4,
-          nProbe = 4, committedOnly = true)
-        .select("query_id", "doc_id").as[(Long, Long)].collect().toSeq
-      assert(served.exists(_._2 >= 60L) && served.exists(_._2 < 50L))
-      assert(!served.exists(r => r._2 >= 50L && r._2 < 60L),
-        "the removed batch must stay invisible after folding past it")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
+  private def retries = graft.metrics.GraftCounters
+    .get("ingest_log_cas_retry_total")
 
   test("dense race, compact-inside-removal: the intent-record CAS fails the rollback loudly BEFORE any mutation (the batch stays correctly served, nothing scrubbed)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_race2").toFile
@@ -100,10 +47,9 @@ class IngestRaceSpec extends SparkSpec {
       assert(before.exists(_._3 >= 40L), "fixture: batch 0 must be served")
       val tag = StreamCommit.tag("r2", 0L)
       val glob = s"${StreamCommit.escapeGlob(path)}/list=*/$tag-*"
-      val c0 = conflicts
-      // the compact lands between the removal's state read and its intent
-      // record — the removal's CAS must fail against the moved version and
-      // abort with NOTHING mutated (intent-first: the record is write #1)
+      // the compact lands between the removal's pre-check and its record —
+      // the record's round re-checks the fold guard and aborts with NOTHING
+      // mutated (record-first: the record is write #1)
       val ex = intercept[IllegalStateException] {
         StreamCommit.removeBatchGuarded(spark, path, "r2", 0L, Seq(glob),
           afterPreCheck =
@@ -112,7 +58,6 @@ class IngestRaceSpec extends SparkSpec {
       assert(ex.getMessage.contains("concurrently compacted"))
       assert(StreamCommit.readState(spark, path).removed.isEmpty,
         "the failed removal must not have recorded its intent")
-      assert(conflicts == c0 + 1)
       // nothing scrubbed: the batch's files are intact and the committed
       // serve (now via the watermark) is unchanged
       val fs = StreamCommit.fs(spark, path)
@@ -169,7 +114,6 @@ class IngestRaceSpec extends SparkSpec {
         .orderBy("query_id", "rank")
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
       assert(serve(committed = true) == truth)
-      val c0 = conflicts
       val ex = intercept[IllegalStateException] {
         Bm25.removeIngestBatch(spark, path, batchId = 0L, streamId = "r4",
           afterPreCheck = () => Bm25.compactStreamStats(spark, path))
@@ -177,7 +121,6 @@ class IngestRaceSpec extends SparkSpec {
       assert(ex.getMessage.contains("concurrently folded"))
       assert(StreamCommit.readState(spark, path).removed.isEmpty,
         "the failed removal must not have recorded its intent")
-      assert(conflicts == c0 + 1)
       // postings intact, delta folded into base: both serve modes still
       // rank exactly the union corpus
       assert(serve(committed = true) == truth)
@@ -187,46 +130,6 @@ class IngestRaceSpec extends SparkSpec {
         Bm25.removeIngestBatch(spark, path, batchId = 0L, streamId = "r4")
       }
       assert(ex2.getMessage.contains("folded"))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
-  test("bm25 race, removal-then-stale-compact: a clean rollback bumps the stats version, so a compact holding the pre-delete marker listing fails its CAS instead of folding the scrubbed delta") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_race5").toFile
-    val path = dir.getAbsolutePath
-    try {
-      Bm25.writeIndex(mkDocs(0, 40, "rce"), path, nBuckets = 8)
-      assert(Bm25.applyIngestBatch(mkDocs(40, 50, "rce"), path,
-        batchId = 0L, streamId = "r5"))
-      // the doomed compact's RMW reads the log state (version v)...
-      val stale = StreamCommit.readState(spark, path)
-      val staleMarkers = StreamCommit.listMarkers(
-        StreamCommit.fs(spark, path), path)
-      assert(staleMarkers.nonEmpty)
-      // ...the rollback completes (marker deleted, postings scrubbed,
-      // version bumped — the bump IS the guard)
-      assert(Bm25.removeIngestBatch(spark, path, batchId = 0L,
-        streamId = "r5"))
-      val afterRemove = StreamCommit.readState(spark, path)
-      assert(afterRemove.version == stale.version + 1)
-      assert(afterRemove.payload == stale.payload,
-        "rollback must not change the base counts")
-      // the stale compact's write (base + the scrubbed batch's delta, as
-      // compactStreamStats would compute from its stale listing) must fail
-      val delta = graft.util.Sidecar.requiredLong(staleMarkers.head._3,
-        "n_docs", "test marker")
-      val ex = intercept[IllegalStateException] {
-        StreamCommit.commit(spark, path, stale.next(
-          watermarks = stale.watermarks + ("r5" -> 0L),
-          payload = stale.payload +
-            ("n_docs" -> (stale.payload("n_docs") + delta))), "test hint")
-      }
-      assert(ex.getMessage.contains("CAS conflict"))
-      assert(StreamCommit.readState(spark, path) == afterRemove,
-        "the stale fold must not land")
-      // the REAL compact path, run fresh, is a safe no-op (marker gone)
-      Bm25.compactStreamStats(spark, path)
-      assert(StreamCommit.readState(spark, path).payload("n_docs") ==
-        stale.payload("n_docs"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
@@ -275,10 +178,10 @@ class IngestRaceSpec extends SparkSpec {
         df.orderBy("query_id", "rank")
           .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
       // snapshot the index view WITH batch 0 committed...
-      val snap0 = StreamCommit.committedView(spark, path)
+      val snap0 = StreamCommit.readState(spark, path)
       val view0 = collect(Retrieval.retrieveFromChunkIndexPq(spark, path,
         qs, k = 4, nProbe = 4, shortlist = 100000, committedOnly = true))
-      // ...then a second batch commits (marker lands, files promoted).
+      // ...then a second batch commits (files promoted, log committed).
       // Its docs DUPLICATE the base texts under new ids ≥ 50: identical
       // text → identical chunk embeddings → score ties right behind every
       // base hit, so batch-1 visibility changes the top-k DETERMINISTICALLY
@@ -289,7 +192,7 @@ class IngestRaceSpec extends SparkSpec {
         batchId = 1L, streamId = "r7"))
       // an over-gate serve pinned to snap0 recurses through query shards;
       // every shard must serve the snap0 view — batch 1 invisible in all
-      // of them even though its marker is on disk at file-listing time
+      // of them even though its commit is in the log at file-listing time
       val sharded = collect(Retrieval.retrievePqWithSnapshot(spark, path,
         qs, k = 4, nProbe = 4, shortlist = 100000, dim = 4, salt = "emb",
         textCol = "text", exactRerank = true, maxQueries = 1L,
@@ -325,17 +228,15 @@ class IngestRaceSpec extends SparkSpec {
       val truth = Bm25.topK(seed.unionByName(b0).unionByName(b2), qs, k = 5)
         .orderBy("query_id", "rank")
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
-      // the removal of batch 1 CRASHES between its marker delete and its
-      // scrub: intent recorded, marker gone (delta died with it), posting
+      // the removal of batch 1 is killed between its record and its scrub:
+      // batch moved from pending to removed (delta gone with it), posting
       // files orphaned in the layout — the exact pre-r14 poison state
-      val boom = new RuntimeException("crash before scrub")
-      assert(intercept[RuntimeException] {
-        Bm25.removeIngestBatch(spark, path, batchId = 1L, streamId = "r9",
-          afterMarkerDelete = () => throw boom)
-      } eq boom)
+      val orphans = s"$path/bucket=*/r9~b1-*"
+      assert(killedBeforeScrub(spark, Seq(orphans)) {
+        Bm25.removeIngestBatch(spark, path, batchId = 1L, streamId = "r9")
+      })
       val fs = StreamCommit.fs(spark, path)
-      val orphanGlob = new org.apache.hadoop.fs.Path(
-        s"$path/bucket=*/r9~b1-*")
+      val orphanGlob = new org.apache.hadoop.fs.Path(orphans)
       assert(Option(fs.globStatus(orphanGlob)).getOrElse(Array.empty)
         .nonEmpty, "fixture: the crash must leave orphaned posting files")
       assert(StreamCommit.readState(spark, path).removed ==
@@ -343,12 +244,21 @@ class IngestRaceSpec extends SparkSpec {
       // the orphans are uncommitted NOW: the committed serve ranks exactly
       // the corpus minus batch 1, stats matching the scanned postings
       assert(serve(committed = true) == truth)
-      // the compact folds the contiguous markers-or-removed run {0,rm(1),2}
+      // the compact folds the contiguous pending-or-removed run {0,rm(1),2}
       // to watermark 2 WITHOUT batch 1's delta — pre-r14 the per-stream-MAX
-      // fold here permanently committed the orphans with no delta — and
-      // finishes the crashed removal's scrub
-      Bm25.compactStreamStats(spark, path)
+      // fold here permanently committed the orphans with no delta. Killed
+      // after its commit and before its scrub, it leaves the orphans
+      // uncommitted; its re-run commits nothing new and finishes the scrub
+      killedBeforeScrub(spark, Seq(orphans)) {
+        Bm25.compactStreamStats(spark, path)
+      }
       val st = StreamCommit.readState(spark, path)
+      val versions = logVersions(path)
+      assert(serve(committed = true) == truth)
+      Bm25.compactStreamStats(spark, path)
+      assert(StreamCommit.readState(spark, path) == st &&
+        logVersions(path) == versions,
+        "the re-run compaction must land on the same state")
       assert(st.watermarks == Map("r9" -> 2L))
       assert(st.removed == Map("r9" -> Set(1L)),
         "the removal record must survive compaction (it IS the convergence)")
@@ -385,11 +295,9 @@ class IngestRaceSpec extends SparkSpec {
       assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rci"), path,
         batchId = 1L, streamId = "ra"))
       val glob = s"${StreamCommit.escapeGlob(path)}/list=*/ra~b1-*"
-      val boom = new RuntimeException("crash before scrub")
-      assert(intercept[RuntimeException] {
-        StreamCommit.removeBatchGuarded(spark, path, "ra", 1L, Seq(glob),
-          afterMarkerDelete = () => throw boom)
-      } eq boom)
+      assert(killedBeforeScrub(spark, Seq(glob)) {
+        StreamCommit.removeBatchGuarded(spark, path, "ra", 1L, Seq(glob))
+      })
       val fs = StreamCommit.fs(spark, path)
       assert(Option(fs.globStatus(new org.apache.hadoop.fs.Path(glob)))
         .getOrElse(Array.empty).nonEmpty,
@@ -523,9 +431,9 @@ class IngestRaceSpec extends SparkSpec {
       // committed — asserted on the committed FILE view (hash embeddings
       // carry no semantics, so a rank-based assertion would be luck)
       val fs = StreamCommit.fs(spark, path)
-      val (markers, st) = StreamCommit.committedView(spark, path)
       val committed = StreamCommit.committedDataFiles(fs,
-        Seq(s"${StreamCommit.escapeGlob(path)}/list=*/*"), markers, st)
+        Seq(s"${StreamCommit.escapeGlob(path)}/list=*/*"),
+        StreamCommit.readState(spark, path))
       val ids = spark.read.option("basePath", path).parquet(committed: _*)
         .select("doc_id").distinct().as[Long].collect().toSet
       assert(!ids.exists(id => id >= 50L && id < 60L),
@@ -535,99 +443,58 @@ class IngestRaceSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
-  /** Every file under a layout (relative path → size), `.crc` excluded —
-    * the "mutated nothing" witness for a losing admin writer.
-    */
-  private def layoutFiles(path: String): Map[String, Long] = {
-    val root = new java.io.File(path).toPath
-    val it = java.nio.file.Files.walk(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      it.iterator().asScala.map(_.toFile)
-        .filter(f => f.isFile && !f.getName.endsWith(".crc"))
-        .map(f => root.relativize(f.toPath).toString -> f.length).toMap
-    } finally it.close()
-  }
-
-  private def logVersions(path: String): Seq[Long] =
-    Option(new java.io.File(path, "_graft_log").listFiles())
-      .getOrElse(Array.empty).map(_.getName)
-      .filter(_.matches("[0-9]+")).map(_.toLong).sorted.toSeq
-
-  test("interleaved admins: two writers holding the same log version — the second commit fails its create-if-absent CAS with nothing mutated (two compactions; a compaction against an append)") {
+  test("interleaved ingest-log writers: a round lost to a concurrent commit re-derives from the winner's state — two streams applying into one layout both land, and the retry counter counts the lost round") {
     val dir = java.nio.file.Files.createTempDirectory("graft_race14").toFile
     val path = dir.getAbsolutePath
     try {
       Retrieval.writeChunkIndex(mkDocs(0, 40, "rcm"), path, nLists = 4,
         fitBudget = 48)
+      // stream sA's batch 0 promoted, its log commit still to come
       assert(Retrieval.applyChunkIngestBatch(mkDocs(40, 50, "rcm"), path,
-        batchId = 0L, streamId = "rm"))
-      assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rcm"), path,
-        batchId = 1L, streamId = "rm"))
-      val fs = StreamCommit.fs(spark, path)
-      // both compactions read version v and list the same markers...
-      val held = StreamCommit.readState(spark, path)
-      val markers = StreamCommit.listMarkers(fs, path)
-      // ...A commits v+1 (and deletes the folded markers)...
-      assert(StreamCommit.compactMarkersFrom(spark, path, held, markers,
-        Retrieval.chunkBatchGlobs(path)) == Map("rm" -> 1L))
-      val afterA = StreamCommit.readState(spark, path)
-      assert(afterA.version == held.version + 1 &&
-        afterA.watermarks == Map("rm" -> 1L))
-      val filesA = layoutFiles(path)
-      // ...and B, still holding v, loses the race for entry v+1
-      val c0 = conflicts
-      val ex = intercept[IllegalStateException] {
-        StreamCommit.compactMarkersFrom(spark, path, held, markers,
-          Retrieval.chunkBatchGlobs(path))
+        batchId = 0L, streamId = "sA"))
+      dropNewestEntry(path)
+      assert(StreamCommit.readState(spark, path).pending.isEmpty)
+      // sA's commit derives from version v; inside that round stream sB's
+      // whole apply commits v+1, so sA loses the race for v+1, re-derives
+      // on top of sB's batch and lands as v+2
+      val r0 = retries
+      var rounds = 0
+      val v = logVersions(path).lastOption.getOrElse(0L)
+      StreamCommit.advance(spark, path) { st =>
+        rounds += 1
+        if (rounds == 1)
+          assert(Retrieval.applyChunkIngestBatch(mkDocs(50, 60, "rcm"), path,
+            batchId = 0L, streamId = "sB"))
+        st.copy(pending = st.pending + ("sA" -> Map(0L -> Map.empty)))
       }
-      assert(ex.getMessage.contains("CAS conflict"))
-      assert(conflicts == c0 + 1)
-      assert(StreamCommit.readState(spark, path) == afterA,
-        "the log must hold A's state only")
-      assert(layoutFiles(path) == filesA, "B must have mutated nothing")
-
-      // a BM25 compaction holding version v against a batch append that
-      // commits v+1 first: the compaction loses, its markers and the
-      // appended stats stay exactly as the append left them
-      val bdir = java.nio.file.Files.createTempDirectory("graft_race14b")
-        .toFile
-      val bpath = bdir.getAbsolutePath
+      assert(rounds == 2 && retries == r0 + 1)
+      assert(logVersions(path).last == v + 2)
+      assert(StreamCommit.readState(spark, path).pending ==
+        Map("sA" -> Map(0L -> Map.empty), "sB" -> Map(0L -> Map.empty)))
+      // two streams' applies running concurrently: every batch lands,
+      // whichever rounds were lost
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       try {
-        Bm25.writeIndex(mkDocs(0, 40, "rcm"), bpath, nBuckets = 8)
-        assert(Bm25.applyIngestBatch(mkDocs(40, 50, "rcm"), bpath,
-          batchId = 0L, streamId = "rm"))
-        val bfs = StreamCommit.fs(spark, bpath)
-        val heldB = StreamCommit.readState(spark, bpath)
-        val markersB = StreamCommit.listMarkers(bfs, bpath)
-        Bm25.appendToIndex(mkDocs(60, 70, "rcm"), bpath)
-        val afterAppend = StreamCommit.readState(spark, bpath)
-        assert(afterAppend.version == heldB.version + 1)
-        assert(afterAppend.payload("n_docs") == heldB.payload("n_docs") + 10)
-        val filesAppend = layoutFiles(bpath)
-        val c1 = conflicts
-        val exB = intercept[IllegalStateException] {
-          StreamCommit.compactMarkersFrom(spark, bpath, heldB, markersB,
-            Bm25.batchGlobs(bpath))
+        val runs = Seq("sA" -> 60L, "sB" -> 80L).map { case (sid, lo) =>
+          pool.submit(new java.util.concurrent.Callable[Seq[Boolean]] {
+            def call(): Seq[Boolean] = Seq(1L, 2L).map(b =>
+              Retrieval.applyChunkIngestBatch(
+                mkDocs(lo + 10 * (b - 1), lo + 10 * b, "rcm"), path,
+                batchId = b, streamId = sid))
+          })
         }
-        assert(exB.getMessage.contains("CAS conflict"))
-        assert(conflicts == c1 + 1)
-        assert(StreamCommit.readState(spark, bpath) == afterAppend,
-          "the log must hold the append's state only")
-        assert(layoutFiles(bpath) == filesAppend,
-          "the losing compaction must have mutated nothing")
-        // the documented recovery — re-run the compaction — folds the
-        // marker on top of the append, and the index serves the union
-        Bm25.compactStreamStats(spark, bpath)
-        assert(StreamCommit.listMarkers(bfs, bpath).isEmpty)
-        val qs = Seq((7L, "rcm w7 rho"), (47L, "rcm w47 rho"),
-          (67L, "rcm w67 rho")).toDF("query_id", "text")
-        def rows(df: org.apache.spark.sql.DataFrame) =
-          df.orderBy("query_id", "rank").collect().toSeq
-        assert(rows(Bm25.retrieveFromIndex(spark, bpath, qs, k = 5)) ==
-          rows(Bm25.topK(mkDocs(0, 50, "rcm").unionByName(
-            mkDocs(60, 70, "rcm")), qs, k = 5)))
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(bdir)
+        assert(runs.forall(_.get().forall(identity)))
+      } finally pool.shutdown()
+      val st = StreamCommit.readState(spark, path)
+      assert(st.pending.view.mapValues(_.keySet).toMap ==
+        Map("sA" -> Set(0L, 1L, 2L), "sB" -> Set(0L, 1L, 2L)))
+      assert(compactDense(path) == Map("sA" -> 2L, "sB" -> 2L))
+      val ids = spark.read.option("basePath", path)
+        .parquet(StreamCommit.committedDataFiles(StreamCommit.fs(spark, path),
+          Seq(s"${StreamCommit.escapeGlob(path)}/list=*/*"),
+          StreamCommit.readState(spark, path)): _*)
+        .select("doc_id").distinct().as[Long].collect().toSet
+      assert((0L until 100L).forall(ids), "every batch must be committed")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
@@ -635,14 +502,10 @@ class IngestRaceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_race15").toFile
     val path = dir.getAbsolutePath
     try {
-      val v0 = StreamCommit.readState(spark, path)
-      assert(v0 == StreamCommit.LogState(0L, Map.empty, Map.empty, Map.empty))
-      val states = (1 to 12).scanLeft(v0) { (st, i) =>
-        val next = st.next(watermarks = Map("s" -> i.toLong),
-          payload = Map("n" -> i.toLong * 10))
-        StreamCommit.commit(spark, path, next, "test hint")
-        next
-      }
+      assert(StreamCommit.readState(spark, path) == StreamCommit.LogState())
+      val states = (1 to 12).map(i => StreamCommit.advance(spark, path)(
+        _.copy(watermarks = Map("s" -> i.toLong),
+          payload = Map("n" -> i.toLong * 10))))
       assert(logVersions(path) == (3L to 12L),
         "the newest KeptVersions entries must remain")
       assert(graft.util.VersionedLog.KeptVersions == 10)
@@ -650,13 +513,10 @@ class IngestRaceSpec extends SparkSpec {
       // a writer that held version 1 all along: its target (2) was
       // deleted by retention, so create-if-absent would succeed — the
       // kept-window check must still fail it and remove its entry
-      val c0 = conflicts
-      val ex = intercept[IllegalStateException] {
-        StreamCommit.commit(spark, path,
-          states(1).next(watermarks = Map("s" -> 99L)), "test hint")
-      }
-      assert(ex.getMessage.contains("CAS conflict"))
-      assert(conflicts == c0 + 1)
+      val lost = graft.util.VersionedLog.commit(
+        spark.sparkContext.hadoopConfiguration, path, 2L,
+        """{"watermarks":{"s":99}}""")
+      assert(lost.exists(_.contains("below the kept window")))
       assert(logVersions(path) == (3L to 12L))
       assert(StreamCommit.readState(spark, path) == states.last)
       assert(!new java.io.File(path, "_graft_log").list()
@@ -666,47 +526,91 @@ class IngestRaceSpec extends SparkSpec {
 
   test("migration: layouts written with the pre-log sidecars (BM25 stats with folded/removed, dense envelope, bare map) serve the same rows, refuse the same replays, and their first admin commit writes the next log version") {
     val dir = java.nio.file.Files.createTempDirectory("graft_race16").toFile
+    // the pre-log form: live batches as marker files, the log replaced by
+    // the sidecar
     def toLegacy(path: String, name: String, body: String): Unit = {
+      toMarkerLayout(path)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(path, "_graft_log"))
       graft.util.Sidecar.write(spark, path, name, body)
     }
     try {
-      // ---- BM25 stats sidecar: folded watermark, removed set, live marker
-      val bpath = s"$dir/bm25"
-      Bm25.writeIndex(mkDocs(0, 40, "rcn"), bpath, nBuckets = 8)
-      Seq(0L, 1L, 2L).foreach(b => assert(Bm25.applyIngestBatch(
-        mkDocs(40 + 10 * b, 50 + 10 * b, "rcn"), bpath, b, "mg")))
-      assert(Bm25.removeIngestBatch(spark, bpath, 1L, "mg"))
-      Bm25.compactStreamStats(spark, bpath)
-      assert(Bm25.applyIngestBatch(mkDocs(70, 80, "rcn"), bpath, 3L, "mg"))
       val qs = Seq((7L, "rcn w7 rho"), (47L, "rcn w47 rho"),
         (57L, "rcn w57 rho"), (77L, "rcn w77 rho")).toDF("query_id", "text")
-      def bm25Rows(committed: Boolean) = Bm25.retrieveFromIndex(spark, bpath,
-          qs, k = 5, committedOnly = committed)
-        .orderBy("query_id", "rank").collect().toSeq
-      val bExpect = (bm25Rows(committed = false), bm25Rows(committed = true))
+      // a BM25 layout with a folded watermark, a removed batch and one
+      // pending batch (3)
+      def bm25Layout(path: String): Unit = {
+        Bm25.writeIndex(mkDocs(0, 40, "rcn"), path, nBuckets = 8)
+        Seq(0L, 1L, 2L).foreach(b => assert(Bm25.applyIngestBatch(
+          mkDocs(40 + 10 * b, 50 + 10 * b, "rcn"), path, b, "mg")))
+        assert(Bm25.removeIngestBatch(spark, path, 1L, "mg"))
+        Bm25.compactStreamStats(spark, path)
+        assert(Bm25.applyIngestBatch(mkDocs(70, 80, "rcn"), path, 3L, "mg"))
+      }
+      def bm25Rows(path: String) = Seq(false, true).map(c =>
+        Bm25.retrieveFromIndex(spark, path, qs, k = 5, committedOnly = c)
+          .orderBy("query_id", "rank").collect().toSeq)
+
+      // ---- BM25 stats sidecar: folded watermark, removed set, live marker
+      val bpath = s"$dir/bm25"
+      bm25Layout(bpath)
+      val bExpect = bm25Rows(bpath)
       val bSt = StreamCommit.readState(spark, bpath)
       assert(bSt.watermarks == Map("mg" -> 2L) &&
-        bSt.removed == Map("mg" -> Set(1L)))
+        bSt.removed == Map("mg" -> Set(1L)) &&
+        bSt.pending.view.mapValues(_.keySet).toMap == Map("mg" -> Set(3L)))
       toLegacy(bpath, "_bm25_stats.json",
         s"""{"n_docs":${bSt.payload("n_docs")},""" +
           s""""total_tokens":${bSt.payload("total_tokens")},""" +
           """"n_buckets":8,"version":7,"writer":"w-old",""" +
           """"folded":{"mg":2},"removed":{"mg":[1]}}""")
-      assert(logVersions(bpath).isEmpty)
-      assert(StreamCommit.readState(spark, bpath) == bSt.copy(version = 7L))
-      assert((bm25Rows(committed = false), bm25Rows(committed = true)) ==
-        bExpect)
+      assert(logVersions(bpath).isEmpty && markerTags(bpath) == Set("mg~b3"))
+      assert(StreamCommit.readState(spark, bpath) == bSt)
+      assert(bm25Rows(bpath) == bExpect)
       assert(intercept[IllegalStateException] {
         Bm25.applyIngestBatch(mkDocs(50, 60, "rcn"), bpath, 1L, "mg")
       }.getMessage.contains("rolled back"))
       assert(!Bm25.applyIngestBatch(mkDocs(40, 50, "rcn"), bpath, 0L, "mg"))
+      assert(!Bm25.applyIngestBatch(mkDocs(70, 80, "rcn"), bpath, 3L, "mg"))
       Bm25.compactStreamStats(spark, bpath)
-      assert(logVersions(bpath) == Seq(8L))
+      assert(logVersions(bpath) == Seq(1L))
+      assert(markerTags(bpath).isEmpty,
+        "the first log commit must drop the recorded markers")
       assert(StreamCommit.readState(spark, bpath).watermarks == Map("mg" -> 3L))
-      assert((bm25Rows(committed = false), bm25Rows(committed = true)) ==
-        bExpect)
+      assert(bm25Rows(bpath) == bExpect)
+
+      // ---- a layout the marker protocol wrote beside its log: the newest
+      // entry carries no `pending`, the live batches are marker files, and
+      // a crashed apply (batch 4: files promoted, no marker) is uncommitted
+      val mpath = s"$dir/markers"
+      bm25Layout(mpath)
+      assert(bm25Rows(mpath) == bExpect)
+      val mSt = StreamCommit.readState(spark, mpath)
+      assert(Bm25.applyIngestBatch(mkDocs(80, 90, "rcn"), mpath, 4L, "mg"))
+      dropNewestEntry(mpath)
+      toMarkerLayout(mpath)
+      val mVersions = logVersions(mpath)
+      assert(markerTags(mpath) == Set("mg~b3"))
+      assert(StreamCommit.readState(spark, mpath) == mSt)
+      assert(bm25Rows(mpath)(1) == bExpect(1),
+        "the committed serve must read the live markers and skip batch 4")
+      assert(intercept[IllegalStateException] {
+        Bm25.applyIngestBatch(mkDocs(50, 60, "rcn"), mpath, 1L, "mg")
+      }.getMessage.contains("rolled back"))
+      assert(!Bm25.applyIngestBatch(mkDocs(40, 50, "rcn"), mpath, 0L, "mg"))
+      assert(!Bm25.applyIngestBatch(mkDocs(70, 80, "rcn"), mpath, 3L, "mg"))
+      assert(logVersions(mpath) == mVersions && markerTags(mpath).nonEmpty,
+        "refused and no-op replays commit nothing")
+      // the replay of batch 4 is the first new commit: it lands batch 4
+      // once, records batch 3 from its marker and drops the marker
+      assert(Bm25.applyIngestBatch(mkDocs(80, 90, "rcn"), mpath, 4L, "mg"))
+      assert(markerTags(mpath).isEmpty)
+      assert(StreamCommit.readState(spark, mpath).pending
+        .view.mapValues(_.keySet).toMap == Map("mg" -> Set(3L, 4L)))
+      val withB4 = Bm25.topK(mkDocs(0, 50, "rcn").unionByName(
+          mkDocs(60, 90, "rcn")), qs, k = 5)
+        .orderBy("query_id", "rank").collect().toSeq
+      assert(bm25Rows(mpath) == Seq(withB4, withB4))
 
       // ---- dense watermark envelope, and the bare pre-envelope map
       def denseCase(name: String, legacyBody: String,
@@ -726,11 +630,11 @@ class IngestRaceSpec extends SparkSpec {
             spark, path, qs, k = 4, nProbe = 4, committedOnly = committed)
           .orderBy("query_id", "rank").collect().toSeq
         val expect = (rows(committed = false), rows(committed = true))
-        assert(StreamCommit.readState(spark, path).copy(version =
-          legacyState.version) == legacyState)
+        val live = legacyState.copy(pending = Map("s1" -> Map(3L -> Map.empty)))
+        assert(StreamCommit.readState(spark, path) == live)
         toLegacy(path, "_ingest_watermarks.json", legacyBody)
         assert(logVersions(path).isEmpty)
-        assert(StreamCommit.readState(spark, path) == legacyState)
+        assert(StreamCommit.readState(spark, path) == live)
         assert((rows(committed = false), rows(committed = true)) == expect)
         if (removeOne)
           assert(intercept[IllegalStateException] {
@@ -740,41 +644,30 @@ class IngestRaceSpec extends SparkSpec {
         assert(!Retrieval.applyChunkIngestBatch(mkDocs(40, 50, "rcn"), path,
           0L, streamId = "s1"))
         assert(compactDense(path) == Map("s1" -> 3L))
-        assert(logVersions(path) == Seq(legacyState.version + 1))
+        assert(logVersions(path) == Seq(1L) && markerTags(path).isEmpty)
         assert((rows(committed = false), rows(committed = true)) == expect)
       }
       denseCase("envelope",
         """{"version":4,"writer":"w-old","watermarks":{"s1":2},""" +
           """"removed":{"s1":[2]}}""",
-        StreamCommit.LogState(4L, Map("s1" -> 2L), Map("s1" -> Set(2L)),
-          Map.empty), removeOne = true)
+        StreamCommit.LogState(Map("s1" -> 2L), Map("s1" -> Set(2L))),
+        removeOne = true)
       denseCase("bare", """{"s1":2}""",
-        StreamCommit.LogState(0L, Map("s1" -> 2L), Map.empty, Map.empty),
-        removeOne = false)
+        StreamCommit.LogState(Map("s1" -> 2L)), removeOne = false)
 
-      // the bare map's CAS: a commit advances it to log version 1 and
-      // round-trips; a writer still holding the legacy version-0 state
-      // now conflicts and changes nothing
+      // the bare map's first commit advances it to log version 1 and
+      // round-trips
       val cpath = s"$dir/cas"
       new java.io.File(cpath).mkdirs()
       graft.util.Sidecar.write(spark, cpath, "_ingest_watermarks.json",
         """{"s1":4}""")
-      val legacy = StreamCommit.readState(spark, cpath)
-      assert(legacy == StreamCommit.LogState(0L, Map("s1" -> 4L), Map.empty,
-        Map.empty))
-      StreamCommit.commit(spark, cpath, legacy.next(
-        watermarks = Map("s1" -> 6L), removed = Map("s1" -> Set(5L))),
-        "test hint")
-      val st = StreamCommit.readState(spark, cpath)
-      assert(st.watermarks == Map("s1" -> 6L) &&
-        st.removed == Map("s1" -> Set(5L)) && st.version == 1L)
-      val ex = intercept[IllegalStateException] {
-        StreamCommit.commit(spark, cpath,
-          legacy.next(watermarks = Map("s1" -> 9L), removed = Map.empty),
-          "test hint")
-      }
-      assert(ex.getMessage.contains("CAS conflict"))
-      assert(StreamCommit.readState(spark, cpath) == st)
+      assert(StreamCommit.readState(spark, cpath) ==
+        StreamCommit.LogState(Map("s1" -> 4L)))
+      val st = StreamCommit.advance(spark, cpath)(_.copy(
+        watermarks = Map("s1" -> 6L), removed = Map("s1" -> Set(5L))))
+      assert(logVersions(cpath) == Seq(1L))
+      assert(StreamCommit.readState(spark, cpath) == st &&
+        st == StreamCommit.LogState(Map("s1" -> 6L), Map("s1" -> Set(5L))))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }

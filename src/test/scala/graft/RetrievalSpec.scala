@@ -687,22 +687,21 @@ class RetrievalSpec extends SparkSpec {
       // the layout growing by exactly the new docs' chunks is not)
       assert(onceCodes.size > beforeCodes.size &&
         onceCodes.exists(_._1 >= 40L), "appended chunks missing from codes")
-      // 1. marker present → replay is a pure no-op
+      // 1. batch committed → replay is a pure no-op
       assert(!Retrieval.applyPqIngestBatch(newDocs, path, batchId = 3L))
       assert(codeRows() == onceCodes && serve() == once)
-      // 2. crash AFTER promote but BEFORE marker: every file landed, no
-      // marker — replay must scrub its own files and re-land exactly once
+      // 2. crash AFTER promote but BEFORE the log commit: every file
+      // landed, no commit — replay must scrub its own files and re-land
+      // exactly once
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b3"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       assert(Retrieval.applyPqIngestBatch(newDocs, path, batchId = 3L))
       assert(codeRows() == onceCodes && serve() == once)
       // 3. crash BETWEEN the promotes (vecs landed, codes did not): serving
       // in that state must look un-appended (orphan vecs are invisible),
       // and replay converges
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b3"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       Option(fs.globStatus(new org.apache.hadoop.fs.Path(
         s"$path/list=*/b3-*"))).getOrElse(Array.empty)
         .foreach(st => fs.delete(st.getPath, false))
@@ -710,7 +709,7 @@ class RetrievalSpec extends SparkSpec {
         "orphan vectors must be invisible to serving")
       assert(Retrieval.applyPqIngestBatch(newDocs, path, batchId = 3L))
       assert(codeRows() == onceCodes && serve() == once)
-      // 4. a second batch under a different id composes; its marker is
+      // 4. a second batch under a different id composes; its commit is
       // independent of batch 3's
       assert(Retrieval.applyPqIngestBatch(
         (70L until 80L).map(i => (i, s"ing w$i zeta " * 18))
@@ -750,12 +749,10 @@ class RetrievalSpec extends SparkSpec {
         .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
       val expected = serve(batchDir.getAbsolutePath)
       assert(serve(streamDir.getAbsolutePath) == expected)
-      // replay no-op, and replay-after-crash (marker gone, files present)
+      // replay no-op, and replay-after-crash (commit gone, files present)
       assert(!Retrieval.applyChunkIngestBatch(b2, streamDir.getAbsolutePath,
         batchId = 1L, streamId = "fci"))
-      val fs = graft.util.StreamCommit.fs(spark, streamDir.getAbsolutePath)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"${streamDir.getAbsolutePath}/_stream_appends/fci~b1"), false)
+      IngestLogFixtures.dropNewestEntry(streamDir.getAbsolutePath)
       assert(Retrieval.applyChunkIngestBatch(b2, streamDir.getAbsolutePath,
         batchId = 1L, streamId = "fci"))
       assert(serve(streamDir.getAbsolutePath) == expected)
@@ -785,29 +782,28 @@ class RetrievalSpec extends SparkSpec {
       // base index: committed-only == default
       val before = serve(committed = false)
       assert(serve(committed = true) == before)
-      // batch fully promoted (codes AND vecs), marker deleted — the
-      // crash-before-marker state. The default serve sees the new chunks;
+      // batch fully promoted (codes AND vecs), log commit dropped — the
+      // crash-before-commit state. The default serve sees the new chunks;
       // the committed-only serve must be row-identical to the pre-batch
-      // index: neither layout scan may admit the unmarked batch's files.
+      // index: neither layout scan may admit the uncommitted batch's files.
       assert(Retrieval.applyPqIngestBatch(newDocs, path, batchId = 3L))
       val once = serve(committed = false)
       val fs = graft.util.StreamCommit.fs(spark, path)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b3"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       assert(Option(fs.globStatus(new org.apache.hadoop.fs.Path(
         s"$path/list=*/b3-*"))).getOrElse(Array.empty).nonEmpty &&
         Option(fs.globStatus(new org.apache.hadoop.fs.Path(
           s"$path/_vecs/list=*/vb=*/b3-*"))).getOrElse(Array.empty).nonEmpty,
         "fixture: b3's files must be promoted in both layouts")
       assert(serve(committed = true) == before,
-        "an unmarked batch must be invisible to the committed-only serve")
-      // replay lands the marker: committed-only == default == post-ingest
+        "an uncommitted batch must be invisible to the committed-only serve")
+      // replay lands the commit: committed-only == default == post-ingest
       assert(Retrieval.applyPqIngestBatch(newDocs, path, batchId = 3L))
       assert(serve(committed = true) == once &&
         serve(committed = false) == once)
       // ADC-only mode (no vecs fetch) honors the same snapshot: with the
-      // marker deleted again, the committed-only ADC serve must rank only
-      // pre-batch chunks (doc_id < 40); re-landing the marker restores it
+      // commit dropped again, the committed-only ADC serve must rank only
+      // pre-batch chunks (doc_id < 40); re-landing the commit restores it
       def adcServe(committed: Boolean) =
         Retrieval.retrieveFromChunkIndexPq(spark, path, qs, k = 4,
             nProbe = 4, shortlist = 100000, exactRerank = false,
@@ -816,11 +812,10 @@ class RetrievalSpec extends SparkSpec {
           .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
       val adcFull = adcServe(committed = true)
       assert(adcFull == adcServe(committed = false))
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/b3"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       val adcSnapshot = adcServe(committed = true)
       assert(adcSnapshot.nonEmpty && adcSnapshot.forall(_._3 < 40L),
-        "ADC committed-only serve with the marker deleted must rank only " +
+        "ADC committed-only serve with the commit dropped must rank only " +
           "pre-batch chunks")
       assert(Retrieval.applyPqIngestBatch(newDocs, path, batchId = 3L))
       assert(adcServe(committed = true) == adcFull)
@@ -898,28 +893,27 @@ class RetrievalSpec extends SparkSpec {
         batchId = 1L, streamId = "cm"))
       val full2 = serve(committed = false)
       assert(serve(committed = true) == full2)
-      // fold: watermark covers the contiguous 0..1 run, markers deleted,
-      // and the committed-only serve still sees the folded batches (their
-      // files keep cm~b<id>- prefixes forever — the watermark, not marker
-      // presence, is their commit record)
-      val fs = graft.util.StreamCommit.fs(spark, path)
-      assert(graft.util.StreamCommit.compactMarkers(spark, path,
-        Retrieval.chunkBatchGlobs(path)) ==
+      // fold: watermark covers the contiguous 0..1 run, nothing left
+      // pending, and the committed-only serve still sees the folded batches
+      // (their files keep cm~b<id>- prefixes forever — the watermark, not
+      // `pending`, is their commit record)
+      def compact(p: String, globs: String => Seq[String]) =
+        graft.util.StreamCommit.compact(spark, p, globs)
+      assert(compact(path, Retrieval.chunkBatchGlobs(path)).watermarks ==
         Map("cm" -> 1L))
-      assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
+      assert(graft.util.StreamCommit.readState(spark, path).pending.isEmpty)
       assert(serve(committed = true) == full2,
         "folded batches must stay visible to the committed-only serve")
-      // a GAP (batch 2 never landed) pins the watermark: batch 3's marker
-      // must survive compaction, and its chunks serve via the marker
+      // a GAP (batch 2 never landed) pins the watermark: batch 3 must stay
+      // pending through compaction, and its chunks serve as pending
       assert(Retrieval.applyPqIngestBatch(batch(60, 70), path,
         batchId = 3L, streamId = "cm"))
       val full3 = serve(committed = false)
-      assert(graft.util.StreamCommit.compactMarkers(spark, path,
-        Retrieval.chunkBatchGlobs(path)) ==
+      assert(compact(path, Retrieval.chunkBatchGlobs(path)).watermarks ==
         Map("cm" -> 1L),
         "a batchId gap must stop the watermark extension")
-      assert(graft.util.StreamCommit.listMarkers(fs, path)
-        .map(m => (m._1, m._2)) == Seq(("cm", 3L)))
+      assert(graft.util.StreamCommit.readState(spark, path).pending ==
+        Map("cm" -> Map(3L -> Map.empty)))
       assert(serve(committed = true) == full3)
       // removal: below the watermark refuses loudly (permanently
       // committed); above it works
@@ -932,18 +926,14 @@ class RetrievalSpec extends SparkSpec {
         streamId = "cm"))
       assert(serve(committed = true) == full2 &&
         serve(committed = false) == full2)
-      // crash between the log commit and marker deletes: a surviving
-      // folded marker is redundant with the watermark — both read paths
-      // agree, the next compact deletes it
-      graft.util.StreamCommit.writeMarker(fs, path,
-        graft.util.StreamCommit.tag("cm", 1L))
+      // a re-run with nothing to fold commits nothing
+      val versions = IngestLogFixtures.logVersions(path)
+      compact(path, Retrieval.chunkBatchGlobs(path))
+      assert(IngestLogFixtures.logVersions(path) == versions)
       assert(serve(committed = true) == full2)
-      graft.util.StreamCommit.compactMarkers(spark, path,
-        Retrieval.chunkBatchGlobs(path))
-      assert(graft.util.StreamCommit.listMarkers(fs, path).isEmpty)
-      // bodied markers (BM25) fold through this same compaction: their
-      // stats deltas land in the log's payload, and the layout serves
-      // rows identical to compactStreamStats on a twin index
+      // BM25 batches fold through this same compaction: their stats
+      // deltas land in the log's payload, and the layout serves rows
+      // identical to compactStreamStats on a twin index
       def bm25Twin(p: String) = {
         graft.ann.Bm25.writeIndex(oldDocs, p, nBuckets = 8)
         assert(graft.ann.Bm25.applyIngestBatch(batch(40, 50), p,
@@ -954,16 +944,15 @@ class RetrievalSpec extends SparkSpec {
       val (viaMarkers, viaStats) = (s"$dir/bm25_cm", s"$dir/bm25_cs")
       bm25Twin(viaMarkers)
       bm25Twin(viaStats)
-      assert(graft.util.StreamCommit.compactMarkers(spark, viaMarkers,
-        graft.ann.Bm25.batchGlobs(viaMarkers)) == Map("cm" -> 1L))
+      assert(compact(viaMarkers, graft.ann.Bm25.batchGlobs(viaMarkers))
+        .watermarks == Map("cm" -> 1L))
       graft.ann.Bm25.compactStreamStats(spark, viaStats)
-      val bfs = graft.util.StreamCommit.fs(spark, viaMarkers)
-      assert(graft.util.StreamCommit.listMarkers(bfs, viaMarkers).isEmpty)
       val folded = graft.util.StreamCommit.readState(spark, viaMarkers)
+      assert(folded.pending.isEmpty)
       assert(folded.payload == graft.util.StreamCommit
         .readState(spark, viaStats).payload)
       assert(folded.payload("n_docs") == 60L,
-        "the folded markers' deltas must land in the base stats")
+        "the folded batches' deltas must land in the base stats")
       def bm25Rows(p: String, committed: Boolean) =
         graft.ann.Bm25.retrieveFromIndex(spark, p, qs, k = 4,
             committedOnly = committed)
@@ -998,11 +987,9 @@ class RetrievalSpec extends SparkSpec {
       assert(Retrieval.applyChunkIngestBatch(b1, path, batchId = 0L,
         streamId = "cmf"))
       val once = serve(committed = false)
-      val fs = graft.util.StreamCommit.fs(spark, path)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/_stream_appends/cmf~b0"), false)
+      IngestLogFixtures.dropNewestEntry(path)
       assert(serve(committed = true) == before,
-        "unmarked flat-index batch must be invisible to committed-only")
+        "uncommitted flat-index batch must be invisible to committed-only")
       assert(Retrieval.applyChunkIngestBatch(b1, path, batchId = 0L,
         streamId = "cmf"))
       assert(serve(committed = true) == once)

@@ -117,6 +117,34 @@ class SegmentCodecSpec extends AnyFunSuite {
       SegmentCodec.decode(java.util.Arrays.copyOf(data, 10)).toSeq)
   }
 
+  test("a record whose key length overruns into the next record fails as truncated in both decoders") {
+    val data = SegmentCodec.encode(Seq(rec(0, key = "k0".getBytes, value = "v0".getBytes),
+      rec(1)), CompressionCodec.None)
+    val buf = java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val first = SegmentCodec.HeaderSize
+    // the first record's key length reaches 4 bytes into the second record,
+    // and the footer CRC is recomputed so only the record bounds can object
+    buf.putInt(first + 4 + 16, buf.getInt(first) - 16 - 4 + 4)
+    val crc = new java.util.zip.CRC32()
+    crc.update(data, 0, data.length - SegmentCodec.FooterSize)
+    buf.putInt(data.length - SegmentCodec.FooterSize, crc.getValue.toInt)
+    assert(intercept[IllegalArgumentException](SegmentCodec.decode(data, "t", 0).toSeq)
+      .getMessage.contains("Record data truncated"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-overrun")
+    try {
+      java.nio.file.Files.write(dir.resolve("seg.bin"), data)
+      val size = SegmentCodec.bodyLength(data).toLong
+      val seg = graft.catalog.SegmentMetadata("seg.bin", 0, 1, 1700000000000L,
+        1700000000000L, 2, size, size)
+      val reader = new graft.pipelines.KbakReader(Seq(("t", 0, seg)),
+        new graft.pipelines.SegmentFiles(dir.toUri.toString,
+          new org.apache.hadoop.conf.Configuration(false)),
+        graft.pipelines.Bounds.All, graft.pipelines.Bounds.All)
+      assert(intercept[java.io.IOException](reader.next())
+        .getMessage.contains("Record data truncated"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("bad magic rejected") {
     val data = SegmentCodec.encode(Seq(rec(0)), CompressionCodec.None)
     data(0) = 'X'.toByte

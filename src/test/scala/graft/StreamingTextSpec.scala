@@ -526,12 +526,12 @@ class StreamingTextSpec extends SparkSpec {
         "streamed codes layout must equal the batch-append layout")
       assert(serve(streamDir.getAbsolutePath) == serve(batchDir.getAbsolutePath),
         "stream-ingested index must serve identically to batch appends")
-      // both micro-batches left their exactly-once markers
+      // both micro-batches committed through the ingest log
+      assert(graft.util.StreamCommit.readState(spark, streamDir.getAbsolutePath)
+        .pendingOf("").keySet == Set(0L, 1L))
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(streamDir.getAbsolutePath),
         spark.sparkContext.hadoopConfiguration)
-      assert((0L to 1L).forall(i => fs.exists(new org.apache.hadoop.fs.Path(
-        s"${streamDir.getAbsolutePath}/_stream_appends/b$i"))))
       // and no staging residue survives a clean run
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
         s"${streamDir.getAbsolutePath}/_staging/b0")) &&
@@ -575,14 +575,13 @@ class StreamingTextSpec extends SparkSpec {
       assert(served.nonEmpty && served == full,
         "stream-ingested BM25 index must serve like a full rebuild")
       // both micro-batches committed under the stream's namespace
-      val fs = graft.util.StreamCommit.fs(spark, dir.getAbsolutePath)
-      val markers = graft.util.StreamCommit
-        .listMarkers(fs, dir.getAbsolutePath)
-      assert(markers.map(m => (m._1, m._2)).toSet == Set(("ibx", 0L), ("ibx", 1L)))
-      // compaction keeps the serve identical and clears the markers
+      def pending() = graft.util.StreamCommit
+        .readState(spark, dir.getAbsolutePath).pending
+      assert(pending().view.mapValues(_.keySet).toMap ==
+        Map("ibx" -> Set(0L, 1L)))
+      // compaction keeps the serve identical and folds the pending batches
       graft.ann.Bm25.compactStreamStats(spark, dir.getAbsolutePath)
-      assert(graft.util.StreamCommit
-        .listMarkers(fs, dir.getAbsolutePath).isEmpty)
+      assert(pending().isEmpty)
       assert(graft.ann.Bm25.retrieveFromIndex(spark, dir.getAbsolutePath,
           qs, k = 4).orderBy("query_id", "rank").collect().toSeq == full)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
@@ -622,14 +621,14 @@ class StreamingTextSpec extends SparkSpec {
         .orderBy("query_id", "rank").collect().toSeq
       assert(serve() == full,
         "CLI-driven stream ingest must serve like a full rebuild")
-      // compaction verb: folds the markers, serve identical
-      val fs = graft.util.StreamCommit.fs(spark, idx)
-      assert(graft.util.StreamCommit.listMarkers(fs, idx).nonEmpty)
+      // compaction verb: folds the pending batches, serve identical
+      def pending() = graft.util.StreamCommit.readState(spark, idx).pending
+      assert(pending().nonEmpty)
       Cli.run(spark, Array("compact-bm25-stats", idx))
-      assert(graft.util.StreamCommit.listMarkers(fs, idx).isEmpty)
+      assert(pending().isEmpty)
       assert(serve() == full)
       // --committed search verb over the compacted (folded) layout: the
-      // batch files are marker-less but folded, so the committed-only
+      // batch files are no longer pending but folded, so the committed-only
       // serve must still equal the full rebuild
       qs.write.mode("overwrite").parquet(s"$root/qs")
       Cli.run(spark, Array("bm25-search", idx, s"$root/qs",
