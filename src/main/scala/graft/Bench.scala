@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+  private val LogLevel = "ERROR"
 
   /** Sequential-write throughput of the scratch disk, measured ONCE at
     * startup (256 MiB, fsync'd, file deleted before its pages flush again).
@@ -28,58 +29,29 @@ object Bench {
     finally { try java.nio.file.Files.deleteIfExists(f) catch { case _: Throwable => () } }
   }
 
+  /** `graft.Bench [entry...]`: times the named entries (all by default) on
+    * `SPARK_GRAFT_SF_DIR` and writes the full result line to
+    * `GRAFT_BENCH_OUT` (default `bench_out.json`).
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val out = sys.env.getOrElse("GRAFT_BENCH_OUT", "bench_out.json")
     // measure the disk BEFORE Spark starts dirtying the page cache
     val diskMbS = diskWriteMbPerSec()
-    def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-    // An OOM-killed context stops ASYNCHRONOUSLY: `stopped` flips early but
-    // the context unregisters only when stop() completes, and a getOrCreate
-    // inside that window adopts the still-registered stopped context and
-    // throws assertNotStopped — which killed a whole sf10 battery after a
-    // single task OOM (r14; the r13 revival had the same window). Bounded
-    // wait-and-retry until the old context finishes unregistering.
-    def newSession(): SparkSession = {
-      var last: Throwable = null
-      var i = 0
-      while (i < 120) {
-        try return buildSession()
-        catch {
-          case e: IllegalStateException =>
-            last = e; Thread.sleep(1000); i += 1
-        }
-      }
-      throw last
-    }
-    // the session is a VAR so a context-fatal entry (e.g. a task OOM in
-    // local mode stops the one SparkContext) costs ONE error row, not the
-    // whole remaining battery — before each entry the loop revives a
-    // stopped context (r13: one sf10 task OOM zombied 80 subsequent
-    // entries with "Cannot call methods on a stopped SparkContext")
-    var spark = newSession()
+    val summary = try run(Battery.session(LogLevel), sfDir, args.toSeq, out, diskMbS)
+    finally Battery.stop()
+    // printed after the stop: the console log appender writes to stdout,
+    // and nothing the stop logs may follow the summary
+    println(summary)
+  }
 
-    // deterministic order, heavyweight pipeline workloads (p_*) last so their
-    // GC/page-cache footprint doesn't pollute the cheap queries' timings;
-    // positional args (if any) restrict the run to the named queries — an
-    // unknown name fails loudly instead of benchmarking nothing
-    val unknown = args.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => args.isEmpty || args.contains(name) }
-      .sortBy { case (name, _) =>
-        (if (name.startsWith("p_")) 1 else 0, name)
-      }
+  /** Time `names` (every entry when empty) in `spark`, print the full
+    * per-entry line, also written to `out`, and return the compact summary
+    * that [[main]] prints as the LAST stdout line. `spark` stays running.
+    */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String], out: String,
+          diskMbS: Double): String = {
+    val ordered = Battery.select(names)
 
     // JVM/codegen warm-up: touch the scan + shuffle + agg paths once so the
     // first measured query doesn't pay JIT and classloading (~5 s).
@@ -95,7 +67,7 @@ object Bench {
       // (a_ann_lsh_bucketed / a_ann_ivf bench the pruned probe). The whole
       // battery builds every index; a named subset calls each entry once,
       // untimed, so its own ensure* builds only the index it reads
-      if (args.isEmpty) {
+      if (names.isEmpty) {
         QueriesData.ensureBucketedAnn(spark, sfDir)
         QueriesData.ensureIvf(spark, sfDir)
         QueriesData.ensureIvfPq(spark, sfDir)
@@ -107,31 +79,13 @@ object Bench {
       } else ordered.foreach { case (_, fn) => fn(spark, sfDir) }
     } catch { case _: Throwable => }
 
-    // post-query hygiene, shared by both timing passes: drop block-manager
-    // state a query left behind and delete pipeline scratch output BEFORE its
-    // dirty pages flush during the next timed region (measured multi-second
-    // pollution at sf10 — see SCALING.md)
-    def cleanup(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-      graft.util.TempDirs.cleanAll()
-    }
-
     // per-entry PROCESS-CPU time next to wall (r12 verdict task 5): this VM
     // class throttles storage intermittently and wall alone cannot separate
     // a plan regression from a slow disk — CPU seconds are stable across
     // stamp swings, so cross-round per-entry diffs should read cpu first
     val osBean = java.lang.management.ManagementFactory
       .getPlatformMXBean(classOf[com.sun.management.OperatingSystemMXBean])
-    val results = ordered.map { case (name, fn) =>
-      if (spark.sparkContext.isStopped) {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = newSession()
-      }
-      // label the entry's jobs (guide §1.5) so a crash log or the UI maps
-      // stages back to the battery entry without timing archaeology
-      spark.sparkContext.setJobDescription(s"bench: $name")
+    val results = Battery.each(spark, ordered, "bench", LogLevel) { (spark, name, fn) =>
       // noop sink materializes every output column (count() would let
       // Catalyst prune the projection and flatter the numbers)
       def onePass(): (Double, Double, Option[String]) = {
@@ -146,68 +100,63 @@ object Bench {
           (osBean.getProcessCpuTime - c0) / 1e9, err)
       }
       val (first, cpu1, err1) = onePass()
-      cleanup()
       // VM-noise self-defense: a single >1 s sample can be dominated by this
       // round's cold page cache or background writeback — re-run once and
       // keep the BEST of the two (plans are deterministic; the minimum is
       // the less-polluted sample). Sub-second entries aren't worth the
       // battery time, and a failed query must not run (or hide) twice.
       // The kept CPU sample is the kept WALL pass's own (they must describe
-      // the same execution).
+      // the same execution). Each pass is followed by Battery.cleanup.
       val (elapsed, cpuSec) =
         if (err1.isEmpty && first > 1.0) {
+          Battery.cleanup(spark)
           val (second, cpu2, err2) = onePass()
-          cleanup()
           if (err2.isEmpty && second < first) (second, cpu2) else (first, cpu1)
         } else (first, cpu1)
       (name, elapsed, cpuSec, err1)
     }
     def jstr(s: String) = graft.util.Json.escape(s)
-    val qs = results.map { case (k, v, _, _) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val cpuMap = results.map { case (k, _, c, _) =>
-      jstr(k) + ":" + math.rint(c * 1e3) / 1e3 }.mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, Any)]) =
+      kvs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    def ms(sec: Double) = math.rint(sec * 1e3) / 1e3
     // a failed query must be loud, not a flattering ~0 s entry
-    val errs = results.collect { case (k, _, _, Some(e)) => jstr(k) + ":" + jstr(e) }
-      .mkString("{", ",", "}")
+    val errors = results.collect { case (k, _, _, Some(e)) => (k, e) }
     val total = results.map(_._2).sum
-    val totalCpu = results.map(_._3).sum
+    val totalCpu = ms(results.map(_._3).sum)
+    val cpus = Battery.cpus
     // stamp floor: below it the host is storage-throttled and wall totals
     // are not comparable across rounds — flagged, not refused (the driver
     // still needs an artifact; the flag tells every reader to normalize)
     val diskFloor = 100.0
     val diskOk = diskMbS >= diskFloor
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""cpu_sec":$cpuMap,"total_cpu_sec":${math.rint(totalCpu * 1e3) / 1e3},""" +
-      s""""errors":$errs,"sf":${jstr(sfDir)},"cpus":$cpus,""" +
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${obj(results.map(r => (r._1, r._2)))},""" +
+      s""""cpu_sec":${obj(results.map(r => (r._1, ms(r._3))))},"total_cpu_sec":$totalCpu,""" +
+      s""""errors":${obj(errors.map { case (k, e) => (k, jstr(e)) })},""" +
+      s""""sf":${jstr(sfDir)},"cpus":$cpus,""" +
       s""""disk_write_mb_s":$diskMbS,"disk_floor_mb_s":$diskFloor,""" +
       s""""disk_ok":$diskOk,"timing":"best-of-2 over 1s"}"""
     // stdout line is the driver contract; the FILE is the loss-proof copy
     // (r6's driver tail-capture truncated the totals → "parsed": null)
     println(json)
-    val out = sys.env.getOrElse("GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"bench_out write failed: $e")
     }
-    spark.stop()
     // LAST stdout line: a compact summary guaranteed to fit the driver's
     // ~2000-char tail capture WHOLE (the full 99-entry line is ~5 KB, so
     // the capture decapitates it and the driver records "parsed": null —
     // the r7 finding). Slowest entries at 3 decimals + error map; the
     // complete per-query map lives in the full line above and in the file.
-    val slowest = results.sortBy(-_._2).take(25)
-      .map { case (k, v, _, _) => jstr(k) + ":" + math.rint(v * 1e3) / 1e3 }
-      .mkString("{", ",", "}")
-    val errsShort = results.collect { case (k, _, _, Some(e)) =>
-      jstr(k) + ":" + jstr(e.take(60)) }.take(5).mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${math.rint(total * 1e3) / 1e3},""" +
+    val slowest = obj(results.sortBy(-_._2).take(25).map(r => (r._1, ms(r._2))))
+    val summary = s"""{"metric":"total","value":${ms(total)},""" +
       s""""unit":"sec","queries":$slowest,""" +
       s""""note":${jstr(s"slowest 25 of ${results.size}; full map in $out")},""" +
-      s""""errors":$errsShort,"n_errors":${results.count(_._4.isDefined)},""" +
-      s""""total_cpu_sec":${math.rint(totalCpu * 1e3) / 1e3},""" +
+      s""""errors":${obj(errors.take(5).map { case (k, e) => (k, jstr(e.take(60))) })},""" +
+      s""""n_errors":${errors.size},"total_cpu_sec":$totalCpu,""" +
       s""""sf":${jstr(sfDir)},"cpus":$cpus,"disk_write_mb_s":$diskMbS,""" +
-      s""""disk_ok":$diskOk,"timing":"best-of-2 over 1s"}""")
+      s""""disk_ok":$diskOk,"timing":"best-of-2 over 1s"}"""
+    summary
   }
 }

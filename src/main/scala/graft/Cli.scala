@@ -25,15 +25,7 @@ import org.apache.spark.sql.functions._
 object Cli {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName(s"graft-${args(0)}")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Battery.session("WARN")
     try run(spark, args) finally spark.stop()
   }
 

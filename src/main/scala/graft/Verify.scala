@@ -41,43 +41,28 @@ object Verify {
     }
   }
 
+  private val LogLevel = "WARN"
+
+  /** `graft.Verify <sfDir> <outDir> [entry,entry,...]`: the optional third
+    * argument, for local iteration, dumps the named entries instead of the
+    * full battery.
+    */
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg (local iteration only — the driver passes two):
-    // comma-separated entry names to dump instead of the full battery
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    // bounded wait-and-retry around getOrCreate, like Bench: an OOM-killed
-    // context unregisters asynchronously, and a getOrCreate in that window
-    // adopts the stopped context and throws assertNotStopped
-    def newSession(): SparkSession = {
-      var last: Throwable = null
-      var i = 0
-      while (i < 120) {
-        try return buildSession()
-        catch {
-          case e: IllegalStateException =>
-            last = e; Thread.sleep(1000); i += 1
-        }
-      }
-      throw last
-    }
-    // var + per-entry revival, like Bench: a context-fatal entry (local-mode
-    // task OOM stops the ONE SparkContext) must cost its own error row, not
-    // fail every remaining entry's dump
-    var spark = newSession()
+    val only = if (args.length > 2) args(2).split(",").toSeq else Nil
+    try run(Battery.session(LogLevel), sfDir, outDir, only)
+    finally Battery.stop()
+  }
+
+  /** Dump `only` (every entry when empty) from `spark` under `outDir`: one
+    * parquet directory per entry that ran and passed its audit floor, plus
+    * `oracle_sql.json` and `audits.json`. A full run also copies the audits
+    * to `AUDITS_r<round>.json` in the working directory. `spark` stays
+    * running.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          only: Seq[String]): Unit = {
+    val entries = Battery.select(only)
     new java.io.File(outDir).mkdirs()
     // measured-quality surface for the no-oracle entries: each approximate
     // operator carries its audit as a constant result column
@@ -116,14 +101,7 @@ object Verify {
       "d_semantic_prune" -> 0.3, "d_semantic_dedup" -> 0.35,
       "m_phash_dups" -> 0.95, "d_incremental_minhash" -> 0.9)
     val audits = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      if (spark.sparkContext.isStopped) {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = newSession()
-      }
+    Battery.each(spark, entries, "verify", LogLevel) { (spark, name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -151,14 +129,8 @@ object Verify {
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally {
-        // same between-query hygiene as Bench: free pipeline scratch output
-        // and any block-manager state (result checkpoints, pinned sets) a
-        // query left behind, so a 60-entry run doesn't accumulate heap
-        graft.util.TempDirs.cleanAll()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        spark.catalog.clearCache()
+        // no dump for a failed entry, not even an earlier run's
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape (shared util): a tab or CR in builder-authored SQL
@@ -182,7 +154,7 @@ object Verify {
       "q_murmur2_partition" -> ("bit-exact golden vectors vs Kafka's " +
         "murmur2 (KHashSpec)"))
     specBasis.foreach { case (name, basis) =>
-      if (only.forall(_.contains(name)) && !audits.contains(name))
+      if (entries.exists(_._1 == name) && !audits.contains(name))
         audits(name) = s"""{"basis":${q(basis)}}"""
     }
     if (audits.nonEmpty) {
@@ -201,6 +173,5 @@ object Verify {
         System.err.println(s"[verify] audits round copy failed: $e")
       }
     }
-    spark.stop()
   }
 }

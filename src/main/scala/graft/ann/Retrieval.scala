@@ -665,21 +665,30 @@ object Retrieval {
                             schema: StructType): DataFrame = {
     val files = StreamCommit.committedDataFiles(StreamCommit.fs(spark, root),
       partGlobs.map(g => s"${StreamCommit.escapeGlob(root)}/$g"), view)
-    if (files.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    if (files.isEmpty) emptyFrame(spark, schema)
     else spark.read.option("basePath", root).schema(schema).parquet(files: _*)
   }
 
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
   /** One serve's scan of a layout table: without a snapshot, the whole
     * table under `filter` (static partition pruning); with one, only the
-    * committed files under `partGlobs` ([[readCommitted]]).
+    * committed files under `partGlobs` ([[readCommitted]]). The whole-table
+    * read names the table's `list=*` children under `basePath = root`, not
+    * the root itself: Spark drops a read root whose name starts with `_`,
+    * as the `_vecs/` side table's does, and warns that every path was
+    * ignored. A table with no list yet reads as empty.
     */
   private def layoutScan(spark: SparkSession, root: String, schema: StructType,
                          filter: Column, partGlobs: Seq[String],
                          snapshot: Option[StreamCommit.LogState]): DataFrame =
     snapshot match {
-      case None       => spark.read.schema(schema).parquet(root).where(filter)
+      case None =>
+        val lists = s"${StreamCommit.escapeGlob(root)}/list=*"
+        if (StreamCommit.fs(spark, root).globStatus(new org.apache.hadoop.fs.Path(lists)).isEmpty)
+          emptyFrame(spark, schema)
+        else spark.read.option("basePath", root).schema(schema).parquet(lists).where(filter)
       case Some(view) => readCommitted(spark, root, partGlobs, view, schema)
     }
 

@@ -102,8 +102,6 @@ object Clusters {
           greatest(col(idA), col(idB)).as("u"), least(col(idA), col(idB)).as("v"))
         .where(col("u") =!= col("v"))
         .distinct())
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"cc init: edges=${edgesSig._1} @${System.nanoTime() / 1000000}ms")
 
     // checkpointDir callers asked for restartable distributed state — honor
     // that literally and never shortcut, even on a tiny graph. The driver
@@ -181,8 +179,6 @@ object Clusters {
           .select(col("v").as("u"), col("m").as("v"))
           .union(ssMin.select(col("u"), col("m").as("v")))
           .distinct())
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"cc round $round: edges=${nextSig._1} @${System.nanoTime() / 1000000}ms")
       converged = nextSig == edgesSig
       // the superseded round's checkpoint blocks are dead the moment `edges`
       // moves on — drop them now instead of waiting for GC-driven cleanup,

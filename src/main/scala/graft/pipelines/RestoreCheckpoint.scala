@@ -2,8 +2,10 @@ package graft.pipelines
 
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
+import graft.util.Sidecar
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Resumable-restore checkpoint (K4, manifest.rs:270-338): completed segment
   * keys + progress counters + a config hash so a resumed run with different
@@ -40,13 +42,12 @@ object RestoreCheckpoint {
     * throwing would brick resumability until someone hand-deletes the file.
     */
   def loadOrEmpty(path: String, cfg: RestoreConfig): RestoreCheckpoint = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) empty(cfg)
+    val p = new Path(path)
+    val fs = p.getFileSystem(new Configuration())
+    if (!fs.exists(p)) empty(cfg)
     else {
       val parsed =
-        try Some(JsonMethods.parse(
-          new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-          .extract[RestoreCheckpoint])
+        try Some(JsonMethods.parse(Sidecar.readText(fs, p)).extract[RestoreCheckpoint])
         catch { case e: Exception =>
           System.err.println(
             s"[checkpoint] unreadable $path (${e.getClass.getSimpleName}) — starting fresh")
@@ -60,14 +61,13 @@ object RestoreCheckpoint {
     }
   }
 
-  def save(path: String, ckpt: RestoreCheckpoint): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, Serialization.writePretty(
-      ckpt.copy(updated_at = System.currentTimeMillis())).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** Replace the checkpoint through [[Sidecar.replace]]: a reader sees the
+    * previous checkpoint or this one, and concurrent savers never share a
+    * temp file.
+    */
+  def save(path: String, ckpt: RestoreCheckpoint): Unit =
+    Sidecar.replace(new Configuration(), new Path(path), Serialization.writePretty(
+      ckpt.copy(updated_at = System.currentTimeMillis())))
 
   /** Mark segments complete and roll the counters. */
   def complete(ckpt: RestoreCheckpoint, segmentKeys: Iterable[String],

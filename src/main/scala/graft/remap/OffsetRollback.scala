@@ -3,8 +3,10 @@ package graft.remap
 import graft.pipelines.GroupOffsetCommitter
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.util.Sidecar
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Paths}
 
 /** Pre-reset safety snapshot (restore/offset_rollback.rs:55-106): captured
   * committed offsets before Phase 3 applies a reset plan, so a bad reset can
@@ -23,17 +25,17 @@ object OffsetRollback {
     OffsetSnapshot(takenAt, reason,
       committed.sorted.map { case (g, t, p, o) => OffsetSnapshotEntry(g, t, p, o) }.toList)
 
-  def save(path: String, s: OffsetSnapshot): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, Serialization.writePretty(s).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** Replace the snapshot file through [[Sidecar.replace]]: a reader sees
+    * a whole snapshot, and concurrent savers never share a temp file.
+    */
+  def save(path: String, s: OffsetSnapshot): Unit =
+    Sidecar.replace(new Configuration(), new Path(path), Serialization.writePretty(s))
 
-  def load(path: String): OffsetSnapshot =
-    JsonMethods.parse(new String(Files.readAllBytes(Paths.get(path)),
-      StandardCharsets.UTF_8)).extract[OffsetSnapshot]
+  def load(path: String): OffsetSnapshot = {
+    val p = new Path(path)
+    JsonMethods.parse(Sidecar.readText(p.getFileSystem(new Configuration()), p))
+      .extract[OffsetSnapshot]
+  }
 
   /** Re-commit every snapshotted offset (the rollback apply). */
   def apply(s: OffsetSnapshot, committer: GroupOffsetCommitter): Int = {

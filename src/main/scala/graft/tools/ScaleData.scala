@@ -30,15 +30,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(in, out, factorS) = args: @unchecked
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-data")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Battery.session("WARN")
     try run(spark, in, out, factor) finally spark.stop()
   }
 

@@ -340,4 +340,41 @@ class ProduceEvidenceSpec extends SparkSpec {
     val other = RestoreCheckpoint.loadOrEmpty(path, cfg.copy(windowEndMs = Some(3L)))
     assert(other.segments_completed.isEmpty)
   }
+
+  test("checkpoint saves: 8 concurrent savers of a restore checkpoint and an offset snapshot never throw, every load parses, and an unreadable checkpoint still starts fresh") {
+    import graft.remap.OffsetRollback
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("ckpt-race").toString
+    val ckptPath = s"$dir/restore.ckpt"
+    val snapPath = s"$dir/snap/offsets.json"
+    val cfg = RestoreConfig("/r", "b1", Some(1L), Some(2L))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val savers = (0 until 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            start.await()
+            (0 until 25).foreach { i =>
+              RestoreCheckpoint.save(ckptPath, RestoreCheckpoint.complete(
+                RestoreCheckpoint.empty(cfg), Seq(s"s$t-$i"), i, i))
+              OffsetRollback.save(snapPath,
+                OffsetRollback.snapshot(Seq(("g", "t", t, i.toLong)), s"saver $t"))
+              // a load that fell back to a fresh checkpoint would hold no segment
+              assert(RestoreCheckpoint.loadOrEmpty(ckptPath, cfg).segments_completed.size == 1)
+              assert(OffsetRollback.load(snapPath).entries.size == 1)
+            }
+          }
+        })
+      }
+      start.countDown()
+      savers.foreach(_.get()) // rethrows a saver's failure
+    } finally pool.shutdownNow()
+    // every save published its own temp: none is left behind
+    assert(new java.io.File(dir).list().toSet == Set("restore.ckpt", "snap"))
+    assert(new java.io.File(s"$dir/snap").list().toSeq == Seq("offsets.json"))
+    Files.writeString(Paths.get(ckptPath), """{"backup_id": "b1", "config_""")
+    assert(RestoreCheckpoint.loadOrEmpty(ckptPath, cfg) == RestoreCheckpoint.empty(cfg))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }

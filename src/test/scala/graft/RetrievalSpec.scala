@@ -511,6 +511,49 @@ class RetrievalSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
+  test("retrieveFromChunkIndexPq: the exact re-rank's _vecs side-table scan logs no ignored-paths warning, and serves the committed view's rows") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    // Spark logs "All paths were ignored" from here when a read root's name
+    // starts with `_`
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    assert(logger.isWarnEnabled, "the capture needs WARN enabled")
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("vecs-warn-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    val docs = (0L until 60L).map(i => (i, s"vw w$i alpha beta gamma " * 12))
+      .toDF("doc_id", "text")
+    val qs = (0L until 6L).map(i => (i, s"vw w${i * 7} alpha beta"))
+      .toDF("query_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank")
+        .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_vecs_warn").toFile
+    try {
+      Retrieval.writeChunkIndexPq(docs, dir.getAbsolutePath, nLists = 4,
+        m = 5, ksub = 16, fitBudget = 48)
+      capture.start()
+      logger.addAppender(capture)
+      val served = try rows(Retrieval.retrieveFromChunkIndexPq(spark,
+        dir.getAbsolutePath, qs, k = 4, nProbe = 2))
+      finally { logger.removeAppender(capture); capture.stop() }
+      assert(!warnings.toArray.exists(_.toString.contains("All paths were ignored")),
+        warnings.toArray.mkString("\n"))
+      // the committed-only serve reads the same side table file by file:
+      // the whole-table read must see the same rows, hence the same recall
+      assert(served.nonEmpty && served == rows(Retrieval.retrieveFromChunkIndexPq(spark,
+        dir.getAbsolutePath, qs, k = 4, nProbe = 2, committedOnly = true)))
+      assert(rows(Retrieval.retrieveFromChunkIndexPq(spark, dir.getAbsolutePath,
+        qs, k = 4, nProbe = 4, shortlist = 100000)) ==
+        rows(Retrieval.retrieveChunks(docs, qs, k = 4)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   test("PqDecode kernel: reconstruction == codeword concat, interpreted == codegen, null contract") {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val codebooks = Array(
